@@ -233,28 +233,32 @@ def knn_graph(
             # loop gate: any path still ≥ α? One cheap JVM aggregate —
             # deliberately NOT fused into the sampling plan: the gate
             # runs once more than the sampler (the final "all small"
-            # round), and a fused plan would pay the Python sampling
-            # stage on every gate evaluation. Division 1 needs no job at
-            # all: every row still carries the root path "", so the
-            # gate is just n_total ≥ α.
+            # round), and a fused plan would pay the sampling window on
+            # every gate evaluation. The same aggregate returns
+            # the leaf stats (path count, largest path), so the final
+            # "all small" gate already knows them. Division 1 needs no
+            # job at all: every row still carries the root path "", so
+            # the gate is just n_total ≥ α.
             if division == 1:
                 if n_total < alpha:
+                    n_leaves, max_leaf = (1, n_total) if n_total else (0, None)
                     break
                 big = spark.createDataFrame([("",)], "path string")
                 n_big = 1
             else:
-                big = (
-                    data.groupBy("path")
-                    .count()
-                    .filter(F.col("count") >= alpha)
-                    .select("path")
-                )
-                n_big = big.count()
+                counts = data.groupBy("path").count()
+                gate = counts.agg(
+                    F.count(F.when(F.col("count") >= alpha, 1)).alias("n_big"),
+                    F.count(F.lit(1)).alias("n_leaves"),
+                    F.max("count").alias("max_leaf"),
+                ).collect()[0]
+                n_big = gate["n_big"]
                 if n_big == 0:
+                    n_leaves, max_leaf = gate["n_leaves"], gate["max_leaf"]
                     break
+                big = counts.filter(F.col("count") >= alpha).select("path")
             # seeded ρ-sample per oversized path (reference
-            # centroid_sampling_2, mrdf.py:75-121: per-partition partial
-            # sample + final merge by key)
+            # centroid_sampling_2, mrdf.py:75-121)
             rand_seed = seed + 1_000_003 * iteration + 1_009 * division
             cents = _sample_centroids(data, big, rho, rand_seed)
             if n_big > centroid_broadcast_max_paths:
@@ -318,21 +322,15 @@ def knn_graph(
             )
             return pd.DataFrame(edges, columns=["src", "dst", "dist_sq"])
 
-        forest_stats: dict | None = None
+        # tier-activation evidence for the run artifact: leaf-size stats
+        # prove which NN-Descent kernel the leaves took (≤4096 exact
+        # gemm, ≤32768 tiled exact, else iterative), join_tier_rounds
+        # proves the distributed centroid path ran
+        forest_stats = None
         if metrics_out is not None:
-            # tier-activation evidence for the run artifact: leaf-size
-            # stats prove which NN-Descent kernel the leaves took
-            # (≤4096 exact gemm, ≤32768 tiled exact, else iterative),
-            # join_tier_rounds proves the distributed centroid path ran
-            row = (
-                data.groupBy("path")
-                .count()
-                .agg(F.count(F.lit(1)).alias("n_leaves"), F.max("count").alias("max_leaf"))
-                .collect()[0]
-            )
             forest_stats = {
-                "n_leaves": row["n_leaves"],
-                "max_leaf": row["max_leaf"],
+                "n_leaves": n_leaves,
+                "max_leaf": max_leaf,
                 "join_tier_rounds": join_tier_rounds,
             }
         g_prime = data.groupBy("path").applyInPandas(_local, EDGE_SCHEMA)
@@ -523,11 +521,12 @@ def knn_graph(
         executor.shutdown(wait=False, cancel_futures=True)
 
     # ---- global graph refinement: NN-Descent's neighbor-of-neighbor
-    # step at graph scale, as pure DataFrame ops (no driver traffic).
-    # Candidates = 2-hop pairs of the merged graph; distances via the
-    # JVM-side l2 expression; merge keeps k best. One shuffle-bounded
-    # round substantially recovers edges that random division split
-    # across subsets — the step the reference only ran locally.
+    # step at graph scale, no driver traffic. Candidates = 2-hop pairs
+    # of the merged graph, expanded per grid cell inside the distance
+    # kernel from graph rows the JVM routes there (see _refine); merge
+    # keeps k best. One round substantially recovers edges that random
+    # division split across subsets — the step the reference only ran
+    # locally.
     if escalated:
         # second half of the hands-free escalation: one extra
         # neighbor-of-neighbor round (the measured uniform-noise dial —
@@ -544,8 +543,9 @@ def knn_graph(
         g = _refine(base, g, k if last else k_work, grid=refine_grid)
         # last round stays lazy: the caller's first action (write /
         # collect / the memoized checkpoint) materializes it — earlier
-        # rounds stay eager because the next round's 2-hop join
-        # references g three times within one job
+        # rounds stay eager because the next round reads g four times
+        # within one job (A-rows, B-rows in both directions, and the
+        # merge union)
         g = g.localCheckpoint(eager=not last)
     if refine_rounds:
         return g
@@ -561,26 +561,24 @@ def knn_graph(
 def _sample_centroids(
     data: DataFrame, big: DataFrame, rho: int, rand_seed: int
 ) -> DataFrame:
-    """Seeded top-ρ-by-rand sample per oversized path, partial+final.
+    """Seeded top-ρ-by-(r, id) sample per oversized path.
 
-    A plain ``row_number() over (partition by path order by rand)``
-    sorts every ENTIRE ≥α group in a single task (and in division
-    round 1 the group is the whole dataset — Catalyst even folds the
-    constant root path into an empty partition spec, i.e. a global
-    single-partition sort). Instead each Arrow batch keeps its local
-    ρ smallest (r, id) per path map-side — no shuffle, the
-    reference's mapPartitions partial reservoir (mrdf.py:101-121) —
-    and only the ≤ ρ·batches candidate rows per path reach the final
-    window. top-ρ by a total order is associative, so partial+final
-    is exact."""
-    # The sampling decision needs only (path, id, r): keeping the
-    # d-dimensional vectors out of the Arrow round-trip cuts the
-    # partial pass's transfer by ~d× (the winners' vectors — ≤ ρ per
-    # big path — are joined back at the end, inside the same plan).
-    # r is a PORTABLE uniform — first 8 md5 hex chars of (id, round
-    # seed) — not F.rand, whose per-partition seeding makes the draw
-    # depend on the physical partition layout (different cluster size
-    # ⇒ different forest ⇒ different graph).
+    One ``row_number() ≤ ρ`` window over (path; r, id). Catalyst plans
+    the rank limit map-side, so no task sorts a whole ≥α group: on the
+    root path (division 1, where the constant path folds into an empty
+    partition spec) the plan is a ``TakeOrderedAndProject(limit=ρ)``
+    that keeps ρ rows per partition before its single-partition merge;
+    on several paths a partial ``WindowGroupLimit`` runs below the
+    ``Exchange`` and only ≤ ρ rows per path per partition are shuffled
+    — the reference's mapPartitions partial reservoir
+    (mrdf.py:101-121), done by the JVM. top-ρ by a total order is
+    associative, so partial+final is exact."""
+    # The sampling decision needs only (path, id, r): the winners'
+    # vectors — ≤ ρ per big path — are joined back at the end, inside
+    # the same plan. r is a PORTABLE uniform — first 8 md5 hex chars of
+    # (id, round seed) — not F.rand, whose per-partition seeding makes
+    # the draw depend on the physical partition layout (different
+    # cluster size ⇒ different forest ⇒ different graph).
     cand = data.join(F.broadcast(big), "path").select(
         "path",
         "id",
@@ -595,17 +593,9 @@ def _sample_centroids(
             / F.lit(4294967296.0)
         ).alias("r"),
     )
-
-    def _partial(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in batches:
-            if len(pdf) == 0:
-                continue
-            yield pdf.sort_values(["r", "id"]).groupby("path", sort=False).head(rho)
-
-    part = cand.mapInPandas(_partial, cand.schema)
     w = Window.partitionBy("path").orderBy("r", "id")
     winners = (
-        part.withColumn("rn", F.row_number().over(w))
+        cand.withColumn("rn", F.row_number().over(w))
         .filter(F.col("rn") <= rho)
         .select("path", "rn", "id")
     )
@@ -701,35 +691,28 @@ def _refine(
     einsum per fixed-size chunk — is IDENTICAL under any grid, so
     distances are bit-identical to any other blocking (pinned by
     test_refine_default_sizing_matches_explicit_blocks and the grid
-    invariance test)."""
-    # RAW 2-hop pairs — deliberately NOT globally deduplicated: at
-    # working degree κ the raw stream is ~n·2κ² rows, and a global
-    # .distinct() / anti-join / dropDuplicates on it is a corpus-pair-
-    # sized HASH AGGREGATE — the exact shape that exhausted JVM
-    # execution memory at n=500k (BytesToBytesMap could not even
-    # allocate its spill sorter under 16 concurrent tasks). Every copy
-    # of a pair (a, b) hashes to the SAME grid cell, so dedup — and
-    # the skip-known-edges anti-join — run CELL-LOCALLY in the kernel
-    # (one lexsort + group-boundary scan per cell): known edges ride
-    # the same shuffle as flagged rows (e=1) and suppress their pair
-    # group, replacing the global anti-join at zero extra shuffles.
-    hop2 = (
-        g.select(F.col("src").alias("a"), F.col("dst").alias("mid"))
-        .join(
-            g.select(F.col("src").alias("mid"), F.col("dst").alias("b")).unionByName(
-                g.select(F.col("dst").alias("mid"), F.col("src").alias("b"))
-            ),
-            "mid",
-        )
-        .filter(F.col("a") != F.col("b"))
-        .select("a", "b", F.lit(0).alias("e"))
-        .unionByName(
-            g.select(
-                F.col("src").alias("a"), F.col("dst").alias("b"),
-                F.lit(1).alias("e"),
-            )
-        )
-    )
+    invariance test).
+
+    Dataflow: the JVM ships GRAPH ROWS, not 2-hop pairs. Pair (a, b)
+    from a → mid → b belongs to cell (hash(a) mod Ba, hash(b) mod Bb),
+    so a cell needs every edge a → mid whose a is in its a-slice
+    (A-rows, each edge sent to all Bb cells of its a-row) and every
+    (mid, b) hop, both directions of g, whose b is in its b-slice
+    (B-rows, each sent to all Ba cells of its b-column). The kernel
+    expands the cell's 2-hop pairs itself — B-rows sorted by mid, each
+    A-row repeated over its mid's range — which yields exactly the
+    pairs a JVM join would have routed there, multiplicity included.
+    Every copy of a pair lands in the same cell, so dedup and
+    known-edge suppression run cell-locally too: a global distinct or
+    anti-join over the pair stream is a corpus-pair-sized hash
+    aggregate, the shape that exhausted JVM execution memory at
+    n=500k.
+    Rows shipped: n·κ·(Bb + 2·Ba). A JVM 2-hop join reads 3·n·κ rows
+    and then shuffles and Arrow-ships ≈ n·(2κ)² pair rows, so this
+    form ships fewer rows while 3·side < 4κ + 3 on a square grid —
+    side ≤ 27 at κ = 20 (``_refine_grid`` reaches that only around
+    n ≈ 1M at d = 64, or ≥ 729 cores). Per-cell kernel memory is
+    unchanged: the cell's raw pairs were already held in the kernel."""
     vecs = base.select("id", "vec")
     if grid is None:
         if n_blocks is not None:
@@ -759,57 +742,85 @@ def _refine(
                 base.sparkSession.sparkContext.defaultParallelism,
             )
     ba, bb = grid
-    pairs_b = hop2.withColumn(
-        "blk",
-        (F.pmod(F.hash("a"), F.lit(ba)) * bb + F.pmod(F.hash("b"), F.lit(bb))).cast(
-            "int"
-        ),
-    )
-    ha = F.pmod(F.hash("id"), F.lit(ba))
-    hb = F.pmod(F.hash("id"), F.lit(bb))
-    a_cells = F.transform(
-        F.sequence(F.lit(0), F.lit(bb - 1)), lambda j: (ha * bb + j).cast("int")
-    )
-    b_cells = F.transform(
-        F.sequence(F.lit(0), F.lit(ba - 1)), lambda i: (i * bb + hb).cast("int")
+
+    def _cells(col: str, a_side: bool):
+        # every cell on the grid row (a_side) or column of ``col``'s id
+        if a_side:
+            h = F.pmod(F.hash(col), F.lit(ba))
+            return F.transform(
+                F.sequence(F.lit(0), F.lit(bb - 1)), lambda j: (h * bb + j).cast("int")
+            )
+        h = F.pmod(F.hash(col), F.lit(bb))
+        return F.transform(
+            F.sequence(F.lit(0), F.lit(ba - 1)), lambda i: (i * bb + h).cast("int")
+        )
+
+    def _graph_rows(kind: int, u: str, v: str) -> DataFrame:
+        return g.select(
+            F.explode(_cells(u, True) if kind == 0 else _cells(v, False)).alias("blk"),
+            F.lit(kind).cast("tinyint").alias("kind"),
+            F.col(u).alias("u"),
+            F.col(v).alias("v"),
+        )
+
+    # A-rows (kind 0): edge a → mid as (u=src, v=dst), to a's grid row.
+    # B-rows (kind 1): hop mid → b over both directions of g, as
+    # (u=mid, v=b), to b's grid column.
+    rows_b = (
+        _graph_rows(0, "src", "dst")
+        .unionByName(_graph_rows(1, "src", "dst"))
+        .unionByName(_graph_rows(1, "dst", "src"))
     )
     vecs_b = vecs.withColumn(
-        "blk", F.explode(F.array_distinct(F.concat(a_cells, b_cells)))
+        "blk",
+        F.explode(F.array_distinct(F.concat(_cells("id", True), _cells("id", False)))),
     )
 
-    def _dist_block(key: tuple, pairs: pd.DataFrame, vv: pd.DataFrame) -> pd.DataFrame:
+    def _dist_block(key: tuple, rows: pd.DataFrame, vv: pd.DataFrame) -> pd.DataFrame:
         empty = pd.DataFrame({"src": [], "dst": [], "dist_sq": []}).astype(
             {"src": np.int64, "dst": np.int64, "dist_sq": np.float64}
         )
-        if len(pairs) == 0 or len(vv) == 0:
+        if len(rows) == 0 or len(vv) == 0:
             return empty
-        a = pairs["a"].to_numpy(dtype=np.int64)
-        b = pairs["b"].to_numpy(dtype=np.int64)
-        e = pairs["e"].to_numpy(dtype=np.int8)
-        # cell-local dedup + known-edge suppression (the global
-        # distinct/anti-join, executed here): lexsort by (a, b), mark
-        # group boundaries, drop any group containing a flagged edge
-        # row, keep one representative per surviving group. Depends
-        # only on VALUES (stable under any input row order), so the
-        # result — and the chunk order below — is deterministic.
-        idx = np.lexsort((b, a))
-        a_s, b_s, e_s = a[idx], b[idx], e[idx]
-        new_grp = np.empty(len(a_s), dtype=bool)
-        new_grp[0] = True
-        new_grp[1:] = (a_s[1:] != a_s[:-1]) | (b_s[1:] != b_s[:-1])
-        grp_id = np.cumsum(new_grp) - 1
-        has_edge = np.bincount(grp_id, weights=e_s) > 0
-        rep_idx = np.flatnonzero(new_grp)[~has_edge]
-        a = a_s[rep_idx]
-        b = b_s[rep_idx]
-        if len(a) == 0:
+        is_a = rows["kind"].to_numpy() == 0
+        u = rows["u"].to_numpy(dtype=np.int64)
+        v = rows["v"].to_numpy(dtype=np.int64)
+        e_src, e_dst = u[is_a], v[is_a]
+        mid, hop = u[~is_a], v[~is_a]
+        if len(e_src) == 0 or len(mid) == 0:
             return empty
+        # 2-hop expansion: each A-row (a → mid) pairs with every B-row
+        # of its mid — the JVM 2-hop join, run on this cell's rows only
+        by_mid = np.argsort(mid, kind="stable")
+        mid, hop = mid[by_mid], hop[by_mid]
+        lo = np.searchsorted(mid, e_dst, "left")
+        cnt = np.searchsorted(mid, e_dst, "right") - lo
+        a = np.repeat(e_src, cnt)
+        b = hop[np.arange(len(a)) + np.repeat(lo - (np.cumsum(cnt) - cnt), cnt)]
+        keep = a != b
+        a, b = a[keep], b[keep]
         ids = vv["id"].to_numpy(dtype=np.int64)
-        mat = np.stack(vv["vec"].to_numpy()).astype(np.float64)
         order = np.argsort(ids, kind="stable")
         sorted_ids = ids[order]
-        ia = order[np.searchsorted(sorted_ids, a)]
-        ib = order[np.searchsorted(sorted_ids, b)]
+        nv = len(sorted_ids)
+        # cell-local dedup + known-edge suppression: key each pair by
+        # its dense position in the cell's sorted ids (a bijection on
+        # the ids present, so key order is (a, b) order). Known edges
+        # are keyed only when dst is present in vv: a candidate's b
+        # always is, and an absent dst would collide with another id.
+        keys = np.unique(
+            np.searchsorted(sorted_ids, a) * nv + np.searchsorted(sorted_ids, b)
+        )
+        pe = np.searchsorted(sorted_ids, e_dst)
+        present = sorted_ids[np.minimum(pe, nv - 1)] == e_dst
+        known = np.searchsorted(sorted_ids, e_src[present]) * nv + pe[present]
+        keys = keys[~np.isin(keys, known)]
+        if len(keys) == 0:
+            return empty
+        pa, pb = np.divmod(keys, nv)
+        a, b = sorted_ids[pa], sorted_ids[pb]
+        ia, ib = order[pa], order[pb]
+        mat = np.stack(vv["vec"].to_numpy()).astype(np.float64)
         # CHUNK the pair stream: an unchunked `mat[ia] - mat[ib]` is an
         # O(pairs_per_block · d) float64 tensor — measured 12-14 GB PER
         # TASK at n=300k (2-hop pairs ≈ n·(2k)² dwarf n; this, not the
@@ -828,14 +839,13 @@ def _refine(
         )
 
     scored = (
-        pairs_b.groupBy("blk")
+        rows_b.groupBy("blk")
         .cogroup(vecs_b.groupBy("blk"))
         .applyInPandas(_dist_block, "src long, dst long, dist_sq double")
     )
     # scored is unique per (src, dst) and DISJOINT from g by
     # construction (cell-local dedup + edge suppression above), so no
-    # dropDuplicates is needed — that was the third corpus-pair-sized
-    # hash aggregate this plan used to carry
+    # dropDuplicates is needed
     unioned = g.unionByName(scored)
     wk = Window.partitionBy("src").orderBy("dist_sq", "dst")
     return (

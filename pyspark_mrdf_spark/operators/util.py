@@ -46,11 +46,18 @@ def lazy_checkpoint(df: DataFrame) -> DataFrame:
         spark.conf.set("spark.graft.checkpoint.reliable", "true")
         spark.sparkContext.setCheckpointDir("hdfs://.../ckpt")
 
-    and every shared intermediate in the engine routes through a
+    and the intermediates that route through THIS helper take a
     RELIABLE ``checkpoint`` instead: blocks land on fault-tolerant
     storage, surviving executor loss, at the cost of one write+read of
     the intermediate. Both paths are lazy (``eager=False``) — nothing
-    materializes until the first consumer runs."""
+    materializes until the first consumer runs.
+
+    Scope: only the callers of this helper honour the flag — the dedup
+    operators (``operators/dedup.py``) and q120 (``queries/text.py``).
+    Every other lineage cut in the engine (graph, graph_append, mrdf,
+    similarity, graph_search, quantize, cache) calls
+    ``localCheckpoint`` directly and stays executor-local whatever the
+    flag says."""
     spark = df.sparkSession
     if spark.conf.get(RELIABLE_CHECKPOINT_CONF, "false") == "true":
         return df.checkpoint(eager=False)

@@ -285,3 +285,67 @@ def test_refine_grid_invariance_bit_identical(spark, emb):
 
     single = run((1, 1))
     assert single == run((3, 2)) == run((4, 4)) and len(single) > 0
+
+
+def _refine_reference(vec: dict, edges: list, k: int) -> list:
+    """NumPy brute force of one refine round: 2-hop pairs a → mid → b
+    over both directions of mid's edges, minus a == b and existing
+    edges, scored exactly, merged with the edges, top-k per src by
+    (dist_sq, dst)."""
+    out_nb: dict = {}
+    hop_nb: dict = {}
+    for s, d, _ in edges:
+        out_nb.setdefault(s, []).append(d)
+        hop_nb.setdefault(s, []).append(d)
+        hop_nb.setdefault(d, []).append(s)
+    known = {(s, d) for s, d, _ in edges}
+    pairs = sorted(
+        {
+            (a, b)
+            for a, mids in out_nb.items()
+            for m in mids
+            for b in hop_nb[m]
+            if a != b and (a, b) not in known
+        }
+    )
+    rows = list(edges)
+    if pairs:
+        a = np.stack([vec[p[0]] for p in pairs])
+        b = np.stack([vec[p[1]] for p in pairs])
+        diff = a - b
+        d2 = np.einsum("ij,ij->i", diff, diff)
+        rows += [(s, d, float(x)) for (s, d), x in zip(pairs, d2)]
+    by_src: dict = {}
+    for s, d, x in rows:
+        by_src.setdefault(s, []).append((x, d))
+    return sorted(
+        (s, d, x) for s, cand in by_src.items() for x, d in sorted(cand)[:k]
+    )
+
+
+def test_refine_matches_numpy_bruteforce(spark, emb):
+    # the refine round against a NumPy brute force on every grid,
+    # dist_sq compared EXACTLY. The sparse graph has 4 srcs only, so on
+    # the 5×5 grid some grid rows get B-rows (hops into their column)
+    # but no A-rows — those cells must contribute nothing.
+    from pyspark_mrdf_spark.algorithms.mrdf import _refine
+
+    base = emb.select(
+        F.col("vec_id").cast("long").alias("id"), F.col("embedding").alias("vec")
+    ).localCheckpoint(eager=True)
+    vec = {
+        r["id"]: np.asarray(r["vec"], dtype=np.float64) for r in base.collect()
+    }
+    g0 = knn_exact(emb, 3).select("src", "dst", "dist_sq").localCheckpoint(eager=True)
+    edges = [tuple(r) for r in g0.collect()]
+    hub = min(s for s, _, _ in edges)
+    srcs = {hub} | {d for s, d, _ in edges if s == hub}
+    sparse_edges = [e for e in edges if e[0] in srcs]
+    sparse = spark.createDataFrame(sparse_edges, g0.schema).localCheckpoint(eager=True)
+    for graph, rows in ((g0, edges), (sparse, sparse_edges)):
+        want = _refine_reference(vec, rows, 5)
+        # the round must add 2-hop edges, or the law checks nothing
+        assert {(s, d) for s, d, _ in want} - {(s, d) for s, d, _ in rows}
+        for grid in ((1, 1), (2, 2), (3, 2), (5, 5)):
+            got = sorted(map(tuple, _refine(base, graph, 5, grid=grid).collect()))
+            assert got == want, grid
