@@ -49,6 +49,7 @@ from concurrent.futures import ThreadPoolExecutor
 
 import numpy as np
 import pandas as pd
+from pyspark import inheritable_thread_target
 from pyspark.sql import DataFrame, Window
 from pyspark.sql import functions as F
 from pyspark.sql.types import (
@@ -366,8 +367,12 @@ def knn_graph(
             while next_to_submit <= target and (
                 not max_iter_eff or next_to_submit <= max_iter_eff
             ):
+                # wrapped per submit: the wrapper copies the caller's
+                # local properties (job tags, span labels) when it is
+                # made, so the forest's jobs are attributed like the
+                # main thread's
                 futures[next_to_submit] = executor.submit(
-                    _build_forest_graph, next_to_submit
+                    inheritable_thread_target(_build_forest_graph), next_to_submit
                 )
                 next_to_submit += 1
 

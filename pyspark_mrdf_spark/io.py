@@ -1,4 +1,5 @@
-"""Table loading for the driver corpus (TESTDATA.md).
+"""Table loading for the driver corpus (TESTDATA.md), and the storage
+rules every persisted engine state shares.
 
 Parquet scans are the engine's primary source: self-describing schema,
 column pruning and predicate pushdown reach the file reader via
@@ -8,6 +9,17 @@ cluster scale files split into tasks by ``spark.sql.files.maxPartitionBytes``.
 The reference instead decoded its entire input **in the driver** and
 ``sc.parallelize``-d it (reference main.py:31) — the anti-pattern this
 module replaces (SURVEY.md §2A S7).
+
+Persisted state — the vector indexes (``operators/quantize.py``), the
+dedup index (``operators/dedup_index.py``) and the streamed graph
+state (``streaming/ingest.py``) — shares one directory layout: a
+driver-written ``params.parquet``, base tables written by Spark, and
+per-micro-batch ``stream_<t>/batch=<id>/`` partitions. The helpers at
+the bottom of this module are that layout's only filesystem code.
+Every path goes through its OWN Hadoop FileSystem (``_hadoop_fs``),
+never ``os.path``: a driver-local ``os.makedirs`` on ``file:///x``
+creates a stray relative ``./file:/x`` tree, and ``os.path.exists`` on
+an ``hdfs://`` or ``s3a://`` path is always False.
 """
 
 from __future__ import annotations
@@ -204,3 +216,84 @@ def write_zordered(
         .write.mode(mode)
         .parquet(path)
     )
+
+
+def _hadoop_fs(spark: SparkSession, path: str):
+    """(FileSystem, Path) for ``path`` on whatever scheme it carries
+    (file://, hdfs://, s3a://, ...) under the session's Hadoop conf."""
+    jvm = spark.sparkContext._jvm
+    hpath = jvm.org.apache.hadoop.fs.Path(path)
+    return hpath.getFileSystem(spark.sparkContext._jsc.hadoopConfiguration()), hpath
+
+
+def write_params_file(spark: SparkSession, path: str, table) -> None:
+    """Write a pyarrow ``table`` as ``<path>/params.parquet``: encoded to
+    bytes in the driver, then moved through the path's Hadoop FS
+    (``create`` makes the parent directories on every scheme)."""
+    import pyarrow as pa
+    import pyarrow.parquet as papq
+
+    buf = pa.BufferOutputStream()
+    papq.write_table(table, buf)
+    fs, p = _hadoop_fs(spark, f"{path.rstrip('/')}/params.parquet")
+    out = fs.create(p, True)
+    try:
+        out.write(buf.getvalue().to_pybytes())
+    finally:
+        out.close()
+
+
+def read_params_file(spark: SparkSession, path: str):
+    """Inverse of ``write_params_file``: the pyarrow table stored at
+    ``<path>/params.parquet``."""
+    import pyarrow as pa
+    import pyarrow.parquet as papq
+
+    fs, p = _hadoop_fs(spark, f"{path.rstrip('/')}/params.parquet")
+    stream = fs.open(p)
+    try:
+        data = spark.sparkContext._jvm.org.apache.commons.io.IOUtils.toByteArray(stream)
+    finally:
+        stream.close()
+    return papq.read_table(pa.BufferReader(bytes(data)))
+
+
+def read_stream_partitions(
+    spark: SparkSession, stream_dir: str, exclude_batch: int | None = None
+) -> DataFrame | None:
+    """The committed ``batch=<id>`` partitions under ``stream_dir`` (with
+    their ``batch`` column), or None when there are none to read.
+
+    An absent or empty directory, and one whose every ``batch=<id>``
+    holds only an uncommitted ``_temporary`` write (a crash before the
+    first commit), read as "no stream rows": uncommitted partitions are
+    invisible by the exactly-once model, and the replayed batch
+    overwrites them. With at least one committed partition the read
+    succeeds and parquet ignores the underscore-prefixed leftovers.
+    ``exclude_batch`` drops one batch id — a crash-replayed batch must
+    see exactly the state its first attempt saw, never its own partial
+    writes."""
+    from pyspark.errors import AnalysisException
+
+    fs, p = _hadoop_fs(spark, stream_dir)
+    if not fs.exists(p) or len(fs.listStatus(p)) == 0:
+        return None
+    try:
+        s = spark.read.option("basePath", stream_dir).parquet(stream_dir)
+    except AnalysisException:
+        return None  # no data file anywhere to infer a schema from
+    if exclude_batch is not None:
+        s = s.filter(F.col("batch") != exclude_batch)
+    return s
+
+
+def same_path(spark: SparkSession, a: str, b: str) -> bool:
+    """Whether ``a`` and ``b`` name the same directory once qualified by
+    their filesystems — ``/x/a``, ``/x/a/`` and ``file:///x/a`` agree;
+    relative paths resolve against the working directory."""
+
+    def qualified(path: str) -> str:
+        fs, p = _hadoop_fs(spark, path)
+        return fs.makeQualified(p).toString()
+
+    return qualified(a) == qualified(b)

@@ -1,6 +1,7 @@
 """Persisted dedup index: train-once / ingest-many for incremental
 dedup — the dedup twin of the persisted ANN index
-(``operators/quantize.py`` write/read_*_index).
+(``operators/quantize.py`` write/read_index), sharing its directory
+rules (``pyspark_mrdf_spark/io.py``).
 
 A production 100 TB corpus runs dedup as a DAILY INGEST loop: every
 batch is checked against the accumulated corpus, survivors are
@@ -23,7 +24,7 @@ The banding parameters are part of the index, not of the query: a
 batch encoded with different (num_hashes, bands, rows_per_band, n)
 probes garbage buckets, so ``append_dedup_index`` and the two serving
 entry points always re-derive batch-side state from the STORED params
-(the quantizer-freezing discipline of ``append_sq8_index``).
+(the quantizer-freezing discipline of ``quantize.append_index``).
 
 Scale notes: postings dominate stored bytes (≈ one row per token).
 They store raw shingle strings here for bit-compatibility with the
@@ -43,6 +44,7 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 from pyspark_mrdf_spark.functions.text import fingerprint
+from pyspark_mrdf_spark.io import read_params_file, read_stream_partitions, write_params_file
 from pyspark_mrdf_spark.operators.dedup import (
     lsh_band_buckets,
     minhash_signatures,
@@ -90,24 +92,20 @@ def _index_state(
     return fps, buckets, postings
 
 
-def _write_dedup_params(path: str, params: dict[str, int]) -> None:
+def _write_dedup_params(spark: SparkSession, path: str, params: dict[str, int]) -> None:
     import pyarrow as pa
-    import pyarrow.parquet as papq
 
-    os.makedirs(path, exist_ok=True)
     tbl = pa.table(
         {
             "name": list(DEDUP_PARAM_NAMES),
             "value": [int(params[k]) for k in DEDUP_PARAM_NAMES],
         }
     )
-    papq.write_table(tbl, os.path.join(path, "params.parquet"))
+    write_params_file(spark, path, tbl)
 
 
-def _read_dedup_params(path: str) -> dict[str, int]:
-    import pyarrow.parquet as papq
-
-    tbl = papq.read_table(os.path.join(path, "params.parquet")).to_pydict()
+def _read_dedup_params(spark: SparkSession, path: str) -> dict[str, int]:
+    tbl = read_params_file(spark, path).to_pydict()
     return dict(zip(tbl["name"], (int(v) for v in tbl["value"])))
 
 
@@ -138,7 +136,7 @@ def write_dedup_index(
     fps, buckets, postings = _index_state(
         corpus, num_hashes, bands, rows_per_band, n, id_col, text_col
     )
-    _write_dedup_params(path, params)
+    _write_dedup_params(corpus.sparkSession, path, params)
     fps.write.mode("overwrite").parquet(os.path.join(path, "fps"))
     # r15 (guide §6 file sizing): the bucket rows come out of the
     # minhash kernel's partitioning — writing them partitionBy("band")
@@ -172,34 +170,16 @@ def read_dedup_index(
     replay-safety hook: a re-executed micro-batch must not dedupe
     against its own crashed-attempt partitions (the self-exclusion
     rule of ``streaming/ingest.py``)."""
-    from pyspark_mrdf_spark.streaming.sinks import _hadoop_fs
 
     def _with_stream(sub: str) -> DataFrame:
-        from pyspark.errors import AnalysisException
-
         df = spark.read.parquet(os.path.join(path, sub))
-        stream_dir = os.path.join(path, f"stream_{sub}")
-        fs, p = _hadoop_fs(spark, stream_dir)
-        if fs.exists(p) and len(fs.listStatus(p)) > 0:
-            try:
-                s = spark.read.option("basePath", stream_dir).parquet(stream_dir)
-            except AnalysisException:
-                # every batch=<id> dir holds only an uncommitted
-                # _temporary write (a crash before any commit): no data
-                # file to infer a schema from. Uncommitted partitions
-                # are invisible by the exactly-once model, so an
-                # all-uncommitted stream dir reads as absent — the
-                # replayed batch then overwrites it. (With ≥1 committed
-                # partition the read succeeds and parquet ignores the
-                # underscore-prefixed leftovers.)
-                return df
-            if _exclude_stream_batch is not None:
-                s = s.filter(F.col("batch") != _exclude_stream_batch)
-            df = df.unionByName(s.select(*df.columns))
-        return df
+        s = read_stream_partitions(
+            spark, os.path.join(path, f"stream_{sub}"), _exclude_stream_batch
+        )
+        return df if s is None else df.unionByName(s.select(*df.columns))
 
     return DedupIndex(
-        params=_read_dedup_params(path),
+        params=_read_dedup_params(spark, path),
         fps=_with_stream("fps"),
         buckets=_with_stream("buckets"),
         postings=_with_stream("postings"),
@@ -268,7 +248,7 @@ def append_dedup_index(
     ingest loop's per-day cost is batch-sized regardless of corpus
     size. A grown index is row-identical to one rebuilt from the
     doc union (same ``_index_state`` encode; equivalence-tested)."""
-    p = _read_dedup_params(path)
+    p = _read_dedup_params(spark, path)
     fps, buckets, postings = _index_state(
         new_docs, p["num_hashes"], p["bands"], p["rows_per_band"], p["n"], id_col, text_col
     )

@@ -37,6 +37,7 @@ zero matches.
 from __future__ import annotations
 
 import warnings
+from collections import OrderedDict
 
 from pyspark.sql import Column, DataFrame, Window
 from pyspark.sql import functions as F
@@ -162,10 +163,12 @@ def _sub_block_keys(name: Column, max_dist: int, is_dirty: bool) -> Column:
 # rerun doubles that) — each paying the keyed-stats collect. Memoize
 # the resolved cap per (application, canonicalized plan): recomputable
 # derived state in the session registry, the same discipline as
-# cache.memoized_df (applicationId scoping drops entries from dead
-# sessions; semanticHash + schema keys the PLAN, so two different
-# clean feeds never collide).
-_AUTO_CACHE: dict[tuple, int | None] = {}
+# cache.memoized_df (semanticHash + schema keys the PLAN, so two
+# different clean feeds never collide). A plain LRU of
+# ``_AUTO_CACHE_MAX`` entries over all keys bounds a long-lived
+# session, whatever application the keys belong to.
+_AUTO_CACHE_MAX = 256
+_AUTO_CACHE: OrderedDict[tuple, int | None] = OrderedDict()
 
 
 def _resolve_auto_block(ck: DataFrame) -> int | None:
@@ -175,7 +178,13 @@ def _resolve_auto_block(ck: DataFrame) -> int | None:
     size), and ``None`` — the uncapped plan, byte-identical — when no
     block exceeds the cap. One driver aggregate over the (small)
     per-key count table, memoized per session+plan; this is the
-    operator's only eager step."""
+    operator's only eager step.
+
+    Staleness: the key is the clean side's PLAN, not its data, so
+    overwriting the clean-side table at the same path within one
+    session can serve the cap resolved for the old contents. Output
+    stays exact either way — sub-blocking is lossless; only the cap
+    that splits hot blocks (a speed dial) can be stale."""
     key = (
         ck.sparkSession.sparkContext.applicationId,
         ck.semanticHash(),
@@ -184,6 +193,7 @@ def _resolve_auto_block(ck: DataFrame) -> int | None:
         AUTO_BLOCK_MULT,
     )
     if key in _AUTO_CACHE:
+        _AUTO_CACHE.move_to_end(key)
         return _AUTO_CACHE[key]
     stats = (
         ck.groupBy("_k")
@@ -197,10 +207,8 @@ def _resolve_auto_block(ck: DataFrame) -> int | None:
     cap = max(AUTO_BLOCK_FLOOR, AUTO_BLOCK_MULT * int(stats["_med"] or 0))
     resolved = cap if (stats["_mx"] or 0) > cap else None
     _AUTO_CACHE[key] = resolved
-    if len(_AUTO_CACHE) > 256:  # dead-session entries; keys are app-scoped
-        app = key[0]
-        for k in [k for k in _AUTO_CACHE if k[0] != app]:
-            del _AUTO_CACHE[k]
+    while len(_AUTO_CACHE) > _AUTO_CACHE_MAX:
+        _AUTO_CACHE.popitem(last=False)
     return resolved
 
 

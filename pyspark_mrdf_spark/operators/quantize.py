@@ -56,12 +56,21 @@ needs storage-layer pruning to bite.
 
 from __future__ import annotations
 
-from collections.abc import Iterator
+from collections.abc import Callable, Iterator
+from dataclasses import dataclass
+from functools import reduce
 
 import numpy as np
 import pandas as pd
 from pyspark.sql import DataFrame, Window
 from pyspark.sql import functions as F
+
+from pyspark_mrdf_spark.io import (
+    read_params_file,
+    read_stream_partitions,
+    same_path,
+    write_params_file,
+)
 
 
 def sq8_train(df: DataFrame, vec_col: str = "embedding") -> tuple[np.ndarray, np.ndarray]:
@@ -122,6 +131,31 @@ def _collect_queries(
     return qpdf[id_col].to_numpy(dtype=np.int64), np.stack(qpdf[vec_col].to_numpy())
 
 
+def _map_encode(
+    df: DataFrame,
+    id_col: str,
+    vec_col: str,
+    kernel,
+    schema: str = "vec_id long, code binary",
+) -> DataFrame:
+    """The one mapInPandas scaffold behind every ``*_encode``:
+    ``kernel(mat)`` maps an Arrow batch's stacked vectors to its output
+    columns besides ``vec_id``, and the ``code`` uint8 matrix it returns
+    is packed one BINARY cell per row. The codec params ride along in
+    the kernel's closure as task constants (O(params), like a broadcast
+    literal)."""
+
+    def _enc(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
+        for pdf in batches:
+            if len(pdf) == 0:
+                continue
+            cols = kernel(np.stack(pdf[vec_col].to_numpy()))
+            cols["code"] = [c.tobytes() for c in cols["code"]]
+            yield pd.DataFrame({"vec_id": pdf[id_col].to_numpy(dtype=np.int64), **cols})
+
+    return df.select(id_col, vec_col).mapInPandas(_enc, schema)
+
+
 def sq8_encode(
     df: DataFrame,
     mn: np.ndarray,
@@ -130,25 +164,9 @@ def sq8_encode(
     vec_col: str = "embedding",
 ) -> DataFrame:
     """(id, code binary): each row's d uint8 codes packed into one
-    BINARY cell — the stored index representation (1 byte/dim).
-    Arrow-batched; the quantizer rides along as a task-closure
-    constant (O(d), like a broadcast literal)."""
+    BINARY cell — the stored index representation (1 byte/dim)."""
     mn_b, mx_b = mn.copy(), mx.copy()
-
-    def _enc(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in batches:
-            if len(pdf) == 0:
-                continue
-            mat = np.stack(pdf[vec_col].to_numpy())
-            codes = sq8_codes(mat, mn_b, mx_b)
-            yield pd.DataFrame(
-                {
-                    "vec_id": pdf[id_col].to_numpy(dtype=np.int64),
-                    "code": [c.tobytes() for c in codes],
-                }
-            )
-
-    return df.select(id_col, vec_col).mapInPandas(_enc, "vec_id long, code binary")
+    return _map_encode(df, id_col, vec_col, lambda mat: {"code": sq8_codes(mat, mn_b, mx_b)})
 
 
 def sq8_range_weights(
@@ -392,7 +410,7 @@ def sq8_search_encoded(
     weighted: bool = False,
 ) -> DataFrame:
     """Serve a query batch against an ALREADY-ENCODED SQ8 index
-    (``read_sq8_index`` supplies (mn, mx, codes); ``corpus`` supplies
+    (``read_index`` supplies (mn, mx) and codes; ``corpus`` supplies
     full-precision vectors for the rerank join only). Bit-identical
     output to the per-call ``sq8_search``, which delegates here.
     ``weighted=True`` ranks candidates by the range-weighted code
@@ -476,21 +494,9 @@ def bq_encode(
     stored index than float32 parquet and 8x smaller than SQ8. The
     tier that fits a 10^11-row corpus in cluster memory."""
     thr_b = thr.copy()
-
-    def _enc(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in batches:
-            if len(pdf) == 0:
-                continue
-            mat = np.stack(pdf[vec_col].to_numpy())
-            packed = np.packbits(bq_bits(mat, thr_b), axis=1)
-            yield pd.DataFrame(
-                {
-                    "vec_id": pdf[id_col].to_numpy(dtype=np.int64),
-                    "code": [c.tobytes() for c in packed],
-                }
-            )
-
-    return df.select(id_col, vec_col).mapInPandas(_enc, "vec_id long, code binary")
+    return _map_encode(
+        df, id_col, vec_col, lambda mat: {"code": np.packbits(bq_bits(mat, thr_b), axis=1)}
+    )
 
 
 def bq_candidates(
@@ -595,7 +601,7 @@ def bq_search_encoded(
     include_self: bool = False,
 ) -> DataFrame:
     """Serve a query batch against an ALREADY-ENCODED binary index —
-    the train-once/search-many entry point (``read_bq_index`` supplies
+    the train-once/search-many entry point (``read_index`` supplies
     (thr, codes)). Bit-identical to ``bq_search``, which delegates
     here. 1-bit Hamming loses more metric information than SQ8's 8-bit
     codes, so the default candidate budget is wider (8k vs 4k)."""
@@ -898,20 +904,7 @@ def pq_encode(
     8 subspaces that is 8 B/row against 256 B of float32 parquet, the
     32× compression tier of the similarity stack."""
     cb = codebooks.copy()
-
-    def _enc(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in batches:
-            if len(pdf) == 0:
-                continue
-            codes = pq_assign(np.stack(pdf[vec_col].to_numpy()), cb)
-            yield pd.DataFrame(
-                {
-                    "vec_id": pdf[id_col].to_numpy(dtype=np.int64),
-                    "code": [c.tobytes() for c in codes],
-                }
-            )
-
-    return df.select(id_col, vec_col).mapInPandas(_enc, "vec_id long, code binary")
+    return _map_encode(df, id_col, vec_col, lambda mat: {"code": pq_assign(mat, cb)})
 
 
 def pq_candidates(
@@ -1064,14 +1057,15 @@ def pq_search_encoded(
     rotation: tuple[np.ndarray, np.ndarray] | None = None,
 ) -> DataFrame:
     """Serve a query batch against an ALREADY-ENCODED PQ index
-    (``read_pq_index`` supplies (codebooks, codes)). Bit-identical
+    (``read_index`` supplies (codebooks, codes)). Bit-identical
     output to the per-call ``pq_search``, which delegates here.
 
     ``rotation``: the persisted OPQ pre-rotation of a ``rotate='opq'``
-    index (``read_index_rotation``) — REQUIRED when serving one (the
-    codes live in the rotated space). Queries rotate driver-side for
-    the candidate stage; the rerank scores original-space exact
-    distances on the original corpus (see ``_rotate_query_arrays``)."""
+    index (``read_index``'s ``rot_mean``/``rotation``) — REQUIRED when
+    serving one (the codes live in the rotated space). Queries rotate
+    driver-side for the candidate stage; the rerank scores
+    original-space exact distances on the original corpus (see
+    ``_rotate_query_arrays``)."""
     if k_candidates is None:
         k_candidates = 4 * k
     n_parts = max(
@@ -1161,24 +1155,12 @@ def ivfpq_encode(
     cb = codebooks.copy()
     cm = coarse.copy()
 
-    def _enc(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in batches:
-            if len(pdf) == 0:
-                continue
-            mat = np.stack(pdf[vec_col].to_numpy()).astype(np.float64)
-            cell = l2_argsort_topm(mat, cm, 1)[:, 0]
-            codes = pq_assign(mat - cm[cell], cb)
-            yield pd.DataFrame(
-                {
-                    "vec_id": pdf[id_col].to_numpy(dtype=np.int64),
-                    "cell": cell.astype(np.int64),
-                    "code": [c.tobytes() for c in codes],
-                }
-            )
+    def _kernel(mat: np.ndarray) -> dict:
+        mat = mat.astype(np.float64)
+        cell = l2_argsort_topm(mat, cm, 1)[:, 0]
+        return {"cell": cell.astype(np.int64), "code": pq_assign(mat - cm[cell], cb)}
 
-    return df.select(id_col, vec_col).mapInPandas(
-        _enc, "vec_id long, cell long, code binary"
-    )
+    return _map_encode(df, id_col, vec_col, _kernel, "vec_id long, cell long, code binary")
 
 
 def ivfpq_search(
@@ -1219,9 +1201,9 @@ def ivfpq_search(
     portability. Returns (src, dst, dist_sq, rnk), rnk 1..k.
 
     Per-call training is the convenience path; a deployment trains and
-    encodes ONCE (``ivfpq_train`` + ``ivfpq_encode`` +
-    ``write_ivfpq_index``) and serves query batches through
-    ``ivfpq_search_encoded`` over the loaded index — bit-identical to
+    encodes ONCE (``build_index(corpus, path, "ivfpq")``) and serves
+    query batches through ``ivfpq_search_encoded`` over the
+    ``read_index`` output — bit-identical to
     this path (train-once/search-many equivalence-tested)."""
     from pyspark_mrdf_spark.operators.similarity import _scan_shaped
 
@@ -1263,19 +1245,19 @@ def ivfpq_search_encoded(
     rotation: tuple[np.ndarray, np.ndarray] | None = None,
 ) -> DataFrame:
     """Serve a query batch against an ALREADY-ENCODED IVF-PQ index —
-    the train-once/search-many path (``read_ivfpq_index`` supplies
+    the train-once/search-many path (``read_index`` supplies
     (coarse, codebooks, codes); ``corpus`` supplies full-precision
     vectors for the rerank join only). Bit-identical output to the
     per-call ``ivfpq_search``, which delegates here after training.
 
     ``rotation``: the persisted OPQ pre-rotation of a ``rotate='opq'``
-    index (``read_index_rotation``) — REQUIRED when serving one: the
-    coarse cells and codes live in the rotated space, so the probe and
-    ADC stages run on the rotated query batch (rotated driver-side,
-    bit-identical to the build's executor-side kernel) while the exact
-    rerank stays on the ORIGINAL queries and corpus — an isometry
-    preserves exact neighbors, and original-space dist_sq is the more
-    useful output contract."""
+    index (``read_index``'s ``rot_mean``/``rotation``) — REQUIRED when
+    serving one: the coarse cells and codes live in the rotated space,
+    so the probe and ADC stages run on the rotated query batch (rotated
+    driver-side, bit-identical to the build's executor-side kernel)
+    while the exact rerank stays on the ORIGINAL queries and corpus —
+    an isometry preserves exact neighbors, and original-space dist_sq
+    is the more useful output contract."""
     from pyspark_mrdf_spark.functions.vector import l2_argsort_topm
 
     if k_candidates is None:
@@ -1440,18 +1422,28 @@ def ivfpq_search_encoded(
 # A production corpus trains and encodes ONCE, then serves query batch
 # after query batch across jobs; retraining per search call (the
 # convenience *_search entry points) re-pays the full encode pass every
-# time. The stored index is two parts:
+# time. Every codec persists through the same five functions —
+# ``write_index``, ``read_index``, ``build_index``, ``append_index``,
+# ``merge_indexes`` — over one directory layout, whose filesystem rules
+# (URI-safe paths, committed-stream reads, same-path checks) live in
+# ``pyspark_mrdf_spark/io.py``:
 #
-#   <path>/params.parquet — O(parameters) quantizer state written
+#   <path>/params.parquet — O(parameters) quantizer state, written
 #       driver-side with pyarrow: float64 survives the parquet DOUBLE
 #       roundtrip bit-exactly, so a loaded index reproduces the inline
-#       path's results BIT-IDENTICALLY (equivalence-tested).
-#   <path>/codes/ — the per-row code table written by Spark
-#       (distributed, partition-count preserved by the scan that reads
-#       it back): (vec_id, code) for SQ8/PQ, (vec_id, cell, code) for
-#       IVF-PQ. uint8 codes ride in BINARY cells — 1 B/dim (SQ8) or
-#       1 B/subspace (PQ) on disk, the same 8-33x storage advantage
-#       the in-memory tier has.
+#       path's results BIT-IDENTICALLY (equivalence-tested). No codec
+#       field is stored: ``_CODECS`` names the params that identify each
+#       kind, and ``_index_kind`` reads the kind back from the names.
+#       An OPQ pre-rotation (``_ROT_KEYS``) and its training envelope
+#       (``_ENV_KEYS``) ride in the same file.
+#   <path>/codes/ — the per-row code table written by Spark: (vec_id,
+#       code), plus ``cell`` for IVF-PQ, whose table is partitioned BY
+#       CELL so a serving scan of n_probe cells prunes to exactly those
+#       directories (the IVF inverted-list lookup at the storage
+#       layer). uint8 codes ride in BINARY cells.
+#   <path>/stream_codes/batch=<id>/ — micro-batch partitions committed
+#       by ``streaming/ingest.index_append_stream``; ``read_index``
+#       serves them together with codes/.
 #
 # Search results are partition-independent (deterministic local-top-k
 # merges), so a reloaded code table — whatever its file split — yields
@@ -1459,61 +1451,90 @@ def ivfpq_search_encoded(
 # ---------------------------------------------------------------------------
 
 
-def _write_params(path: str, parts: dict[str, np.ndarray]) -> None:
-    """Write named float64 arrays (1-D or 2-D or 3-D) to one parquet
-    file as (name, idx0, idx1, vec double[]) rows — small, driver-side,
-    bit-exact."""
-    import os
+@dataclass(frozen=True)
+class _Codec:
+    """One persisted-index kind: the param names that identify it, its
+    ``train(corpus, id_col, vec_col, **kw)`` returning those params in
+    order, its ``encode(df, *params, id_col, vec_col)``, the code
+    table's partition column, and whether ``rotate='opq'`` applies."""
 
+    keys: tuple[str, ...]
+    train: Callable[..., tuple]
+    encode: Callable[..., DataFrame]
+    partition: str | None = None
+    rotatable: bool = False
+
+
+_CODECS = {
+    "sq8": _Codec(("mn", "mx"), lambda c, i, v: sq8_train(c, v), sq8_encode),
+    "bq": _Codec(("thr",), lambda c, i, v: (bq_train(c, v),), bq_encode),
+    "pq": _Codec(
+        ("codebooks",),
+        lambda c, i, v, **kw: (pq_train(c, id_col=i, vec_col=v, **kw),),
+        pq_encode,
+        rotatable=True,
+    ),
+    "ivfpq": _Codec(
+        ("coarse", "codebooks"),
+        lambda c, i, v, **kw: ivfpq_train(c, id_col=i, vec_col=v, **kw),
+        ivfpq_encode,
+        partition="cell",
+        rotatable=True,
+    ),
+}
+_ROT_KEYS = ("rot_mean", "rotation")
+_ENV_KEYS = ("rot_env_mn", "rot_env_mx")
+
+
+def _index_kind(params: dict[str, np.ndarray]) -> str:
+    """The codec whose identifying params are exactly the stored ones
+    (rotation and envelope keys aside)."""
+    names = set(params) - set(_ROT_KEYS) - set(_ENV_KEYS)
+    for kind, codec in _CODECS.items():
+        if names == set(codec.keys):
+            return kind
+    raise ValueError(f"no index codec stores exactly the params {sorted(names)}")
+
+
+def _write_params(spark, path: str, parts: dict[str, np.ndarray]) -> None:
+    """Write named float64 arrays (1-D or 2-D or 3-D) to
+    ``<path>/params.parquet`` as (name, idx0, idx1, ndim, vec double[])
+    rows — small, driver-side, bit-exact."""
     import pyarrow as pa
-    import pyarrow.parquet as papq
 
-    names: list[str] = []
-    i0: list[int] = []
-    i1: list[int] = []
-    ndims: list[int] = []
-    vecs: list[list[float]] = []
+    cols: dict[str, list] = {"name": [], "idx0": [], "idx1": [], "ndim": [], "vec": []}
     for name, arr in parts.items():
         a = np.asarray(arr, dtype=np.float64)
-        nd = a.ndim
-        if a.ndim == 1:
-            a = a[None, None, :]
-        elif a.ndim == 2:
-            a = a[None, :, :]
-        elif a.ndim != 3:
-            raise ValueError(f"_write_params: {name} has ndim={arr.ndim} > 3")
-        for x in range(a.shape[0]):
-            for y in range(a.shape[1]):
-                names.append(name)
-                i0.append(x)
-                i1.append(y)
-                ndims.append(nd)
-                vecs.append(a[x, y].tolist())
-    os.makedirs(path, exist_ok=True)
-    tbl = pa.table(
-        {
-            "name": pa.array(names, pa.string()),
-            "idx0": pa.array(i0, pa.int32()),
-            "idx1": pa.array(i1, pa.int32()),
-            # the ORIGINAL rank, so the reader restores shape from
-            # metadata instead of inferring it from max indices (a
-            # size-1 leading dim — n_subspaces=1, n_centroids=1 —
-            # would otherwise round-trip squeezed to the wrong rank)
-            "ndim": pa.array(ndims, pa.int8()),
-            "vec": pa.array(vecs, pa.list_(pa.float64())),
-        }
+        if a.ndim not in (1, 2, 3):
+            raise ValueError(f"_write_params: {name} has ndim={a.ndim} > 3")
+        a3 = a.reshape((1,) * (3 - a.ndim) + a.shape)
+        for x in range(a3.shape[0]):
+            for y in range(a3.shape[1]):
+                for col, val in zip(cols, (name, x, y, a.ndim, a3[x, y].tolist())):
+                    cols[col].append(val)
+    write_params_file(
+        spark,
+        path,
+        pa.table(
+            {
+                "name": pa.array(cols["name"], pa.string()),
+                "idx0": pa.array(cols["idx0"], pa.int32()),
+                "idx1": pa.array(cols["idx1"], pa.int32()),
+                # the ORIGINAL rank, so the reader restores shape from
+                # metadata instead of inferring it from max indices (a
+                # size-1 leading dim — n_subspaces=1, n_centroids=1 —
+                # would otherwise round-trip squeezed to the wrong rank)
+                "ndim": pa.array(cols["ndim"], pa.int8()),
+                "vec": pa.array(cols["vec"], pa.list_(pa.float64())),
+            }
+        ),
     )
-    papq.write_table(tbl, os.path.join(path, "params.parquet"))
 
 
-def _read_params(path: str) -> dict[str, np.ndarray]:
+def _read_params(spark, path: str) -> dict[str, np.ndarray]:
     """Inverse of ``_write_params``: name -> float64 array with the
     original leading dims squeezed back off."""
-    import os
-
-    import pyarrow.parquet as papq
-
-    tbl = papq.read_table(os.path.join(path, "params.parquet")).to_pydict()
+    tbl = read_params_file(spark, path).to_pydict()
     # pre-ndim-column indexes (written before r8's fix) fall back to
     # max-index inference, which was only wrong for size-1 leading dims
     nd_col = tbl.get("ndim") or [None] * len(tbl["name"])
@@ -1528,137 +1549,215 @@ def _read_params(path: str) -> dict[str, np.ndarray]:
     for name, cells in by_name.items():
         n0 = max(x for x, _ in cells) + 1
         n1 = max(y for _, y in cells) + 1
-        d = len(next(iter(cells.values())))
-        a = np.empty((n0, n1, d), dtype=np.float64)
+        a = np.empty((n0, n1, len(next(iter(cells.values())))), dtype=np.float64)
         for (x, y), v in cells.items():
             a[x, y] = v
         nd = nd_of[name]
         if nd is None:
             nd = 1 if (n0 == 1 and n1 == 1) else (2 if n0 == 1 else 3)
-        if nd == 1:
-            out[name] = a[0, 0]
-        elif nd == 2:
-            out[name] = a[0]
-        else:
-            out[name] = a
+        out[name] = a.reshape(a.shape[3 - nd :])
     return out
 
 
-def write_sq8_index(
-    path: str, mn: np.ndarray, mx: np.ndarray, codes: DataFrame
-) -> None:
-    """Persist an SQ8 index: quantizer (mn, mx) + the 1 B/dim code
-    table. ``codes`` is an ``sq8_encode`` output."""
-    import os
-
-    _write_params(path, {"mn": mn, "mx": mx})
-    codes.write.mode("overwrite").parquet(os.path.join(path, "codes"))
+def _write_codes(codes: DataFrame, path: str, mode: str, partition: str | None) -> None:
+    w = codes.write.mode(mode)
+    if partition is not None:
+        w = w.partitionBy(partition)
+    w.parquet(path)
 
 
-def read_sq8_index(spark, path: str) -> tuple[np.ndarray, np.ndarray, DataFrame]:
-    """(mn, mx, codes) — feed to ``sq8_search_encoded``.
+def _encode_for_index(
+    params: dict[str, np.ndarray], vectors: DataFrame, id_col: str, vec_col: str
+) -> tuple[DataFrame, str | None]:
+    """(codes, partition column) for ``vectors`` under an index's FROZEN
+    params — the one encode behind every append path. A rotated index
+    routes the vectors through its persisted rotation first:
+    ``pca_project_vec`` replays the build's sequential-fold arithmetic,
+    so appended codes stay bit-identical to a union-corpus encode."""
+    codec = _CODECS[_index_kind(params)]
+    if "rotation" in params:
+        from pyspark_mrdf_spark.operators.project import pca_project_vec
 
-    Codes are the union of the base build (``codes/``) and any
-    partitions a running ``index_append_stream`` has committed
-    (``stream_codes/batch=<id>/``) — a streamed-into index serves
-    identically to one grown by batch ``append_sq8_index`` (the
-    quantizer is frozen either way; equivalence-tested)."""
-    import os
-
-    p = _read_params(path)
-    codes = spark.read.parquet(os.path.join(path, "codes"))
-    stream_dir = os.path.join(path, "stream_codes")
-    # existence via the path's own Hadoop filesystem, not os.path —
-    # hdfs:// and s3a:// index dirs must take this branch too
-    from pyspark_mrdf_spark.streaming.sinks import _hadoop_fs
-
-    fs, sc_path = _hadoop_fs(spark, stream_dir)
-    if fs.exists(sc_path):
-        streamed = (
-            spark.read.option("basePath", stream_dir)
-            .parquet(stream_dir)
-            .select("vec_id", "code")
+        vectors = pca_project_vec(
+            vectors, params["rot_mean"], params["rotation"], id_col, vec_col
         )
-        codes = codes.unionByName(streamed)
-    return p["mn"], p["mx"], codes
+    codes = codec.encode(vectors, *(params[k] for k in codec.keys), id_col, vec_col)
+    return codes, codec.partition
 
 
-def write_bq_index(path: str, thr: np.ndarray, codes: DataFrame) -> None:
-    """Persist a binary index: per-dim median thresholds + the
-    1 BIT/dim packed code table (a ``bq_encode`` output) — the
-    smallest stored index the engine writes (32x below float32)."""
-    import os
-
-    _write_params(path, {"thr": thr})
-    codes.write.mode("overwrite").parquet(os.path.join(path, "codes"))
-
-
-def read_bq_index(spark, path: str) -> tuple[np.ndarray, DataFrame]:
-    """(thr, codes) — feed to ``bq_search_encoded``."""
-    import os
-
-    p = _read_params(path)
-    return p["thr"], spark.read.parquet(os.path.join(path, "codes"))
+def write_index(path: str, params: dict[str, np.ndarray], codes: DataFrame) -> None:
+    """Persist an index: ``params`` (a codec's params, e.g. ``{"mn",
+    "mx"}`` for SQ8 or ``{"coarse", "codebooks"}`` for IVF-PQ, plus any
+    ``rot_mean``/``rotation``/``rot_env_mn``/``rot_env_mx``) and the
+    matching ``*_encode`` output as the code table. With a rotation the
+    codes must have been encoded from the ROTATED corpus; appends and
+    the ``*_search_encoded(rotation=...)`` serving path then apply the
+    frozen rotation to new vectors and query batches."""
+    partition = _CODECS[_index_kind(params)].partition
+    _write_params(codes.sparkSession, path, params)
+    _write_codes(codes, f"{path.rstrip('/')}/codes", "overwrite", partition)
 
 
-def write_pq_index(
+def read_index(spark, path: str) -> tuple[dict[str, np.ndarray], DataFrame]:
+    """(params, codes) of a persisted index — feed the codec's params to
+    its ``*_search_encoded`` (e.g. ``params["mn"], params["mx"]`` for
+    SQ8; ``(params["rot_mean"], params["rotation"])`` as ``rotation=``
+    when the index is rotated).
+
+    Codes are the union of the base build (``codes/``, grown in place
+    by ``append_index``) and every partition a running
+    ``index_append_stream`` has committed (``stream_codes/batch=<id>/``)
+    — a streamed-into index serves identically to one grown by batch
+    appends (the params are frozen either way; equivalence-tested).
+    IVF-PQ's ``cell`` comes back as the partition column, cast to long
+    to keep the pre-persistence schema."""
+    params = _read_params(spark, path)
+    base = path.rstrip("/")
+    codes = spark.read.parquet(f"{base}/codes")
+    streamed = read_stream_partitions(spark, f"{base}/stream_codes")
+    if streamed is not None:
+        codes = codes.unionByName(streamed.select(*codes.columns))
+    if _CODECS[_index_kind(params)].partition == "cell":
+        codes = codes.select("vec_id", F.col("cell").cast("long").alias("cell"), "code")
+    return params, codes
+
+
+def build_index(
+    corpus: DataFrame,
     path: str,
-    codebooks: np.ndarray,
-    codes: DataFrame,
-    rotation: tuple[np.ndarray, np.ndarray] | None = None,
-    rotation_env: tuple[np.ndarray, np.ndarray] | None = None,
+    kind: str,
+    id_col: str = "vec_id",
+    vec_col: str = "embedding",
+    rotate: str | None = None,
+    metrics_out: dict | None = None,
+    **train_kw,
+) -> dict[str, np.ndarray]:
+    """Train + encode + persist an index of ``kind`` (``"sq8"``,
+    ``"bq"``, ``"pq"`` or ``"ivfpq"``) in one call; returns its params.
+    ``train_kw`` are the codec's ``*_train`` parameters (none for SQ8
+    and BQ). The one-time cost a deployment amortizes over every
+    ``*_search_encoded`` batch.
+
+    ``rotate='opq'`` (PQ and IVF-PQ) trains the OPQ-lite pre-rotation
+    first, trains and encodes in the ROTATED space, and persists (mean,
+    rotation) plus the rotated training envelope with the frozen params
+    — q159's measured recall win (0.811→0.949 at unchanged bytes),
+    servable train-once/search-many; ``metrics_out`` receives its
+    ``rotation_train_s``."""
+    codec = _CODECS.get(kind)
+    if codec is None:
+        raise ValueError(f"build_index: unknown kind {kind!r}")
+    if rotate is not None and (rotate != "opq" or not codec.rotatable):
+        raise ValueError(f"build_index: rotate={rotate!r} is not valid for {kind!r}")
+    rot: dict[str, np.ndarray] = {}
+    if rotate == "opq":
+        # the rotation samples with the *_train defaults unless overridden
+        rotation, corpus, env = _train_index_rotation(
+            corpus, train_kw.get("n_subspaces", 8), train_kw.get("sample_size", 2048),
+            train_kw.get("seed", 42), id_col, vec_col, metrics_out=metrics_out,
+        )
+        rot = dict(zip(_ROT_KEYS + _ENV_KEYS, rotation + env))
+    params = dict(zip(codec.keys, codec.train(corpus, id_col, vec_col, **train_kw)), **rot)
+    codes = codec.encode(corpus, *(params[k] for k in codec.keys), id_col, vec_col)
+    write_index(path, params, codes)
+    return params
+
+
+def append_index(
+    path: str,
+    new_vectors: DataFrame,
+    id_col: str = "vec_id",
+    vec_col: str = "embedding",
 ) -> None:
-    """Persist a PQ index: (n_subspaces, n_codes, d_sub) codebooks +
-    the n_subspaces-B/row code table (a ``pq_encode`` output).
+    """Grow a persisted index with new vectors — the daily-ingest path:
+    encode with the index's PERSISTED params (no retrain, no re-encode
+    of the existing corpus; through the persisted rotation when there
+    is one) and parquet-append only the new codes — IVF-PQ rows into
+    their cells' directories, so serving scans keep pruning. Because
+    the params are frozen, the grown index is bit-identical to one
+    encoded from the union corpus with the same params — append order
+    cannot change any code byte.
 
-    ``rotation=(mean, rot)`` persists an OPQ pre-rotation
-    (``operators/project.opq_train``) WITH the frozen params — the
-    codes must then have been encoded from the ROTATED corpus, and the
-    index serves train-once/search-many: ``append_pq_index`` encodes
-    new vectors through the frozen rotation, and the ``*_search_encoded``
-    serving path rotates each query batch (``rotation=`` arg /
-    ``read_index_rotation``). Without persistence the measured OPQ
-    recall win (q159: 0.811→0.949 at unchanged bytes) only existed
-    inline, re-paying rotation training per job."""
-    import os
-
-    parts = {"codebooks": codebooks}
-    if rotation is not None:
-        parts["rot_mean"], parts["rotation"] = rotation
-    if rotation_env is not None:
-        # the rotated-space training envelope (rotation_drift_stats's
-        # frozen comparand) rides the same params file
-        parts["rot_env_mn"], parts["rot_env_mx"] = rotation_env
-    _write_params(path, parts)
-    codes.write.mode("overwrite").parquet(os.path.join(path, "codes"))
-
-
-def read_pq_index(spark, path: str) -> tuple[np.ndarray, DataFrame]:
-    """(codebooks, codes) — feed to ``pq_search_encoded``. If the index
-    was built rotated, also fetch ``read_index_rotation(path)`` and
-    pass it to the serving call."""
-    import os
-
-    p = _read_params(path)
-    return p["codebooks"], spark.read.parquet(os.path.join(path, "codes"))
+    Caller contract: ``id_col`` values must be new (an id already in
+    the index would simply appear twice — exactly like appending a
+    duplicate row to any parquet table). Drift caveat: frozen params
+    stop spanning drifted ingest — SQ8 clips values outside the trained
+    [mn, mx] to the 0/255 codes, and frozen coarse centroids pile
+    drifted rows into few cells, eroding the n_probe/n_cells
+    scan-fraction bound. Monitor with ``sq8_drift_stats`` (q131),
+    ``index_cell_stats`` (q105) or ``rotation_drift_stats`` and retrain
+    on schedule — that monitoring query, not a retrain per batch, is
+    the 100 TB operating mode."""
+    params = _read_params(new_vectors.sparkSession, path)
+    codes, partition = _encode_for_index(params, new_vectors, id_col, vec_col)
+    _write_codes(codes, f"{path.rstrip('/')}/codes", "append", partition)
 
 
-def read_index_rotation(
-    path: str,
-) -> tuple[np.ndarray, np.ndarray] | None:
-    """The persisted OPQ pre-rotation of a PQ/IVF-PQ index — (mean (d,),
-    rotation (d, d)) — or None for an unrotated index. Serving and
-    appends MUST apply it when present: the stored codes live in the
-    rotated space, so an unrotated query batch (or appended vectors)
-    would be scored against a different basis. Like every frozen param
-    it is training state — the ``index_cell_stats`` drift monitor is
-    the retrain trigger for the rotated tiers too (rotation is an
-    isometry, so distribution drift shows up as cell skew exactly as
-    it does unrotated)."""
-    p = _read_params(path)
-    if "rotation" not in p:
-        return None
-    return p["rot_mean"], p["rotation"]
+def merge_indexes(spark, src_paths: list[str], dst_path: str) -> None:
+    """Merge shard-built indexes of one codec into one serving index —
+    the scale-out build pattern ``append_index`` cannot express: N
+    encode jobs run in PARALLEL (each writing its own shard index from
+    the same frozen params — parquet has no concurrent appenders), then
+    one merge unions the code tables (IVF-PQ rows stay in the cells
+    they occupied per shard). Every shard must carry BIT-IDENTICAL
+    frozen params (gated here), so the merged index is row-identical to
+    a single build over the union corpus.
+
+    The gate covers the codec's params and the rotation: shards must
+    agree on HAVING one (codes in rotated vs raw space cannot merge)
+    and on its bytes. The training-sample envelope rides with the
+    rotation but is MONITOR state, not code-space-defining: a shard
+    encoded through a pre-supplied frozen rotation carries none, so
+    envelope bytes are compared only where both shards have them, and
+    the merged index keeps the first envelope present — merging never
+    silently drops the drift monitor's reference state.
+
+    A single-source merge (``src_paths=[p]``) is COMPACTION: it folds
+    the ``stream_codes/`` deltas a streaming appender committed into
+    one base ``codes/`` table, so a long-streamed index stops paying
+    the many-small-files scan tax.
+
+    Caller contract: shard id spaces are disjoint (same rule as
+    append), and ``dst_path`` must be a FRESH directory — writing over
+    a source would overwrite ``codes/`` while lazily reading it
+    (guarded at call time on qualified paths, instead of an opaque
+    AnalysisException at action time; swap dst into place after the
+    merge commits). The merge moves only codes, never vectors."""
+    if any(same_path(spark, p, dst_path) for p in src_paths):
+        raise ValueError(
+            f"merge_indexes: dst_path {dst_path!r} is also a source — "
+            "merge into a fresh directory, then swap it into place"
+        )
+    shards = [read_index(spark, p) for p in src_paths]
+    params = [p for p, _ in shards]
+    p0, path0 = params[0], src_paths[0]
+    kind = _index_kind(p0)
+    keys = _CODECS[kind].keys
+    if any(k in p for p in params for k in _ROT_KEYS):
+        keys = keys + _ROT_KEYS
+    for p_, path_ in zip(params[1:], src_paths[1:]):
+        if _index_kind(p_) != kind:
+            raise ValueError(
+                f"merge_indexes: {path0} is {kind} but {path_} is {_index_kind(p_)}"
+            )
+        for k in keys:
+            if (k in p0) != (k in p_):
+                raise ValueError(
+                    f"merge_indexes: '{k}' present in only one of {path0} and "
+                    f"{path_} — a rotated index cannot merge with an unrotated "
+                    "one (codes live in different spaces)"
+                )
+        for k in keys + _ENV_KEYS:
+            if k in p0 and k in p_ and not np.array_equal(p0[k], p_[k]):
+                raise ValueError(
+                    f"merge_indexes: '{k}' differs between {path0} and {path_} — "
+                    "shards must be encoded with the same frozen params (train "
+                    "once, encode per shard)"
+                )
+    merged = {k: p0[k] for k in keys if k in p0}
+    env = next((p for p in params if _ENV_KEYS[0] in p), {})
+    merged.update((k, env[k]) for k in _ENV_KEYS if k in env)
+    write_index(dst_path, merged, reduce(DataFrame.unionByName, (c for _, c in shards)))
 
 
 def rotation_drift_stats(
@@ -1684,7 +1783,7 @@ def rotation_drift_stats(
     the regime where ADC ranking quality decays, because the PQ
     codebooks never allocated codes there. Violation rates per rotated
     dim are the retrain trigger the persisted-rotation format promises
-    (``read_index_rotation``'s note), now measured.
+    (``read_index``'s rotation keys), now measured.
 
     Determinism/verifiability: the projection is ``project_kernel``
     (strictly sequential accumulation — bit-equal to a left-assoc SQL
@@ -1697,7 +1796,7 @@ def rotation_drift_stats(
     aggregate; the frozen params are O(d²) driver-side constants."""
     from pyspark_mrdf_spark.operators.project import pca_project_vec
 
-    p = _read_params(path)
+    p = _read_params(batch.sparkSession, path)
     if "rotation" not in p:
         raise ValueError(
             f"rotation_drift_stats: index at {path!r} is unrotated — use "
@@ -1716,76 +1815,6 @@ def rotation_drift_stats(
         rotated, p["rot_env_mn"], p["rot_env_mx"],
         id_col=id_col, vec_col=vec_col,
     )
-
-
-def write_ivfpq_index(
-    path: str,
-    coarse: np.ndarray,
-    codebooks: np.ndarray,
-    codes: DataFrame,
-    rotation: tuple[np.ndarray, np.ndarray] | None = None,
-    rotation_env: tuple[np.ndarray, np.ndarray] | None = None,
-) -> None:
-    """Persist an IVF-PQ index: coarse centroids + residual codebooks +
-    the (vec_id, cell, code) table (an ``ivfpq_encode`` output). The
-    code table is written partitioned BY CELL so a serving scan of
-    n_probe cells prunes to exactly those directories — partition
-    pruning does the IVF inverted-list lookup at the storage layer.
-    ``rotation=(mean, rot)``: see ``write_pq_index`` — coarse, codes
-    AND cells all live in the rotated space when present."""
-    import os
-
-    parts = {"coarse": coarse, "codebooks": codebooks}
-    if rotation is not None:
-        parts["rot_mean"], parts["rotation"] = rotation
-    if rotation_env is not None:
-        # the rotated-space training envelope (rotation_drift_stats's
-        # frozen comparand) rides the same params file
-        parts["rot_env_mn"], parts["rot_env_mx"] = rotation_env
-    _write_params(path, parts)
-    codes.write.mode("overwrite").partitionBy("cell").parquet(
-        os.path.join(path, "codes")
-    )
-
-
-def read_ivfpq_index(
-    spark, path: str
-) -> tuple[np.ndarray, np.ndarray, DataFrame]:
-    """(coarse, codebooks, codes) — feed to ``ivfpq_search_encoded``.
-    ``codes.cell`` comes back as the partition column (long-castable);
-    cast keeps the pre-persistence schema."""
-    import os
-
-    p = _read_params(path)
-    codes = spark.read.parquet(os.path.join(path, "codes")).select(
-        "vec_id", F.col("cell").cast("long").alias("cell"), "code"
-    )
-    return p["coarse"], p["codebooks"], codes
-
-
-def build_sq8_index(
-    corpus: DataFrame,
-    path: str,
-    id_col: str = "vec_id",
-    vec_col: str = "embedding",
-) -> tuple[np.ndarray, np.ndarray]:
-    """Train + encode + persist in one call; returns (mn, mx)."""
-    mn, mx = sq8_train(corpus, vec_col)
-    write_sq8_index(path, mn, mx, sq8_encode(corpus, mn, mx, id_col, vec_col))
-    return mn, mx
-
-
-def build_bq_index(
-    corpus: DataFrame,
-    path: str,
-    id_col: str = "vec_id",
-    vec_col: str = "embedding",
-) -> np.ndarray:
-    """Train + encode + persist the 1-bit tier in one call; returns
-    the threshold vector."""
-    thr = bq_train(corpus, vec_col)
-    write_bq_index(path, thr, bq_encode(corpus, thr, id_col, vec_col))
-    return thr
 
 
 def _train_index_rotation(
@@ -1845,185 +1874,6 @@ def _train_index_rotation(
     return rotation, rotated, env
 
 
-def build_pq_index(
-    corpus: DataFrame,
-    path: str,
-    n_subspaces: int = 8,
-    n_codes: int = 16,
-    sample_size: int = 2048,
-    iters: int = 10,
-    seed: int = 42,
-    id_col: str = "vec_id",
-    vec_col: str = "embedding",
-    rotate: str | None = None,
-    metrics_out: dict | None = None,
-) -> np.ndarray:
-    """Train + encode + persist a flat-PQ index; returns the codebooks.
-    ``rotate='opq'`` trains the OPQ-lite pre-rotation first, trains and
-    encodes in the ROTATED space, and persists (mean, rotation) with
-    the frozen params — q159's measured recall win, made servable
-    train-once/search-many."""
-    if rotate not in (None, "opq"):
-        raise ValueError(f"build_pq_index: unknown rotate {rotate!r}")
-    rotation = None
-    rotation_env = None
-    if rotate == "opq":
-        rotation, corpus, rotation_env = _train_index_rotation(
-            corpus, n_subspaces, sample_size, seed, id_col, vec_col,
-            metrics_out=metrics_out,
-        )
-    cb = pq_train(
-        corpus, n_subspaces, n_codes, sample_size, iters, seed, id_col, vec_col
-    )
-    write_pq_index(
-        path, cb, pq_encode(corpus, cb, id_col, vec_col), rotation=rotation,
-        rotation_env=rotation_env,
-    )
-    return cb
-
-
-def build_ivfpq_index(
-    corpus: DataFrame,
-    path: str,
-    n_centroids: int = 8,
-    n_subspaces: int = 8,
-    n_codes: int = 16,
-    sample_size: int = 2048,
-    iters_coarse: int = 10,
-    iters_pq: int = 10,
-    seed: int = 42,
-    id_col: str = "vec_id",
-    vec_col: str = "embedding",
-    rotate: str | None = None,
-    metrics_out: dict | None = None,
-) -> tuple[np.ndarray, np.ndarray]:
-    """Train + encode + persist an IVF-PQ index; returns (coarse,
-    codebooks). The one-time cost a deployment amortizes over every
-    subsequent ``ivfpq_search_encoded`` batch. ``rotate='opq'``: see
-    ``build_pq_index`` — the whole index (coarse cells, residual
-    codebooks, codes) lives in the rotated space; the rotation rides
-    in ``params.parquet`` and serving rotates queries driver-side."""
-    if rotate not in (None, "opq"):
-        raise ValueError(f"build_ivfpq_index: unknown rotate {rotate!r}")
-    rotation = None
-    rotation_env = None
-    if rotate == "opq":
-        rotation, corpus, rotation_env = _train_index_rotation(
-            corpus, n_subspaces, sample_size, seed, id_col, vec_col,
-            metrics_out=metrics_out,
-        )
-    coarse, cb = ivfpq_train(
-        corpus, n_centroids, n_subspaces, n_codes, sample_size,
-        iters_coarse, iters_pq, seed, id_col, vec_col,
-    )
-    write_ivfpq_index(
-        path, coarse, cb, ivfpq_encode(corpus, coarse, cb, id_col, vec_col),
-        rotation=rotation, rotation_env=rotation_env,
-    )
-    return coarse, cb
-
-
-def append_sq8_index(
-    path: str,
-    new_vectors: DataFrame,
-    id_col: str = "vec_id",
-    vec_col: str = "embedding",
-) -> None:
-    """Grow a persisted SQ8 index with new vectors — the daily-ingest
-    path: encode with the index's PERSISTED quantizer (no retrain, no
-    re-encode of the existing corpus) and parquet-append only the new
-    codes. Because the quantizer is frozen, the grown index is
-    bit-identical to one encoded from the union corpus with the same
-    (mn, mx) — append order cannot change any code byte.
-
-    Caller contract: ``id_col`` values must be new (an id already in
-    the index would simply appear twice — exactly like appending a
-    duplicate row to any parquet table). Drift caveat: a frozen
-    quantizer clips ingested values outside the trained per-dimension
-    [mn, mx] to the 0/255 codes; monitor with ``sq8_drift_stats``
-    (per-dim range-violation rate, q131) or retrain on schedule."""
-    import os
-
-    p = _read_params(path)
-    sq8_encode(new_vectors, p["mn"], p["mx"], id_col, vec_col).write.mode(
-        "append"
-    ).parquet(os.path.join(path, "codes"))
-
-
-def _apply_index_rotation(
-    params: dict[str, np.ndarray],
-    new_vectors: DataFrame,
-    id_col: str,
-    vec_col: str,
-) -> DataFrame:
-    """Route appended vectors through a persisted OPQ rotation when the
-    index carries one (no-op otherwise). ``pca_project_vec`` replays
-    the identical sequential-fold arithmetic the build used, so the
-    appended codes stay bit-identical to a union-corpus encode under
-    the same frozen (rotation, codebooks)."""
-    if "rotation" not in params:
-        return new_vectors
-    from pyspark_mrdf_spark.operators.project import pca_project_vec
-
-    return pca_project_vec(
-        new_vectors, params["rot_mean"], params["rotation"], id_col, vec_col
-    )
-
-
-def append_pq_index(
-    path: str,
-    new_vectors: DataFrame,
-    id_col: str = "vec_id",
-    vec_col: str = "embedding",
-) -> None:
-    """Grow a persisted PQ index: encode new vectors with the persisted
-    codebooks and parquet-append the codes. Same frozen-params
-    bit-identity and new-ids caller contract as ``append_sq8_index``.
-    A rotated index (``rotate='opq'`` build) rotates the new vectors
-    through the PERSISTED rotation first — the frozen-params law
-    extends to the rotation (append ≡ union-rebuild, bit-identical)."""
-    import os
-
-    p = _read_params(path)
-    new_vectors = _apply_index_rotation(p, new_vectors, id_col, vec_col)
-    pq_encode(new_vectors, p["codebooks"], id_col, vec_col).write.mode(
-        "append"
-    ).parquet(os.path.join(path, "codes"))
-
-
-def append_ivfpq_index(
-    path: str,
-    new_vectors: DataFrame,
-    id_col: str = "vec_id",
-    vec_col: str = "embedding",
-) -> None:
-    """Grow a persisted IVF-PQ index: assign new vectors to the
-    PERSISTED coarse cells, encode residuals with the persisted
-    codebooks, and parquet-append into the cell-partitioned code table
-    (each new row lands in its cell's directory, so serving scans keep
-    partition-pruning to the probed cells). Frozen params make the
-    grown index bit-identical to encoding the union corpus with the
-    same (coarse, codebooks).
-
-    Drift caveat: frozen coarse centroids mean ingest that departs
-    from the training distribution piles into few cells and the
-    n_probe/n_cells scan-fraction guarantee erodes — watch
-    ``index_cell_stats`` (max/mean cell skew) and retrain when it
-    drifts. That monitoring query, not a retrain-per-batch, is the
-    100 TB operating mode. A rotated index (``rotate='opq'`` build)
-    rotates new vectors through the PERSISTED rotation before the
-    cell assignment — same frozen-params bit-identity, and the same
-    drift monitor applies (rotation is an isometry; drift still lands
-    in cell skew)."""
-    import os
-
-    p = _read_params(path)
-    new_vectors = _apply_index_rotation(p, new_vectors, id_col, vec_col)
-    ivfpq_encode(
-        new_vectors, p["coarse"], p["codebooks"], id_col, vec_col
-    ).write.mode("append").partitionBy("cell").parquet(os.path.join(path, "codes"))
-
-
 def sq8_drift_stats(
     batch: DataFrame,
     mn: np.ndarray,
@@ -2032,7 +1882,7 @@ def sq8_drift_stats(
     vec_col: str = "embedding",
 ) -> DataFrame:
     """Range-violation monitor for a FROZEN SQ8 quantizer — the retrain
-    trigger ``append_sq8_index`` promises: ingest values outside the
+    trigger ``append_index`` promises for SQ8: ingest values outside the
     trained per-dimension [mn, mx] clip to the 0/255 codes, so a rising
     violation rate means the quantizer no longer spans the data and
     candidate ordering quietly degrades. One row per dimension:
@@ -2085,145 +1935,18 @@ def sq8_drift_stats(
     )
 
 
-def _assert_same_params(
-    kind: str, keys: tuple[str, ...], params: list[dict], paths: list[str]
-) -> None:
-    """Mergeability gate: shard indexes must carry BIT-IDENTICAL frozen
-    params — a merged code table is only meaningful if every byte was
-    produced by the same quantizer/codebooks."""
-    p0, path0 = params[0], paths[0]
-    # rotation is frozen training state like any other param: shards
-    # must agree on HAVING one (codes in rotated vs raw space cannot
-    # merge) and on its exact bytes — fold the rotation keys into the
-    # gate whenever any shard carries them. The training-sample
-    # ENVELOPE rides with the rotation but is MONITOR state, not
-    # code-space-defining: a shard legitimately encoded through a
-    # pre-supplied frozen rotation (write_*_index(rotation=...))
-    # carries no envelope, so env presence may differ across shards —
-    # env bytes are gated only where both sides have them.
-    rot_keys = ("rot_mean", "rotation")
-    env_keys = ("rot_env_mn", "rot_env_mx")
-    if any(k in p for p in params for k in rot_keys):
-        keys = keys + rot_keys
-    for p_, path_ in zip(params[1:], paths[1:]):
-        for k in keys:
-            if (k in p0) != (k in p_):
-                raise ValueError(
-                    f"merge_{kind}_indexes: '{k}' present in only one of "
-                    f"{path0} and {path_} — a rotated index cannot merge "
-                    "with an unrotated one (codes live in different spaces)"
-                )
-            if not np.array_equal(p0.get(k), p_.get(k)):
-                raise ValueError(
-                    f"merge_{kind}_indexes: '{k}' differs between "
-                    f"{path0} and {path_} — shards must be encoded with "
-                    "the same frozen params (train once, encode per shard)"
-                )
-        for k in env_keys:
-            if k in p0 and k in p_ and not np.array_equal(p0[k], p_[k]):
-                raise ValueError(
-                    f"merge_{kind}_indexes: '{k}' differs between "
-                    f"{path0} and {path_} — shards must be encoded with "
-                    "the same frozen params (train once, encode per shard)"
-                )
-
-
-def _reject_in_place_merge(kind: str, src_paths: list[str], dst_path: str) -> None:
-    """A merge lazily READS every source while WRITING dst — an
-    overlapping dst would overwrite codes mid-read (Spark refuses with
-    an opaque AnalysisException at action time; this fails at call time
-    with the fix spelled out). Local paths are compared canonically;
-    non-local URIs (hdfs://, s3a://) compare as strings."""
-    import os
-
-    def canon(p: str) -> str:
-        return os.path.abspath(p) if "://" not in p else p.rstrip("/")
-
-    clash = [p for p in src_paths if canon(p) == canon(dst_path)]
-    if clash:
-        raise ValueError(
-            f"merge_{kind}_indexes: dst_path {dst_path!r} is also a source — "
-            "merge into a fresh directory, then swap it into place"
-        )
-
-
-def merge_sq8_indexes(spark, src_paths: list[str], dst_path: str) -> None:
-    """Merge shard-built SQ8 indexes into one serving index — the
-    scale-out build pattern ``append_sq8_index`` cannot express: N
-    encode jobs run in PARALLEL (each writing its own shard index from
-    the same frozen quantizer — parquet has no concurrent appenders),
-    then one merge unions the code tables. Because every shard encoded
-    with bit-identical (mn, mx) (gated here), the merged index is
-    row-identical to a single build over the union corpus.
-
-    A single-source merge (``src_paths=[p]``) is COMPACTION: it folds
-    any ``stream_codes/`` deltas a streaming appender committed into
-    one base ``codes/`` table (``read_sq8_index`` reads both), so a
-    long-streamed index stops paying the many-small-files scan tax.
-
-    Caller contract: shard id spaces are disjoint (same rule as
-    append), and ``dst_path`` must be a FRESH directory — writing over
-    a source would overwrite ``codes/`` while lazily reading it
-    (guarded here; swap dst into place after the merge commits). The
-    merge itself never touches vectors — it moves only 1 B/dim codes,
-    so merging a 100 TB corpus's index moves ~d/264ths of the corpus
-    bytes once."""
-    _reject_in_place_merge("sq8", src_paths, dst_path)
-    params = [_read_params(p) for p in src_paths]
-    _assert_same_params("sq8", ("mn", "mx"), params, src_paths)
-    codes = None
-    for p in src_paths:
-        _, _, c = read_sq8_index(spark, p)
-        codes = c if codes is None else codes.unionByName(c)
-    write_sq8_index(dst_path, params[0]["mn"], params[0]["mx"], codes)
-
-
-def merge_ivfpq_indexes(spark, src_paths: list[str], dst_path: str) -> None:
-    """Merge shard-built IVF-PQ indexes (same frozen coarse centroids +
-    codebooks — gated) into one cell-partitioned serving index. Shard
-    encode jobs parallelize; the merge is one union + partitioned
-    write, and rows land in the SAME cells they occupied per-shard
-    (assignment depends only on the frozen coarse table), so the merged
-    index is row-identical to a single union-corpus build and serving
-    keeps partition-pruning to the probed cells. Same fresh-``dst_path``
-    contract as ``merge_sq8_indexes`` (guarded)."""
-    _reject_in_place_merge("ivfpq", src_paths, dst_path)
-    params = [_read_params(p) for p in src_paths]
-    _assert_same_params("ivfpq", ("coarse", "codebooks"), params, src_paths)
-    codes = None
-    for p in src_paths:
-        _, _, c = read_ivfpq_index(spark, p)
-        codes = c if codes is None else codes.unionByName(c)
-    rot = params[0]
-    # the envelope may ride on any shard (a pre-supplied-rotation
-    # shard carries none) — keep the first one present, so merging
-    # never silently drops the drift monitor's reference state
-    env_p = next((p for p in params if "rot_env_mn" in p), None)
-    write_ivfpq_index(
-        dst_path, params[0]["coarse"], params[0]["codebooks"], codes,
-        rotation=(
-            (rot["rot_mean"], rot["rotation"]) if "rotation" in rot else None
-        ),
-        rotation_env=(
-            (env_p["rot_env_mn"], env_p["rot_env_mx"])
-            if env_p is not None else None
-        ),
-    )
-
-
 def index_cell_stats(spark, path: str) -> DataFrame:
     """Occupancy histogram of a persisted IVF-PQ index: one row per
     coarse cell with its code count plus the corpus-wide skew ratio
     (max cell / mean cell). THE retrain trigger for an incrementally
     grown index: n_probe/n_cells is only a scan-fraction bound while
     cells stay balanced. Pure metadata-sized aggregate — the scan
-    reads just the partition column, no code bytes."""
-    import os
-
-    codes = spark.read.parquet(os.path.join(path, "codes"))
-    per_cell = codes.groupBy(F.col("cell").cast("long").alias("cell")).agg(
-        F.count("*").alias("n_vectors")
-    )
+    reads just the partition column, no code bytes. Counts cover the
+    same codes ``read_index`` serves, streamed partitions included."""
+    _, codes = read_index(spark, path)
+    if "cell" not in codes.columns:
+        raise ValueError(f"index_cell_stats: {path!r} is not a cell-partitioned index")
+    per_cell = codes.groupBy("cell").agg(F.count("*").alias("n_vectors"))
     # corpus-wide skew as a broadcast 1-row aggregate, not a window:
     # per_cell is O(n_cells) rows, but an unpartitioned Window is the
     # plan shape the audit forbids everywhere — no exceptions to police

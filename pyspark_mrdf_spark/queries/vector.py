@@ -206,6 +206,8 @@ def q55_mrdf_knn_graph(spark: SparkSession, sf_dir: str) -> DataFrame:
 def q56_mrdf_recall(spark: SparkSession, sf_dir: str) -> DataFrame:
     from concurrent.futures import ThreadPoolExecutor
 
+    from pyspark import inheritable_thread_target
+
     from pyspark_mrdf_spark.algorithms.recall import recall
 
     # The exact side (q50's blocked distributed tier — corpus never
@@ -218,7 +220,9 @@ def q56_mrdf_recall(spark: SparkSession, sf_dir: str) -> DataFrame:
     # recall() compares two already-materialized graphs in one action.
     pool = ThreadPoolExecutor(max_workers=1)
     try:
-        fut = pool.submit(_exact_graph, spark, sf_dir)
+        # the wrapper carries this thread's local properties (job
+        # tags) into the pool thread, so its jobs stay attributed
+        fut = pool.submit(inheritable_thread_target(_exact_graph), spark, sf_dir)
         g = _mrdf_graph(spark, sf_dir)
         g_exact = fut.result()
     finally:
@@ -912,14 +916,14 @@ def _q98_index_path(spark: SparkSession, sf_dir: str) -> str:
     deployed."""
     import tempfile
 
-    from pyspark_mrdf_spark.operators.quantize import build_ivfpq_index
+    from pyspark_mrdf_spark.operators.quantize import build_index
 
     path = _Q98_IDX_DIR.get(sf_dir)
     if path is None:
         emb = load_table(spark, sf_dir, "embeddings")
         path = tempfile.mkdtemp(prefix="mrdf_q98_ivfpq_idx_")
         train_cfg = {k: v for k, v in _IVFPQ_CFG.items() if k != "n_probe"}
-        build_ivfpq_index(emb, path, **train_cfg)
+        build_index(emb, path, "ivfpq", **train_cfg)
         _Q98_IDX_DIR[sf_dir] = path
     return path
 
@@ -931,11 +935,11 @@ def _q98_index_path(spark: SparkSession, sf_dir: str) -> str:
     # driver verdict, not just the pytest roundtrip test
     oracle=_q98_oracle,
     description=(
-        "persisted-index IVF-PQ serving: build_ivfpq_index writes coarse "
+        "persisted-index IVF-PQ serving: build_index writes coarse "
         "centroids + residual codebooks (parquet DOUBLE, bit-exact "
         "roundtrip) and the 8 B/row code table PARTITIONED BY CELL (a "
         "probe scan prunes to n_probe directories at the storage layer); "
-        "read_ivfpq_index + ivfpq_search_encoded then serve a query "
+        "read_index + ivfpq_search_encoded then serve a query "
         "batch with NO retraining. Oracle is q95's SQL body verbatim "
         "(different query window) — the persisted path must be "
         "bit-identical to inline training, which is exactly the claim"
@@ -943,16 +947,13 @@ def _q98_index_path(spark: SparkSession, sf_dir: str) -> str:
     tags=("vector", "knn", "quantize", "ann", "pipeline", "sink"),
 )
 def q98_ivfpq_persisted_index(spark: SparkSession, sf_dir: str) -> DataFrame:
-    from pyspark_mrdf_spark.operators.quantize import (
-        ivfpq_search_encoded,
-        read_ivfpq_index,
-    )
+    from pyspark_mrdf_spark.operators.quantize import ivfpq_search_encoded, read_index
 
     emb = load_table(spark, sf_dir, "embeddings")
-    coarse, cb, codes = read_ivfpq_index(spark, _q98_index_path(spark, sf_dir))
+    p, codes = read_index(spark, _q98_index_path(spark, sf_dir))
     queries = emb.filter((F.col("vec_id") >= 30) & (F.col("vec_id") < 60))
     return ivfpq_search_encoded(
-        queries, codes, coarse, cb, emb, 5,
+        queries, codes, p["coarse"], p["codebooks"], emb, 5,
         k_candidates=40, n_probe=_IVFPQ_CFG["n_probe"], include_self=False,
     ).select("src", "dst", F.col("rnk").cast("bigint").alias("rnk"))
 
@@ -1505,7 +1506,7 @@ GROUP BY b.dim
 """,
     description=(
         "SQ8 quantizer drift monitor (operators/quantize.sq8_drift_stats "
-        "— the retrain trigger append_sq8_index's frozen-quantizer "
+        "— the retrain trigger append_index's frozen-quantizer "
         "caveat promises): per-dimension count of ingest values outside "
         "the trained [mn, mx] (those clip to the 0/255 codes and degrade "
         "candidate ordering), violation rate in integer millionths; "
@@ -2079,8 +2080,8 @@ def q159_opq_pq_knn(spark: SparkSession, sf_dir: str) -> DataFrame:
 # --- q161: persisted rotated-PQ index serving --------------------------------
 #
 # q159 proved the OPQ rotation's recall win inline; r13 persisted the
-# rotation INTO the index format (operators/quantize.write_pq_index
-# rotation=). This query is the deployment shape: build-once (train
+# rotation INTO the index format (operators/quantize.write_index's
+# rot_mean/rotation params). This query is the deployment shape: build-once (train
 # rotation + codebooks, encode the rotated corpus, store everything in
 # params.parquet + codes/), then serve a query batch through the
 # FROZEN rotation (pq_search_encoded rotation= — queries rotated
@@ -2099,13 +2100,13 @@ def _rotated_pq_index_path(spark: SparkSession, sf_dir: str) -> str:
     deployed (the q122 persisted-dedup-index pattern)."""
     import tempfile
 
-    from pyspark_mrdf_spark.operators.quantize import build_pq_index
+    from pyspark_mrdf_spark.operators.quantize import build_index
 
     path = _ROT_PQ_IDX.get(sf_dir)
     if path is None:
         emb = load_table(spark, sf_dir, "embeddings")
         path = tempfile.mkdtemp(prefix="mrdf_rotpq_idx_")
-        build_pq_index(emb, path, rotate="opq", **_OPQ_CFG)
+        build_index(emb, path, "pq", rotate="opq", **_OPQ_CFG)
         _ROT_PQ_IDX[sf_dir] = path
     return path
 
@@ -2117,7 +2118,7 @@ def _rotated_pq_index_path(spark: SparkSession, sf_dir: str) -> str:
     oracle=lambda sf_dir: _q159_oracle(sf_dir, rerank="original"),
     description=(
         "persisted rotated-PQ index serving (r13: write/read/"
-        "append_pq_index carry the OPQ rotation with the frozen "
+        "append_index carry the OPQ rotation with the frozen "
         "params): build-once on the rotated corpus, serve the query "
         "batch through the frozen rotation with pq_search_encoded("
         "rotation=) — candidates in the rotated code space, exact "
@@ -2129,20 +2130,14 @@ def _rotated_pq_index_path(spark: SparkSession, sf_dir: str) -> str:
     tags=("vector", "knn", "quantize", "reduce", "serving"),
 )
 def q161_rotated_pq_serving(spark: SparkSession, sf_dir: str) -> DataFrame:
-    from pyspark_mrdf_spark.operators.quantize import (
-        pq_search_encoded,
-        read_index_rotation,
-        read_pq_index,
-    )
+    from pyspark_mrdf_spark.operators.quantize import pq_search_encoded, read_index
 
-    path = _rotated_pq_index_path(spark, sf_dir)
-    cb, codes = read_pq_index(spark, path)
-    rot = read_index_rotation(path)
+    p, codes = read_index(spark, _rotated_pq_index_path(spark, sf_dir))
     emb = load_table(spark, sf_dir, "embeddings")
     queries = emb.filter(F.col("vec_id") % 13 == 0)
     return pq_search_encoded(
-        queries, codes, cb, emb, 5, k_candidates=20,
-        include_self=False, rotation=rot,
+        queries, codes, p["codebooks"], emb, 5, k_candidates=20,
+        include_self=False, rotation=(p["rot_mean"], p["rotation"]),
     ).select("src", "dst", F.col("rnk").cast("bigint").alias("rnk"))
 
 
@@ -2342,7 +2337,7 @@ def q163_rotation_drift(spark: SparkSession, sf_dir: str) -> DataFrame:
 # The bound on graph_append_stream's delta growth (r13 verdict ask #3):
 # read_graph_state pays one overlay per committed delta, linear in
 # delta count; compact_graph_state folds base + deltas into a fresh
-# single-base state (the merge_sq8_indexes single-source pattern).
+# single-base state (the single-source merge_indexes pattern).
 # This query puts the WHOLE persisted lifecycle under one hash verdict:
 # seed state (95% exact graph) -> commit the 5% batch's replacement
 # delta exactly as the stream writes it -> compact -> serve from the
@@ -2414,7 +2409,7 @@ WHERE rnk <= {K}
         "— r14): seed the persisted state with the 95% exact graph, "
         "commit the 5% batch's replacement delta exactly as "
         "graph_append_stream writes it, fold base+delta into a fresh "
-        "single-base state (the merge_sq8_indexes single-source "
+        "single-base state (the merge_indexes single-source "
         "pattern, not-in-place guarded), and serve from the COMPACTED "
         "state — which must equal the rebuilt exact graph of the full "
         "corpus (the exact tier's law), so the oracle is q158's plain "

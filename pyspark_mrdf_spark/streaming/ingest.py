@@ -29,7 +29,7 @@ from __future__ import annotations
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
-from pyspark_mrdf_spark.streaming.sinks import _hadoop_fs
+from pyspark_mrdf_spark.io import read_stream_partitions, same_path
 
 
 def _in_batch_exact_dedup(batch_df: DataFrame) -> DataFrame:
@@ -65,19 +65,17 @@ def ingest_dedup_stream(
     spark = docs.sparkSession
 
     def _apply(batch_df: DataFrame, batch_id: int) -> None:
-        fs, base = _hadoop_fs(spark, corpus_path)
         part_path = f"{corpus_path.rstrip('/')}/batch={batch_id}"
-        if fs.exists(base) and len(fs.listStatus(base)) > 0:
-            corpus = spark.read.option("basePath", corpus_path).parquet(corpus_path)
-            # a REPLAYED batch (crash between the parquet write and the
-            # checkpoint commit) must not dedupe against its own
-            # partially/fully written partition — that would drop every
-            # row as already-admitted and then overwrite the partition
-            # with the empty survivor set, losing the batch. Excluding
-            # batch=<id> makes replay truly idempotent: the rerun sees
-            # exactly the corpus the original run saw.
-            corpus = corpus.filter(F.col("batch") != batch_id).drop("batch")
-            survivors = dedup_against(batch_df, corpus)
+        # a REPLAYED batch (crash between the parquet write and the
+        # checkpoint commit) must not dedupe against its own
+        # partially/fully written partition — that would drop every
+        # row as already-admitted and then overwrite the partition
+        # with the empty survivor set, losing the batch. Excluding
+        # batch=<id> makes replay truly idempotent: the rerun sees
+        # exactly the corpus the original run saw.
+        corpus = read_stream_partitions(spark, corpus_path, exclude_batch=batch_id)
+        if corpus is not None:
+            survivors = dedup_against(batch_df, corpus.drop("batch"))
         else:
             # first batch: in-batch dedup only (lowest id per text)
             survivors = _in_batch_exact_dedup(batch_df)
@@ -103,30 +101,36 @@ def index_append_stream(
     vec_col: str = "embedding",
 ):
     """Streaming ANN-index maintenance — the streaming twin of
-    ``append_sq8_index``: each micro-batch of newly embedded vectors
-    is encoded with the index's FROZEN persisted quantizer (no
+    ``quantize.append_index``, for every codec: each micro-batch of
+    newly embedded vectors is encoded with the index's FROZEN persisted
+    params (through its persisted rotation when there is one; no
     retrain, no re-encode of the stored corpus) and lands as the
     batch-id partition ``stream_codes/batch=<id>`` of the index
-    directory. Same exactly-once construction as
-    ``ingest_dedup_stream``: a replayed batch overwrites its own
-    partition instead of double-appending, so the stored index is the
-    union of committed partitions and ``read_sq8_index`` serves base
-    + streamed codes transparently.
+    directory (cell-partitioned inside it for IVF-PQ). Same
+    exactly-once construction as ``ingest_dedup_stream``: a replayed
+    batch overwrites its own partition instead of double-appending, so
+    the stored index is the union of committed partitions and
+    ``read_index`` serves base + streamed codes transparently.
 
-    Because the quantizer is frozen, a streamed index is bit-identical
+    Because the params are frozen, a streamed index is bit-identical
     to batch-appending the same vectors (equivalence-tested), and the
-    retrain trigger stays where it is for the batch path: watch
-    ``index_cell_stats``-style occupancy/clip-rate monitors and
-    rebuild on schedule. Per-batch cost is O(batch) encode + one
-    partition write — no corpus-sized work at any batch."""
-    from pyspark_mrdf_spark.operators.quantize import _read_params, sq8_encode
+    retrain trigger stays where it is for the batch path: watch the
+    ``index_cell_stats``/``sq8_drift_stats`` monitors and rebuild on
+    schedule. Per-batch cost is O(batch) encode + one partition write
+    — no corpus-sized work at any batch."""
+    from pyspark_mrdf_spark.operators.quantize import (
+        _encode_for_index,
+        _read_params,
+        _write_codes,
+    )
 
+    spark = vectors.sparkSession
     base = index_path.rstrip("/")
 
     def _apply(batch_df: DataFrame, batch_id: int) -> None:
-        p = _read_params(index_path)
-        codes = sq8_encode(batch_df, p["mn"], p["mx"], id_col, vec_col)
-        codes.write.mode("overwrite").parquet(f"{base}/stream_codes/batch={batch_id}")
+        params = _read_params(spark, index_path)
+        codes, partition = _encode_for_index(params, batch_df, id_col, vec_col)
+        _write_codes(codes, f"{base}/stream_codes/batch={batch_id}", "overwrite", partition)
 
     return (
         vectors.writeStream.foreachBatch(_apply)
@@ -191,7 +195,7 @@ def near_ingest_dedup_stream(
         # computation, and the three index writes see exactly the rows
         # the corpus write committed)
         admitted = spark.read.parquet(part).select("doc_id", "text")
-        p = _read_dedup_params(index_path)
+        p = _read_dedup_params(spark, index_path)
         fps, buckets, postings = _index_state(
             admitted, p["num_hashes"], p["bands"], p["rows_per_band"], p["n"],
             "doc_id", "text",
@@ -251,7 +255,7 @@ def read_graph_state(
     src-keyed max-batch join over the O(n·k) edge rows — paid at
     serve/maintenance time, not per delta row; a compaction pass
     (fold the resolved graph into ``graph/base`` and clear deltas)
-    bounds delta count exactly like the SQ8 single-source merge.
+    bounds delta count exactly like the single-source index merge.
 
     ``_exclude_stream_batch``: replay idempotency (the
     ``ingest_dedup_stream`` rule) — a crash-replayed batch must see
@@ -260,26 +264,16 @@ def read_graph_state(
 
     Delta growth is bounded by ``compact_graph_state`` (below), not by
     hand-rebuilding base."""
-    from pyspark_mrdf_spark.streaming.sinks import _hadoop_fs
-
     base = state_path.rstrip("/")
     corpus = spark.read.parquet(f"{base}/corpus/base")
     graph = spark.read.parquet(f"{base}/graph/base").withColumn(
         "_b", F.lit(-1).cast("long")
     )
-    stream_corpus = f"{base}/corpus/stream"
-    fs, p = _hadoop_fs(spark, stream_corpus)
-    if fs.exists(p) and len(fs.listStatus(p)) > 0:
-        sc = spark.read.option("basePath", stream_corpus).parquet(stream_corpus)
-        if _exclude_stream_batch is not None:
-            sc = sc.filter(F.col("batch") != _exclude_stream_batch)
+    sc = read_stream_partitions(spark, f"{base}/corpus/stream", _exclude_stream_batch)
+    if sc is not None:
         corpus = corpus.unionByName(sc.drop("batch"))
-    stream_graph = f"{base}/graph/stream"
-    fs, p = _hadoop_fs(spark, stream_graph)
-    if fs.exists(p) and len(fs.listStatus(p)) > 0:
-        sg = spark.read.option("basePath", stream_graph).parquet(stream_graph)
-        if _exclude_stream_batch is not None:
-            sg = sg.filter(F.col("batch") != _exclude_stream_batch)
+    sg = read_stream_partitions(spark, f"{base}/graph/stream", _exclude_stream_batch)
+    if sg is not None:
         graph = graph.unionByName(
             sg.select(
                 "src", "dst", "dist_sq", "rnk",
@@ -294,9 +288,10 @@ def read_graph_state(
 def compact_graph_state(spark, state_path: str, dst_path: str) -> None:
     """Fold ``state_path``'s base + every committed stream delta into
     a FRESH single-base state at ``dst_path`` — the
-    ``merge_sq8_indexes`` single-source COMPACTION pattern
+    single-source ``merge_indexes`` COMPACTION pattern
     (operators/quantize.py), including the guarded not-in-place
-    contract.
+    contract (paths compared after qualification, so a ``file://``
+    form of the source is refused too).
 
     Why it exists: ``read_graph_state`` pays one ``unionByName`` +
     latest-wins overlay join per serve/maintenance read, LINEAR in
@@ -308,7 +303,7 @@ def compact_graph_state(spark, state_path: str, dst_path: str) -> None:
     off the compacted state are row-identical to the uncompacted
     overlay (equivalence-tested).
 
-    Caller contract (same discipline as the SQ8 single-source merge):
+    Caller contract (same discipline as the single-source index merge):
      - ``dst_path`` must be a fresh directory — compacting in place
        would overwrite ``graph/base`` while lazily reading it
        (guarded; swap dst into place after the write commits).
@@ -321,12 +316,7 @@ def compact_graph_state(spark, state_path: str, dst_path: str) -> None:
        checkpoint — subsequent batch ids are strictly newer than every
        folded one, so the exclusion contract stays intact
        (checkpoint-restart-tested across a compaction)."""
-    import os
-
-    def canon(p: str) -> str:
-        return os.path.abspath(p) if "://" not in p else p.rstrip("/")
-
-    if canon(state_path) == canon(dst_path):
+    if same_path(spark, state_path, dst_path):
         raise ValueError(
             f"compact_graph_state: dst_path {dst_path!r} is the source state "
             "— compact into a fresh directory, then swap it into place"

@@ -9,7 +9,7 @@ Delta/Iceberg MERGE does per file group) becomes the streaming upsert,
 with the checkpoint giving exactly-once batch ids.
 
 All filesystem operations go through the Hadoop FileSystem API of the
-dataset's OWN path (``Path.getFileSystem``), never ``os.path``: a
+dataset's OWN path (``io._hadoop_fs``), never ``os.path``: a
 driver-local ``os.path.exists`` on an ``hdfs://`` or ``s3a://`` path
 is always False, which would silently route every batch into the
 initial-overwrite branch and replace the dataset with that one
@@ -18,15 +18,9 @@ micro-batch.
 
 from __future__ import annotations
 
-from pyspark.sql import DataFrame, SparkSession
+from pyspark.sql import DataFrame
 
-
-def _hadoop_fs(spark: SparkSession, path: str):
-    """(FileSystem, Path) for ``path`` on whatever scheme it carries
-    (file://, hdfs://, s3a://, ...) under the session's Hadoop conf."""
-    jvm = spark.sparkContext._jvm
-    hpath = jvm.org.apache.hadoop.fs.Path(path)
-    return hpath.getFileSystem(spark.sparkContext._jsc.hadoopConfiguration()), hpath
+from pyspark_mrdf_spark.io import _hadoop_fs
 
 
 def upsert_stream_to_parquet(

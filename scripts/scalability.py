@@ -875,7 +875,7 @@ def _rotation_drift_evidence(spark, n: int, d: int = 64) -> dict:
     from pyspark.sql import functions as F
 
     from pyspark_mrdf_spark.operators.quantize import (
-        build_ivfpq_index,
+        build_index,
         rotation_drift_stats,
     )
 
@@ -890,8 +890,8 @@ def _rotation_drift_evidence(spark, n: int, d: int = 64) -> dict:
         idx = os.path.join(syn, "idx")
         t0 = time.time()
         metrics: dict = {}
-        build_ivfpq_index(
-            corpus, idx, n_centroids=64, n_subspaces=8, n_codes=16,
+        build_index(
+            corpus, idx, "ivfpq", n_centroids=64, n_subspaces=8, n_codes=16,
             sample_size=4096, rotate="opq", metrics_out=metrics,
         )
         out["index_build_s"] = round(time.time() - t0, 2)
@@ -1067,8 +1067,8 @@ def _pca_serving_evidence(spark, n: int, d: int, d_out: int = 16, aniso: bool = 
     from pyspark_mrdf_spark.operators.project import pca_project_vec, pca_train
     from pyspark_mrdf_spark.operators.quantize import (
         _rerank_exact,
-        build_sq8_index,
-        read_sq8_index,
+        build_index,
+        read_index,
         sq8_candidates,
         sq8_encode,
         sq8_range_weights,
@@ -1130,9 +1130,10 @@ def _pca_serving_evidence(spark, n: int, d: int, d_out: int = 16, aniso: bool = 
         # full-d persisted SQ8 baseline
         idx_root = tempfile.mkdtemp(prefix="mrdf_pca_serving_idx_")
         t0 = time.time()
-        build_sq8_index(emb, os.path.join(idx_root, "sq8"))
+        build_index(emb, os.path.join(idx_root, "sq8"), "sq8")
         out["sq8_index_build_s"] = round(time.time() - t0, 2)
-        mn_f, mx_f, codes_f = read_sq8_index(spark, os.path.join(idx_root, "sq8"))
+        p_f, codes_f = read_index(spark, os.path.join(idx_root, "sq8"))
+        mn_f, mx_f = p_f["mn"], p_f["mx"]
         codes_f = codes_f.localCheckpoint(eager=True)
         sq8_s, sq8_g = [], None
         for i, q in enumerate(batches):
@@ -1903,12 +1904,9 @@ def _serving_evidence(spark, n: int, d: int, n_cells: int = 64,
     from pyspark.sql import functions as F
 
     from pyspark_mrdf_spark.operators.quantize import (
-        build_ivfpq_index,
-        build_sq8_index,
+        build_index,
         ivfpq_search_encoded,
-        read_index_rotation,
-        read_ivfpq_index,
-        read_sq8_index,
+        read_index,
         sq8_search_encoded,
     )
     from pyspark_mrdf_spark.operators.similarity import knn_search_blocked
@@ -1973,9 +1971,10 @@ def _serving_evidence(spark, n: int, d: int, n_cells: int = 64,
 
         # SQ8: build+persist once, then serve batches off the loaded codes
         t0 = time.time()
-        build_sq8_index(emb, os.path.join(idx_root, "sq8"))
+        build_index(emb, os.path.join(idx_root, "sq8"), "sq8")
         out["sq8_index_build_s"] = round(time.time() - t0, 2)
-        mn, mx, sq8_codes_df = read_sq8_index(spark, os.path.join(idx_root, "sq8"))
+        p_sq8, sq8_codes_df = read_index(spark, os.path.join(idx_root, "sq8"))
+        mn, mx = p_sq8["mn"], p_sq8["mx"]
         sq8_codes_df = sq8_codes_df.localCheckpoint(eager=True)
         sq8_s, sq8_g = [], None
         for i, q in enumerate(batches):
@@ -1994,7 +1993,7 @@ def _serving_evidence(spark, n: int, d: int, n_cells: int = 64,
 
         # IVF-PQ: train+encode+persist once (cell-partitioned codes),
         # serve batches off the loaded index. rotate='opq' (r13: the
-        # PERSISTED path — rotation trained by build_ivfpq_index,
+        # PERSISTED path — rotation trained by build_index,
         # stored in params.parquet, read back with the index): each
         # query batch serves through the frozen rotation
         # (rotation= on ivfpq_search_encoded — rotated driver-side,
@@ -2006,8 +2005,8 @@ def _serving_evidence(spark, n: int, d: int, n_cells: int = 64,
         # like every other encode cost.
         t0 = time.time()
         build_metrics: dict = {}
-        build_ivfpq_index(
-            emb, os.path.join(idx_root, "ivfpq"),
+        build_index(
+            emb, os.path.join(idx_root, "ivfpq"), "ivfpq",
             n_centroids=n_cells, n_subspaces=n_sub, n_codes=n_codes,
             sample_size=max(4096, 16 * n_cells, 16 * n_codes),
             rotate=rotate, metrics_out=build_metrics,
@@ -2019,9 +2018,12 @@ def _serving_evidence(spark, n: int, d: int, n_cells: int = 64,
             # rotation_train_s is a SUBSET of ivfpq_index_build_s)
             out["rotation_train_s"] = build_metrics.get("rotation_train_s")
             out["rotation_persisted"] = True
-        rotation = read_index_rotation(os.path.join(idx_root, "ivfpq"))
+        p_ivf, codes = read_index(spark, os.path.join(idx_root, "ivfpq"))
+        coarse, cb = p_ivf["coarse"], p_ivf["codebooks"]
+        rotation = (
+            (p_ivf["rot_mean"], p_ivf["rotation"]) if "rotation" in p_ivf else None
+        )
         assert (rotation is not None) == (rotate == "opq")
-        coarse, cb, codes = read_ivfpq_index(spark, os.path.join(idx_root, "ivfpq"))
         codes = codes.localCheckpoint(eager=True)
         # candidate budget 64·K: at d=512 same-cluster distances
         # CONCENTRATE (all ≈ sqrt(2d)·σ, tiny margins), so ADC ranking
@@ -2068,11 +2070,9 @@ def _bq_serving_evidence(spark, n: int, d: int) -> dict:
     from pyspark.sql import functions as F
 
     from pyspark_mrdf_spark.operators.quantize import (
-        build_bq_index,
-        build_sq8_index,
         bq_search_encoded,
-        read_bq_index,
-        read_sq8_index,
+        build_index,
+        read_index,
         sq8_search_encoded,
     )
     from pyspark_mrdf_spark.operators.similarity import knn_search_blocked
@@ -2123,9 +2123,10 @@ def _bq_serving_evidence(spark, n: int, d: int) -> dict:
         idx_root = tempfile.mkdtemp(prefix="mrdf_bq_serving_idx_")
 
         t0 = time.time()
-        build_sq8_index(emb, os.path.join(idx_root, "sq8"))
+        build_index(emb, os.path.join(idx_root, "sq8"), "sq8")
         out["sq8_index_build_s"] = round(time.time() - t0, 2)
-        mn, mx, sq8_codes_df = read_sq8_index(spark, os.path.join(idx_root, "sq8"))
+        p_sq8, sq8_codes_df = read_index(spark, os.path.join(idx_root, "sq8"))
+        mn, mx = p_sq8["mn"], p_sq8["mx"]
         sq8_codes_df = sq8_codes_df.localCheckpoint(eager=True)
         sq8_s, sq8_g = [], None
         for i, q in enumerate(batches):
@@ -2143,9 +2144,10 @@ def _bq_serving_evidence(spark, n: int, d: int) -> dict:
         out["sq8_index_bytes_per_row"] = d + 8
 
         t0 = time.time()
-        build_bq_index(emb, os.path.join(idx_root, "bq"))
+        build_index(emb, os.path.join(idx_root, "bq"), "bq")
         out["bq_index_build_s"] = round(time.time() - t0, 2)
-        thr, bq_codes_df = read_bq_index(spark, os.path.join(idx_root, "bq"))
+        p_bq, bq_codes_df = read_index(spark, os.path.join(idx_root, "bq"))
+        thr = p_bq["thr"]
         bq_codes_df = bq_codes_df.localCheckpoint(eager=True)
         for kc in (64 * K, 256 * K):
             bq_s, bq_g = [], None
@@ -2901,9 +2903,9 @@ def _ivfpq_io_evidence(spark, n: int, d: int, n_cells: int = 64, n_probe: int = 
 
     from pyspark_mrdf_spark.functions.vector import pairwise_l2_sq
     from pyspark_mrdf_spark.operators.quantize import (
-        build_ivfpq_index,
+        build_index,
         ivfpq_search_encoded,
-        read_ivfpq_index,
+        read_index,
     )
 
     syn_dir = "/root/repo/.scalability_synth_ivfpq_io"
@@ -2926,13 +2928,14 @@ def _ivfpq_io_evidence(spark, n: int, d: int, n_cells: int = 64, n_probe: int = 
         emb = emb.localCheckpoint(eager=True)
 
         t0 = time.time()
-        build_ivfpq_index(
-            emb, os.path.join(idx_root, "ivfpq"),
+        build_index(
+            emb, os.path.join(idx_root, "ivfpq"), "ivfpq",
             n_centroids=n_cells, n_subspaces=n_sub,
             sample_size=max(4096, 16 * n_cells),
         )
         out["index_build_s"] = round(time.time() - t0, 2)
-        coarse, cb, codes = read_ivfpq_index(spark, os.path.join(idx_root, "ivfpq"))
+        p_ivf, codes = read_index(spark, os.path.join(idx_root, "ivfpq"))
+        coarse, cb = p_ivf["coarse"], p_ivf["codebooks"]
         codes_path = os.path.join(idx_root, "ivfpq", "codes")
 
         def du(path: str) -> int:

@@ -155,3 +155,19 @@ def test_params_frozen_across_append(spark, corpus, batch):
 def test_near_dedup_against_requires_state_when_corpusless():
     with pytest.raises(ValueError, match="index-served path"):
         near_dedup_against(None, corpus=None)
+
+
+def test_index_at_file_uri_serves_like_plain_path(spark, corpus, batch, idx_path, tmp_path):
+    # a dedup index built, grown and served at a file:// path behaves
+    # exactly like the one at the plain path, and leaves no stray
+    # relative "file:" tree in the working directory
+    import os
+
+    uri = "file://" + str(tmp_path / "dedup_uri")
+    write_dedup_index(corpus, uri)
+    served = _ids(near_dedup_against_index(batch, read_dedup_index(spark, uri), threshold=0.5))
+    want = _ids(near_dedup_against_index(batch, read_dedup_index(spark, idx_path), threshold=0.5))
+    assert served == want
+    append_dedup_index(spark, uri, batch)
+    assert _ids(dedup_against_index(batch, read_dedup_index(spark, uri))) == []
+    assert not os.path.exists(os.path.join(os.getcwd(), "file:"))

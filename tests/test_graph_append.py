@@ -291,6 +291,24 @@ def test_graph_append_stream_graph_tier_matches_batch(spark, emb, tmp_path):
     assert _rows(streamed) == _rows(g2)
 
 
+def test_graph_state_with_only_uncommitted_stream_batch_reads_base(spark, emb, tmp_path):
+    """Crash before the first commit: graph/stream/ holds one batch dir
+    with only an uncommitted _temporary write. Uncommitted partitions
+    are invisible by the exactly-once model, so the state reads back
+    its base graph and corpus."""
+    import os
+
+    from pyspark_mrdf_spark.streaming.ingest import read_graph_state, write_graph_state
+
+    state = str(tmp_path / "gstate")
+    graph = knn_exact_blocked(emb, 3)
+    write_graph_state(emb, graph, state)
+    os.makedirs(os.path.join(state, "graph", "stream", "batch=0", "_temporary", "0"))
+    corpus, served = read_graph_state(spark, state)
+    assert _rows(served) == _rows(graph)
+    assert corpus.count() == emb.count()
+
+
 def test_compact_graph_state_serves_identically(spark, emb, tmp_path):
     """Compaction law: a compacted state serves ROW-IDENTICALLY to the
     uncompacted base+delta overlay, with zero delta partitions left to
@@ -338,9 +356,12 @@ def test_compact_graph_state_serves_identically(spark, emb, tmp_path):
     assert _glob.glob(f"{dst}/graph/stream/batch=*") == []
     assert _glob.glob(f"{dst}/corpus/stream/batch=*") == []
 
-    # in-place compaction is refused (the merge_sq8_indexes contract)
+    # in-place compaction is refused (the merge_indexes contract), also
+    # when the destination is the source's file:// form
     with pytest.raises(ValueError, match="fresh directory"):
         compact_graph_state(spark, state, state)
+    with pytest.raises(ValueError, match="fresh directory"):
+        compact_graph_state(spark, state, "file://" + state)
 
 
 def test_checkpoint_restart_across_compaction(spark, emb, tmp_path):

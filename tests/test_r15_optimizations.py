@@ -241,3 +241,33 @@ def test_auto_block_resolution_memoized_per_plan(spark):
     )
     L._resolve_auto_block(ok)
     assert len(L._AUTO_CACHE) == 2
+
+
+def test_auto_block_cache_is_lru_bounded(spark, monkeypatch):
+    # a long-lived session must not grow the memo without bound: with
+    # the cap at 2, three distinct plans in ONE application leave two
+    # entries, and the most recently HIT key is the one that survives
+    from pyspark_mrdf_spark.operators import linkage as L
+
+    monkeypatch.setattr(L, "_AUTO_CACHE_MAX", 2)
+    L._AUTO_CACHE.clear()
+
+    def keyed(prefix):
+        clean = spark.createDataFrame(
+            [(f"{prefix}{i}",) for i in range(10)], "p_name string"
+        )
+        return (
+            clean.select(F.col("p_name").alias("_cn"))
+            .distinct()
+            .select("_cn", F.substring("_cn", 1, 3).alias("_k"))
+        )
+
+    a, b, c = keyed("aa"), keyed("bb"), keyed("cc")
+    L._resolve_auto_block(a)
+    L._resolve_auto_block(b)
+    L._resolve_auto_block(a)  # hit: a becomes the most recent key
+    L._resolve_auto_block(c)  # evicts b, the least recently used
+    assert len(L._AUTO_CACHE) == 2
+    hashes = {k[1] for k in L._AUTO_CACHE}
+    assert hashes == {a.semanticHash(), c.semanticHash()}
+    L._AUTO_CACHE.clear()

@@ -2,6 +2,8 @@
 
 from __future__ import annotations
 
+import numpy as np
+import pytest
 from pyspark.sql import functions as F
 
 from pyspark_mrdf_spark.io import load_table
@@ -377,11 +379,11 @@ def test_ivfpq_index_roundtrip_bit_identical(spark, sf_dir, tmp_path):
     codes are partition-independent)."""
     import numpy as np
     from pyspark_mrdf_spark.operators.quantize import (
-        build_ivfpq_index,
+        build_index,
         ivfpq_search,
         ivfpq_search_encoded,
         ivfpq_train,
-        read_ivfpq_index,
+        read_index,
     )
 
     emb = load_table(spark, sf_dir, "embeddings")
@@ -390,8 +392,10 @@ def test_ivfpq_index_roundtrip_bit_identical(spark, sf_dir, tmp_path):
                sample_size=256, iters_coarse=5, iters_pq=5, seed=3)
 
     path = str(tmp_path / "ivfpq_idx")
-    coarse_w, cb_w = build_ivfpq_index(emb, path, **cfg)
-    coarse_r, cb_r, codes_r = read_ivfpq_index(spark, path)
+    p_w = build_index(emb, path, "ivfpq", **cfg)
+    coarse_w, cb_w = p_w["coarse"], p_w["codebooks"]
+    p_r, codes_r = read_index(spark, path)
+    coarse_r, cb_r = p_r["coarse"], p_r["codebooks"]
     assert np.array_equal(coarse_w, coarse_r)   # bit-exact roundtrip
     assert np.array_equal(cb_w, cb_r)
     # the persisted code table is complete and cell-partitioned
@@ -414,8 +418,8 @@ def test_ivfpq_index_roundtrip_bit_identical(spark, sf_dir, tmp_path):
 def test_sq8_index_roundtrip_bit_identical(spark, sf_dir, tmp_path):
     import numpy as np
     from pyspark_mrdf_spark.operators.quantize import (
-        build_sq8_index,
-        read_sq8_index,
+        build_index,
+        read_index,
         sq8_search,
         sq8_search_encoded,
     )
@@ -423,8 +427,10 @@ def test_sq8_index_roundtrip_bit_identical(spark, sf_dir, tmp_path):
     emb = load_table(spark, sf_dir, "embeddings")
     queries = emb.filter(F.col("vec_id") < 40)
     path = str(tmp_path / "sq8_idx")
-    mn_w, mx_w = build_sq8_index(emb, path)
-    mn_r, mx_r, codes_r = read_sq8_index(spark, path)
+    p_w = build_index(emb, path, "sq8")
+    mn_w, mx_w = p_w["mn"], p_w["mx"]
+    p_r, codes_r = read_index(spark, path)
+    mn_r, mx_r = p_r["mn"], p_r["mx"]
     assert np.array_equal(mn_w, mn_r) and np.array_equal(mx_w, mx_r)
     assert codes_r.count() == emb.count()
 
@@ -444,8 +450,8 @@ def test_pq_index_roundtrip_bit_identical(spark, sf_dir, tmp_path):
         pq_search,
         pq_search_encoded,
         pq_train,
-        read_pq_index,
-        write_pq_index,
+        read_index,
+        write_index,
     )
 
     emb = load_table(spark, sf_dir, "embeddings")
@@ -453,8 +459,9 @@ def test_pq_index_roundtrip_bit_identical(spark, sf_dir, tmp_path):
     cfg = dict(n_subspaces=8, n_codes=16, sample_size=256, iters=5, seed=7)
     cb_w = pq_train(emb, **cfg)
     path = str(tmp_path / "pq_idx")
-    write_pq_index(path, cb_w, pq_encode(emb, cb_w))
-    cb_r, codes_r = read_pq_index(spark, path)
+    write_index(path, {"codebooks": cb_w}, pq_encode(emb, cb_w))
+    p_r, codes_r = read_index(spark, path)
+    cb_r = p_r["codebooks"]
     assert np.array_equal(cb_w, cb_r)
 
     inline = pq_search(queries, emb, 5, k_candidates=80, include_self=False, **cfg).collect()
@@ -473,12 +480,12 @@ def test_ivfpq_index_append_bit_identical(spark, sf_dir, tmp_path):
     encoded from the full corpus with the same params, because
     append changes no trained parameter and no existing code byte."""
     from pyspark_mrdf_spark.operators.quantize import (
-        append_ivfpq_index,
-        build_ivfpq_index,
+        append_index,
+        build_index,
         index_cell_stats,
         ivfpq_encode,
         ivfpq_search_encoded,
-        read_ivfpq_index,
+        read_index,
     )
 
     emb = load_table(spark, sf_dir, "embeddings")
@@ -489,9 +496,10 @@ def test_ivfpq_index_append_bit_identical(spark, sf_dir, tmp_path):
                sample_size=256, iters_coarse=5, iters_pq=5, seed=3)
 
     path = str(tmp_path / "ivfpq_idx")
-    build_ivfpq_index(old, path, **cfg)
-    append_ivfpq_index(path, new)
-    coarse, cb, codes = read_ivfpq_index(spark, path)
+    build_index(old, path, "ivfpq", **cfg)
+    append_index(path, new)
+    p, codes = read_index(spark, path)
+    coarse, cb = p["coarse"], p["codebooks"]
     assert codes.count() == emb.count()
 
     grown = ivfpq_search_encoded(
@@ -515,9 +523,9 @@ def test_ivfpq_index_append_bit_identical(spark, sf_dir, tmp_path):
 
 def test_sq8_index_append_bit_identical(spark, sf_dir, tmp_path):
     from pyspark_mrdf_spark.operators.quantize import (
-        append_sq8_index,
-        build_sq8_index,
-        read_sq8_index,
+        append_index,
+        build_index,
+        read_index,
         sq8_encode,
         sq8_search_encoded,
     )
@@ -528,9 +536,10 @@ def test_sq8_index_append_bit_identical(spark, sf_dir, tmp_path):
     queries = emb.filter(F.col("vec_id") < 40)
 
     path = str(tmp_path / "sq8_idx")
-    build_sq8_index(old, path)
-    append_sq8_index(path, new)
-    mn, mx, codes = read_sq8_index(spark, path)
+    build_index(old, path, "sq8")
+    append_index(path, new)
+    p, codes = read_index(spark, path)
+    mn, mx = p["mn"], p["mx"]
     assert codes.count() == emb.count()
 
     grown = sq8_search_encoded(
@@ -547,12 +556,12 @@ def test_sq8_index_append_bit_identical(spark, sf_dir, tmp_path):
 
 def test_pq_index_append_bit_identical(spark, sf_dir, tmp_path):
     from pyspark_mrdf_spark.operators.quantize import (
-        append_pq_index,
+        append_index,
         pq_encode,
         pq_search_encoded,
         pq_train,
-        read_pq_index,
-        write_pq_index,
+        read_index,
+        write_index,
     )
 
     emb = load_table(spark, sf_dir, "embeddings")
@@ -562,9 +571,10 @@ def test_pq_index_append_bit_identical(spark, sf_dir, tmp_path):
     cb = pq_train(old, n_subspaces=8, n_codes=16, sample_size=256, iters=5, seed=7)
 
     path = str(tmp_path / "pq_idx")
-    write_pq_index(path, cb, pq_encode(old, cb))
-    append_pq_index(path, new)
-    cb_r, codes = read_pq_index(spark, path)
+    write_index(path, {"codebooks": cb}, pq_encode(old, cb))
+    append_index(path, new)
+    p, codes = read_index(spark, path)
+    cb_r = p["codebooks"]
     assert codes.count() == emb.count()
 
     grown = pq_search_encoded(
@@ -579,7 +589,7 @@ def test_pq_index_append_bit_identical(spark, sf_dir, tmp_path):
     )
 
 
-def test_params_roundtrip_preserves_size1_leading_dims(tmp_path):
+def test_params_roundtrip_preserves_size1_leading_dims(spark, tmp_path):
     # rank survives the parquet roundtrip even when a leading dim is 1
     # (n_subspaces=1 codebooks, n_centroids=1 coarse tables): shape
     # comes from the stored ndim column, not max-index inference
@@ -593,8 +603,8 @@ def test_params_roundtrip_preserves_size1_leading_dims(tmp_path):
         "t_one_sub": np.arange(12.0).reshape(1, 4, 3),  # (1, 4, 3)
         "t_full": np.arange(24.0).reshape(2, 4, 3),
     }
-    _write_params(str(tmp_path / "p"), parts)
-    got = _read_params(str(tmp_path / "p"))
+    _write_params(spark, str(tmp_path / "p"), parts)
+    got = _read_params(spark, str(tmp_path / "p"))
     for name, arr in parts.items():
         assert got[name].shape == arr.shape, name
         assert np.array_equal(got[name], arr), name
@@ -652,16 +662,17 @@ def test_bq_index_roundtrip_bit_identical(spark, sf_dir, tmp_path):
         bq_search,
         bq_search_encoded,
         bq_train,
-        read_bq_index,
-        write_bq_index,
+        read_index,
+        write_index,
     )
 
     emb = load_table(spark, sf_dir, "embeddings")
     queries = emb.filter(F.col("vec_id") < 40)
     path = str(tmp_path / "bq_idx")
     thr_w = bq_train(emb)
-    write_bq_index(path, thr_w, bq_encode(emb, thr_w))
-    thr_r, codes_r = read_bq_index(spark, path)
+    write_index(path, {"thr": thr_w}, bq_encode(emb, thr_w))
+    p_r, codes_r = read_index(spark, path)
+    thr_r = p_r["thr"]
     assert np.array_equal(thr_w, thr_r)
     assert codes_r.count() == emb.count()
     # 1 bit/dim: stored code cell is ceil(d/8) bytes
@@ -706,12 +717,12 @@ def test_sq8_index_merge_equals_union_build_and_compacts_stream(spark, sf_dir, t
     # bit-identically to one union-corpus build with those params.
     # A single-source merge must fold streamed deltas (compaction).
     from pyspark_mrdf_spark.operators.quantize import (
-        build_sq8_index,
-        merge_sq8_indexes,
-        read_sq8_index,
+        build_index,
+        merge_indexes,
+        read_index,
         sq8_encode,
         sq8_search_encoded,
-        write_sq8_index,
+        write_index,
     )
 
     emb = load_table(spark, sf_dir, "embeddings")
@@ -722,11 +733,13 @@ def test_sq8_index_merge_equals_union_build_and_compacts_stream(spark, sf_dir, t
     pa_ = str(tmp_path / "shard_a")
     pb = str(tmp_path / "shard_b")
     merged = str(tmp_path / "merged")
-    mn, mx = build_sq8_index(a, pa_)
-    write_sq8_index(pb, mn, mx, sq8_encode(b, mn, mx))
-    merge_sq8_indexes(spark, [pa_, pb], merged)
+    p = build_index(a, pa_, "sq8")
+    mn, mx = p["mn"], p["mx"]
+    write_index(pb, p, sq8_encode(b, mn, mx))
+    merge_indexes(spark, [pa_, pb], merged)
 
-    mn_m, mx_m, codes_m = read_sq8_index(spark, merged)
+    p_m, codes_m = read_index(spark, merged)
+    mn_m, mx_m = p_m["mn"], p_m["mx"]
     assert (mn_m == mn).all() and (mx_m == mx).all()
     assert codes_m.count() == emb.count()
     got = sq8_search_encoded(
@@ -745,8 +758,8 @@ def test_sq8_index_merge_equals_union_build_and_compacts_stream(spark, sf_dir, t
     delta = sq8_encode(b, mn, mx)
     delta.write.parquet(os.path.join(pa_, "stream_codes", "batch=0"))
     compacted = str(tmp_path / "compacted")
-    merge_sq8_indexes(spark, [pa_], compacted)
-    _, _, codes_c = read_sq8_index(spark, compacted)
+    merge_indexes(spark, [pa_], compacted)
+    _, codes_c = read_index(spark, compacted)
     assert codes_c.count() == emb.count()
     assert not os.path.exists(os.path.join(compacted, "stream_codes"))
     got_c = sq8_search_encoded(
@@ -759,12 +772,12 @@ def test_ivfpq_index_merge_equals_union_build(spark, sf_dir, tmp_path):
     import numpy as np
 
     from pyspark_mrdf_spark.operators.quantize import (
-        build_ivfpq_index,
+        build_index,
         ivfpq_encode,
         ivfpq_search_encoded,
-        merge_ivfpq_indexes,
-        read_ivfpq_index,
-        write_ivfpq_index,
+        merge_indexes,
+        read_index,
+        write_index,
     )
 
     emb = load_table(spark, sf_dir, "embeddings")
@@ -775,11 +788,13 @@ def test_ivfpq_index_merge_equals_union_build(spark, sf_dir, tmp_path):
     pa_ = str(tmp_path / "shard_a")
     pb = str(tmp_path / "shard_b")
     merged = str(tmp_path / "merged")
-    coarse, cb = build_ivfpq_index(a, pa_, n_centroids=4, n_subspaces=4, n_codes=8)
-    write_ivfpq_index(pb, coarse, cb, ivfpq_encode(b, coarse, cb))
-    merge_ivfpq_indexes(spark, [pa_, pb], merged)
+    p = build_index(a, pa_, "ivfpq", n_centroids=4, n_subspaces=4, n_codes=8)
+    coarse, cb = p["coarse"], p["codebooks"]
+    write_index(pb, p, ivfpq_encode(b, coarse, cb))
+    merge_indexes(spark, [pa_, pb], merged)
 
-    c_m, cb_m, codes_m = read_ivfpq_index(spark, merged)
+    p_m, codes_m = read_index(spark, merged)
+    c_m, cb_m = p_m["coarse"], p_m["codebooks"]
     assert np.array_equal(c_m, coarse) and np.array_equal(cb_m, cb)
     assert codes_m.count() == emb.count()
     got = ivfpq_search_encoded(
@@ -797,9 +812,9 @@ def test_ivfpq_index_merge_equals_union_build(spark, sf_dir, tmp_path):
     import pytest as _pytest
 
     alien = str(tmp_path / "alien")
-    build_ivfpq_index(b, alien, n_centroids=4, n_subspaces=4, n_codes=8, seed=7)
+    build_index(b, alien, "ivfpq", n_centroids=4, n_subspaces=4, n_codes=8, seed=7)
     with _pytest.raises(ValueError, match="frozen params"):
-        merge_ivfpq_indexes(spark, [pa_, alien], str(tmp_path / "bad"))
+        merge_indexes(spark, [pa_, alien], str(tmp_path / "bad"))
 
 
 def test_pca_search_beats_raw_prefix_on_anisotropic_data(spark):
@@ -893,18 +908,17 @@ def test_merge_rejects_in_place_dst(spark, sf_dir, tmp_path):
     # opaque AnalysisException at action time
     import pytest as _pytest
 
-    from pyspark_mrdf_spark.operators.quantize import (
-        build_sq8_index,
-        merge_sq8_indexes,
-    )
+    from pyspark_mrdf_spark.operators.quantize import build_index, merge_indexes
 
     emb = load_table(spark, sf_dir, "embeddings")
     p = str(tmp_path / "idx")
-    build_sq8_index(emb, p)
+    build_index(emb, p, "sq8")
     with _pytest.raises(ValueError, match="also a source"):
-        merge_sq8_indexes(spark, [p], p)
+        merge_indexes(spark, [p], p)
     with _pytest.raises(ValueError, match="also a source"):
-        merge_sq8_indexes(spark, [p + "/"], p)  # canonicalized compare
+        merge_indexes(spark, [p + "/"], p)  # canonicalized compare
+    with _pytest.raises(ValueError, match="also a source"):
+        merge_indexes(spark, [p], "file://" + p)  # URI form of a source
 
 
 def test_sq8_drift_stats_flags_unknown_dims_and_clean_batch(spark, sf_dir):
@@ -1044,12 +1058,11 @@ def test_rotated_ivfpq_index_roundtrip_append_and_serving(spark, sf_dir, tmp_pat
 
     from pyspark_mrdf_spark.operators.project import pca_project_vec
     from pyspark_mrdf_spark.operators.quantize import (
-        append_ivfpq_index,
-        build_ivfpq_index,
+        append_index,
+        build_index,
         ivfpq_encode,
         ivfpq_search_encoded,
-        read_index_rotation,
-        read_ivfpq_index,
+        read_index,
     )
 
     emb = load_table(spark, sf_dir, "embeddings")
@@ -1060,8 +1073,9 @@ def test_rotated_ivfpq_index_roundtrip_append_and_serving(spark, sf_dir, tmp_pat
                sample_size=256, iters_coarse=5, iters_pq=5, seed=3)
 
     path = str(tmp_path / "ivfpq_rot")
-    build_ivfpq_index(old, path, rotate="opq", **cfg)
-    rot = read_index_rotation(path)
+    build_index(old, path, "ivfpq", rotate="opq", **cfg)
+    p, _ = read_index(spark, path)
+    rot = (p["rot_mean"], p["rotation"]) if "rotation" in p else None
     assert rot is not None
     mean, r = rot
     d = len(mean)
@@ -1069,8 +1083,9 @@ def test_rotated_ivfpq_index_roundtrip_append_and_serving(spark, sf_dir, tmp_pat
     assert np.allclose(r.T @ r, np.eye(d), atol=1e-10)
 
     # append-equals-rebuild THROUGH the frozen rotation
-    append_ivfpq_index(path, new)
-    coarse, cb, codes = read_ivfpq_index(spark, path)
+    append_index(path, new)
+    p, codes = read_index(spark, path)
+    coarse, cb = p["coarse"], p["codebooks"]
     assert codes.count() == emb.count()
     union_rot = pca_project_vec(emb, mean, r)
     rebuilt = ivfpq_encode(union_rot, coarse, cb)
@@ -1103,12 +1118,11 @@ def test_rotated_pq_index_roundtrip_and_append(spark, sf_dir, tmp_path):
 
     from pyspark_mrdf_spark.operators.project import pca_project_vec
     from pyspark_mrdf_spark.operators.quantize import (
-        append_pq_index,
-        build_pq_index,
+        append_index,
+        build_index,
         pq_encode,
         pq_search_encoded,
-        read_index_rotation,
-        read_pq_index,
+        read_index,
     )
 
     emb = load_table(spark, sf_dir, "embeddings")
@@ -1117,14 +1131,16 @@ def test_rotated_pq_index_roundtrip_and_append(spark, sf_dir, tmp_path):
     queries = emb.filter(F.col("vec_id") < 40)
 
     path = str(tmp_path / "pq_rot")
-    cb = build_pq_index(
-        old, path, n_subspaces=8, n_codes=16, sample_size=256, iters=5,
+    cb = build_index(
+        old, path, "pq", n_subspaces=8, n_codes=16, sample_size=256, iters=5,
         seed=7, rotate="opq",
-    )
-    rot = read_index_rotation(path)
+    )["codebooks"]
+    p, _ = read_index(spark, path)
+    rot = (p["rot_mean"], p["rotation"]) if "rotation" in p else None
     assert rot is not None
-    append_pq_index(path, new)
-    cb_r, codes = read_pq_index(spark, path)
+    append_index(path, new)
+    p, codes = read_index(spark, path)
+    cb_r = p["codebooks"]
     assert np.array_equal(cb, cb_r)
     assert codes.count() == emb.count()
     # append ≡ union-encode through the frozen rotation, bit-identical
@@ -1146,7 +1162,7 @@ def test_rotated_pq_index_roundtrip_and_append(spark, sf_dir, tmp_path):
 def test_unrotated_index_has_no_rotation_and_merge_gates_rotation(
     spark, sf_dir, tmp_path
 ):
-    """read_index_rotation is None for a plain build; merging a rotated
+    """A plain build stores no rotation; merging a rotated
     index with an unrotated one — or two indexes with DIFFERENT
     rotations — refuses loudly (frozen-params discipline extends to the
     rotation); shards sharing one frozen rotation merge and the merged
@@ -1154,13 +1170,11 @@ def test_unrotated_index_has_no_rotation_and_merge_gates_rotation(
     import pytest as _pytest
 
     from pyspark_mrdf_spark.operators.quantize import (
-        _read_params,
-        build_ivfpq_index,
+        build_index,
         ivfpq_encode,
-        merge_ivfpq_indexes,
-        read_index_rotation,
-        read_ivfpq_index,
-        write_ivfpq_index,
+        merge_indexes,
+        read_index,
+        write_index,
     )
     from pyspark_mrdf_spark.operators.project import pca_project_vec
 
@@ -1171,31 +1185,141 @@ def test_unrotated_index_has_no_rotation_and_merge_gates_rotation(
                sample_size=128, iters_coarse=3, iters_pq=3, seed=3)
 
     plain = str(tmp_path / "plain")
-    build_ivfpq_index(a, plain, **cfg)
-    assert read_index_rotation(plain) is None
+    build_index(a, plain, "ivfpq", **cfg)
+    assert read_index(spark, plain)[0].get("rotation") is None
 
     rot_a = str(tmp_path / "rot_a")
-    build_ivfpq_index(a, rot_a, rotate="opq", **cfg)
+    build_index(a, rot_a, "ivfpq", rotate="opq", **cfg)
     with _pytest.raises(ValueError, match="rotated"):
-        merge_ivfpq_indexes(spark, [rot_a, plain], str(tmp_path / "m1"))
+        merge_indexes(spark, [rot_a, plain], str(tmp_path / "m1"))
 
     # different training corpus -> different rotation bytes -> refuse
     rot_b = str(tmp_path / "rot_b")
-    build_ivfpq_index(b, rot_b, rotate="opq", **cfg)
+    build_index(b, rot_b, "ivfpq", rotate="opq", **cfg)
     with _pytest.raises(ValueError, match="differs"):
-        merge_ivfpq_indexes(spark, [rot_a, rot_b], str(tmp_path / "m2"))
+        merge_indexes(spark, [rot_a, rot_b], str(tmp_path / "m2"))
 
     # shard encoded with THE SAME frozen params merges; rotation rides
-    p = _read_params(rot_a)
+    p, _ = read_index(spark, rot_a)
     rot = (p["rot_mean"], p["rotation"])
     shard_b = str(tmp_path / "shard_b")
-    write_ivfpq_index(
-        shard_b, p["coarse"], p["codebooks"],
+    write_index(
+        shard_b,
+        {k: p[k] for k in ("coarse", "codebooks", "rot_mean", "rotation")},
         ivfpq_encode(pca_project_vec(b, rot[0], rot[1]), p["coarse"], p["codebooks"]),
-        rotation=rot,
     )
     merged = str(tmp_path / "merged")
-    merge_ivfpq_indexes(spark, [rot_a, shard_b], merged)
-    assert read_index_rotation(merged) is not None
-    _, _, codes = read_ivfpq_index(spark, merged)
+    merge_indexes(spark, [rot_a, shard_b], merged)
+    assert read_index(spark, merged)[0].get("rotation") is not None
+    _, codes = read_index(spark, merged)
     assert codes.count() == emb.count()
+
+
+def _serve_index(kind, queries, codes, p, emb):
+    from pyspark_mrdf_spark.operators import quantize as Q
+
+    common = dict(k_candidates=40, include_self=False)
+    if kind == "sq8":
+        return Q.sq8_search_encoded(queries, codes, p["mn"], p["mx"], emb, 5, **common)
+    if kind == "bq":
+        return Q.bq_search_encoded(queries, codes, p["thr"], emb, 5, **common)
+    if kind == "pq":
+        return Q.pq_search_encoded(queries, codes, p["codebooks"], emb, 5, **common)
+    return Q.ivfpq_search_encoded(
+        queries, codes, p["coarse"], p["codebooks"], emb, 5, n_probe=2, **common
+    )
+
+
+_INDEX_CFG = {
+    "sq8": {},
+    "bq": {},
+    "pq": dict(n_subspaces=8, n_codes=16, sample_size=256, iters=5, seed=7),
+    "ivfpq": dict(n_centroids=4, n_subspaces=4, n_codes=8, sample_size=256,
+                  iters_coarse=3, iters_pq=3, seed=3),
+}
+
+
+@pytest.mark.parametrize("kind", ["sq8", "bq", "pq", "ivfpq"])
+def test_index_at_file_uri_serves_like_plain_path(spark, sf_dir, tmp_path, kind):
+    # URI-form storage paths: build, append to and read an index at a
+    # file:// path. It must serve exactly what the same index at the
+    # plain path serves, and must not leave a stray relative "file:"
+    # tree in the working directory (a driver-local os.makedirs on the
+    # URI once created ./file:/... while pyarrow wrote elsewhere)
+    import os
+
+    from pyspark_mrdf_spark.operators.quantize import append_index, build_index, read_index
+
+    emb = load_table(spark, sf_dir, "embeddings")
+    old = emb.filter(F.col("vec_id") < 250)
+    new = emb.filter(F.col("vec_id") >= 250)
+    queries = emb.filter(F.col("vec_id") < 40)
+
+    plain = str(tmp_path / "plain")
+    uri = "file://" + str(tmp_path / "uri")
+    for path in (plain, uri):
+        build_index(old, path, kind, **_INDEX_CFG[kind])
+        append_index(path, new)
+    p_plain, codes_plain = read_index(spark, plain)
+    p_uri, codes_uri = read_index(spark, uri)
+    assert p_uri.keys() == p_plain.keys()
+    assert all(np.array_equal(p_uri[k], p_plain[k]) for k in p_plain)
+    assert codes_uri.count() == emb.count()
+
+    key = lambda t: (t[0], t[3])  # noqa: E731
+    got = _serve_index(kind, queries, codes_uri, p_uri, emb).collect()
+    want = _serve_index(kind, queries, codes_plain, p_plain, emb).collect()
+    assert sorted(map(tuple, got), key=key) == sorted(map(tuple, want), key=key)
+    assert not os.path.exists(os.path.join(os.getcwd(), "file:"))
+
+
+def test_index_stream_dir_with_only_uncommitted_batch_reads_base(spark, sf_dir, tmp_path):
+    # crash before the first commit: stream_codes/ holds one batch dir
+    # with only an uncommitted _temporary write. Uncommitted partitions
+    # are invisible by the exactly-once model, so the index reads back
+    # its base codes (not an UNABLE_TO_INFER_SCHEMA failure)
+    import os
+
+    from pyspark_mrdf_spark.operators.quantize import build_index, read_index
+
+    emb = load_table(spark, sf_dir, "embeddings")
+    path = str(tmp_path / "idx")
+    build_index(emb, path, "sq8")
+    os.makedirs(os.path.join(path, "stream_codes", "batch=0", "_temporary", "0"))
+    _, codes = read_index(spark, path)
+    assert codes.count() == emb.count()
+
+
+def test_index_append_stream_ivfpq_equals_batch_append(spark, sf_dir, tmp_path):
+    # the stream path is codec-general: an IVF-PQ index grown by
+    # index_append_stream (cell-partitioned stream_codes) holds exactly
+    # the rows a batch append_index of the same vectors holds, and its
+    # cell stats count the streamed rows too
+    from pyspark_mrdf_spark.operators.quantize import (
+        append_index,
+        build_index,
+        index_cell_stats,
+        read_index,
+    )
+    from pyspark_mrdf_spark.streaming.ingest import index_append_stream
+
+    emb = load_table(spark, sf_dir, "embeddings")
+    base = emb.filter(F.col("vec_id") < 300)
+    new = emb.filter(F.col("vec_id") >= 300)
+    idx_stream, idx_batch = str(tmp_path / "s"), str(tmp_path / "b")
+    for path in (idx_stream, idx_batch):
+        build_index(base, path, "ivfpq", **_INDEX_CFG["ivfpq"])
+    append_index(idx_batch, new)
+
+    src = tmp_path / "vecs"
+    new.write.json(str(src))
+    stream = spark.readStream.schema("vec_id long, embedding array<float>").json(str(src))
+    q = index_append_stream(stream, idx_stream, str(tmp_path / "ckpt"), query_name="ivfpq_append")
+    assert q.awaitTermination(120), "index append stream did not drain"
+
+    def rows(path):
+        return {(r["vec_id"], r["cell"], bytes(r["code"])) for r in read_index(spark, path)[1].collect()}
+
+    got, want = rows(idx_stream), rows(idx_batch)
+    assert got == want and len(got) == emb.count()
+    assert sum(r["n_vectors"] for r in index_cell_stats(spark, idx_stream).collect()) == emb.count()

@@ -608,8 +608,8 @@ def test_ingest_dedup_stream_replay_preserves_batch(spark, tmp_path):
 def test_index_append_stream_equals_batch_append(spark, sf_dir, tmp_path):
     """Streaming ANN-index maintenance: vectors streamed through
     index_append_stream land as batch-id partitions encoded with the
-    FROZEN quantizer, read_sq8_index serves base+streamed codes, and
-    the result is row-for-row identical to batch append_sq8_index of
+    FROZEN quantizer, read_index serves base+streamed codes, and
+    the result is row-for-row identical to batch append_index of
     the same vectors. Replaying from the same checkpoint with no new
     input changes nothing (idempotent per-batch partition writes)."""
     import json as _json
@@ -619,9 +619,9 @@ def test_index_append_stream_equals_batch_append(spark, sf_dir, tmp_path):
 
     from pyspark_mrdf_spark.io import load_table
     from pyspark_mrdf_spark.operators.quantize import (
-        append_sq8_index,
-        build_sq8_index,
-        read_sq8_index,
+        append_index,
+        build_index,
+        read_index,
     )
     from pyspark_mrdf_spark.streaming.ingest import index_append_stream
 
@@ -629,10 +629,10 @@ def test_index_append_stream_equals_batch_append(spark, sf_dir, tmp_path):
     base = emb.filter("vec_id < 300")
     idx_stream = str(tmp_path / "idx_stream")
     idx_batch = str(tmp_path / "idx_batch")
-    build_sq8_index(base, idx_stream)
-    build_sq8_index(base, idx_batch)
+    build_index(base, idx_stream, "sq8")
+    build_index(base, idx_batch, "sq8")
 
-    append_sq8_index(idx_batch, emb.filter("vec_id >= 300"))
+    append_index(idx_batch, emb.filter("vec_id >= 300"))
 
     src = tmp_path / "vec_json"
     src.mkdir()
@@ -663,8 +663,9 @@ def test_index_append_stream_equals_batch_append(spark, sf_dir, tmp_path):
     q = index_append_stream(stream, idx_stream, ckpt, query_name="idx_append_test")
     assert q.awaitTermination(120), "index append stream did not drain"
 
-    mn_s, mx_s, codes_s = read_sq8_index(spark, idx_stream)
-    mn_b, mx_b, codes_b = read_sq8_index(spark, idx_batch)
+    p_s, codes_s = read_index(spark, idx_stream)
+    p_b, codes_b = read_index(spark, idx_batch)
+    mn_s, mx_s, mn_b, mx_b = p_s["mn"], p_s["mx"], p_b["mn"], p_b["mx"]
     assert np.array_equal(mn_s, mn_b) and np.array_equal(mx_s, mx_b)
     rows_s = {(r["vec_id"], bytes(r["code"])) for r in codes_s.collect()}
     rows_b = {(r["vec_id"], bytes(r["code"])) for r in codes_b.collect()}
@@ -679,7 +680,7 @@ def test_index_append_stream_equals_batch_append(spark, sf_dir, tmp_path):
     )
     q2 = index_append_stream(stream2, idx_stream, ckpt, query_name="idx_append_test2")
     assert q2.awaitTermination(120)
-    _, _, codes_again = read_sq8_index(spark, idx_stream)
+    _, codes_again = read_index(spark, idx_stream)
     again = {(r["vec_id"], bytes(r["code"])) for r in codes_again.collect()}
     assert again == rows_s
 
