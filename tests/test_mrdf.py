@@ -349,3 +349,159 @@ def test_refine_matches_numpy_bruteforce(spark, emb):
         for grid in ((1, 1), (2, 2), (3, 2), (5, 5)):
             got = sorted(map(tuple, _refine(base, graph, 5, grid=grid).collect()))
             assert got == want, grid
+
+
+def _topk_per_src(cand: dict, k: int) -> dict:
+    """{(src, dst): dist_sq} → the top-k per src by (dist_sq, dst)."""
+    src = np.array([s for s, _ in cand], dtype=np.int64)
+    dst = np.array([d for _, d in cand], dtype=np.int64)
+    dist = np.array(list(cand.values()), dtype=np.float64)
+    order = np.lexsort((dst, dist, src))
+    src, dst, dist = src[order], dst[order], dist[order]
+    keep = np.arange(len(src)) - np.searchsorted(src, src, "left") < k
+    return {
+        (int(s), int(d)): float(x) for s, d, x in zip(src[keep], dst[keep], dist[keep])
+    }
+
+
+def _merge_chain_reference(forest_edges: list, k_work: int) -> tuple[list, list]:
+    """The one-forest-at-a-time merge in NumPy: g_1 = f_1, then for
+    t = 2..T dedup g_{t−1} ∪ f_t (g_{t−1}'s copy kept) and keep the
+    top-``k_work`` per src by (dist_sq, dst). Returns every g_t (a
+    {(src, dst): dist_sq} dict) and every (changed_t, total_t), with
+    changed_t = |g_t minus g_{t−1}| (g_0 empty)."""
+    graphs, counts = [], []
+    prev: dict = {}
+    for f in forest_edges:
+        cand = dict(prev)
+        for s, d, x in f:
+            cand.setdefault((s, d), x)
+        cur = _topk_per_src(cand, k_work)
+        counts.append((sum(e not in prev for e in cur), len(cur)))
+        graphs.append(cur)
+        prev = cur
+    return graphs, counts
+
+
+def _rows(g: dict) -> list:
+    return sorted((s, d, x) for (s, d), x in g.items())
+
+
+@pytest.mark.parametrize(
+    "dial",
+    [
+        # α=120 at n=500: ≥ 2 division rounds per forest
+        dict(rho=3, alpha=120, seed=42),
+        # the distributed-centroid join tier on every round
+        dict(rho=4, alpha=250, seed=42, centroid_broadcast_max_paths=0),
+    ],
+    ids=["deep_division", "join_tier"],
+)
+def test_prefix_pass_equals_sequential_merge_chain(spark, emb, dial):
+    # The wave's prefix top-k pass against the sequential merge chain,
+    # replayed in NumPy on the per-forest edge tables the leaf stage
+    # produces. max_iter=4 runs a wave of 3 forests and then one of 1,
+    # which merges into the running graph as forest 0.
+    from pyspark_mrdf_spark.algorithms.mrdf import (
+        CENTROID_BROADCAST_MAX_PATHS,
+        _graph_at,
+        _prefix_topk,
+        _wave_forests,
+    )
+
+    k_work, forests = 20, [1, 2, 3, 4]
+    metrics: list = []
+    g = knn_graph(
+        emb, K, tau=-1.0, max_iter=len(forests), refine_rounds=0,
+        auto_escalate=False, metrics_out=metrics, **dial,
+    )
+    got = sorted(map(tuple, g.collect()))
+    if dial["alpha"] == 120:
+        assert min(m["divisions"] for m in metrics) >= 2
+    else:
+        assert all(m["join_tier_rounds"] == m["divisions"] >= 1 for m in metrics)
+
+    base = emb.select(
+        F.col("vec_id").cast("long").alias("id"), F.col("embedding").alias("vec")
+    ).localCheckpoint(eager=True)
+    edges, _ = _wave_forests(
+        base, forests, n_total=base.count(), k_work=k_work, rho=dial["rho"],
+        alpha=dial["alpha"], seed=dial["seed"], nnd_sample_rate=1.0,
+        nnd_precision=0.001,
+        centroid_broadcast_max_paths=dial.get(
+            "centroid_broadcast_max_paths", CENTROID_BROADCAST_MAX_PATHS
+        ),
+    )
+    edges = edges.localCheckpoint(eager=True)
+    rows = edges.collect()
+    per_forest = [[(r.src, r.dst, r.dist_sq) for r in rows if r.forest == t] for t in forests]
+    want_graphs, want_counts = _merge_chain_reference(per_forest, k_work)
+
+    # the engine: final graph (truncated to K) and every reported ratio
+    assert got == _rows(_topk_per_src(want_graphs[-1], K))
+    want_ratios = [1.0] + [round(c / max(n, 1), 6) for c, n in want_counts[1:-1]] + [None]
+    assert [m["changed_ratio"] for m in metrics] == want_ratios
+    # the pass itself, from an empty running graph: every g_t and every
+    # (changed, total), the capped last forest included
+    merged, counts = _prefix_topk(None, edges, forests, k_work)
+    assert [counts[t] for t in forests] == want_counts
+    for t, want in zip(forests, want_graphs):
+        assert sorted(map(tuple, _graph_at(merged, t).collect())) == _rows(want), t
+    # and with g_2 as the running graph: forests 3..4 as a later wave
+    merged2, counts2 = _prefix_topk(
+        _graph_at(merged, 2), edges.filter(F.col("forest") > 2), forests[2:], k_work
+    )
+    assert [counts2[t] for t in forests[2:]] == want_counts[2:]
+    assert sorted(map(tuple, _graph_at(merged2, 4).collect())) == _rows(want_graphs[-1])
+
+
+def test_knn_graph_job_count_does_not_grow_with_forests(spark, emb):
+    # One wave builds all its forests in one dataflow and merges them in
+    # one pass, so a pinned run's Spark job count is the same at 2 and
+    # 3 forests — per-forest actions creeping back would grow it.
+    sc = spark.sparkContext
+    jobs, depths = {}, {}
+    for max_iter in (2, 3):
+        group = f"mrdf-jobs-{max_iter}"
+        metrics: list = []
+        sc.setJobGroup(group, "job-count law")
+        try:
+            knn_graph(
+                emb, K, rho=4, alpha=250, tau=-1.0, seed=42, max_iter=max_iter,
+                auto_escalate=False, metrics_out=metrics,
+            ).count()
+        finally:
+            sc.setLocalProperty("spark.jobGroup.id", None)
+            sc.setLocalProperty("spark.job.description", None)
+        jobs[max_iter] = len(sc.statusTracker().getJobIdsForGroup(group))
+        depths[max_iter] = {m["divisions"] for m in metrics}
+    # precondition: every forest divides to the same depth, so the wave
+    # runs the same number of division rounds either way
+    assert depths[2] == depths[3] and len(depths[3]) == 1
+    assert jobs[2] == jobs[3], jobs
+
+
+@pytest.mark.parametrize("parts", [4, 8])
+def test_refine_cells_spread_over_shuffle_partitions(spark, parts):
+    # _refine's grid cells travel under keys picked so Spark's hash
+    # partitioning spreads them round-robin: cells occupy
+    # min(cells, partitions) partitions, none holds more than
+    # ⌈cells/partitions⌉. Keyed by the cell index itself, Murmur3 puts
+    # cells 0..3 in partitions {3, 3, 2, 3} of 4. (_refine itself
+    # shuffles into one partition per cell: one task per cell.)
+    from pyspark_mrdf_spark.algorithms.mrdf import _cell_keys
+
+    for ba, bb in ((1, 1), (2, 2), (3, 3), (5, 5)):
+        cells = ba * bb
+        for p in (parts, cells):
+            keys = _cell_keys(cells, p)
+            assert len(set(keys)) == cells
+            slots = [
+                r["p"]
+                for r in spark.createDataFrame([(x,) for x in keys], "k int")
+                .select(F.pmod(F.hash("k"), F.lit(p)).alias("p"))
+                .collect()
+            ]
+            load = np.bincount(slots, minlength=p)
+            assert (load > 0).sum() == min(cells, p), (ba, bb, p, slots)
+            assert load.max() <= -(-cells // p), (ba, bb, p, slots)
