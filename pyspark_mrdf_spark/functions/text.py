@@ -29,13 +29,6 @@ def tokens(col: str | Column = "text") -> Column:
     return F.split(c, " ")
 
 
-def bpe_ish_tokens(col: str | Column = "text") -> Column:
-    """BPE-ish sub-word split: alternating letter/digit boundaries and
-    punctuation become token breaks (regex, JVM-side)."""
-    c = F.col(col) if isinstance(col, str) else col
-    return F.split(F.regexp_replace(c, r"([0-9]+|[^a-zA-Z0-9 ]+)", r" $1 "), r"\s+")
-
-
 def n_tokens(col: str | Column = "text") -> Column:
     return F.size(tokens(col))
 

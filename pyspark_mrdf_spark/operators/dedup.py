@@ -46,11 +46,6 @@ def exact_duplicates(df: DataFrame, id_col: str = "doc_id", text_col: str = "tex
     )
 
 
-# r15: promoted to operators/util.py (three call sites across two
-# modules); the old private name stays importable for its existing users.
-_spread = spread
-
-
 def _py_shingles(text: str | None, n: int) -> list[str]:
     """Python replica of ``functions.text.shingles`` — byte-identical
     output (same whitespace split semantics, same first-occurrence
@@ -75,7 +70,7 @@ def shingle_table(df: DataFrame, n: int = 3, id_col: str = "doc_id", text_col: s
     64.5 core-s for ~1.2M grams in the JVM expression chain). Only
     (id, text) crosses the boundary; output rows are the exploded
     posting list."""
-    spark_df = _spread(df.select(F.col(id_col), F.col(text_col)))
+    spark_df = spread(df.select(F.col(id_col), F.col(text_col)))
     id_type = spark_df.schema[id_col].dataType.simpleString()
     schema = f"{id_col} {id_type}, shingle string"
 
@@ -408,7 +403,7 @@ def minhash_signatures(
     oracle and the dedup-index roundtrip laws pin this)."""
     import hashlib
 
-    spark_df = _spread(df.select(F.col(id_col), F.col(text_col)))
+    spark_df = spread(df.select(F.col(id_col), F.col(text_col)))
     id_type = spark_df.schema[id_col].dataType.simpleString()
     schema = f"{id_col} {id_type}, signature array<string>"
     prefixes = [f"{i}:".encode() for i in range(num_hashes)]
@@ -504,7 +499,7 @@ def simhash(
     64-bit int, and 62 < the 128 bits one md5 provides)."""
     if bits > 62:
         raise ValueError(f"simhash bits must be <= 62, got {bits}")
-    tok = _spread(df).select(F.col(id_col), F.explode(F.split(F.col(text_col), " ")).alias("tok"))
+    tok = spread(df).select(F.col(id_col), F.explode(F.split(F.col(text_col), " ")).alias("tok"))
     h = F.md5(F.col("tok"))
     # 32-bit chunks of the digest (8 hex chars -> one bigint via conv);
     # Catalyst's subexpression elimination computes each chunk (and the
@@ -1138,10 +1133,10 @@ def dup_substring_span_table(
     # spread before the per-position md5 projection (r14, guide §2):
     # the gram-hash pass is the dominant expression cost (one md5 per
     # char position) and an under-partitioned scan (the single-
-    # rowgroup test inputs) would run it all in ONE task; _spread is a
+    # rowgroup test inputs) would run it all in ONE task; spread is a
     # no-op when the scan already has cluster parallelism
     occ = (
-        _spread(df.filter(F.col(len_col) >= gram_len))
+        spread(df.filter(F.col(len_col) >= gram_len))
         .select(
             F.col(id_col),
             F.col(text_col),

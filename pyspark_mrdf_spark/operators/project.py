@@ -32,7 +32,8 @@ from typing import Iterator
 import numpy as np
 import pandas as pd
 from pyspark.sql import DataFrame
-from pyspark.sql import functions as F
+
+from pyspark_mrdf_spark.operators.util import md5_sample
 
 
 def pca_components(x: np.ndarray, d_out: int) -> tuple[np.ndarray, np.ndarray]:
@@ -76,15 +77,7 @@ def pca_train(
     rows on any engine/partitioning; collect bounded by construction
     at sample_size·d floats — the legitimate sample-to-driver training
     pattern). Returns (mean (d,), components (d, d_out))."""
-    h = F.md5(F.concat(F.lit(f"{seed}:"), F.col(id_col).cast("string")))
-    pdf = (
-        df.select(F.col(id_col), F.col(vec_col))
-        .withColumn("_h", h)
-        .orderBy("_h")
-        .limit(sample_size)
-        .select(vec_col)
-    ).toPandas()
-    x = np.stack(pdf[vec_col].to_numpy()).astype(np.float64)
+    x = md5_sample(df, sample_size, seed, id_col, vec_col, "pca_train")
     return pca_components(x, d_out)
 
 
@@ -187,17 +180,7 @@ def opq_train(
     Returns (mean (d,), rotation (d, d)); apply with
     ``pca_project_vec`` (d_out = d), then PQ-train on the rotated
     corpus with contiguous subspaces as usual."""
-    h = F.md5(F.concat(F.lit(f"{seed}:"), F.col(id_col).cast("string")))
-    pdf = (
-        df.select(F.col(id_col), F.col(vec_col))
-        .withColumn("_h", h)
-        .orderBy("_h")
-        .limit(sample_size)
-        .select(vec_col)
-    ).toPandas()
-    if len(pdf) == 0:
-        raise ValueError("opq_train: empty corpus (no vectors to train on)")
-    x = np.stack(pdf[vec_col].to_numpy()).astype(np.float64)
+    x = md5_sample(df, sample_size, seed, id_col, vec_col, "opq_train")
     return opq_components(x, n_subspaces)
 
 
@@ -344,11 +327,12 @@ def pca_sq8_search(
     d·8/d_out× below the float64 working set (32× at 64→16) — scan it
     with exact INTEGER code distances, rerank candidates at full
     precision on the ORIGINAL vectors. Each stage is a proven operator
-    (``pca_project_vec``; ``sq8_train/encode/candidates``;
-    ``_rerank_exact``), so grid bounds, integer determinism, and the
-    candidate-sized rerank are all inherited; the q133 oracle replays
-    the whole composition — bit-exact projection, IEEE-determined
-    codes, integer candidate distances — in SQL.
+    (``pca_project_vec``; ``sq8_train``, ``sq8_encode`` and
+    ``quantize.candidates``; ``_rerank_exact``), so grid bounds,
+    integer determinism, and the candidate-sized rerank are all
+    inherited; the q133 oracle replays the whole composition —
+    bit-exact projection, IEEE-determined codes, integer candidate
+    distances — in SQL.
 
     Measured regimes (SCALABILITY.json pca-serving rows, r8): at
     n=50k/d=64 the composition serves ~2x faster than full-d SQ8 at
@@ -364,9 +348,8 @@ def pca_sq8_search(
     basis; the energy fraction is one cumsum away)."""
     from pyspark_mrdf_spark.operators.quantize import (
         _rerank_exact,
-        sq8_candidates,
+        candidates,
         sq8_encode,
-        sq8_range_weights,
         sq8_train,
     )
 
@@ -388,9 +371,9 @@ def pca_sq8_search(
     # weighted by default: the PROJECTED space is anisotropic BY
     # CONSTRUCTION (PCA orders dims by variance), exactly the spectrum
     # the plain code distance distorts — see sq8_range_weights
-    cand = sq8_candidates(
-        qp, codes, k_candidates, mn, mx,
+    cand = candidates(
+        qp, codes, k_candidates, {"mn": mn, "mx": mx},
         id_col=id_col, vec_col=vec_col, include_self=include_self,
-        dim_weights=sq8_range_weights(mn, mx) if weighted else None,
+        weighted=weighted,
     ).select("src", "dst")
     return _rerank_exact(cand, queries, corpus, k, id_col, vec_col)

@@ -1,27 +1,52 @@
-"""Scalar quantization (SQ8) for embedding corpora — the memory tier
-of the similarity stack.
+"""Quantized search — the engine's approximate tier of exact k-NN
+(reference knn.py:4-26) and the memory tier of the similarity stack.
 
-At 100 TB the ANN bottleneck is not flops but bytes: a float32
-64-d embedding is 256 B/row, so a 10^11-row corpus is ~25 TB of raw
-vectors that every scan must move. SQ8 stores one byte per dimension
-(8x smaller than float64 working sets, 4x smaller than float32
-parquet) packed into a single BINARY cell, and searches in the
-quantized domain with pure uint8/int32 arithmetic — less memory
-traffic per candidate AND an exactly-reproducible (integer) candidate
-stage. Full-precision reranking then touches only candidate-sized
-data, the same discipline as every other candidate-generation
-operator in this engine (LSH, IVF, banding).
+At 100 TB the ANN bottleneck is not flops but bytes: a float32 64-d
+embedding is 256 B/row, so a 10^11-row corpus is ~25 TB of raw vectors
+that every scan must move. Each codec stores a compact code per row,
+scans the codes for candidates, and reranks only the candidates at full
+precision (``_rerank_exact``) — the same discipline as every other
+candidate-generation operator in this engine (LSH, IVF, banding).
 
-Determinism contract: codes are ``floor((v - mn) * 255 / (mx - mn)
+Four codecs, one table (``_CODECS``). Each entry is the codec's
+train, encode and candidate-score kernel:
+
+  sq8    per-dim (min, max) → 1 B/dim codes; symmetric integer
+         code-space L2, optionally range-weighted (``weighted=True``)
+  bq     per-dim median thresholds → 1 bit/dim; Hamming distance
+  pq     per-subspace Lloyd codebooks → 1 B/subspace; asymmetric
+         table-lookup distance (ADC)
+  ivfpq  coarse cells + residual PQ codebooks → cell id + 1 B/subspace;
+         probe n_probe cells, ADC inside each probed cell
+
+Three functions serve every codec:
+
+  candidates(queries, codes, k, params)  →  (src, dst, dist): top-k per
+      query in the code domain (dist is long for sq8/bq, double for
+      pq/ivfpq), scanning ``codes`` as they are partitioned;
+  search_encoded(queries, params, codes, corpus, k)  →  (src, dst,
+      dist_sq, rnk): candidates, then the exact rerank on ``corpus``.
+      The params name the codec and carry any OPQ rotation, so
+      ``read_index``'s output feeds it unchanged;
+  search(queries, corpus, k, kind, **train_kw): train, encode, then
+      ``search_encoded`` — the per-call convenience path.
+
+sq8, bq and pq share one flat scan (``_flat_scan``); ivfpq keeps its
+probe/salt/per-cell cogroup (``_ivfpq_scan``); both end in the same
+per-block top-k tail and per-src window merge. Five functions persist
+every codec (``write_index``, ``read_index``, ``build_index``,
+``append_index``, ``merge_indexes``; see the persistence section).
+
+Determinism contract: SQ8 codes are ``floor((v - mn) * 255 / (mx - mn)
 + 0.5)`` evaluated in float64 with exactly that association, so a SQL
 engine computing the same expression derives bit-identical codes, and
 the symmetric code-space distance is integer math — the whole
 candidate stage hash-verifies cross-engine (q89's oracle). Constant
-dimensions (mx == mn) encode as 0.
-
-Reference parity note: the reference engine has no quantized tier —
-this extends its W3/J7 exact-search surface (reference knn.py:4-26)
-with the operator a memory-bound deployment needs.
+dimensions (mx == mn) encode as 0. BQ thresholds are elements of the
+data and Hamming is integer (q116); PQ/IVF-PQ training replays from
+one md5-ordered sample and every ADC sum is a strict left fold (q92,
+q95). Results are partition-independent: local top-k by (dist, dst)
+is associative.
 
 Measured win regime (SCALABILITY.json, synthetic-200000x512-serving,
 r8): serving 2000-query batches off a PERSISTED SQ8 index at
@@ -51,14 +76,17 @@ with small codebooks is SQ8-fast but recall 0.69; buying recall 0.97
 fraction saves while the 72 B/row SQ8 table stays RAM-resident.
 Same conclusion at three (n, d) points: SQ8 is the local measured-win
 tier; IVF-PQ is the 3-9× smaller-index tier whose wall-clock win
-needs storage-layer pruning to bite.
+needs storage-layer pruning to bite. BQ (synthetic-200000x512-bq-
+serving) reaches recall 0.9669 at a 640-candidate budget and 1.0 at
+2560, but its wide budget's merge + rerank outweighs the 8× scan-byte
+saving vs SQ8: its value is the 72 B/row stored index at d=512.
 """
 
 from __future__ import annotations
 
 from collections.abc import Callable, Iterator
 from dataclasses import dataclass
-from functools import reduce
+from functools import partial, reduce
 
 import numpy as np
 import pandas as pd
@@ -71,6 +99,7 @@ from pyspark_mrdf_spark.io import (
     same_path,
     write_params_file,
 )
+from pyspark_mrdf_spark.operators.util import md5_sample
 
 
 def sq8_train(df: DataFrame, vec_col: str = "embedding") -> tuple[np.ndarray, np.ndarray]:
@@ -204,56 +233,32 @@ def sq8_range_weights(
     return np.maximum(w, 1)
 
 
-def sq8_candidates(
-    queries: DataFrame,
-    codes: DataFrame,
-    k: int,
-    mn: np.ndarray,
-    mx: np.ndarray,
-    id_col: str = "vec_id",
-    vec_col: str = "embedding",
-    include_self: bool = False,
-    n_parts: int | None = None,
-    q_arrays: tuple[np.ndarray, np.ndarray] | None = None,
-    dim_weights: np.ndarray | None = None,
-) -> DataFrame:
-    """Top-k candidates per query by symmetric code-space L2:
-    (src, dst, code_dist) with integer ``code_dist`` = Σ_d w_d·(q_code_d −
-    c_code_d)² — exact integer arithmetic, so the candidate set is
-    bit-reproducible on any engine. ``dim_weights`` defaults to all-1
-    (the historical unweighted distance); pass ``sq8_range_weights(mn,
-    mx)`` for anisotropic corpora (see its docstring for the measured
-    failure the weights fix). Exactness bound with weights: the
-    distance can reach 3·d·w_max·255² (≈2^33.6 at d=64, w_max=1024),
-    and the tie-fold key multiplies it by the slab width — slabs must
-    stay ≤ 2^53 / (3·d·w_max·255²) rows (≈2^19 at d=64) to keep the
-    key inside float64-exact range; the 16k-row (2^14) slab discipline
-    below is safe with ~32× margin even at those weights.
+def _sq8_prep(q_mat: np.ndarray, params: dict, weighted: bool = False) -> tuple:
+    """Query side of the SQ8 scan: the batch's int32 codes and the
+    integer per-dimension weights — all 1 (the plain code distance)
+    unless ``weighted``, then ``sq8_range_weights`` of the index's own
+    (mn, mx). The stored index is the same either way, so a deployment
+    can flip the flag per query batch without re-encoding."""
+    mn, mx = params["mn"], params["mx"]
+    q_codes = sq8_codes(q_mat, mn, mx).astype(np.int32)
+    if weighted:
+        w = sq8_range_weights(mn, mx)
+    else:
+        w = np.ones(q_codes.shape[1], dtype=np.int64)
+    return q_codes, w, weighted
 
-    Scale shape: the query side is collected and broadcast (bounded
-    query sets — the external-search contract, same as ``knn_search``'s
-    query side); the CODE corpus streams through ``mapInPandas``
-    partition by partition at 1 byte/dim, each task emitting its local
-    top-k per query; a final window merges the ≤ parts·k candidates
-    per query — output-sized, never corpus-sized. Local top-k by
-    (dist, id) is associative, so the merge is exact for any
-    partitioning — but the MERGE INPUT is parts·k rows per query, so
-    parallelism is a real dial: pass ``n_parts`` sized to ~16k-row
-    code slabs (``sq8_search`` does) rather than one-task-per-core;
-    code-slab tasks are cheap and an oversplit corpus pays its cost in
-    the merge, not the scan."""
-    spark = queries.sparkSession
-    if q_arrays is None:
-        q_arrays = _collect_queries(queries, id_col, vec_col, "sq8_candidates")
-    q_ids, q_raw = q_arrays
-    q_codes = sq8_codes(q_raw, mn, mx).astype(np.int32)
-    w = (
-        np.ones(q_codes.shape[1], dtype=np.int64)
-        if dim_weights is None
-        else np.asarray(dim_weights, dtype=np.int64)
-    )
-    b = spark.sparkContext.broadcast((q_ids, q_codes, w))
 
+def _sq8_kernel(qc: np.ndarray, wv: np.ndarray, weighted: bool):
+    """Symmetric code-space L2, Σ_d w_d·(q_code_d − c_code_d)² — exact
+    integer arithmetic, so the candidate set is bit-reproducible on any
+    engine. Exactness bound with weights: the distance can reach
+    3·d·w_max·255² (≈2^33.6 at d=64, w_max=1024), and the tie-fold key
+    multiplies it by the width of the scored block — one Arrow batch
+    of ``_flat_scan``, at most spark.sql.execution.arrow.
+    maxRecordsPerBatch rows (10k ≈ 2^13.3 by default) whatever the
+    slab size. Blocks must stay ≤ 2^53 / (3·d·w_max·255²) columns
+    (≈2^19 at d=64) to keep the key inside float64-exact range, so the
+    default batch is safe with ~50× margin even at those weights."""
     # float32 fast tier (unweighted, d ≤ 129): every value in the
     # assembly is an INTEGER below 2^24, so float32 is exact —
     # per-dot q·c ≤ d·255² ≤ 129·65025 = 8,388,225 (every gemm partial
@@ -262,177 +267,46 @@ def sq8_candidates(
     # exact-integer range. Halving operand/output bytes matters because
     # the 32-way-concurrent scan is MEMORY-BANDWIDTH-bound (measured:
     # the identical gemm runs 6× slower at 32 concurrent tasks than
-    # alone), and the float32 path also skips the fold-key temp below.
-    use_f32 = dim_weights is None and q_codes.shape[1] <= 129
-
-    def _scan(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        qi, qc, wv = b.value
-        wf = wv.astype(np.float64)
-        # fold the weights into the query operand: Σ w·q·c = (q⊙w)·c,
-        # so the corpus-side gemm operand stays the raw 1 B/dim codes
-        qcf = (
-            qc.astype(np.float32)
-            if use_f32
-            else qc.astype(np.float64) * wf[None, :]
-        )
-        qq = ((qc.astype(np.int64) ** 2) * wv[None, :]).sum(axis=1).astype(np.float64)
-        for pdf in batches:
-            if len(pdf) == 0:
-                continue
-            c_ids = pdf["vec_id"].to_numpy(dtype=np.int64)
-            c_mat = np.stack([np.frombuffer(x, dtype=np.uint8) for x in pdf["code"]])
-            # corpus columns ordered by id so stable tie handling keeps
-            # the LOWEST dst among equal distances (same discipline as
-            # similarity._block_topk)
-            c_order = np.argsort(c_ids, kind="stable")
-            c_ids = c_ids[c_order]
-            c_mat = c_mat[c_order]
-            cf = c_mat.astype(np.float32 if use_f32 else np.float64)
-            if use_f32:
-                cc = np.einsum("ij,ij->i", cf, cf)
-            else:
-                cc = (
-                    (c_mat.astype(np.int64) ** 2) * wv[None, :]
-                ).sum(axis=1).astype(np.float64)
-            # rank within a row by g = ||c||² − 2q·c (the row-constant
-            # ||q||² cannot change per-row order). EXACT in the chosen
-            # float width: every dot/norm is an integer ≤ w·255²·d ≪
-            # 2^53 (float64) or ≤ 255²·129 < 2^24 (float32 tier), and
-            # floats are also why this is fast — the gemm takes the
-            # BLAS path (integer matmul has none) and the elementwise
-            # assembly is SIMD (an int64 assembly of the full matrix
-            # measured 4.9s per 5000×12500 task; this form ~0.5s)
-            g = qcf @ cf.T
-            g *= -2.0
-            g += cc[None, :]
-            if not include_self:
-                g[qi[:, None] == c_ids[None, :]] = np.inf
-            n_c = g.shape[1]
-            kk = min(k, n_c)
-            if kk == n_c:
-                sel = np.broadcast_to(np.arange(n_c), (g.shape[0], n_c)).copy()
-            elif use_f32:
-                # plain introselect on g (4 B/elem — no n_c·g fold-key
-                # temp), then an exact per-row tie repair to the
-                # lowest-dst selection. Integer-valued distances make
-                # the boundary comparison exact; rows without excess
-                # boundary ties (n_le == kk) already hold the unique
-                # true top-kk set. Measured 1.56× the fold-key path
-                # single-threaded, more under the 32-way scan's
-                # bandwidth contention.
-                sel = np.argpartition(g, kk - 1, axis=1)[:, :kk]
-                bnd = np.take_along_axis(g, sel, axis=1).max(axis=1)
-                n_le = (g <= bnd[:, None]).sum(axis=1)
-                for i in np.flatnonzero(n_le > kk):
-                    gi = g[i]
-                    lt = np.flatnonzero(gi < bnd[i])
-                    eq = np.flatnonzero(gi == bnd[i])[: kk - len(lt)]
-                    sel[i] = np.concatenate([lt, eq])
-            else:
-                # select on g·n_c + column_index, NOT on g: quantized
-                # distances tie massively (256 code levels/dim) and
-                # introselect degrades ~6× on duplicate-heavy keys —
-                # folding in the id-ordered column index makes every
-                # key unique (fast) AND breaks ties to the lowest dst
-                # deterministically, so no redo pass exists. Exact in
-                # float64: |g| ≤ 2·w·d·255² and j < n_c keep
-                # |g|·n_c + j ≪ 2^53 for any real slab/dim size
-                key = g * float(n_c)
-                key += np.arange(n_c, dtype=np.float64)[None, :]
-                sel = np.argpartition(key, kk - 1, axis=1)[:, :kk]
-            gs = np.take_along_axis(g, sel, axis=1).astype(np.float64)
-            m = np.isfinite(gs)  # masked self rows in short partitions
-            dist = (gs + qq[:, None])[m].astype(np.int64)
-            src = np.repeat(qi, sel.shape[1]).reshape(sel.shape)[m]
-            yield pd.DataFrame(
-                {"src": src, "dst": c_ids[sel][m], "code_dist": dist}
-            )
-
-    if n_parts is not None and n_parts != codes.rdd.getNumPartitions():
-        codes = codes.repartition(n_parts)
-    cand = codes.mapInPandas(_scan, "src long, dst long, code_dist long")
-    wk = Window.partitionBy("src").orderBy("code_dist", "dst")
-    return (
-        cand.withColumn("crnk", F.row_number().over(wk))
-        .filter(F.col("crnk") <= k)
-        .drop("crnk")
+    # alone), and the float32 path also skips the fold-key temp.
+    use_f32 = not weighted and qc.shape[1] <= 129
+    wf = wv.astype(np.float64)
+    # fold the weights into the query operand: Σ w·q·c = (q⊙w)·c,
+    # so the corpus-side gemm operand stays the raw 1 B/dim codes
+    qcf = (
+        qc.astype(np.float32)
+        if use_f32
+        else qc.astype(np.float64) * wf[None, :]
     )
+    qq = ((qc.astype(np.int64) ** 2) * wv[None, :]).sum(axis=1).astype(np.float64)
 
+    def score(c_mat: np.ndarray) -> np.ndarray:
+        cf = c_mat.astype(np.float32 if use_f32 else np.float64)
+        if use_f32:
+            cc = np.einsum("ij,ij->i", cf, cf)
+        else:
+            cc = (
+                (c_mat.astype(np.int64) ** 2) * wv[None, :]
+            ).sum(axis=1).astype(np.float64)
+        # rank within a row by g = ||c||² − 2q·c (the row-constant
+        # ||q||² cannot change per-row order; it is added back after
+        # selection). EXACT in the chosen float width: every dot/norm
+        # is an integer ≤ w·255²·d ≪ 2^53 (float64) or ≤ 255²·129 <
+        # 2^24 (float32 tier), and floats are also why this is fast —
+        # the gemm takes the BLAS path (integer matmul has none) and
+        # the elementwise assembly is SIMD (an int64 assembly of the
+        # full matrix measured 4.9s per 5000×12500 task; this form
+        # ~0.5s)
+        g = qcf @ cf.T
+        g *= -2.0
+        g += cc[None, :]
+        return g
 
-def sq8_search(
-    queries: DataFrame,
-    corpus: DataFrame,
-    k: int,
-    k_candidates: int | None = None,
-    id_col: str = "vec_id",
-    vec_col: str = "embedding",
-    include_self: bool = False,
-) -> DataFrame:
-    """End-to-end quantized search: train the SQ8 quantizer on the
-    corpus, encode it to packed codes, generate ``k_candidates``
-    (default 4k) per query in the integer code domain, then rerank the
-    candidates at full precision — (src, dst, rnk) with rnk 1..k by
-    (exact dist_sq, dst), the ``knn_search`` output contract.
-
-    Everything after the one-pass quantizer training is either
-    1-byte/dim streaming (candidates) or candidate-sized (the rerank
-    join) — the memory-bound profile a 100 TB corpus needs. Recall
-    loss vs exact is bounded by quantization error only (≤ rng/255
-    per dim); on clustered corpora SQ8@4k candidates is near-exact."""
-    if k_candidates is None:
-        k_candidates = 4 * k
-    mn, mx = sq8_train(corpus, vec_col)
-    # materialize the code table — it IS the stored index a deployment
-    # keeps — and spread the scan over every core with slabs capped at
-    # ~16k rows: scan flops dominate the candidate merge at every
-    # measured shape (a 7-slab run costs 5-30s where 32 slabs cost
-    # ~2s at n=50k; the 6.4M-row merge those 32 slabs produce is ~1s),
-    # so parallelism is the binding constraint, not merge input
-    codes = sq8_encode(corpus, mn, mx, id_col, vec_col).localCheckpoint(eager=False)
-    return sq8_search_encoded(
-        queries, codes, mn, mx, corpus, k,
-        k_candidates=k_candidates, id_col=id_col, vec_col=vec_col,
-        include_self=include_self,
-    )
-
-
-def sq8_search_encoded(
-    queries: DataFrame,
-    codes: DataFrame,
-    mn: np.ndarray,
-    mx: np.ndarray,
-    corpus: DataFrame,
-    k: int,
-    k_candidates: int | None = None,
-    id_col: str = "vec_id",
-    vec_col: str = "embedding",
-    include_self: bool = False,
-    weighted: bool = False,
-) -> DataFrame:
-    """Serve a query batch against an ALREADY-ENCODED SQ8 index
-    (``read_index`` supplies (mn, mx) and codes; ``corpus`` supplies
-    full-precision vectors for the rerank join only). Bit-identical
-    output to the per-call ``sq8_search``, which delegates here.
-    ``weighted=True`` ranks candidates by the range-weighted code
-    distance (``sq8_range_weights`` — use on anisotropic corpora; see
-    its docstring for the measured recall cliff it fixes). The stored
-    index is unchanged either way: the weights derive from the
-    persisted (mn, mx), so a deployment can flip the flag per query
-    batch without re-encoding."""
-    if k_candidates is None:
-        k_candidates = 4 * k
-    n_codes = codes.count()
-    n_parts = max(
-        corpus.sparkSession.sparkContext.defaultParallelism,
-        -(-n_codes // 16_384),
-    )
-    qa = _collect_queries(queries, id_col, vec_col, "sq8_search")
-    cand = sq8_candidates(
-        queries, codes, k_candidates, mn, mx, id_col, vec_col, include_self,
-        n_parts=n_parts, q_arrays=qa,
-        dim_weights=sq8_range_weights(mn, mx) if weighted else None,
-    )
-    return _rerank_exact(cand, queries, corpus, k, id_col, vec_col, q_arrays=qa)
+    # float32 tier: plain introselect on g (4 B/elem — no n_c·g
+    # fold-key temp), then the exact tie repair; integer-valued
+    # distances make the boundary comparison exact. Measured 1.56× the
+    # fold-key path single-threaded, more under the 32-way scan's
+    # bandwidth contention.
+    return score, (_select_topk_ties if use_f32 else _select_folded), qq
 
 
 # byte -> popcount lookup: the Hamming kernel's only table. uint8 is
@@ -499,182 +373,40 @@ def bq_encode(
     )
 
 
-def bq_candidates(
-    queries: DataFrame,
-    codes: DataFrame,
-    k: int,
-    thr: np.ndarray,
-    id_col: str = "vec_id",
-    vec_col: str = "embedding",
-    include_self: bool = False,
-    n_parts: int | None = None,
-    q_arrays: tuple[np.ndarray, np.ndarray] | None = None,
-) -> DataFrame:
-    """Top-k candidates per query by HAMMING distance in the 1-bit
-    domain: (src, dst, hamming) with hamming = popcount(q_bits XOR
-    c_bits) — pure integer, bit-reproducible on any engine.
-
-    Same scale shape as ``sq8_candidates`` (bounded query broadcast,
-    codes stream mapInPandas with per-task local top-k, output-sized
-    merge) but the scan arithmetic is XOR + table-lookup popcount over
-    1-bit codes: the per-byte loop runs ceil(d/8) outer-XOR gathers,
-    each touching one byte column — no gemm, no floats, ~d/8 B of
-    memory traffic per corpus row. Ties are massive at d+1 possible
-    distances, so the selection key folds in the id-ordered column
-    index (unique keys AND deterministic lowest-dst tie-break — the
-    measured introselect discipline from the SQ8 kernel)."""
-    spark = queries.sparkSession
-    if q_arrays is None:
-        q_arrays = _collect_queries(queries, id_col, vec_col, "bq_candidates")
-    q_ids, q_raw = q_arrays
-    q_packed = np.packbits(bq_bits(q_raw, thr), axis=1)
-    b = spark.sparkContext.broadcast((q_ids, q_packed))
-
-    def _scan(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        qi, qp = b.value
-        n_q = qp.shape[0]
-        # Hamming via BLAS, not a per-byte LUT loop: popcount(q XOR c)
-        # == |q|₁ + |c|₁ − 2·q·c on the UNPACKED 0/1 vectors, and every
-        # addend is a small nonnegative integer, so the float64 gemm is
-        # EXACT (all partial sums are integers ≪ 2^53 — associativity
-        # cannot perturb them). The byte-LUT form measured ~10× slower:
-        # ceil(d/8) outer-XOR gathers each allocating an (n_q, n_c)
-        # temporary vs one gemm over d-column bit matrices
-        qb = np.unpackbits(qp, axis=1).astype(np.float64)
-        ql1 = qb.sum(axis=1)
-        for pdf in batches:
-            if len(pdf) == 0:
-                continue
-            c_ids = pdf["vec_id"].to_numpy(dtype=np.int64)
-            c_mat = np.stack([np.frombuffer(x, dtype=np.uint8) for x in pdf["code"]])
-            c_order = np.argsort(c_ids, kind="stable")
-            c_ids = c_ids[c_order]
-            cb_bits = np.unpackbits(c_mat[c_order], axis=1).astype(np.float64)
-            n_c = len(c_ids)
-            ham = qb @ cb_bits.T
-            ham *= -2.0
-            ham += cb_bits.sum(axis=1)[None, :]
-            ham += ql1[:, None]
-            if not include_self:
-                ham[qi[:, None] == c_ids[None, :]] = np.inf
-            kk = min(k, n_c)
-            if kk < n_c:
-                # ham ≤ 8·n_bytes and j < n_c keep the folded key exact
-                # in float64 for any slab size; unique keys also dodge
-                # introselect's duplicate-key degradation (ties are
-                # massive at ≤ d+1 distinct distances)
-                key = ham * float(n_c)
-                key += np.arange(n_c, dtype=np.float64)[None, :]
-                sel = np.argpartition(key, kk - 1, axis=1)[:, :kk]
-            else:
-                sel = np.broadcast_to(np.arange(n_c), (n_q, n_c)).copy()
-            hs = np.take_along_axis(ham, sel, axis=1)
-            m = np.isfinite(hs)  # masked self rows
-            yield pd.DataFrame(
-                {
-                    "src": np.repeat(qi, sel.shape[1]).reshape(sel.shape)[m],
-                    "dst": c_ids[sel][m],
-                    "hamming": hs[m].astype(np.int64),
-                }
-            )
-
-    if n_parts is not None and n_parts != codes.rdd.getNumPartitions():
-        codes = codes.repartition(n_parts)
-    cand = codes.mapInPandas(_scan, "src long, dst long, hamming long")
-    wk = Window.partitionBy("src").orderBy("hamming", "dst")
-    return (
-        cand.withColumn("crnk", F.row_number().over(wk))
-        .filter(F.col("crnk") <= k)
-        .drop("crnk")
-    )
+def _bq_prep(q_mat: np.ndarray, params: dict) -> tuple:
+    """Query side of the BQ scan: the batch's packed sign bits."""
+    return (np.packbits(bq_bits(q_mat, params["thr"]), axis=1),)
 
 
-def bq_search_encoded(
-    queries: DataFrame,
-    codes: DataFrame,
-    thr: np.ndarray,
-    corpus: DataFrame,
-    k: int,
-    k_candidates: int | None = None,
-    id_col: str = "vec_id",
-    vec_col: str = "embedding",
-    include_self: bool = False,
-) -> DataFrame:
-    """Serve a query batch against an ALREADY-ENCODED binary index —
-    the train-once/search-many entry point (``read_index`` supplies
-    (thr, codes)). Bit-identical to ``bq_search``, which delegates
-    here. 1-bit Hamming loses more metric information than SQ8's 8-bit
-    codes, so the default candidate budget is wider (8k vs 4k)."""
-    if k_candidates is None:
-        k_candidates = 8 * k
-    n_codes = codes.count()
-    qa = _collect_queries(queries, id_col, vec_col, "bq_search")
-    # slab sizing has TWO constraints beyond the SQ8 16k-row cap,
-    # because bq budgets are deliberately wide: (a) a slab smaller
-    # than the budget emits its ENTIRE contents per query — at
-    # n=20k/32 slabs/640 candidates that measured a 40M-row merge
-    # where 3 slabs make it 3.8M; (b) merge input is
-    # n_parts·n_q·k_candidates rows regardless, so for large query
-    # batches fewer slabs are strictly better — the XOR/gemm scan is
-    # the cheap stage and 1/32nd of it buys nothing if the merge pays
-    # 32× the rows. Cap the merge at ~8M rows and keep slabs ≥ 8×
-    # budget, parallelism permitting
-    merge_cap = max(1, 8_000_000 // max(1, len(qa[0]) * k_candidates))
-    n_parts = max(
-        1,
-        min(
-            max(
-                corpus.sparkSession.sparkContext.defaultParallelism,
-                -(-n_codes // 16_384),
-            ),
-            n_codes // (8 * k_candidates) or 1,
-            merge_cap,
-        ),
-    )
-    cand = bq_candidates(
-        queries, codes, k_candidates, thr, id_col, vec_col, include_self,
-        n_parts=n_parts, q_arrays=qa,
-    )
-    return _rerank_exact(cand, queries, corpus, k, id_col, vec_col, q_arrays=qa)
+def _bq_kernel(qp: np.ndarray):
+    """HAMMING distance in the 1-bit domain, popcount(q_bits XOR
+    c_bits) — pure integer, bit-reproducible on any engine. Ties are
+    massive at ≤ d+1 distinct distances, so selection folds in the
+    id-ordered column index (``_select_folded``).
 
+    1-bit codes keep far less metric information than SQ8's 8-bit ones,
+    so the default candidate budget is 8k (vs 4k) — measured at d=64,
+    k=5 on the driver corpus: recall 0.64@40 / 0.81@80 / 0.93@160 /
+    0.995@320 candidates."""
+    # Hamming via BLAS, not a per-byte LUT loop: popcount(q XOR c)
+    # == |q|₁ + |c|₁ − 2·q·c on the UNPACKED 0/1 vectors, and every
+    # addend is a small nonnegative integer, so the float64 gemm is
+    # EXACT (all partial sums are integers ≪ 2^53 — associativity
+    # cannot perturb them). The byte-LUT form measured ~10× slower:
+    # ceil(d/8) outer-XOR gathers each allocating an (n_q, n_c)
+    # temporary vs one gemm over d-column bit matrices
+    qb = np.unpackbits(qp, axis=1).astype(np.float64)
+    ql1 = qb.sum(axis=1)
 
-def bq_search(
-    queries: DataFrame,
-    corpus: DataFrame,
-    k: int,
-    k_candidates: int | None = None,
-    id_col: str = "vec_id",
-    vec_col: str = "embedding",
-    include_self: bool = False,
-) -> DataFrame:
-    """End-to-end binary-quantized search: per-dimension median
-    thresholds -> 1-bit packed codes -> Hamming-distance candidates ->
-    full-precision rerank, the ``knn_search`` output contract.
+    def score(c_mat: np.ndarray) -> np.ndarray:
+        cb_bits = np.unpackbits(c_mat, axis=1).astype(np.float64)
+        ham = qb @ cb_bits.T
+        ham *= -2.0
+        ham += cb_bits.sum(axis=1)[None, :]
+        ham += ql1[:, None]
+        return ham
 
-    The completion of the engine's quantization ladder: float64
-    working set (exact) → 1 B/dim (SQ8) → 8 B/row PQ → 1 BIT/dim here
-    — 32× below float32 parquet, with a candidate stage that is XOR +
-    popcount, the cheapest per-byte scan arithmetic that exists. The
-    recall/bytes trade is the steepest of the tiers, so the candidate
-    budget (default 8k) is the dial — measured at d=64, k=5 on the
-    driver corpus: recall 0.64@40 / 0.81@80 / 0.93@160 / 0.995@320
-    candidates; rerank touches candidates only.
-
-    Measured serving point (SCALABILITY.json
-    synthetic-200000x512-bq-serving): recall 0.9669 at a 640-candidate
-    budget, 1.0 at 2560 — 1-bit Hamming holds metric signal at d=512 —
-    but the wide budget's merge+rerank outweighs the 8× scan-byte
-    saving vs SQ8, so BQ does NOT win local wall-clock. Its measured
-    value is the STORED index: 72 B/row at d=512 (7.2× below SQ8, 28×
-    below float32 parquet) — the tier for the I/O-bound regime where
-    index bytes, not flops, set the cost (IVF-PQ's honest reading)."""
-    thr = bq_train(corpus, vec_col)
-    codes = bq_encode(corpus, thr, id_col, vec_col).localCheckpoint(eager=False)
-    return bq_search_encoded(
-        queries, codes, thr, corpus, k,
-        k_candidates=k_candidates, id_col=id_col, vec_col=vec_col,
-        include_self=include_self,
-    )
+    return score, _select_folded, None
 
 
 def pq_train(
@@ -696,17 +428,7 @@ def pq_train(
     smallest md5(seed:id) — same rows on any engine — through
     ``lloyd_centroids`` per subspace, so an oracle can replay the
     arithmetic and inline bit-identical codebooks (q92)."""
-    h = F.md5(F.concat(F.lit(f"{seed}:"), F.col(id_col).cast("string")))
-    pdf = (
-        df.select(F.col(id_col), F.col(vec_col))
-        .withColumn("_h", h)
-        .orderBy("_h")
-        .limit(sample_size)
-        .select(vec_col)
-    ).toPandas()
-    if len(pdf) == 0:
-        raise ValueError("pq_train: empty corpus (no vectors to train codebooks on)")
-    x = np.stack(pdf[vec_col].to_numpy()).astype(np.float64)
+    x = md5_sample(df, sample_size, seed, id_col, vec_col, "pq_train")
     return pq_codebooks(x, n_subspaces, n_codes, iters)
 
 
@@ -764,10 +486,10 @@ def _select_topk_ties(g: np.ndarray, kk: int) -> np.ndarray:
     """Per-row indices of the kk smallest entries of ``g`` (2-D,
     columns pre-sorted by id) with EXACT ties at the selection boundary
     broken to the lowest column: strictly-below-boundary columns plus
-    the first boundary-valued columns. The single source of truth for
-    the float-keyed quantized kernels (PQ ADC, IVF-PQ ADC) — a
-    tie-break fix lands once, not per kernel. (SQ8's integer keys use
-    the faster fold-the-column-index-into-the-key selection instead.)
+    the first boundary-valued columns. The selection rule of the
+    float-keyed kernels (PQ ADC, IVF-PQ ADC) and of SQ8's float32
+    tier — a tie-break fix lands once, not per kernel. (SQ8's float64
+    tier and BQ use ``_select_folded`` instead.)
     """
     n_c = g.shape[1]
     sel = np.argpartition(g, kk - 1, axis=1)[:, :kk]
@@ -779,6 +501,21 @@ def _select_topk_ties(g: np.ndarray, kk: int) -> np.ndarray:
         eq = np.flatnonzero(gi == ti)[: kk - len(lt)]
         sel[i] = np.concatenate([lt, eq])
     return sel
+
+
+def _select_folded(g: np.ndarray, kk: int) -> np.ndarray:
+    """Per-row indices of the kk smallest entries of an INTEGER-valued
+    ``g`` (columns pre-sorted by id), selected on g·n_c + column_index,
+    NOT on g: quantized distances tie massively (256 code levels/dim,
+    ≤ d+1 Hamming distances) and introselect degrades ~6× on
+    duplicate-heavy keys — folding in the id-ordered column index makes
+    every key unique (fast) AND breaks ties to the lowest dst
+    deterministically, so no repair pass exists. Exact in float64 while
+    |g|·n_c + j ≪ 2^53 (see the block-width bound in ``_sq8_kernel``)."""
+    n_c = g.shape[1]
+    key = g * float(n_c)
+    key += np.arange(n_c, dtype=np.float64)[None, :]
+    return np.argpartition(key, kk - 1, axis=1)[:, :kk]
 
 
 def _rerank_exact(
@@ -820,7 +557,8 @@ def _rerank_exact(
     previous shuffle-join shape sorted + exchanged the whole
     corpus-vector side per query batch — measured ~800 MB (and the
     dominant rerank slice) at n=200k, d=512.
-    Shared tail of sq8_search / pq_search / ivfpq_search."""
+    Shared tail of ``search_encoded``, ``project.pca_search`` and
+    ``project.pca_sq8_search``."""
     spark = cand.sparkSession
     if q_arrays is None:
         q_arrays = _collect_queries(queries, id_col, vec_col, "_rerank_exact")
@@ -907,177 +645,42 @@ def pq_encode(
     return _map_encode(df, id_col, vec_col, lambda mat: {"code": pq_assign(mat, cb)})
 
 
-def pq_candidates(
-    queries: DataFrame,
-    codes: DataFrame,
-    k: int,
-    codebooks: np.ndarray,
-    id_col: str = "vec_id",
-    vec_col: str = "embedding",
-    include_self: bool = False,
-    n_parts: int | None = None,
-    q_arrays: tuple[np.ndarray, np.ndarray] | None = None,
-) -> DataFrame:
-    """Top-k candidates per query by ASYMMETRIC PQ distance (ADC):
-    (src, dst, adc_dist). Per query, one (n_subspaces × n_codes)
-    distance table; each corpus row costs n_subspaces table lookups +
-    adds instead of d multiplies — PQ's flop advantage over both the
-    exact scan and SQ8, on top of its 8 B/row stored index.
-
-    Determinism: every table entry is a strictly SEQUENTIAL (left-fold)
-    float64 sum and the per-row total accumulates subspaces
-    left-to-right, so
-    a SQL twin computing the same nesting derives bit-identical ADC
-    values (q92 inlines the codebooks and mirrors the nesting with
-    ordered list_sums); exact float ties break to the lowest dst via
-    the same two-scan boundary redo as the SQ8 kernel."""
-    spark = queries.sparkSession
-    if q_arrays is None:
-        q_arrays = _collect_queries(queries, id_col, vec_col, "pq_candidates")
-    q_ids, q_raw = q_arrays
-    q_mat = q_raw.astype(np.float64)
+def _pq_prep(q_mat: np.ndarray, params: dict) -> tuple:
+    """Query side of the PQ scan: per query one (n_subspaces × n_codes)
+    ADC table of sequential-fold sums (see ``_seq_sq_dists``: numpy
+    tree-reduces, the SQL twin left-folds)."""
+    codebooks = params["codebooks"]
+    q_mat = q_mat.astype(np.float64)
     n_sub, n_codes, ds = codebooks.shape
-    # (n_q, n_subspaces, n_codes) ADC tables — sequential-fold sums
-    # (see _seq_sq_dists: numpy tree-reduces, the SQL twin left-folds)
     tables = np.empty((len(q_mat), n_sub, n_codes), dtype=np.float64)
     for m in range(n_sub):
         tables[:, m, :] = _seq_sq_dists(q_mat[:, m * ds : (m + 1) * ds], codebooks[m])
-    b = spark.sparkContext.broadcast((q_ids, tables))
-
-    def _scan(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        qi, tbl = b.value
-        for pdf in batches:
-            if len(pdf) == 0:
-                continue
-            c_ids = pdf["vec_id"].to_numpy(dtype=np.int64)
-            c_codes = np.stack([np.frombuffer(x, dtype=np.uint8) for x in pdf["code"]])
-            c_order = np.argsort(c_ids, kind="stable")
-            c_ids = c_ids[c_order]
-            c_codes = c_codes[c_order]
-            # left-to-right subspace accumulation — the nesting the SQL
-            # twin mirrors with list_sum(list(term ORDER BY m))
-            g = tbl[:, 0, :][:, c_codes[:, 0]]
-            for m in range(1, tbl.shape[1]):
-                g = g + tbl[:, m, :][:, c_codes[:, m]]
-            if not include_self:
-                g[qi[:, None] == c_ids[None, :]] = np.inf
-            n_c = g.shape[1]
-            kk = min(k, n_c)
-            if kk < n_c:
-                # float ADC values tie exactly whenever two corpus rows
-                # share a code tuple — _select_topk_ties adjudicates the
-                # boundary (columns are id-ordered)
-                sel = _select_topk_ties(g, kk)
-            else:
-                sel = np.broadcast_to(np.arange(n_c), (g.shape[0], n_c)).copy()
-            gs = np.take_along_axis(g, sel, axis=1)
-            m_fin = np.isfinite(gs)
-            src = np.repeat(qi, sel.shape[1]).reshape(sel.shape)[m_fin]
-            yield pd.DataFrame(
-                {"src": src, "dst": c_ids[sel][m_fin], "adc_dist": gs[m_fin]}
-            )
-
-    if n_parts is not None and n_parts != codes.rdd.getNumPartitions():
-        codes = codes.repartition(n_parts)
-    cand = codes.mapInPandas(_scan, "src long, dst long, adc_dist double")
-    wk = Window.partitionBy("src").orderBy("adc_dist", "dst")
-    return (
-        cand.withColumn("crnk", F.row_number().over(wk))
-        .filter(F.col("crnk") <= k)
-        .drop("crnk")
-    )
+    return (tables,)
 
 
-def pq_search(
-    queries: DataFrame,
-    corpus: DataFrame,
-    k: int,
-    k_candidates: int | None = None,
-    n_subspaces: int = 8,
-    n_codes: int = 16,
-    sample_size: int = 2048,
-    iters: int = 10,
-    seed: int = 42,
-    id_col: str = "vec_id",
-    vec_col: str = "embedding",
-    include_self: bool = False,
-) -> DataFrame:
-    """End-to-end PQ search: train codebooks on the md5-ordered corpus
-    sample, encode to n_subspaces-byte codes, ADC candidates, then
-    full-precision rerank — (src, dst, dist_sq, rnk), rnk 1..k by
-    (exact dist_sq, dst). The approximate tier of the quantization
-    stack (SQ8 loses ≤ rng/255 per dim; PQ trades more recall for
-    8 B/row storage and table-lookup scan cost)."""
-    if k_candidates is None:
-        k_candidates = 4 * k
-    cb = pq_train(
-        corpus, n_subspaces, n_codes, sample_size, iters, seed, id_col, vec_col
-    )
-    codes = pq_encode(corpus, cb, id_col, vec_col).localCheckpoint(eager=False)
-    return pq_search_encoded(
-        queries, codes, cb, corpus, k,
-        k_candidates=k_candidates, id_col=id_col, vec_col=vec_col,
-        include_self=include_self,
-    )
+def _pq_kernel(tbl: np.ndarray):
+    """ASYMMETRIC PQ distance (ADC): each corpus row costs n_subspaces
+    table lookups + adds instead of d multiplies — PQ's flop advantage
+    over both the exact scan and SQ8, on top of its 8 B/row stored
+    index.
 
+    Determinism: every table entry is a strictly SEQUENTIAL (left-fold)
+    float64 sum and the per-row total accumulates subspaces
+    left-to-right, so a SQL twin computing the same nesting derives
+    bit-identical ADC values (q92 inlines the codebooks and mirrors the
+    nesting with ordered list_sums). Float ADC values tie exactly
+    whenever two corpus rows share a code tuple — ``_select_topk_ties``
+    adjudicates the boundary."""
 
-def _rotate_query_arrays(
-    q_arrays: tuple[np.ndarray, np.ndarray],
-    rotation: tuple[np.ndarray, np.ndarray] | None,
-) -> tuple[np.ndarray, np.ndarray]:
-    """Rotate a collected query batch into a persisted index's OPQ
-    space — driver-side through the SAME ``project_kernel`` the build
-    and appends run in executors, so the rotated floats are
-    bit-identical to rotating the batch as a DataFrame. The rotation
-    applies to the CANDIDATE stage only (probe + ADC run in the
-    rotated space, where the codes live); the exact rerank stays in
-    the original space on the original vectors — an isometry preserves
-    exact neighbors, and original-space dist_sq is the more useful
-    output contract."""
-    if rotation is None:
-        return q_arrays
-    from pyspark_mrdf_spark.operators.project import project_kernel
+    def score(c_codes: np.ndarray) -> np.ndarray:
+        # left-to-right subspace accumulation — the nesting the SQL
+        # twin mirrors with list_sum(list(term ORDER BY m))
+        g = tbl[:, 0, :][:, c_codes[:, 0]]
+        for m in range(1, tbl.shape[1]):
+            g = g + tbl[:, m, :][:, c_codes[:, m]]
+        return g
 
-    q_ids, q_raw = q_arrays
-    mean = np.asarray(rotation[0], dtype=np.float64)
-    rot = np.asarray(rotation[1], dtype=np.float64)
-    return q_ids, project_kernel(q_raw.astype(np.float64), mean, rot)
-
-
-def pq_search_encoded(
-    queries: DataFrame,
-    codes: DataFrame,
-    codebooks: np.ndarray,
-    corpus: DataFrame,
-    k: int,
-    k_candidates: int | None = None,
-    id_col: str = "vec_id",
-    vec_col: str = "embedding",
-    include_self: bool = False,
-    rotation: tuple[np.ndarray, np.ndarray] | None = None,
-) -> DataFrame:
-    """Serve a query batch against an ALREADY-ENCODED PQ index
-    (``read_index`` supplies (codebooks, codes)). Bit-identical
-    output to the per-call ``pq_search``, which delegates here.
-
-    ``rotation``: the persisted OPQ pre-rotation of a ``rotate='opq'``
-    index (``read_index``'s ``rot_mean``/``rotation``) — REQUIRED when
-    serving one (the codes live in the rotated space). Queries rotate
-    driver-side for the candidate stage; the rerank scores
-    original-space exact distances on the original corpus (see
-    ``_rotate_query_arrays``)."""
-    if k_candidates is None:
-        k_candidates = 4 * k
-    n_parts = max(
-        corpus.sparkSession.sparkContext.defaultParallelism,
-        -(-codes.count() // 16_384),
-    )
-    qa = _collect_queries(queries, id_col, vec_col, "pq_search")
-    cand = pq_candidates(
-        queries, codes, k_candidates, codebooks, id_col, vec_col, include_self,
-        n_parts=n_parts, q_arrays=_rotate_query_arrays(qa, rotation),
-    )
-    return _rerank_exact(cand, queries, corpus, k, id_col, vec_col, q_arrays=qa)
+    return score, _select_topk_ties, None
 
 
 def ivfpq_train(
@@ -1102,17 +705,7 @@ def ivfpq_train(
     position; the codes only need the local offset). Every step is a
     pure function of the sample (``_ivfpq_params_from_sample``), so an
     oracle replays it bit-identically on its own engine's rows."""
-    h = F.md5(F.concat(F.lit(f"{seed}:"), F.col(id_col).cast("string")))
-    pdf = (
-        df.select(F.col(id_col), F.col(vec_col))
-        .withColumn("_h", h)
-        .orderBy("_h")
-        .limit(sample_size)
-        .select(vec_col)
-    ).toPandas()
-    if len(pdf) == 0:
-        raise ValueError("ivfpq_train: empty corpus (no vectors to train the index on)")
-    x = np.stack(pdf[vec_col].to_numpy()).astype(np.float64)
+    x = md5_sample(df, sample_size, seed, id_col, vec_col, "ivfpq_train")
     return _ivfpq_params_from_sample(
         x, n_centroids, n_subspaces, n_codes, iters_coarse, iters_pq
     )
@@ -1163,109 +756,32 @@ def ivfpq_encode(
     return _map_encode(df, id_col, vec_col, _kernel, "vec_id long, cell long, code binary")
 
 
-def ivfpq_search(
-    queries: DataFrame,
-    corpus: DataFrame,
-    k: int,
-    k_candidates: int | None = None,
-    n_centroids: int = 8,
-    n_probe: int = 2,
-    n_subspaces: int = 8,
-    n_codes: int = 16,
-    sample_size: int = 2048,
-    iters_coarse: int = 10,
-    iters_pq: int = 10,
-    seed: int = 42,
-    id_col: str = "vec_id",
-    vec_col: str = "embedding",
-    include_self: bool = False,
-) -> DataFrame:
-    """IVF-PQ search — the composition that IS the large-corpus ANN
-    architecture: the coarse quantizer prunes the scan to
-    ~n_probe/n_centroids of the corpus (IVF), the pruned scan runs on
-    n_subspaces-byte residual codes via ADC table lookups (PQ), and
-    only the surviving ``k_candidates`` rows per query are reranked at
-    full precision. Cost per query ≈ (n_probe/n_centroids)·n corpus
-    rows × 8 lookups each, touching 8 B/row — against d multiplies ×
-    256 B/row for the exact scan.
-
-    Scale shape: corpus encoding is one mapInPandas pass; the
-    candidate stage cogroups probe rows with code rows PER CELL (task
-    memory = one cell's codes at 8 B/row + that cell's probing
-    queries); the merge window and rerank join are candidate-sized.
-    Determinism: coarse assignment follows the q51 stable-argsort
-    discipline, residual/ADC sums are strictly sequential (q92's
-    ``_seq_sq_dists``), exact ADC ties break to the lowest dst via the
-    two-scan boundary redo, so the q95 oracle derives the identical
-    candidate set; the rerank rides the q50-proven (dist, id) rank
-    portability. Returns (src, dst, dist_sq, rnk), rnk 1..k.
-
-    Per-call training is the convenience path; a deployment trains and
-    encodes ONCE (``build_index(corpus, path, "ivfpq")``) and serves
-    query batches through ``ivfpq_search_encoded`` over the
-    ``read_index`` output — bit-identical to
-    this path (train-once/search-many equivalence-tested)."""
-    from pyspark_mrdf_spark.operators.similarity import _scan_shaped
-
-    # a COMPUTED corpus lineage (UDF embeds, joins) would re-evaluate
-    # for the training sample, the encode pass AND the rerank join —
-    # materialize it once (knn_search's guard discipline; scan-shaped
-    # inputs re-read for free and skip the checkpoint copy)
-    if not _scan_shaped(corpus):
-        corpus = corpus.localCheckpoint(eager=False)
-    coarse, cb = ivfpq_train(
-        corpus, n_centroids, n_subspaces, n_codes, sample_size,
-        iters_coarse, iters_pq, seed, id_col, vec_col,
-    )
-    # the code table IS the stored index — materialize it so the
-    # cogroup scan doesn't re-run the encode mapInPandas per action
-    # (sq8_search/pq_search discipline)
-    codes = ivfpq_encode(corpus, coarse, cb, id_col, vec_col).localCheckpoint(
-        eager=False
-    )
-    return ivfpq_search_encoded(
-        queries, codes, coarse, cb, corpus, k,
-        k_candidates=k_candidates, n_probe=n_probe,
-        id_col=id_col, vec_col=vec_col, include_self=include_self,
-    )
-
-
-def ivfpq_search_encoded(
-    queries: DataFrame,
+def _ivfpq_scan(
+    q_ids: np.ndarray,
+    q_mat: np.ndarray,
     codes: DataFrame,
-    coarse: np.ndarray,
-    codebooks: np.ndarray,
-    corpus: DataFrame,
     k: int,
-    k_candidates: int | None = None,
+    params: dict,
+    include_self: bool,
     n_probe: int = 2,
-    id_col: str = "vec_id",
-    vec_col: str = "embedding",
-    include_self: bool = False,
-    rotation: tuple[np.ndarray, np.ndarray] | None = None,
 ) -> DataFrame:
-    """Serve a query batch against an ALREADY-ENCODED IVF-PQ index —
-    the train-once/search-many path (``read_index`` supplies
-    (coarse, codebooks, codes); ``corpus`` supplies full-precision
-    vectors for the rerank join only). Bit-identical output to the
-    per-call ``ivfpq_search``, which delegates here after training.
+    """IVF-PQ candidates — the composition that IS the large-corpus
+    ANN architecture: the coarse quantizer prunes the scan to
+    ~n_probe/n_centroids of the corpus (IVF), and the pruned scan runs
+    on the RESIDUAL codes via ADC table lookups (PQ). Cost per query ≈
+    (n_probe/n_centroids)·n corpus rows × n_subspaces lookups each.
 
-    ``rotation``: the persisted OPQ pre-rotation of a ``rotate='opq'``
-    index (``read_index``'s ``rot_mean``/``rotation``) — REQUIRED when
-    serving one: the coarse cells and codes live in the rotated space,
-    so the probe and ADC stages run on the rotated query batch (rotated
-    driver-side, bit-identical to the build's executor-side kernel)
-    while the exact rerank stays on the ORIGINAL queries and corpus —
-    an isometry preserves exact neighbors, and original-space dist_sq
-    is the more useful output contract."""
+    Scale shape: probe rows cogroup with code rows PER CELL (task
+    memory = one cell's codes + that cell's probing queries); the
+    merge window is candidate-sized. Determinism: coarse assignment
+    follows the q51 stable-argsort discipline, residual/ADC sums are
+    strictly sequential (``_seq_sq_dists``), and exact ADC ties break
+    to the lowest dst (``_select_topk_ties``), so the q95 oracle
+    derives the identical candidate set."""
     from pyspark_mrdf_spark.functions.vector import l2_argsort_topm
 
-    if k_candidates is None:
-        k_candidates = 4 * k
-    spark = queries.sparkSession
-    cb = codebooks
-    q_ids, q_raw = _collect_queries(queries, id_col, vec_col, "ivfpq_search")
-    q_ids, q_mat = _rotate_query_arrays((q_ids, q_raw), rotation)
+    spark = codes.sparkSession
+    coarse, cb = params["coarse"], params["codebooks"]
     q_mat = q_mat.astype(np.float64)
     probe = l2_argsort_topm(q_mat, coarse, n_probe)
     n_sub, n_cd, ds = cb.shape
@@ -1353,7 +869,7 @@ def ivfpq_search_encoded(
 
     def _scan(key: tuple, ppdf: pd.DataFrame, cpdf: pd.DataFrame) -> pd.DataFrame:
         if len(ppdf) == 0 or len(cpdf) == 0:
-            return pd.DataFrame(columns=["src", "dst", "adc_dist"])
+            return pd.DataFrame(columns=["src", "dst", "dist"])
         qi_all, _probe_all, qm_all, coarse_all, cb_all = b.value[:5]
         cell = int(key[0])
         c_ids = cpdf["vec_id"].to_numpy(dtype=np.int64)
@@ -1385,34 +901,348 @@ def ivfpq_search_encoded(
         for m in range(1, n_sub):
             np.take(tbl[m], c_codes[:, m], axis=1, out=tmp)
             g += tmp
-        if not include_self:
-            g[qs[:, None] == c_ids[None, :]] = np.inf
-        n_c = g.shape[1]
-        kk = min(k_candidates, n_c)
-        if kk < n_c:
-            sel = _select_topk_ties(g, kk)
-        else:
-            sel = np.broadcast_to(np.arange(n_c), (g.shape[0], n_c)).copy()
-        gs = np.take_along_axis(g, sel, axis=1)
-        fin = np.isfinite(gs)
-        src = np.repeat(qs, sel.shape[1]).reshape(sel.shape)[fin]
-        return pd.DataFrame(
-            {"src": src, "dst": c_ids[sel][fin], "adc_dist": gs[fin]}
-        )
+        return _block_topk(g, qs, c_ids, k, include_self, _select_topk_ties)
 
     cand = (
         probes_df.groupby("cell", "salt")
         .cogroup(codes.groupby("cell", "salt"))
-        .applyInPandas(_scan, "src long, dst long, adc_dist double")
+        .applyInPandas(_scan, "src long, dst long, dist double")
     )
-    wk = Window.partitionBy("src").orderBy("adc_dist", "dst")
-    cand = (
+    return _merge_topk(cand, k)
+
+
+def _block_topk(
+    g: np.ndarray,
+    q_ids: np.ndarray,
+    c_ids: np.ndarray,
+    k: int,
+    include_self: bool,
+    select: Callable[[np.ndarray, int], np.ndarray],
+    row_offset: np.ndarray | None = None,
+    dtype: type = np.float64,
+) -> pd.DataFrame:
+    """The per-block tail every codec's scan shares: (src, dst, dist)
+    of each query row's top-k over one block of id-sorted corpus
+    columns. Self pairs are masked to +inf unless ``include_self``;
+    ``select`` is the kernel's selection rule (columns are id-ordered,
+    so both rules break ties to the lowest dst); ``row_offset`` is a
+    per-query constant added after selection (SQ8's ||q||²); masked
+    rows that still got selected in a short block are dropped."""
+    if not include_self:
+        g[q_ids[:, None] == c_ids[None, :]] = np.inf
+    n_c = g.shape[1]
+    kk = min(k, n_c)
+    if kk < n_c:
+        sel = select(g, kk)
+    else:
+        sel = np.broadcast_to(np.arange(n_c), g.shape).copy()
+    gs = np.take_along_axis(g, sel, axis=1)
+    if row_offset is not None:
+        gs = gs.astype(np.float64) + row_offset[:, None]
+    m = np.isfinite(gs)
+    src = np.repeat(q_ids, sel.shape[1]).reshape(sel.shape)[m]
+    return pd.DataFrame({"src": src, "dst": c_ids[sel][m], "dist": gs[m].astype(dtype)})
+
+
+def _merge_topk(cand: DataFrame, k: int) -> DataFrame:
+    """Merge per-block candidates to the k best per src by (dist, dst):
+    local top-k is associative, so the merge is exact for any
+    partitioning, and its input is output-sized, never corpus-sized."""
+    wk = Window.partitionBy("src").orderBy("dist", "dst")
+    return (
         cand.withColumn("crnk", F.row_number().over(wk))
-        .filter(F.col("crnk") <= k_candidates)
+        .filter(F.col("crnk") <= k)
         .drop("crnk")
     )
-    return _rerank_exact(
-        cand, queries, corpus, k, id_col, vec_col, q_arrays=(q_ids, q_raw)
+
+
+def _flat_scan(
+    prep: Callable[..., tuple],
+    kernel: Callable[..., tuple],
+    dist_type: str,
+    q_ids: np.ndarray,
+    q_mat: np.ndarray,
+    codes: DataFrame,
+    k: int,
+    params: dict,
+    include_self: bool,
+    **opts,
+) -> DataFrame:
+    """The one scan of sq8, bq and pq: ``prep(q_mat, params, **opts)``
+    is the codec's query-side payload, broadcast once (bounded query
+    sets — the external-search contract, same as ``knn_search``'s
+    query side); the code table streams through ``mapInPandas``
+    partition by partition, each task building ``kernel(*payload)`` —
+    (score, select, row_offset) — once, decoding each Arrow batch's
+    codes, scoring them id-sorted and emitting its local top-k per
+    query through ``_block_topk``; ``_merge_topk`` merges the ≤
+    parts·k candidates per query. ``dist_type`` is the Spark type of
+    ``dist`` (long for the integer codecs)."""
+    b = codes.sparkSession.sparkContext.broadcast((q_ids, prep(q_mat, params, **opts)))
+    dtype = np.int64 if dist_type == "long" else np.float64
+
+    def _scan(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
+        qi, payload = b.value
+        score, select, row_offset = kernel(*payload)
+        for pdf in batches:
+            if len(pdf) == 0:
+                continue
+            c_ids = pdf["vec_id"].to_numpy(dtype=np.int64)
+            c_mat = np.stack([np.frombuffer(x, dtype=np.uint8) for x in pdf["code"]])
+            # corpus columns ordered by id so the selection rules'
+            # tie handling keeps the LOWEST dst among equal distances
+            # (same discipline as similarity._block_topk)
+            c_order = np.argsort(c_ids, kind="stable")
+            g = score(c_mat[c_order])
+            yield _block_topk(
+                g, qi, c_ids[c_order], k, include_self, select, row_offset, dtype
+            )
+
+    return _merge_topk(codes.mapInPandas(_scan, f"src long, dst long, dist {dist_type}"), k)
+
+
+def _slabs(
+    codes: DataFrame, n_queries: int, k_candidates: int, merge_capped: bool
+) -> DataFrame:
+    """Repartition a flat code table into the scan's slabs. The scan
+    wants every core busy and targets ~16k rows per slab (a 7-slab SQ8
+    run measured 5-30 s where 32 slabs cost ~2 s at n=50k). The merge
+    input is slabs × queries × budget rows, so for a ``merge_capped``
+    codec (BQ, whose budgets are deliberately wide) two more caps
+    bind: (a) a slab smaller than the budget emits its ENTIRE contents
+    per query — at n=20k/32 slabs/640 BQ candidates that measured a
+    40M-row merge where 3 slabs make it 3.8M; (b) for large query
+    batches fewer slabs are strictly better — the XOR/gemm scan is the
+    cheap stage and 1/32nd of it buys nothing if the merge pays 32×
+    the rows. So its merge is capped at ~8M rows and slabs stay ≥ 8×
+    budget, parallelism permitting. SQ8 and PQ keep the uncapped
+    rule: the SQ8 scan is memory-bandwidth-bound (``_sq8_kernel``),
+    and neither has a measurement showing the caps pay off for it.
+    Results do not depend on the slab count."""
+    n_codes = codes.count()
+    n_parts = max(
+        codes.sparkSession.sparkContext.defaultParallelism,
+        -(-n_codes // 16_384),
+    )
+    if merge_capped:
+        merge_cap = max(1, 8_000_000 // max(1, n_queries * k_candidates))
+        n_parts = max(1, min(n_parts, n_codes // (8 * k_candidates) or 1, merge_cap))
+    if n_parts == codes.rdd.getNumPartitions():
+        return codes
+    return codes.repartition(n_parts)
+
+
+@dataclass(frozen=True)
+class _Codec:
+    """One codec, both halves. Persistence: the param names that
+    identify it, its ``train(corpus, id_col, vec_col, **kw)`` returning
+    those params in order, its ``encode(df, *params, id_col, vec_col)``,
+    the code table's partition column, and whether ``rotate='opq'``
+    applies. Search: its ``scan(q_ids, q_mat, codes, k, params,
+    include_self, **options)`` returning (src, dst, dist) candidates,
+    the default candidate budget per k, whether ``_slabs`` caps its
+    merge input, and the search options only it accepts."""
+
+    keys: tuple[str, ...]
+    train: Callable[..., tuple]
+    encode: Callable[..., DataFrame]
+    scan: Callable[..., DataFrame]
+    partition: str | None = None
+    rotatable: bool = False
+    budget: int = 4
+    merge_capped: bool = False
+    options: tuple[str, ...] = ()
+
+
+_CODECS = {
+    "sq8": _Codec(
+        ("mn", "mx"),
+        lambda c, i, v: sq8_train(c, v),
+        sq8_encode,
+        partial(_flat_scan, _sq8_prep, _sq8_kernel, "long"),
+        options=("weighted",),
+    ),
+    "bq": _Codec(
+        ("thr",),
+        lambda c, i, v: (bq_train(c, v),),
+        bq_encode,
+        partial(_flat_scan, _bq_prep, _bq_kernel, "long"),
+        budget=8,
+        merge_capped=True,
+    ),
+    "pq": _Codec(
+        ("codebooks",),
+        lambda c, i, v, **kw: (pq_train(c, id_col=i, vec_col=v, **kw),),
+        pq_encode,
+        partial(_flat_scan, _pq_prep, _pq_kernel, "double"),
+        rotatable=True,
+    ),
+    "ivfpq": _Codec(
+        ("coarse", "codebooks"),
+        lambda c, i, v, **kw: ivfpq_train(c, id_col=i, vec_col=v, **kw),
+        ivfpq_encode,
+        _ivfpq_scan,
+        partition="cell",
+        rotatable=True,
+        options=("n_probe",),
+    ),
+}
+_ROT_KEYS = ("rot_mean", "rotation")
+_ENV_KEYS = ("rot_env_mn", "rot_env_mx")
+
+
+def _index_kind(params: dict[str, np.ndarray]) -> str:
+    """The codec whose identifying params are exactly the stored ones
+    (rotation and envelope keys aside)."""
+    names = set(params) - set(_ROT_KEYS) - set(_ENV_KEYS)
+    for kind, codec in _CODECS.items():
+        if names == set(codec.keys):
+            return kind
+    raise ValueError(f"no index codec stores exactly the params {sorted(names)}")
+
+
+def _codec(kind: str, op: str) -> _Codec:
+    codec = _CODECS.get(kind)
+    if codec is None:
+        raise ValueError(f"{op}: unknown kind {kind!r}")
+    return codec
+
+
+def _search_options(kind: str, op: str, weighted: bool, n_probe: int | None) -> dict:
+    """The codec-specific search options a call gave, refused on a
+    codec they do not apply to (as ``build_index`` refuses ``rotate``):
+    ``weighted`` is SQ8's, ``n_probe`` IVF-PQ's."""
+    opts: dict = {}
+    if weighted:
+        opts["weighted"] = True
+    if n_probe is not None:
+        opts["n_probe"] = n_probe
+    for name in opts:
+        if name not in _CODECS[kind].options:
+            raise ValueError(f"{op}: {name}= is not valid for {kind!r}")
+    return opts
+
+
+def _scan_codes(
+    params: dict[str, np.ndarray],
+    q_batch: tuple[np.ndarray, np.ndarray],
+    codes: DataFrame,
+    k: int,
+    include_self: bool,
+    opts: dict,
+) -> DataFrame:
+    """The candidate stage behind ``candidates`` and ``search_encoded``.
+    A rotated index (params holding ``rot_mean``/``rotation``) gets the
+    collected query batch rotated into its space first — driver-side
+    through the SAME ``project_kernel`` the build and appends run in
+    executors, so the rotated floats are bit-identical to rotating the
+    batch as a DataFrame. Only the candidate stage runs rotated (probe
+    and ADC, where the codes live); the exact rerank stays on the
+    original vectors — an isometry preserves exact neighbors, and
+    original-space dist_sq is the more useful output contract."""
+    q_ids, q_mat = q_batch
+    if "rotation" in params:
+        from pyspark_mrdf_spark.operators.project import project_kernel
+
+        q_mat = project_kernel(q_mat.astype(np.float64), params["rot_mean"], params["rotation"])
+    scan = _CODECS[_index_kind(params)].scan
+    return scan(q_ids, q_mat, codes, k, params, include_self, **opts)
+
+
+def candidates(
+    queries: DataFrame,
+    codes: DataFrame,
+    k: int,
+    params: dict[str, np.ndarray],
+    id_col: str = "vec_id",
+    vec_col: str = "embedding",
+    include_self: bool = False,
+    weighted: bool = False,
+    n_probe: int | None = None,
+) -> DataFrame:
+    """Top-k candidates per query in the code domain: (src, dst, dist),
+    by (dist, dst). ``params`` name the codec (``read_index``'s or
+    ``build_index``'s dict, or e.g. ``{"mn": mn, "mx": mx}``) and any
+    OPQ rotation, which the query batch is rotated through. ``dist`` is
+    the codec's own distance: the integer (optionally range-weighted,
+    ``weighted=True``) code-space L2 for SQ8, Hamming for BQ — both
+    long — and the float ADC distance for PQ and IVF-PQ (``n_probe``
+    cells probed, default 2). ``codes`` are scanned as they are
+    partitioned; the result does not depend on that partitioning."""
+    kind = _index_kind(params)
+    opts = _search_options(kind, "candidates", weighted, n_probe)
+    q_batch = _collect_queries(queries, id_col, vec_col, "candidates")
+    return _scan_codes(params, q_batch, codes, k, include_self, opts)
+
+
+def search_encoded(
+    queries: DataFrame,
+    params: dict[str, np.ndarray],
+    codes: DataFrame,
+    corpus: DataFrame,
+    k: int,
+    k_candidates: int | None = None,
+    id_col: str = "vec_id",
+    vec_col: str = "embedding",
+    include_self: bool = False,
+    weighted: bool = False,
+    n_probe: int | None = None,
+) -> DataFrame:
+    """Serve a query batch against an ALREADY-ENCODED index — the
+    train-once/search-many path: ``read_index`` supplies (params,
+    codes) unchanged, ``corpus`` supplies full-precision vectors for
+    the rerank only. ``k_candidates`` (default 4k, 8k for BQ) per query
+    from ``candidates``, then the exact rerank — (src, dst, dist_sq,
+    rnk), rnk 1..k by (exact dist_sq, dst), the ``knn_search`` output
+    contract. The query batch is collected once for both stages; a
+    flat code table (SQ8, BQ, PQ) is first cut into ``_slabs``."""
+    kind = _index_kind(params)
+    codec = _CODECS[kind]
+    opts = _search_options(kind, "search_encoded", weighted, n_probe)
+    if k_candidates is None:
+        k_candidates = codec.budget * k
+    q_batch = _collect_queries(queries, id_col, vec_col, "search_encoded")
+    if codec.partition is None:
+        codes = _slabs(codes, len(q_batch[0]), k_candidates, codec.merge_capped)
+    cand = _scan_codes(params, q_batch, codes, k_candidates, include_self, opts)
+    return _rerank_exact(cand, queries, corpus, k, id_col, vec_col, q_arrays=q_batch)
+
+
+def search(
+    queries: DataFrame,
+    corpus: DataFrame,
+    k: int,
+    kind: str,
+    k_candidates: int | None = None,
+    id_col: str = "vec_id",
+    vec_col: str = "embedding",
+    include_self: bool = False,
+    weighted: bool = False,
+    n_probe: int | None = None,
+    **train_kw,
+) -> DataFrame:
+    """End-to-end quantized search of ``kind`` (``"sq8"``, ``"bq"``,
+    ``"pq"`` or ``"ivfpq"``): train the codec on ``corpus``
+    (``train_kw`` are its ``*_train`` parameters), encode the corpus,
+    then ``search_encoded`` — bit-identical to ``build_index`` →
+    ``read_index`` → ``search_encoded`` with the same parameters."""
+    codec = _codec(kind, "search")
+    _search_options(kind, "search", weighted, n_probe)
+    from pyspark_mrdf_spark.operators.similarity import _scan_shaped
+
+    # a COMPUTED corpus lineage (UDF embeds, joins) would re-evaluate
+    # for the training pass, the encode pass AND the rerank —
+    # materialize it once (knn_search's guard discipline; scan-shaped
+    # inputs re-read for free and skip the checkpoint copy)
+    if not _scan_shaped(corpus):
+        corpus = corpus.localCheckpoint(eager=False)
+    params = dict(zip(codec.keys, codec.train(corpus, id_col, vec_col, **train_kw)))
+    # the code table IS the stored index — materialize it so the scan
+    # does not re-run the encode mapInPandas per action
+    codes, _ = _encode_for_index(params, corpus, id_col, vec_col)
+    return search_encoded(
+        queries, params, codes.localCheckpoint(eager=False), corpus, k, k_candidates,
+        id_col, vec_col, include_self, weighted, n_probe,
     )
 
 
@@ -1421,7 +1251,7 @@ def ivfpq_search_encoded(
 #
 # A production corpus trains and encodes ONCE, then serves query batch
 # after query batch across jobs; retraining per search call (the
-# convenience *_search entry points) re-pays the full encode pass every
+# convenience ``search`` entry point) re-pays the full encode pass every
 # time. Every codec persists through the same five functions —
 # ``write_index``, ``read_index``, ``build_index``, ``append_index``,
 # ``merge_indexes`` — over one directory layout, whose filesystem rules
@@ -1449,51 +1279,6 @@ def ivfpq_search_encoded(
 # merges), so a reloaded code table — whatever its file split — yields
 # the same rows as the just-encoded lineage.
 # ---------------------------------------------------------------------------
-
-
-@dataclass(frozen=True)
-class _Codec:
-    """One persisted-index kind: the param names that identify it, its
-    ``train(corpus, id_col, vec_col, **kw)`` returning those params in
-    order, its ``encode(df, *params, id_col, vec_col)``, the code
-    table's partition column, and whether ``rotate='opq'`` applies."""
-
-    keys: tuple[str, ...]
-    train: Callable[..., tuple]
-    encode: Callable[..., DataFrame]
-    partition: str | None = None
-    rotatable: bool = False
-
-
-_CODECS = {
-    "sq8": _Codec(("mn", "mx"), lambda c, i, v: sq8_train(c, v), sq8_encode),
-    "bq": _Codec(("thr",), lambda c, i, v: (bq_train(c, v),), bq_encode),
-    "pq": _Codec(
-        ("codebooks",),
-        lambda c, i, v, **kw: (pq_train(c, id_col=i, vec_col=v, **kw),),
-        pq_encode,
-        rotatable=True,
-    ),
-    "ivfpq": _Codec(
-        ("coarse", "codebooks"),
-        lambda c, i, v, **kw: ivfpq_train(c, id_col=i, vec_col=v, **kw),
-        ivfpq_encode,
-        partition="cell",
-        rotatable=True,
-    ),
-}
-_ROT_KEYS = ("rot_mean", "rotation")
-_ENV_KEYS = ("rot_env_mn", "rot_env_mx")
-
-
-def _index_kind(params: dict[str, np.ndarray]) -> str:
-    """The codec whose identifying params are exactly the stored ones
-    (rotation and envelope keys aside)."""
-    names = set(params) - set(_ROT_KEYS) - set(_ENV_KEYS)
-    for kind, codec in _CODECS.items():
-        if names == set(codec.keys):
-            return kind
-    raise ValueError(f"no index codec stores exactly the params {sorted(names)}")
 
 
 def _write_params(spark, path: str, parts: dict[str, np.ndarray]) -> None:
@@ -1591,18 +1376,17 @@ def write_index(path: str, params: dict[str, np.ndarray], codes: DataFrame) -> N
     ``rot_mean``/``rotation``/``rot_env_mn``/``rot_env_mx``) and the
     matching ``*_encode`` output as the code table. With a rotation the
     codes must have been encoded from the ROTATED corpus; appends and
-    the ``*_search_encoded(rotation=...)`` serving path then apply the
-    frozen rotation to new vectors and query batches."""
+    ``search_encoded``/``candidates`` then apply the frozen rotation to
+    new vectors and query batches."""
     partition = _CODECS[_index_kind(params)].partition
     _write_params(codes.sparkSession, path, params)
     _write_codes(codes, f"{path.rstrip('/')}/codes", "overwrite", partition)
 
 
 def read_index(spark, path: str) -> tuple[dict[str, np.ndarray], DataFrame]:
-    """(params, codes) of a persisted index — feed the codec's params to
-    its ``*_search_encoded`` (e.g. ``params["mn"], params["mx"]`` for
-    SQ8; ``(params["rot_mean"], params["rotation"])`` as ``rotation=``
-    when the index is rotated).
+    """(params, codes) of a persisted index — feed both to
+    ``search_encoded`` (or ``candidates``) unchanged: the params name
+    the codec and carry the rotation of a ``rotate='opq'`` index.
 
     Codes are the union of the base build (``codes/``, grown in place
     by ``append_index``) and every partition a running
@@ -1636,7 +1420,7 @@ def build_index(
     ``"bq"``, ``"pq"`` or ``"ivfpq"``) in one call; returns its params.
     ``train_kw`` are the codec's ``*_train`` parameters (none for SQ8
     and BQ). The one-time cost a deployment amortizes over every
-    ``*_search_encoded`` batch.
+    ``search_encoded`` batch.
 
     ``rotate='opq'`` (PQ and IVF-PQ) trains the OPQ-lite pre-rotation
     first, trains and encodes in the ROTATED space, and persists (mean,
@@ -1644,9 +1428,7 @@ def build_index(
     — q159's measured recall win (0.811→0.949 at unchanged bytes),
     servable train-once/search-many; ``metrics_out`` receives its
     ``rotation_train_s``."""
-    codec = _CODECS.get(kind)
-    if codec is None:
-        raise ValueError(f"build_index: unknown kind {kind!r}")
+    codec = _codec(kind, "build_index")
     if rotate is not None and (rotate != "opq" or not codec.rotatable):
         raise ValueError(f"build_index: rotate={rotate!r} is not valid for {kind!r}")
     rot: dict[str, np.ndarray] = {}
@@ -1826,46 +1608,38 @@ def _train_index_rotation(
     vec_col: str,
     metrics_out: dict | None = None,
 ) -> tuple[tuple[np.ndarray, np.ndarray], DataFrame, tuple[np.ndarray, np.ndarray]]:
-    """(rotation, rotated_corpus, rotated_env) for a rotate='opq' index build: train
-    the OPQ-lite rotation (``project.opq_train`` — full PCA basis,
-    eigenvalue-allocation-permuted) on the corpus sample, then project
-    the corpus once (checkpointed: the coarse/PQ training sample, the
-    encode pass, and any caller reuse would otherwise each re-run the
-    projection mapInPandas)."""
+    """(rotation, rotated_corpus, rotated_env) for a rotate='opq' index
+    build: train the OPQ-lite rotation (``project.opq_components`` —
+    full PCA basis, eigenvalue-allocation-permuted) on the md5-ordered
+    corpus sample ``project.opq_train`` draws, then project the corpus
+    once (checkpointed: the coarse/PQ training sample, the encode pass,
+    and any caller reuse would otherwise each re-run the projection
+    mapInPandas)."""
     import time as _time
 
-    from pyspark_mrdf_spark.operators.project import opq_train, pca_project_vec
+    from pyspark_mrdf_spark.operators.project import (
+        opq_components,
+        pca_project_vec,
+        project_kernel,
+    )
 
     _t0 = _time.time()
-    rotation = opq_train(
-        corpus, n_subspaces, sample_size=sample_size, seed=seed,
-        id_col=id_col, vec_col=vec_col,
-    )
+    x = md5_sample(corpus, sample_size, seed, id_col, vec_col, "build_index")
+    rotation = opq_components(x, n_subspaces)
     if metrics_out is not None:
         # attribution WITHOUT a second training run (advisor r13: the
         # serving row used to re-run opq_train just to time it,
         # double-counting the cost across two reported metrics)
         metrics_out["rotation_train_s"] = round(_time.time() - _t0, 2)
     # rotated-space TRAINING ENVELOPE (r14): per-dim min/max of the
-    # SAME md5-ordered training sample opq_train drew, pushed through
-    # the same bit-exact project_kernel — frozen alongside the
+    # SAME md5-ordered training sample the rotation trained on, pushed
+    # through the same bit-exact project_kernel — frozen alongside the
     # rotation so ``rotation_drift_stats`` can measure when appended
     # batches leave the training distribution IN THE ROTATED BASIS
     # (drift along a direction the rotation deemed low-variance is
     # invisible to original-space monitors). Elements of the data, no
     # arithmetic beyond the projection — bit-reproducible on any
     # engine that replays the sample.
-    from pyspark_mrdf_spark.operators.project import project_kernel
-
-    h = F.md5(F.concat(F.lit(f"{seed}:"), F.col(id_col).cast("string")))
-    sample = (
-        corpus.select(F.col(id_col), F.col(vec_col))
-        .withColumn("_h", h)
-        .orderBy("_h")
-        .limit(sample_size)
-        .select(vec_col)
-    ).toPandas()
-    x = np.stack(sample[vec_col].to_numpy()).astype(np.float64)
     proj = project_kernel(x, rotation[0], rotation[1])
     env = (proj.min(axis=0), proj.max(axis=0))
     rotated = pca_project_vec(

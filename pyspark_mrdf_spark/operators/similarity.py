@@ -38,6 +38,7 @@ from pyspark_mrdf_spark.functions.vector import (
     l2_topk_candidates,
     pairwise_l2_sq,
 )
+from pyspark_mrdf_spark.operators.util import md5_sample
 
 KNN_SCHEMA = StructType(
     [
@@ -358,15 +359,7 @@ def ivf_train_centroids(
     Use with ``ann_ivf(..., centroids=...)``: balanced trained cells
     beat the lowest-id quantizer's arbitrary cells on recall at equal
     probe cost (tested)."""
-    h = F.md5(F.concat(F.lit(f"{seed}:"), F.col(id_col).cast("string")))
-    pdf = (
-        df.select(F.col(id_col), F.col(vec_col))
-        .withColumn("_h", h)
-        .orderBy("_h")
-        .limit(sample_size)
-        .select(vec_col)
-    ).toPandas()
-    x = np.stack(pdf[vec_col].to_numpy()).astype(np.float64)
+    x = md5_sample(df, sample_size, seed, id_col, vec_col, "ivf_train_centroids")
     return lloyd_centroids(x, n_centroids, iters)
 
 

@@ -6,7 +6,9 @@ logic).
 
 from __future__ import annotations
 
+import numpy as np
 from pyspark.sql import DataFrame
+from pyspark.sql import functions as F
 
 RELIABLE_CHECKPOINT_CONF = "spark.graft.checkpoint.reliable"
 
@@ -62,3 +64,26 @@ def lazy_checkpoint(df: DataFrame) -> DataFrame:
     if spark.conf.get(RELIABLE_CHECKPOINT_CONF, "false") == "true":
         return df.checkpoint(eager=False)
     return df.localCheckpoint(eager=False)
+
+
+def md5_sample(
+    df: DataFrame, sample_size: int, seed: int, id_col: str, vec_col: str, op: str
+) -> np.ndarray:
+    """The engine's deterministic training sample, as a float64 matrix:
+    the ``sample_size`` rows with the smallest md5(seed:id) — same rows
+    on any engine and any partitioning, so an oracle can replay the
+    sample in SQL. The collect is bounded by construction
+    (sample_size·d floats — the legitimate sample-to-driver training
+    pattern). Raises ``ValueError("<op>: empty corpus …")`` when ``df``
+    has no rows."""
+    h = F.md5(F.concat(F.lit(f"{seed}:"), F.col(id_col).cast("string")))
+    pdf = (
+        df.select(F.col(id_col), F.col(vec_col))
+        .withColumn("_h", h)
+        .orderBy("_h")
+        .limit(sample_size)
+        .select(vec_col)
+    ).toPandas()
+    if len(pdf) == 0:
+        raise ValueError(f"{op}: empty corpus (no vectors to train on)")
+    return np.stack(pdf[vec_col].to_numpy()).astype(np.float64)

@@ -1196,8 +1196,8 @@ def q120_hybrid_rrf_retrieval(spark: SparkSession, sf_dir: str) -> DataFrame:
     makes the driver hash verdict meaningful. At corpus scale a caller
     swaps in any quantized tier through the same ``knn_search`` output
     contract ((src, dst, dist_sq, rnk), rnk 1..k by (dist_sq, dst)) —
-    ``quantize.sq8_search`` / ``ivfpq_search`` are drop-in replacements
-    whose only delta is bounded recall loss (SQ8@4k candidates is
+    ``quantize.search(..., kind="sq8")`` (or ``"ivfpq"``) is a drop-in
+    replacement whose only delta is bounded recall loss (SQ8@4k candidates is
     near-exact; SCALABILITY.json: SQ8 serving beats exact at recall 1.0
     up to n=1M). tests/test_similarity_api.py::
     test_q120_vector_leg_tier_swap pins the swap: same schema, same
@@ -1210,7 +1210,7 @@ def q120_hybrid_rrf_retrieval(spark: SparkSession, sf_dir: str) -> DataFrame:
     # Tokenize ONCE (r14, guide §1.2/§2.3): `d` feeds qterms, dl, stats
     # and tf — without the checkpoint each reference re-scanned and
     # re-regexp-tokenized the corpus (7 document scans in the before
-    # plan, the regexp being the dominant expression cost). _spread
+    # plan, the regexp being the dominant expression cost). spread
     # first: an under-partitioned scan would run the whole tokenize in
     # one task (no-op when the scan already has cluster parallelism).
     from pyspark_mrdf_spark.operators.util import lazy_checkpoint, spread

@@ -505,12 +505,12 @@ SELECT src, dst, rnk FROM rr WHERE rnk <= 5
     tags=("vector", "knn", "quantize", "pipeline"),
 )
 def q89_sq8_quantized_knn(spark: SparkSession, sf_dir: str) -> DataFrame:
-    from pyspark_mrdf_spark.operators.quantize import sq8_search
+    from pyspark_mrdf_spark.operators.quantize import search
 
     emb = load_table(spark, sf_dir, "embeddings")
     queries = emb.filter(F.col("vec_id") < 30)
-    return sq8_search(
-        queries, emb, 5, k_candidates=20, include_self=False
+    return search(
+        queries, emb, 5, "sq8", k_candidates=20, include_self=False
     ).select("src", "dst", F.col("rnk").cast("bigint").alias("rnk"))
 
 
@@ -614,12 +614,12 @@ SELECT src, dst, rnk FROM rr WHERE rnk <= 5
     driver=False,  # r10 rotation: 2x driver-green (r8,r9), cedes its slot to q137-q155 (PQ tier stays via q95 demote-sibling q98 persisted IVF-PQ)
 )
 def q92_pq_quantized_knn(spark: SparkSession, sf_dir: str) -> DataFrame:
-    from pyspark_mrdf_spark.operators.quantize import pq_search
+    from pyspark_mrdf_spark.operators.quantize import search
 
     emb = load_table(spark, sf_dir, "embeddings")
     queries = emb.filter(F.col("vec_id") < 30)
-    return pq_search(
-        queries, emb, 5, k_candidates=20, include_self=False, **_PQ_CFG
+    return search(
+        queries, emb, 5, "pq", k_candidates=20, include_self=False, **_PQ_CFG
     ).select("src", "dst", F.col("rnk").cast("bigint").alias("rnk"))
 
 
@@ -770,12 +770,12 @@ SELECT src, dst, rnk FROM rr WHERE rnk <= 5
     driver=False,  # r10 rotation: 2x driver-green (r8,r9), cedes its slot to q137-q155 (IVF-PQ stays via q98 persisted index)
 )
 def q95_ivfpq_knn(spark: SparkSession, sf_dir: str) -> DataFrame:
-    from pyspark_mrdf_spark.operators.quantize import ivfpq_search
+    from pyspark_mrdf_spark.operators.quantize import search
 
     emb = load_table(spark, sf_dir, "embeddings")
     queries = emb.filter(F.col("vec_id") < 30)
-    return ivfpq_search(
-        queries, emb, 5, k_candidates=40, include_self=False, **_IVFPQ_CFG
+    return search(
+        queries, emb, 5, "ivfpq", k_candidates=40, include_self=False, **_IVFPQ_CFG
     ).select("src", "dst", F.col("rnk").cast("bigint").alias("rnk"))
 
 
@@ -939,7 +939,7 @@ def _q98_index_path(spark: SparkSession, sf_dir: str) -> str:
         "centroids + residual codebooks (parquet DOUBLE, bit-exact "
         "roundtrip) and the 8 B/row code table PARTITIONED BY CELL (a "
         "probe scan prunes to n_probe directories at the storage layer); "
-        "read_index + ivfpq_search_encoded then serve a query "
+        "read_index + search_encoded then serve a query "
         "batch with NO retraining. Oracle is q95's SQL body verbatim "
         "(different query window) — the persisted path must be "
         "bit-identical to inline training, which is exactly the claim"
@@ -947,13 +947,13 @@ def _q98_index_path(spark: SparkSession, sf_dir: str) -> str:
     tags=("vector", "knn", "quantize", "ann", "pipeline", "sink"),
 )
 def q98_ivfpq_persisted_index(spark: SparkSession, sf_dir: str) -> DataFrame:
-    from pyspark_mrdf_spark.operators.quantize import ivfpq_search_encoded, read_index
+    from pyspark_mrdf_spark.operators.quantize import read_index, search_encoded
 
     emb = load_table(spark, sf_dir, "embeddings")
     p, codes = read_index(spark, _q98_index_path(spark, sf_dir))
     queries = emb.filter((F.col("vec_id") >= 30) & (F.col("vec_id") < 60))
-    return ivfpq_search_encoded(
-        queries, codes, p["coarse"], p["codebooks"], emb, 5,
+    return search_encoded(
+        queries, p, codes, emb, 5,
         k_candidates=40, n_probe=_IVFPQ_CFG["n_probe"], include_self=False,
     ).select("src", "dst", F.col("rnk").cast("bigint").alias("rnk"))
 
@@ -1086,12 +1086,12 @@ SELECT src, dst, rnk FROM rr WHERE rnk <= 5
     driver=False,  # r10 rotation: 2x driver-green (r8,r9), cedes its slot to q137-q155 (1-bit tier pytest-covered; quant family keeps q129/q131/q133)
 )
 def q116_binary_quantized_knn(spark: SparkSession, sf_dir: str) -> DataFrame:
-    from pyspark_mrdf_spark.operators.quantize import bq_search
+    from pyspark_mrdf_spark.operators.quantize import search
 
     emb = load_table(spark, sf_dir, "embeddings")
     queries = emb.filter(F.col("vec_id") < 30)
-    return bq_search(
-        queries, emb, 5, k_candidates=40, include_self=False
+    return search(
+        queries, emb, 5, "bq", k_candidates=40, include_self=False
     ).select("src", "dst", F.col("rnk").cast("bigint").alias("rnk"))
 
 
@@ -2047,7 +2047,7 @@ def _rerank_cte(rerank: str, d: int) -> str:
     oracle=_q159_oracle,
     description=(
         "OPQ-lite balanced-rotation PQ search (operators/project."
-        "opq_train + operators/quantize.pq_search): rotate by the full "
+        "opq_train + operators/quantize.search): rotate by the full "
         "PCA basis with columns permuted by eigenvalue allocation so "
         "PQ's contiguous subspaces see balanced variance products — an "
         "isometry, so exact neighbors are unchanged while code geometry "
@@ -2063,7 +2063,7 @@ def _rerank_cte(rerank: str, d: int) -> str:
 )
 def q159_opq_pq_knn(spark: SparkSession, sf_dir: str) -> DataFrame:
     from pyspark_mrdf_spark.operators.project import opq_train, pca_project_vec
-    from pyspark_mrdf_spark.operators.quantize import pq_search
+    from pyspark_mrdf_spark.operators.quantize import search
 
     emb = load_table(spark, sf_dir, "embeddings")
     mean, rot = opq_train(
@@ -2072,8 +2072,8 @@ def q159_opq_pq_knn(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
     emb_r = pca_project_vec(emb, mean, rot).localCheckpoint(eager=False)
     q_r = emb_r.filter(F.col("vec_id") % 13 == 0)
-    return pq_search(
-        q_r, emb_r, 5, k_candidates=20, include_self=False, **_OPQ_CFG
+    return search(
+        q_r, emb_r, 5, "pq", k_candidates=20, include_self=False, **_OPQ_CFG
     ).select("src", "dst", F.col("rnk").cast("bigint").alias("rnk"))
 
 
@@ -2084,8 +2084,8 @@ def q159_opq_pq_knn(spark: SparkSession, sf_dir: str) -> DataFrame:
 # rot_mean/rotation params). This query is the deployment shape: build-once (train
 # rotation + codebooks, encode the rotated corpus, store everything in
 # params.parquet + codes/), then serve a query batch through the
-# FROZEN rotation (pq_search_encoded rotation= — queries rotated
-# driver-side, candidates in the rotated space where the codes live,
+# FROZEN rotation (search_encoded on the read_index params — queries
+# rotated driver-side, candidates in the rotated space where the codes live,
 # exact rerank on the ORIGINAL vectors). The oracle replays the whole
 # persisted composition — rotation, codebooks, codes, ADC, and the
 # original-space rerank — so the float64-exact parquet roundtrip of
@@ -2120,8 +2120,8 @@ def _rotated_pq_index_path(spark: SparkSession, sf_dir: str) -> str:
         "persisted rotated-PQ index serving (r13: write/read/"
         "append_index carry the OPQ rotation with the frozen "
         "params): build-once on the rotated corpus, serve the query "
-        "batch through the frozen rotation with pq_search_encoded("
-        "rotation=) — candidates in the rotated code space, exact "
+        "batch through the frozen rotation with search_encoded on "
+        "read_index's params — candidates in the rotated code space, exact "
         "rerank on the ORIGINAL vectors. The oracle replays rotation, "
         "codebooks, encoding, ADC and the original-space rerank, so "
         "the hash verdict covers the params' parquet roundtrip and "
@@ -2130,14 +2130,13 @@ def _rotated_pq_index_path(spark: SparkSession, sf_dir: str) -> str:
     tags=("vector", "knn", "quantize", "reduce", "serving"),
 )
 def q161_rotated_pq_serving(spark: SparkSession, sf_dir: str) -> DataFrame:
-    from pyspark_mrdf_spark.operators.quantize import pq_search_encoded, read_index
+    from pyspark_mrdf_spark.operators.quantize import read_index, search_encoded
 
     p, codes = read_index(spark, _rotated_pq_index_path(spark, sf_dir))
     emb = load_table(spark, sf_dir, "embeddings")
     queries = emb.filter(F.col("vec_id") % 13 == 0)
-    return pq_search_encoded(
-        queries, codes, p["codebooks"], emb, 5, k_candidates=20,
-        include_self=False, rotation=(p["rot_mean"], p["rotation"]),
+    return search_encoded(
+        queries, p, codes, emb, 5, k_candidates=20, include_self=False
     ).select("src", "dst", F.col("rnk").cast("bigint").alias("rnk"))
 
 

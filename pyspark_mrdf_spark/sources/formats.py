@@ -23,7 +23,6 @@ entry point (sources/jsonl.py) established:
 from __future__ import annotations
 
 from pyspark.sql import DataFrame, SparkSession
-from pyspark.sql.types import StructType
 
 from pyspark_mrdf_spark.sources.jsonl import DOC_SCHEMA
 
@@ -38,12 +37,6 @@ def read_orc(spark: SparkSession, path: str) -> DataFrame:
     """ORC scan — schema comes from file metadata (self-describing,
     like parquet; no inference pass involved)."""
     return spark.read.orc(path)
-
-
-def csv_schema_without_corrupt(schema: StructType) -> StructType:
-    """The on-disk CSV schema: the corrupt-capture column exists only
-    in the reader's view, never in written files."""
-    return StructType([f for f in schema.fields if f.name != "_corrupt_record"])
 
 
 def write_documents_csv(df: DataFrame, path: str, mode: str = "overwrite") -> None:

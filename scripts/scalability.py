@@ -158,7 +158,7 @@ def main() -> None:
     # the r8 exhaustive exact scan took 1476.6 s on 32 cores.
     mixture_only = "--mixture-only" in argv
     # --sq8-only: ONLY the quantized-tier evidence row at design size —
-    # sq8_search (1-byte/dim codes + integer candidates + rerank) vs
+    # quantize.search(kind="sq8") (1-byte/dim codes + integer candidates + rerank) vs
     # the exact grid scan, with measured recall
     sq8_only = "--sq8-only" in argv
     # --serving-only: ONLY the persisted-index serving row — the
@@ -1068,11 +1068,10 @@ def _pca_serving_evidence(spark, n: int, d: int, d_out: int = 16, aniso: bool = 
     from pyspark_mrdf_spark.operators.quantize import (
         _rerank_exact,
         build_index,
+        candidates,
         read_index,
-        sq8_candidates,
+        search_encoded,
         sq8_encode,
-        sq8_range_weights,
-        sq8_search_encoded,
         sq8_train,
     )
     from pyspark_mrdf_spark.operators.similarity import knn_search_blocked
@@ -1133,13 +1132,12 @@ def _pca_serving_evidence(spark, n: int, d: int, d_out: int = 16, aniso: bool = 
         build_index(emb, os.path.join(idx_root, "sq8"), "sq8")
         out["sq8_index_build_s"] = round(time.time() - t0, 2)
         p_f, codes_f = read_index(spark, os.path.join(idx_root, "sq8"))
-        mn_f, mx_f = p_f["mn"], p_f["mx"]
         codes_f = codes_f.localCheckpoint(eager=True)
         sq8_s, sq8_g = [], None
         for i, q in enumerate(batches):
             g, dt = _timed(
-                lambda: sq8_search_encoded(
-                    q, codes_f, mn_f, mx_f, emb, K,
+                lambda: search_encoded(
+                    q, p_f, codes_f, emb, K,
                     k_candidates=sq8_k_cand, include_self=False,
                 )
             )
@@ -1156,8 +1154,8 @@ def _pca_serving_evidence(spark, n: int, d: int, d_out: int = 16, aniso: bool = 
             sq8w_s, sq8w_g = [], None
             for i, q in enumerate(batches):
                 g, dt = _timed(
-                    lambda: sq8_search_encoded(
-                        q, codes_f, mn_f, mx_f, emb, K,
+                    lambda: search_encoded(
+                        q, p_f, codes_f, emb, K,
                         k_candidates=sq8_k_cand, include_self=False,
                         weighted=True,
                     )
@@ -1181,9 +1179,9 @@ def _pca_serving_evidence(spark, n: int, d: int, d_out: int = 16, aniso: bool = 
                 qp = pca_project_vec(q, mean, comp)
                 # weighted: the projected space is anisotropic by
                 # construction (pca_sq8_search's shipped default)
-                cand = sq8_candidates(
-                    qp, codes_p, pca_k_cand, mn_p, mx_p, include_self=False,
-                    dim_weights=sq8_range_weights(mn_p, mx_p),
+                cand = candidates(
+                    qp, codes_p, pca_k_cand, {"mn": mn_p, "mx": mx_p},
+                    include_self=False, weighted=True,
                 ).select("src", "dst")
                 return _rerank_exact(cand, q, emb, K, "vec_id", "embedding")
             g, dt = _timed(_serve)
@@ -1703,7 +1701,7 @@ def _sq8_evidence(spark, n: int) -> dict:
     constraint that actually binds at 100 TB."""
     from pyspark.sql import functions as F
 
-    from pyspark_mrdf_spark.operators.quantize import sq8_search
+    from pyspark_mrdf_spark.operators.quantize import search
     from pyspark_mrdf_spark.operators.similarity import knn_search_blocked
 
     syn_dir = "/root/repo/.scalability_synth_sq8"
@@ -1728,7 +1726,7 @@ def _sq8_evidence(spark, n: int) -> dict:
 
         spark.range(0, dp * 100, 1, dp).mapInPandas(_noop, "id long").count()
         # external-search shape (the operator's bounded-query contract —
-        # sq8_candidates broadcasts the query codes): 10% of the corpus
+        # the candidate stage broadcasts the query codes): 10% of the corpus
         # queries the full corpus, same shape as the grid-evidence row
         queries = emb.filter(F.col("vec_id") < n_q)
 
@@ -1744,10 +1742,10 @@ def _sq8_evidence(spark, n: int) -> dict:
             return g, round(time.time() - t0, 2)
 
         g_sq8, cold = _timed(
-            lambda: sq8_search(queries, emb, K, k_candidates=4 * K, include_self=False)
+            lambda: search(queries, emb, K, "sq8", k_candidates=4 * K, include_self=False)
         )
         _, warm = _timed(
-            lambda: sq8_search(queries, emb, K, k_candidates=4 * K, include_self=False)
+            lambda: search(queries, emb, K, "sq8", k_candidates=4 * K, include_self=False)
         )
         out["sq8_cold_s"], out["sq8_warm_s"] = cold, warm
         out["sq8_recall"] = round(recall(g_exact, g_sq8), 4)
@@ -1758,13 +1756,11 @@ def _sq8_evidence(spark, n: int) -> dict:
         # PQ tier on the same corpus/queries: 8 B/row index, ADC
         # table-lookup candidates (8 lookups/row vs 64 multiplies);
         # coarse 8×16 codes need a larger candidate budget for recall
-        from pyspark_mrdf_spark.operators.quantize import pq_search
-
         g_pq, cold = _timed(
-            lambda: pq_search(queries, emb, K, k_candidates=16 * K, include_self=False)
+            lambda: search(queries, emb, K, "pq", k_candidates=16 * K, include_self=False)
         )
         _, warm = _timed(
-            lambda: pq_search(queries, emb, K, k_candidates=16 * K, include_self=False)
+            lambda: search(queries, emb, K, "pq", k_candidates=16 * K, include_self=False)
         )
         out["pq_cold_s"], out["pq_warm_s"] = cold, warm
         out["pq_recall"] = round(recall(g_exact, g_pq), 4)
@@ -1774,14 +1770,12 @@ def _sq8_evidence(spark, n: int) -> dict:
         # IVF-PQ at size: 64 cells / probe 8 scans ~12.5% of the corpus
         # on 8 B/row residual codes — scan-fraction × compression, the
         # composition a 100 TB deployment actually ships
-        from pyspark_mrdf_spark.operators.quantize import ivfpq_search
-
         ivfpq_kw = dict(
             k_candidates=16 * K, n_centroids=64, n_probe=8,
             sample_size=4096, include_self=False,
         )
-        g_ivfpq, cold = _timed(lambda: ivfpq_search(queries, emb, K, **ivfpq_kw))
-        _, warm = _timed(lambda: ivfpq_search(queries, emb, K, **ivfpq_kw))
+        g_ivfpq, cold = _timed(lambda: search(queries, emb, K, "ivfpq", **ivfpq_kw))
+        _, warm = _timed(lambda: search(queries, emb, K, "ivfpq", **ivfpq_kw))
         out["ivfpq_cold_s"], out["ivfpq_warm_s"] = cold, warm
         out["ivfpq_recall"] = round(recall(g_exact, g_ivfpq), 4)
         out["ivfpq_cells"], out["ivfpq_probe"] = 64, 8
@@ -1905,9 +1899,8 @@ def _serving_evidence(spark, n: int, d: int, n_cells: int = 64,
 
     from pyspark_mrdf_spark.operators.quantize import (
         build_index,
-        ivfpq_search_encoded,
         read_index,
-        sq8_search_encoded,
+        search_encoded,
     )
     from pyspark_mrdf_spark.operators.similarity import knn_search_blocked
 
@@ -1974,13 +1967,12 @@ def _serving_evidence(spark, n: int, d: int, n_cells: int = 64,
         build_index(emb, os.path.join(idx_root, "sq8"), "sq8")
         out["sq8_index_build_s"] = round(time.time() - t0, 2)
         p_sq8, sq8_codes_df = read_index(spark, os.path.join(idx_root, "sq8"))
-        mn, mx = p_sq8["mn"], p_sq8["mx"]
         sq8_codes_df = sq8_codes_df.localCheckpoint(eager=True)
         sq8_s, sq8_g = [], None
         for i, q in enumerate(batches):
             g, dt = _timed(
-                lambda: sq8_search_encoded(
-                    q, sq8_codes_df, mn, mx, emb, K,
+                lambda: search_encoded(
+                    q, p_sq8, sq8_codes_df, emb, K,
                     k_candidates=4 * K, include_self=False,
                 )
             )
@@ -1996,7 +1988,7 @@ def _serving_evidence(spark, n: int, d: int, n_cells: int = 64,
         # PERSISTED path — rotation trained by build_index,
         # stored in params.parquet, read back with the index): each
         # query batch serves through the frozen rotation
-        # (rotation= on ivfpq_search_encoded — rotated driver-side,
+        # (search_encoded on the read_index params — rotated driver-side,
         # reranked in the ORIGINAL space on the original corpus), so
         # this row measures exactly the train-once/search-many
         # deployment q159's inline win previously could not serve.
@@ -2019,11 +2011,7 @@ def _serving_evidence(spark, n: int, d: int, n_cells: int = 64,
             out["rotation_train_s"] = build_metrics.get("rotation_train_s")
             out["rotation_persisted"] = True
         p_ivf, codes = read_index(spark, os.path.join(idx_root, "ivfpq"))
-        coarse, cb = p_ivf["coarse"], p_ivf["codebooks"]
-        rotation = (
-            (p_ivf["rot_mean"], p_ivf["rotation"]) if "rotation" in p_ivf else None
-        )
-        assert (rotation is not None) == (rotate == "opq")
+        assert ("rotation" in p_ivf) == (rotate == "opq")
         codes = codes.localCheckpoint(eager=True)
         # candidate budget 64·K: at d=512 same-cluster distances
         # CONCENTRATE (all ≈ sqrt(2d)·σ, tiny margins), so ADC ranking
@@ -2034,10 +2022,9 @@ def _serving_evidence(spark, n: int, d: int, n_cells: int = 64,
         ivfpq_s, ivfpq_g = [], None
         for i, q in enumerate(batches):
             g, dt = _timed(
-                lambda: ivfpq_search_encoded(
-                    q, codes, coarse, cb, emb, K,
+                lambda: search_encoded(
+                    q, p_ivf, codes, emb, K,
                     k_candidates=k_cand, n_probe=n_probe, include_self=False,
-                    rotation=rotation,
                 )
             )
             ivfpq_s.append(dt)
@@ -2070,10 +2057,9 @@ def _bq_serving_evidence(spark, n: int, d: int) -> dict:
     from pyspark.sql import functions as F
 
     from pyspark_mrdf_spark.operators.quantize import (
-        bq_search_encoded,
         build_index,
         read_index,
-        sq8_search_encoded,
+        search_encoded,
     )
     from pyspark_mrdf_spark.operators.similarity import knn_search_blocked
 
@@ -2126,13 +2112,12 @@ def _bq_serving_evidence(spark, n: int, d: int) -> dict:
         build_index(emb, os.path.join(idx_root, "sq8"), "sq8")
         out["sq8_index_build_s"] = round(time.time() - t0, 2)
         p_sq8, sq8_codes_df = read_index(spark, os.path.join(idx_root, "sq8"))
-        mn, mx = p_sq8["mn"], p_sq8["mx"]
         sq8_codes_df = sq8_codes_df.localCheckpoint(eager=True)
         sq8_s, sq8_g = [], None
         for i, q in enumerate(batches):
             g, dt = _timed(
-                lambda: sq8_search_encoded(
-                    q, sq8_codes_df, mn, mx, emb, K,
+                lambda: search_encoded(
+                    q, p_sq8, sq8_codes_df, emb, K,
                     k_candidates=4 * K, include_self=False,
                 )
             )
@@ -2147,14 +2132,13 @@ def _bq_serving_evidence(spark, n: int, d: int) -> dict:
         build_index(emb, os.path.join(idx_root, "bq"), "bq")
         out["bq_index_build_s"] = round(time.time() - t0, 2)
         p_bq, bq_codes_df = read_index(spark, os.path.join(idx_root, "bq"))
-        thr = p_bq["thr"]
         bq_codes_df = bq_codes_df.localCheckpoint(eager=True)
         for kc in (64 * K, 256 * K):
             bq_s, bq_g = [], None
             for i, q in enumerate(batches):
                 g, dt = _timed(
-                    lambda: bq_search_encoded(
-                        q, bq_codes_df, thr, emb, K,
+                    lambda: search_encoded(
+                        q, p_bq, bq_codes_df, emb, K,
                         k_candidates=kc, include_self=False,
                     )
                 )
@@ -2904,8 +2888,8 @@ def _ivfpq_io_evidence(spark, n: int, d: int, n_cells: int = 64, n_probe: int = 
     from pyspark_mrdf_spark.functions.vector import pairwise_l2_sq
     from pyspark_mrdf_spark.operators.quantize import (
         build_index,
-        ivfpq_search_encoded,
         read_index,
+        search_encoded,
     )
 
     syn_dir = "/root/repo/.scalability_synth_ivfpq_io"
@@ -2935,7 +2919,7 @@ def _ivfpq_io_evidence(spark, n: int, d: int, n_cells: int = 64, n_probe: int = 
         )
         out["index_build_s"] = round(time.time() - t0, 2)
         p_ivf, codes = read_index(spark, os.path.join(idx_root, "ivfpq"))
-        coarse, cb = p_ivf["coarse"], p_ivf["codebooks"]
+        coarse = p_ivf["coarse"]
         codes_path = os.path.join(idx_root, "ivfpq", "codes")
 
         def du(path: str) -> int:
@@ -2945,7 +2929,7 @@ def _ivfpq_io_evidence(spark, n: int, d: int, n_cells: int = 64, n_probe: int = 
             return total
 
         def probed_cells(batch_n: int) -> list[int]:
-            # replicate ivfpq_search_encoded's probe derivation exactly
+            # replicate the IVF-PQ candidate stage's probe derivation exactly
             q = np.stack(
                 [r["embedding"] for r in emb.filter(
                     F.col("vec_id") < batch_n).collect()]
@@ -2998,8 +2982,8 @@ def _ivfpq_io_evidence(spark, n: int, d: int, n_cells: int = 64, n_probe: int = 
         # read from disk inside the call, never checkpointed here)
         q_small = emb.filter(F.col("vec_id") < small_batch)
         t0 = time.time()
-        ivfpq_search_encoded(
-            q_small, codes, coarse, cb, emb, K,
+        search_encoded(
+            q_small, p_ivf, codes, emb, K,
             k_candidates=64 * K, n_probe=n_probe, include_self=False,
         ).localCheckpoint(eager=True)
         out["serve_small_batch_s"] = round(time.time() - t0, 2)

@@ -5,6 +5,7 @@ must satisfy the algebraic laws the operators rely on. Pure-Python/NumPy
 from __future__ import annotations
 
 import numpy as np
+import pytest
 from hypothesis import given, settings
 from hypothesis import strategies as st
 from hypothesis.extra.numpy import arrays
@@ -213,31 +214,61 @@ def test_sq8_codes_bounded_and_monotone(mat, k):
     assert (np.diff(codes[order, 0].astype(int)) >= 0).all()
 
 
-def test_sq8_candidates_partition_invariant(spark, sf_dir):
+_CANDIDATE_CASES = {
+    "sq8": ("sq8", {}, {}),
+    "sq8_weighted": ("sq8", {}, {"weighted": True}),
+    "bq": ("bq", {}, {}),
+    "pq": ("pq", dict(n_subspaces=8, n_codes=16, sample_size=256, iters=5, seed=7), {}),
+    "ivfpq": (
+        "ivfpq",
+        dict(n_centroids=4, n_subspaces=4, n_codes=8, sample_size=256,
+             iters_coarse=3, iters_pq=3, seed=3),
+        {"n_probe": 2},
+    ),
+}
+
+
+@pytest.mark.parametrize("case", list(_CANDIDATE_CASES))
+def test_candidates_partition_invariant(spark, sf_dir, tmp_path, case):
     """The merged candidate set is EXACTLY the same for any scan
-    partitioning (local top-k by (dist, id) is associative and the
-    unique-key selection makes local ties deterministic)."""
+    partitioning of the code table, for every codec (local top-k by
+    (dist, id) is associative and each kernel's selection rule makes
+    local ties deterministic) — so the slab count ``search_encoded``
+    picks cannot change a row."""
     from pyspark.sql import functions as F
 
     from pyspark_mrdf_spark.io import load_table
-    from pyspark_mrdf_spark.operators.quantize import sq8_candidates, sq8_encode, sq8_train
+    from pyspark_mrdf_spark.operators.quantize import build_index, candidates, read_index
 
+    kind, train_kw, opts = _CANDIDATE_CASES[case]
     emb = load_table(spark, sf_dir, "embeddings")
     queries = emb.filter(F.col("vec_id") < 25)
-    mn, mx = sq8_train(emb)
-    codes = sq8_encode(emb, mn, mx).localCheckpoint(eager=True)
+    path = str(tmp_path / "idx")
+    params = build_index(emb, path, kind, **train_kw)
+    codes = read_index(spark, path)[1].localCheckpoint(eager=True)
     outs = []
     for p in (1, 3, 8):
-        rows = sorted(
-            map(
-                tuple,
-                sq8_candidates(
-                    queries, codes, 7, mn, mx, include_self=False, n_parts=p
-                ).collect(),
-            )
-        )
-        outs.append(rows)
+        rows = candidates(
+            queries, codes.repartition(p), 7, params, include_self=False, **opts
+        ).collect()
+        outs.append(sorted(map(tuple, rows)))
+    assert len(outs[0]) == 25 * 7
     assert outs[0] == outs[1] == outs[2]
+
+
+def test_slabs_merge_cap_only_for_bq(spark):
+    """Only BQ's wide budgets cap the slab count by merge size; SQ8
+    and PQ keep one slab per core (or per ~16k rows) however large the
+    query batch — the cap's payoff is measured for BQ only."""
+    from pyspark_mrdf_spark.operators.quantize import _CODECS, _slabs
+
+    codes = spark.range(2000).withColumnRenamed("id", "vec_id").coalesce(1)
+    cores = spark.sparkContext.defaultParallelism
+    parts = {
+        kind: _slabs(codes, 1_000_000, 40, _CODECS[kind].merge_capped).rdd.getNumPartitions()
+        for kind in ("sq8", "bq", "pq")
+    }
+    assert parts == {"sq8": cores, "bq": 1, "pq": cores}
 
 
 def test_pq_adc_equals_decoded_distance():

@@ -21,11 +21,7 @@ from pyspark_mrdf_spark.operators.dedup import (
     jaccard_pairs,
     jaccard_pairs_prefix,
 )
-from pyspark_mrdf_spark.operators.util import (
-    RELIABLE_CHECKPOINT_CONF,
-    lazy_checkpoint,
-    spread,
-)
+from pyspark_mrdf_spark.operators.util import RELIABLE_CHECKPOINT_CONF, lazy_checkpoint
 
 from test_dedup_kernels import EDGE_TEXTS, _edge_df
 
@@ -180,12 +176,6 @@ def test_lazy_checkpoint_flag_round_trips(spark, tmp_path):
         spark.conf.set(RELIABLE_CHECKPOINT_CONF, "false")
     # and the flag is read per call: back off means localCheckpoint again
     assert {(r["id"], r["v"]) for r in lazy_checkpoint(df).collect()} == want
-
-
-def test_spread_alias_still_importable():
-    from pyspark_mrdf_spark.operators.dedup import _spread
-
-    assert _spread is spread
 
 
 # --- guarded int32 narrowing (graph.py triangle_counts) -----------------------

@@ -298,12 +298,12 @@ def test_sq8_codes_formula_and_range():
 
 def test_sq8_search_near_exact_recall(spark, sf_dir):
     from pyspark_mrdf_spark.algorithms.recall import recall
-    from pyspark_mrdf_spark.operators.quantize import sq8_search
+    from pyspark_mrdf_spark.operators.quantize import search
     from pyspark_mrdf_spark.operators.similarity import knn_exact
 
     emb = load_table(spark, sf_dir, "embeddings")
     exact = knn_exact(emb, 5).localCheckpoint()
-    approx = sq8_search(emb, emb, 5, k_candidates=40, include_self=False)
+    approx = search(emb, emb, 5, "sq8", k_candidates=40, include_self=False)
     # quantization to 1 byte/dim at 40 candidates: near-exact on the corpus
     r = recall(exact, approx)
     assert r >= 0.97, r
@@ -317,7 +317,7 @@ def test_sq8_search_near_exact_recall(spark, sf_dir):
 def test_pq_search_recall_and_determinism(spark, sf_dir):
     import numpy as np
     from pyspark_mrdf_spark.algorithms.recall import recall
-    from pyspark_mrdf_spark.operators.quantize import pq_assign, pq_train, pq_search
+    from pyspark_mrdf_spark.operators.quantize import pq_assign, pq_train, search
     from pyspark_mrdf_spark.operators.similarity import knn_exact
 
     emb = load_table(spark, sf_dir, "embeddings")
@@ -333,7 +333,7 @@ def test_pq_search_recall_and_determinism(spark, sf_dir):
     assert codes.shape == (50, 8) and codes.max() < 16
 
     exact = knn_exact(emb, 5).localCheckpoint()
-    approx = pq_search(emb, emb, 5, k_candidates=80, include_self=False)
+    approx = search(emb, emb, 5, "pq", k_candidates=80, include_self=False)
     # 8x16 PQ is COARSE (8 B/row): measured candidate sweep on this
     # corpus is 0.68@40 / 0.85@80 / 0.95@160 — recall is bought with
     # the (cheap, table-lookup) candidate budget, as PQ intends
@@ -348,7 +348,7 @@ def test_pq_search_recall_and_determinism(spark, sf_dir):
 def test_ivfpq_search_recall_and_contract(spark, sf_dir):
     import numpy as np
     from pyspark_mrdf_spark.algorithms.recall import recall
-    from pyspark_mrdf_spark.operators.quantize import ivfpq_search, ivfpq_train
+    from pyspark_mrdf_spark.operators.quantize import ivfpq_train, search
     from pyspark_mrdf_spark.operators.similarity import knn_exact
 
     emb = load_table(spark, sf_dir, "embeddings")
@@ -358,8 +358,8 @@ def test_ivfpq_search_recall_and_contract(spark, sf_dir):
     assert c1.shape == (8, 64) and b1.shape == (8, 16, 8)
 
     exact = knn_exact(emb, 5).localCheckpoint()
-    approx = ivfpq_search(
-        emb, emb, 5, k_candidates=120, n_probe=4, include_self=False
+    approx = search(
+        emb, emb, 5, "ivfpq", k_candidates=120, n_probe=4, include_self=False
     )
     # recall is bounded by the IVF probe-miss rate AND the PQ code
     # coarseness; the measured (probe, candidates) dial on this corpus:
@@ -380,10 +380,10 @@ def test_ivfpq_index_roundtrip_bit_identical(spark, sf_dir, tmp_path):
     import numpy as np
     from pyspark_mrdf_spark.operators.quantize import (
         build_index,
-        ivfpq_search,
-        ivfpq_search_encoded,
         ivfpq_train,
         read_index,
+        search,
+        search_encoded,
     )
 
     emb = load_table(spark, sf_dir, "embeddings")
@@ -402,11 +402,11 @@ def test_ivfpq_index_roundtrip_bit_identical(spark, sf_dir, tmp_path):
     assert codes_r.count() == emb.count()
     assert set(codes_r.columns) == {"vec_id", "cell", "code"}
 
-    inline = ivfpq_search(
-        queries, emb, 5, k_candidates=60, n_probe=3, include_self=False, **cfg
+    inline = search(
+        queries, emb, 5, "ivfpq", k_candidates=60, n_probe=3, include_self=False, **cfg
     ).collect()
-    served = ivfpq_search_encoded(
-        queries, codes_r, coarse_r, cb_r, emb, 5,
+    served = search_encoded(
+        queries, p_r, codes_r, emb, 5,
         k_candidates=60, n_probe=3, include_self=False,
     ).collect()
     key = lambda r: (r["src"], r["rnk"])
@@ -420,8 +420,8 @@ def test_sq8_index_roundtrip_bit_identical(spark, sf_dir, tmp_path):
     from pyspark_mrdf_spark.operators.quantize import (
         build_index,
         read_index,
-        sq8_search,
-        sq8_search_encoded,
+        search,
+        search_encoded,
     )
 
     emb = load_table(spark, sf_dir, "embeddings")
@@ -434,9 +434,9 @@ def test_sq8_index_roundtrip_bit_identical(spark, sf_dir, tmp_path):
     assert np.array_equal(mn_w, mn_r) and np.array_equal(mx_w, mx_r)
     assert codes_r.count() == emb.count()
 
-    inline = sq8_search(queries, emb, 5, k_candidates=40, include_self=False).collect()
-    served = sq8_search_encoded(
-        queries, codes_r, mn_r, mx_r, emb, 5, k_candidates=40, include_self=False
+    inline = search(queries, emb, 5, "sq8", k_candidates=40, include_self=False).collect()
+    served = search_encoded(
+        queries, p_r, codes_r, emb, 5, k_candidates=40, include_self=False
     ).collect()
     assert sorted(map(tuple, served), key=lambda t: (t[0], t[3])) == sorted(
         map(tuple, inline), key=lambda t: (t[0], t[3])
@@ -447,10 +447,10 @@ def test_pq_index_roundtrip_bit_identical(spark, sf_dir, tmp_path):
     import numpy as np
     from pyspark_mrdf_spark.operators.quantize import (
         pq_encode,
-        pq_search,
-        pq_search_encoded,
         pq_train,
         read_index,
+        search,
+        search_encoded,
         write_index,
     )
 
@@ -464,9 +464,9 @@ def test_pq_index_roundtrip_bit_identical(spark, sf_dir, tmp_path):
     cb_r = p_r["codebooks"]
     assert np.array_equal(cb_w, cb_r)
 
-    inline = pq_search(queries, emb, 5, k_candidates=80, include_self=False, **cfg).collect()
-    served = pq_search_encoded(
-        queries, codes_r, cb_r, emb, 5, k_candidates=80, include_self=False
+    inline = search(queries, emb, 5, "pq", k_candidates=80, include_self=False, **cfg).collect()
+    served = search_encoded(
+        queries, p_r, codes_r, emb, 5, k_candidates=80, include_self=False
     ).collect()
     assert sorted(map(tuple, served), key=lambda t: (t[0], t[3])) == sorted(
         map(tuple, inline), key=lambda t: (t[0], t[3])
@@ -484,8 +484,8 @@ def test_ivfpq_index_append_bit_identical(spark, sf_dir, tmp_path):
         build_index,
         index_cell_stats,
         ivfpq_encode,
-        ivfpq_search_encoded,
         read_index,
+        search_encoded,
     )
 
     emb = load_table(spark, sf_dir, "embeddings")
@@ -502,12 +502,12 @@ def test_ivfpq_index_append_bit_identical(spark, sf_dir, tmp_path):
     coarse, cb = p["coarse"], p["codebooks"]
     assert codes.count() == emb.count()
 
-    grown = ivfpq_search_encoded(
-        queries, codes, coarse, cb, emb, 5,
+    grown = search_encoded(
+        queries, p, codes, emb, 5,
         k_candidates=60, n_probe=3, include_self=False,
     ).collect()
-    full = ivfpq_search_encoded(
-        queries, ivfpq_encode(emb, coarse, cb), coarse, cb, emb, 5,
+    full = search_encoded(
+        queries, p, ivfpq_encode(emb, coarse, cb), emb, 5,
         k_candidates=60, n_probe=3, include_self=False,
     ).collect()
     assert sorted(map(tuple, grown), key=lambda t: (t[0], t[3])) == sorted(
@@ -526,8 +526,8 @@ def test_sq8_index_append_bit_identical(spark, sf_dir, tmp_path):
         append_index,
         build_index,
         read_index,
+        search_encoded,
         sq8_encode,
-        sq8_search_encoded,
     )
 
     emb = load_table(spark, sf_dir, "embeddings")
@@ -542,11 +542,11 @@ def test_sq8_index_append_bit_identical(spark, sf_dir, tmp_path):
     mn, mx = p["mn"], p["mx"]
     assert codes.count() == emb.count()
 
-    grown = sq8_search_encoded(
-        queries, codes, mn, mx, emb, 5, k_candidates=40, include_self=False
+    grown = search_encoded(
+        queries, p, codes, emb, 5, k_candidates=40, include_self=False
     ).collect()
-    full = sq8_search_encoded(
-        queries, sq8_encode(emb, mn, mx), mn, mx, emb, 5,
+    full = search_encoded(
+        queries, p, sq8_encode(emb, mn, mx), emb, 5,
         k_candidates=40, include_self=False,
     ).collect()
     assert sorted(map(tuple, grown), key=lambda t: (t[0], t[3])) == sorted(
@@ -558,9 +558,9 @@ def test_pq_index_append_bit_identical(spark, sf_dir, tmp_path):
     from pyspark_mrdf_spark.operators.quantize import (
         append_index,
         pq_encode,
-        pq_search_encoded,
         pq_train,
         read_index,
+        search_encoded,
         write_index,
     )
 
@@ -577,11 +577,11 @@ def test_pq_index_append_bit_identical(spark, sf_dir, tmp_path):
     cb_r = p["codebooks"]
     assert codes.count() == emb.count()
 
-    grown = pq_search_encoded(
-        queries, codes, cb_r, emb, 5, k_candidates=80, include_self=False
+    grown = search_encoded(
+        queries, p, codes, emb, 5, k_candidates=80, include_self=False
     ).collect()
-    full = pq_search_encoded(
-        queries, pq_encode(emb, cb_r), cb_r, emb, 5,
+    full = search_encoded(
+        queries, p, pq_encode(emb, cb_r), emb, 5,
         k_candidates=80, include_self=False,
     ).collect()
     assert sorted(map(tuple, grown), key=lambda t: (t[0], t[3])) == sorted(
@@ -635,12 +635,12 @@ def test_bq_bits_median_and_hamming_kernel():
 
 def test_bq_search_recall_and_contract(spark, sf_dir):
     from pyspark_mrdf_spark.algorithms.recall import recall
-    from pyspark_mrdf_spark.operators.quantize import bq_search
+    from pyspark_mrdf_spark.operators.quantize import search
     from pyspark_mrdf_spark.operators.similarity import knn_exact
 
     emb = load_table(spark, sf_dir, "embeddings")
     exact = knn_exact(emb, 5).localCheckpoint()
-    approx = bq_search(emb, emb, 5, k_candidates=160, include_self=False)
+    approx = search(emb, emb, 5, "bq", k_candidates=160, include_self=False)
     # 1 bit/dim keeps far less metric information than SQ8, so recall
     # is bought with candidate budget: measured on this corpus
     # 0.64@40 / 0.81@80 / 0.93@160 / 0.995@320 candidates
@@ -651,7 +651,7 @@ def test_bq_search_recall_and_contract(spark, sf_dir):
     per = approx.groupBy("src").count().agg(SF.min("count"), SF.max("count")).collect()[0]
     assert per[0] == per[1] == 5
     # determinism: a second run is row-identical
-    again = bq_search(emb, emb, 5, k_candidates=160, include_self=False)
+    again = search(emb, emb, 5, "bq", k_candidates=160, include_self=False)
     assert sorted(map(tuple, approx.collect())) == sorted(map(tuple, again.collect()))
 
 
@@ -659,10 +659,10 @@ def test_bq_index_roundtrip_bit_identical(spark, sf_dir, tmp_path):
     import numpy as np
     from pyspark_mrdf_spark.operators.quantize import (
         bq_encode,
-        bq_search,
-        bq_search_encoded,
         bq_train,
         read_index,
+        search,
+        search_encoded,
         write_index,
     )
 
@@ -679,9 +679,9 @@ def test_bq_index_roundtrip_bit_identical(spark, sf_dir, tmp_path):
     d = len(emb.select("embedding").first()[0])
     assert len(codes_r.select("code").first()[0]) == -(-d // 8)
 
-    inline = bq_search(queries, emb, 5, k_candidates=40, include_self=False).collect()
-    served = bq_search_encoded(
-        queries, codes_r, thr_r, emb, 5, k_candidates=40, include_self=False
+    inline = search(queries, emb, 5, "bq", k_candidates=40, include_self=False).collect()
+    served = search_encoded(
+        queries, p_r, codes_r, emb, 5, k_candidates=40, include_self=False
     ).collect()
     assert sorted(map(tuple, served), key=lambda t: (t[0], t[3])) == sorted(
         map(tuple, inline), key=lambda t: (t[0], t[3])
@@ -720,8 +720,8 @@ def test_sq8_index_merge_equals_union_build_and_compacts_stream(spark, sf_dir, t
         build_index,
         merge_indexes,
         read_index,
+        search_encoded,
         sq8_encode,
-        sq8_search_encoded,
         write_index,
     )
 
@@ -742,11 +742,11 @@ def test_sq8_index_merge_equals_union_build_and_compacts_stream(spark, sf_dir, t
     mn_m, mx_m = p_m["mn"], p_m["mx"]
     assert (mn_m == mn).all() and (mx_m == mx).all()
     assert codes_m.count() == emb.count()
-    got = sq8_search_encoded(
-        queries, codes_m, mn_m, mx_m, emb, 5, k_candidates=40, include_self=False
+    got = search_encoded(
+        queries, p_m, codes_m, emb, 5, k_candidates=40, include_self=False
     ).collect()
-    want = sq8_search_encoded(
-        queries, sq8_encode(emb, mn, mx), mn, mx, emb, 5,
+    want = search_encoded(
+        queries, p, sq8_encode(emb, mn, mx), emb, 5,
         k_candidates=40, include_self=False,
     ).collect()
     key = lambda t: (t[0], t[3])
@@ -762,8 +762,8 @@ def test_sq8_index_merge_equals_union_build_and_compacts_stream(spark, sf_dir, t
     _, codes_c = read_index(spark, compacted)
     assert codes_c.count() == emb.count()
     assert not os.path.exists(os.path.join(compacted, "stream_codes"))
-    got_c = sq8_search_encoded(
-        queries, codes_c, mn, mx, emb, 5, k_candidates=40, include_self=False
+    got_c = search_encoded(
+        queries, p, codes_c, emb, 5, k_candidates=40, include_self=False
     ).collect()
     assert sorted(map(tuple, got_c), key=key) == sorted(map(tuple, want), key=key)
 
@@ -774,9 +774,9 @@ def test_ivfpq_index_merge_equals_union_build(spark, sf_dir, tmp_path):
     from pyspark_mrdf_spark.operators.quantize import (
         build_index,
         ivfpq_encode,
-        ivfpq_search_encoded,
         merge_indexes,
         read_index,
+        search_encoded,
         write_index,
     )
 
@@ -797,12 +797,12 @@ def test_ivfpq_index_merge_equals_union_build(spark, sf_dir, tmp_path):
     c_m, cb_m = p_m["coarse"], p_m["codebooks"]
     assert np.array_equal(c_m, coarse) and np.array_equal(cb_m, cb)
     assert codes_m.count() == emb.count()
-    got = ivfpq_search_encoded(
-        queries, codes_m, c_m, cb_m, emb, 5,
+    got = search_encoded(
+        queries, p_m, codes_m, emb, 5,
         n_probe=2, k_candidates=40, include_self=False,
     ).collect()
-    want = ivfpq_search_encoded(
-        queries, ivfpq_encode(emb, coarse, cb), coarse, cb, emb, 5,
+    want = search_encoded(
+        queries, p, ivfpq_encode(emb, coarse, cb), emb, 5,
         n_probe=2, k_candidates=40, include_self=False,
     ).collect()
     key = lambda t: (t[0], t[3])
@@ -869,7 +869,7 @@ def test_opq_rotation_lifts_pq_recall_on_anisotropic_data(spark):
     import numpy as np
 
     from pyspark_mrdf_spark.operators.project import opq_train, pca_project_vec
-    from pyspark_mrdf_spark.operators.quantize import pq_search
+    from pyspark_mrdf_spark.operators.quantize import search
     from pyspark_mrdf_spark.operators.similarity import knn_search_blocked
 
     rng = np.random.default_rng(5)
@@ -889,14 +889,14 @@ def test_opq_rotation_lifts_pq_recall_on_anisotropic_data(spark):
         return len(got & truth) / len(truth)
 
     dials = dict(k_candidates=20, n_subspaces=4, n_codes=4, include_self=False)
-    r_plain = rec(pq_search(queries, emb, 5, **dials))
+    r_plain = rec(search(queries, emb, 5, "pq", **dials))
 
     mean, rot = opq_train(emb, n_subspaces=4)
     emb_r = pca_project_vec(emb, mean, rot).localCheckpoint(eager=True)
     q_r = pca_project_vec(queries, mean, rot)
     # recall scored against ORIGINAL-space exact ids — valid because
     # the rotation preserves L2 distances (also checks id stability)
-    r_opq = rec(pq_search(q_r, emb_r, 5, **dials))
+    r_opq = rec(search(q_r, emb_r, 5, "pq", **dials))
 
     assert r_opq >= 0.28, (r_opq, r_plain)
     assert r_opq > r_plain + 0.08, (r_opq, r_plain)
@@ -956,11 +956,11 @@ def test_sq8_range_weights_fix_anisotropic_recall(spark):
     import numpy as np
 
     from pyspark_mrdf_spark.operators.quantize import (
-        sq8_candidates,
+        candidates,
+        search_encoded,
         sq8_codes,
         sq8_encode,
         sq8_range_weights,
-        sq8_search_encoded,
         sq8_train,
     )
     from pyspark_mrdf_spark.operators.similarity import knn_search_blocked
@@ -987,8 +987,8 @@ def test_sq8_range_weights_fix_anisotropic_recall(spark):
     def rec(weighted):
         got = {
             (r["src"], r["dst"])
-            for r in sq8_search_encoded(
-                queries, enc, mn, mx, emb, 5,
+            for r in search_encoded(
+                queries, {"mn": mn, "mx": mx}, enc, emb, 5,
                 k_candidates=5, include_self=False, weighted=weighted,
             ).collect()
         }
@@ -1001,17 +1001,17 @@ def test_sq8_range_weights_fix_anisotropic_recall(spark):
     assert r_w >= 0.9, (r_w, r_u)
     assert r_w > r_u + 0.2, (r_w, r_u)
 
-    # exactness: weighted code_dist equals the brute-force int formula
+    # exactness: weighted dist equals the brute-force int formula
     w = sq8_range_weights(mn, mx)
     qc = sq8_codes(x[:3].astype(np.float64), mn, mx).astype(np.int64)
     cc = sq8_codes(x.astype(np.float64), mn, mx).astype(np.int64)
-    cand = sq8_candidates(
-        emb.filter("vec_id < 3"), enc, 7, mn, mx,
-        include_self=True, dim_weights=w,
+    cand = candidates(
+        emb.filter("vec_id < 3"), enc, 7, {"mn": mn, "mx": mx},
+        include_self=True, weighted=True,
     ).collect()
     for r in cand:
         want = int((w * (qc[r["src"]] - cc[r["dst"]]) ** 2).sum())
-        assert r["code_dist"] == want
+        assert r["dist"] == want
 
 
 def test_q120_vector_leg_tier_swap(spark, sf_dir):
@@ -1023,14 +1023,14 @@ def test_q120_vector_leg_tier_swap(spark, sf_dir):
     from pyspark.sql import functions as F
 
     from pyspark_mrdf_spark.io import load_table
-    from pyspark_mrdf_spark.operators.quantize import sq8_search
+    from pyspark_mrdf_spark.operators.quantize import search
     from pyspark_mrdf_spark.operators.similarity import knn_search_blocked
     from pyspark_mrdf_spark.queries.text import _RRF_LEG_K, _RRF_QIDS
 
     e = load_table(spark, sf_dir, "embeddings")
     q = e.filter(F.col("vec_id").isin(list(_RRF_QIDS)))
     exact = knn_search_blocked(q, e, _RRF_LEG_K, include_self=False)
-    sq8 = sq8_search(q, e, _RRF_LEG_K, include_self=False)
+    sq8 = search(q, e, _RRF_LEG_K, "sq8", include_self=False)
 
     # drop-in: same columns, same per-query cardinality, same rank range
     assert exact.columns == sq8.columns
@@ -1050,8 +1050,8 @@ def test_rotated_ivfpq_index_roundtrip_append_and_serving(spark, sf_dir, tmp_pat
     """The persisted-OPQ lifecycle (r12 verdict task #2): a
     rotate='opq' build stores (mean, rotation) with the frozen params;
     appends encode through the FROZEN rotation (append ≡ union-rebuild,
-    bit-identical); serving rotates the query batch driver-side
-    (rotation=) and returns ids identical to the fully-inline rotated
+    bit-identical); serving the index's own params rotates the query
+    batch driver-side and returns ids identical to the fully-inline rotated
     composition, with dist_sq in the ORIGINAL space (isometry: equal to
     the rotated-space values up to fp)."""
     import numpy as np
@@ -1061,8 +1061,8 @@ def test_rotated_ivfpq_index_roundtrip_append_and_serving(spark, sf_dir, tmp_pat
         append_index,
         build_index,
         ivfpq_encode,
-        ivfpq_search_encoded,
         read_index,
+        search_encoded,
     )
 
     emb = load_table(spark, sf_dir, "embeddings")
@@ -1093,16 +1093,16 @@ def test_rotated_ivfpq_index_roundtrip_append_and_serving(spark, sf_dir, tmp_pat
     want = {(x["vec_id"], x["cell"], bytes(x["code"])) for x in rebuilt.collect()}
     assert got == want
 
-    # serving: rotation= (queries rotated driver-side, rerank in the
-    # ORIGINAL space) returns the same ids as the fully-inline rotated
-    # composition, with isometry-equal distances
-    served = ivfpq_search_encoded(
-        queries, codes, coarse, cb, emb, 5,
-        k_candidates=60, n_probe=3, include_self=False, rotation=rot,
+    # serving the rotated index's params (queries rotated driver-side,
+    # rerank in the ORIGINAL space) returns the same ids as the
+    # fully-inline rotated composition, with isometry-equal distances
+    served = search_encoded(
+        queries, p, codes, emb, 5,
+        k_candidates=60, n_probe=3, include_self=False,
     ).collect()
     q_rot = pca_project_vec(queries, mean, r)
-    inline = ivfpq_search_encoded(
-        q_rot, codes, coarse, cb, union_rot, 5,
+    inline = search_encoded(
+        q_rot, {"coarse": coarse, "codebooks": cb}, codes, union_rot, 5,
         k_candidates=60, n_probe=3, include_self=False,
     ).collect()
     s = {(x["src"], x["rnk"]): (x["dst"], x["dist_sq"]) for x in served}
@@ -1121,8 +1121,8 @@ def test_rotated_pq_index_roundtrip_and_append(spark, sf_dir, tmp_path):
         append_index,
         build_index,
         pq_encode,
-        pq_search_encoded,
         read_index,
+        search_encoded,
     )
 
     emb = load_table(spark, sf_dir, "embeddings")
@@ -1150,9 +1150,8 @@ def test_rotated_pq_index_roundtrip_and_append(spark, sf_dir, tmp_path):
     assert got == want
     # serving smoke with the persisted rotation: contract shape + self
     # exclusion hold, rerank distances are original-space exact
-    res = pq_search_encoded(
-        queries, codes, cb_r, emb, 5, k_candidates=80,
-        include_self=False, rotation=rot,
+    res = search_encoded(
+        queries, p, codes, emb, 5, k_candidates=80, include_self=False
     )
     rows = res.collect()
     assert {x["rnk"] for x in rows} <= {1, 2, 3, 4, 5}
@@ -1215,19 +1214,10 @@ def test_unrotated_index_has_no_rotation_and_merge_gates_rotation(
     assert codes.count() == emb.count()
 
 
-def _serve_index(kind, queries, codes, p, emb):
-    from pyspark_mrdf_spark.operators import quantize as Q
+def _serve_index(queries, codes, p, emb):
+    from pyspark_mrdf_spark.operators.quantize import search_encoded
 
-    common = dict(k_candidates=40, include_self=False)
-    if kind == "sq8":
-        return Q.sq8_search_encoded(queries, codes, p["mn"], p["mx"], emb, 5, **common)
-    if kind == "bq":
-        return Q.bq_search_encoded(queries, codes, p["thr"], emb, 5, **common)
-    if kind == "pq":
-        return Q.pq_search_encoded(queries, codes, p["codebooks"], emb, 5, **common)
-    return Q.ivfpq_search_encoded(
-        queries, codes, p["coarse"], p["codebooks"], emb, 5, n_probe=2, **common
-    )
+    return search_encoded(queries, p, codes, emb, 5, k_candidates=40, include_self=False)
 
 
 _INDEX_CFG = {
@@ -1267,10 +1257,134 @@ def test_index_at_file_uri_serves_like_plain_path(spark, sf_dir, tmp_path, kind)
     assert codes_uri.count() == emb.count()
 
     key = lambda t: (t[0], t[3])  # noqa: E731
-    got = _serve_index(kind, queries, codes_uri, p_uri, emb).collect()
-    want = _serve_index(kind, queries, codes_plain, p_plain, emb).collect()
+    got = _serve_index(queries, codes_uri, p_uri, emb).collect()
+    want = _serve_index(queries, codes_plain, p_plain, emb).collect()
     assert sorted(map(tuple, got), key=key) == sorted(map(tuple, want), key=key)
     assert not os.path.exists(os.path.join(os.getcwd(), "file:"))
+
+
+_ENTRY_CASES = {
+    "sq8": ("sq8", None),
+    "bq": ("bq", None),
+    "pq": ("pq", None),
+    "ivfpq": ("ivfpq", None),
+    "pq_opq": ("pq", "opq"),
+    "ivfpq_opq": ("ivfpq", "opq"),
+}
+
+
+@pytest.mark.parametrize("case", list(_ENTRY_CASES))
+def test_every_codec_through_every_entry_point(spark, sf_dir, tmp_path, case):
+    # one search path for every codec: search == build_index ->
+    # read_index -> search_encoded row for row; a rotated index serves
+    # the ids of the fully rotated composition (pre-rotated queries and
+    # corpus, params without the rotation keys) with isometry-equal
+    # distances; candidates on the same params IS the candidate stage
+    # search_encoded ran (a rerank to k = budget keeps every candidate)
+    from pyspark_mrdf_spark.operators.project import pca_project_vec
+    from pyspark_mrdf_spark.operators.quantize import (
+        build_index,
+        candidates,
+        read_index,
+        search,
+        search_encoded,
+    )
+
+    kind, rotate = _ENTRY_CASES[case]
+    emb = load_table(spark, sf_dir, "embeddings")
+    queries = emb.filter(F.col("vec_id") < 30)
+    path = str(tmp_path / "idx")
+    build_index(emb, path, kind, rotate=rotate, **_INDEX_CFG[kind])
+    params, codes = read_index(spark, path)
+    assert ("rotation" in params) == (rotate is not None)
+    served = search_encoded(queries, params, codes, emb, 5, k_candidates=20).collect()
+
+    if rotate is None:
+        inline = search(queries, emb, 5, kind, k_candidates=20, **_INDEX_CFG[kind]).collect()
+        key = lambda t: (t[0], t[3])  # noqa: E731
+        assert sorted(map(tuple, served), key=key) == sorted(map(tuple, inline), key=key)
+    else:
+        mean, rot = params["rot_mean"], params["rotation"]
+        plain = {k: v for k, v in params.items() if not k.startswith("rot")}
+        composed = search_encoded(
+            pca_project_vec(queries, mean, rot), plain, codes,
+            pca_project_vec(emb, mean, rot), 5, k_candidates=20,
+        ).collect()
+        s = {(x["src"], x["rnk"]): (x["dst"], x["dist_sq"]) for x in served}
+        c = {(x["src"], x["rnk"]): (x["dst"], x["dist_sq"]) for x in composed}
+        assert set(s) == set(c)
+        for key, (dst, d2) in c.items():
+            assert s[key][0] == dst, key
+            assert abs(s[key][1] - d2) <= 1e-9 * max(1.0, abs(d2)), key
+
+    cand = candidates(queries, codes, 20, params).collect()
+    assert len(cand) == 30 * 20
+    reranked = search_encoded(queries, params, codes, emb, 20, k_candidates=20).collect()
+    assert {(r["src"], r["dst"]) for r in cand} == {(r["src"], r["dst"]) for r in reranked}
+
+
+def test_search_entry_points_refuse_foreign_options(spark, sf_dir):
+    # codec-specific options are refused on every other codec, before
+    # any training or scan runs: weighted is SQ8's, n_probe IVF-PQ's
+    from pyspark_mrdf_spark.operators.quantize import candidates, search, search_encoded
+
+    emb = load_table(spark, sf_dir, "embeddings")
+    queries = emb.filter(F.col("vec_id") < 5)
+    with pytest.raises(ValueError, match="unknown kind"):
+        search(queries, emb, 5, "opq")
+    with pytest.raises(ValueError, match="no index codec"):
+        search_encoded(queries, {"rotation": np.eye(2)}, emb, emb, 5)
+    z = np.zeros(1)
+    params = {
+        "sq8": {"mn": z, "mx": z},
+        "bq": {"thr": z},
+        "pq": {"codebooks": z},
+        "ivfpq": {"coarse": z, "codebooks": z},
+    }
+    for kind, p in params.items():
+        refused = {"weighted": True, "n_probe": 2}
+        refused.pop({"sq8": "weighted", "ivfpq": "n_probe"}.get(kind, ""), None)
+        for name, value in refused.items():
+            with pytest.raises(ValueError, match=f"{name}= is not valid for '{kind}'"):
+                search(queries, emb, 5, kind, **{name: value})
+            with pytest.raises(ValueError, match=f"{name}= is not valid for '{kind}'"):
+                search_encoded(queries, p, emb, emb, 5, **{name: value})
+            with pytest.raises(ValueError, match=f"{name}= is not valid for '{kind}'"):
+                candidates(queries, emb, 5, p, **{name: value})
+
+
+def _md5_sample_trainers():
+    from pyspark_mrdf_spark.operators.project import opq_train, pca_train
+    from pyspark_mrdf_spark.operators.quantize import (
+        _train_index_rotation,
+        ivfpq_train,
+        pq_train,
+    )
+    from pyspark_mrdf_spark.operators.similarity import ivf_train_centroids
+
+    return {
+        "pq_train": pq_train,
+        "ivfpq_train": ivfpq_train,
+        "_train_index_rotation": lambda df: _train_index_rotation(
+            df, 8, 2048, 42, "vec_id", "embedding"
+        ),
+        "pca_train": lambda df: pca_train(df, 2),
+        "opq_train": lambda df: opq_train(df, 2),
+        "ivf_train_centroids": ivf_train_centroids,
+    }
+
+
+@pytest.mark.parametrize(
+    "trainer",
+    ["pq_train", "ivfpq_train", "_train_index_rotation", "pca_train", "opq_train",
+     "ivf_train_centroids"],
+)
+def test_md5_sample_trainers_refuse_empty_corpus(spark, trainer):
+    # every trainer on the md5-ordered sample names the empty corpus
+    # instead of surfacing numpy's "need at least one array to stack"
+    empty = spark.createDataFrame([], "vec_id long, embedding array<float>")
+    with pytest.raises(ValueError, match="empty corpus"):
+        _md5_sample_trainers()[trainer](empty)
 
 
 def test_index_stream_dir_with_only_uncommitted_batch_reads_base(spark, sf_dir, tmp_path):
