@@ -14,7 +14,8 @@ Design rules (see SURVEY.md §2B/§4):
    only for vector math; no row-at-a-time Python UDFs
  - every relational operator is DuckDB-oracle-checkable
  - iterative algorithms are driver loops over DataFrame transformations
-   with ``localCheckpoint`` — never ``collect``/``parallelize`` round-trips
+   with lineage cut by ``operators.util.checkpoint`` — never
+   ``collect``/``parallelize`` round-trips
 """
 
 from pyspark_mrdf_spark.session import get_spark

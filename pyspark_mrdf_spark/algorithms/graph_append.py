@@ -69,6 +69,7 @@ from pyspark.sql import DataFrame, Window
 from pyspark.sql import functions as F
 
 from pyspark_mrdf_spark.functions.vector import l2_sq
+from pyspark_mrdf_spark.operators.util import checkpoint
 
 EXACT_AUTO_MAX_CROSS = 50_000_000  # m·n pairs; ~the blocked kernel's comfort zone
 
@@ -130,10 +131,10 @@ def knn_graph_append(
 
     old_c = old_corpus.select(
         F.col(id_col).alias("vid"), F.col(vec_col).alias("vec")
-    ).localCheckpoint(eager=False)
+    ).transform(checkpoint)
     new_c = new_batch.select(
         F.col(id_col).alias("vid"), F.col(vec_col).alias("vec")
-    ).localCheckpoint(eager=False)
+    ).transform(checkpoint)
     # the counts drive auto-routing and materialize the checkpoints;
     # graph mode still needs m to size the in-batch exact step.
     # r15 (verdict item 4, per-query driver latency): ONE tagged-union
@@ -171,7 +172,7 @@ def knn_graph_append(
         ).filter(F.col("rnk") <= k)
     else:
         old_ranked = _topk(old_scored, k)
-    old_ranked = old_ranked.localCheckpoint(eager=False)
+    old_ranked = checkpoint(old_ranked)
     # per-src k-th (worst kept) distance — a narrow filter when ranks
     # are present, the prefilter's whole input. Srcs with fewer than k
     # edges have no rnk==k row, land NULL in the left join below, and
@@ -227,7 +228,7 @@ def knn_graph_append(
             cand_old.join(kth_side, "src", "left")
             .filter(F.col("_kth").isNull() | (F.col("dist_sq") <= F.col("_kth")))
             .select("src", "dst", "dist_sq")
-            .localCheckpoint(eager=False)
+            .transform(checkpoint)
         )
         affected = survivors.select("src").distinct()
         merged_aff = _topk(
@@ -278,7 +279,7 @@ def knn_graph_append(
     walked = graph_knn_search(
         _as_corpus(new_c), old_graph.select("src", "dst"), _as_corpus(old_c),
         k_candidates, beam=beam, id_col=id_col, vec_col=vec_col,
-    ).select("src", "dst", "dist_sq").localCheckpoint(eager=False)
+    ).select("src", "dst", "dist_sq").transform(checkpoint)
     # reverse the walk results for the old side: an old node's best new
     # neighbors are (mostly) the new nodes that found IT — the
     # asymmetric misses are what refine_rounds repairs
@@ -296,11 +297,9 @@ def knn_graph_append(
         reverse.select("src")
         .unionByName(new_c.select(F.col("vid").alias("src")))
         .distinct()
-        .localCheckpoint(eager=False)
+        .transform(checkpoint)
     )
-    g_active = g_full.join(F.broadcast(touched), "src", "left_semi").localCheckpoint(
-        eager=False
-    )
+    g_active = checkpoint(g_full.join(F.broadcast(touched), "src", "left_semi"))
     g_rest = old_ranked.join(F.broadcast(touched), "src", "left_anti")
 
     if refine_rounds > 0:
@@ -335,7 +334,7 @@ def knn_graph_append(
                 .filter(F.col("src") != F.col("dst"))
                 .distinct()
                 .join(g_active.select("src", "dst"), ["src", "dst"], "left_anti")
-                .localCheckpoint(eager=False)
+                .transform(checkpoint)
             )
             # vector resolution without a corpus shuffle: broadcast the
             # batch-proportional ID lists into semi-join scans of the
@@ -353,7 +352,7 @@ def knn_graph_append(
             )
             g_active = _topk(
                 g_active.select("src", "dst", "dist_sq").unionByName(scored), k
-            ).localCheckpoint(eager=False)
+            ).transform(checkpoint)
     # g_active covers exactly the srcs this append touched (reverse
     # srcs + new ids) — the graph tier's replacement delta
     return _finish(g_active if return_delta else g_rest.unionByName(g_active))

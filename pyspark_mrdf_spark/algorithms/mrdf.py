@@ -31,8 +31,8 @@ the schedule can use before its next stop decision (see
     g_t is the top-k_work edges per src of forests 0..t, and an edge
     is new in g_t exactly when t is the first forest that found it, so
     one window over the deduplicated edge table yields every g_t and
-    every ratio. ``localCheckpoint`` truncates lineage where the
-    reference did ``sc.parallelize(rdd.collect())`` (mrdf.py:159).
+    every ratio. ``operators.util.checkpoint`` truncates lineage where
+    the reference did ``sc.parallelize(rdd.collect())`` (mrdf.py:159).
 
 Driver boundary crossings per wave: one gate row per forest and one
 small centroid collect per division round, plus one row of changed/
@@ -74,6 +74,7 @@ from pyspark.sql.types import (
 
 from pyspark_mrdf_spark.algorithms.nndescent import nn_descent
 from pyspark_mrdf_spark.functions.vector import pairwise_l2_sq
+from pyspark_mrdf_spark.operators.util import checkpoint
 
 EDGE_SCHEMA = StructType(
     [
@@ -108,14 +109,11 @@ def knn_graph(
     tau: float = 0.01,
     seed: int = 42,
     max_iter: int = 0,
-    nnd_sample_rate: float = 1.0,
-    nnd_precision: float = 0.001,
     refine_rounds: int = 1,
     metrics_out: list | None = None,
     centroid_broadcast_max_paths: int = CENTROID_BROADCAST_MAX_PATHS,
     unconverged_warn_ratio: float | None = None,
     auto_escalate: bool = True,
-    auto_escalate_ratio: float | None = None,
 ) -> DataFrame:
     """Approximate k-NN graph: edge DataFrame (src, dst, dist_sq),
     ≤ k edges per src. Signature mirrors reference mrdf.py:13
@@ -164,9 +162,9 @@ def knn_graph(
     **Auto-escalation (hands-free hard-distribution dial, default
     ON):** instead of only *telling* the user to raise the dial, the
     same free signal raises it. When a ``max_iter`` stop would fire
-    while the last measured ratio exceeds ``auto_escalate_ratio``
-    (default ``max(4·unconverged_warn_ratio, 0.2)`` — deliberately
-    ABOVE the warn threshold: severely-unconverged runs measure
+    while the last measured ratio exceeds
+    ``max(4·unconverged_warn_ratio, 0.2)`` (deliberately ABOVE the
+    warn threshold: severely-unconverged runs measure
     0.38–0.45 on uniform noise, while healthy clustered corpora can
     idle at 0.05–0.2 of benign tail churn with recall already ≥0.99,
     and escalating those pays ~2 forests for ~+0.005 recall — the
@@ -212,7 +210,7 @@ def knn_graph(
     base = (
         df.select(F.col(id_col).cast("long").alias("id"), F.col(vec_col).alias("vec"))
         .repartition(sc.defaultParallelism)
-        .localCheckpoint(eager=False)
+        .transform(checkpoint)
     )
     # ONE set-up aggregate materializes the (lazily) checkpointed base
     # and returns both sizes the plan needs. The count also replaces
@@ -262,8 +260,7 @@ def knn_graph(
     wave_size = 3 if max_iter else 2
     if unconverged_warn_ratio is None:
         unconverged_warn_ratio = max(5 * tau, 0.05)
-    if auto_escalate_ratio is None:
-        auto_escalate_ratio = max(4 * unconverged_warn_ratio, 0.2)
+    auto_escalate_ratio = max(4 * unconverged_warn_ratio, 0.2)
     last_ratio: float | None = None  # most recent MEASURED ratio
     max_iter_eff = max_iter  # doubled once if auto-escalation fires
     escalated = False
@@ -284,8 +281,6 @@ def knn_graph(
             rho=rho,
             alpha=alpha,
             seed=seed,
-            nnd_sample_rate=nnd_sample_rate,
-            nnd_precision=nnd_precision,
             centroid_broadcast_max_paths=centroid_broadcast_max_paths,
         )
         merged, counts = _prefix_topk(g, edges, forests, k_work)
@@ -422,7 +417,7 @@ def knn_graph(
         # rounds stay eager because the next round reads g four times
         # within one job (A-rows, B-rows in both directions, and the
         # merge union)
-        g = g.localCheckpoint(eager=not last)
+        g = checkpoint(g, eager=not last)
     if refine_rounds:
         return g
 
@@ -443,8 +438,6 @@ def _wave_forests(
     rho: int,
     alpha: int,
     seed: int,
-    nnd_sample_rate: float,
-    nnd_precision: float,
     centroid_broadcast_max_paths: int,
 ) -> tuple[DataFrame, dict[int, dict]]:
     """Division + per-subset NN-Descent for every forest of one wave,
@@ -531,7 +524,7 @@ def _wave_forests(
             # dedicated job.
             for f in dividing:
                 join_tier_rounds[f] += 1
-            data = _extend_by_join(data, cents).localCheckpoint(eager=False)
+            data = checkpoint(_extend_by_join(data, cents))
             continue
         cmap: dict[tuple[int, str], list] = {}
         for r in sorted(cents.collect(), key=lambda r: (r["forest"], r["path"], r["rn"])):
@@ -564,7 +557,7 @@ def _wave_forests(
         # lazy checkpoint: materialized by the NEXT action that touches
         # data (round r+1's gate aggregate, or the leaf stage after the
         # loop breaks) — no dedicated materialization job
-        data = data.mapInPandas(_extend, data.schema).localCheckpoint(eager=False)
+        data = checkpoint(data.mapInPandas(_extend, data.schema))
 
     # ---- local NN-Descent per ≤α subset ------------------------------
     def _local(key: tuple, pdf: pd.DataFrame) -> pd.DataFrame:
@@ -572,14 +565,7 @@ def _wave_forests(
         ids = pdf["id"].to_numpy(dtype=np.int64)
         mat = np.stack(pdf["vec"].to_numpy()).astype(np.float64)
         rng = np.random.default_rng((seed, forest, zlib.crc32(path.encode("utf8"))))
-        edges = nn_descent(
-            ids,
-            mat,
-            k_work,
-            sample_rate=nnd_sample_rate,
-            precision=nnd_precision,
-            rng=rng,
-        )
+        edges = nn_descent(ids, mat, k_work, rng=rng)
         out = pd.DataFrame(edges, columns=["src", "dst", "dist_sq"])
         out.insert(0, "forest", forest)
         return out
@@ -644,9 +630,7 @@ def _prefix_topk(
         ],
         F.lit(forests[-1] + 1),
     )
-    merged = first.select("src", "dst", "dist_sq", "t0", out.alias("out")).localCheckpoint(
-        eager=False
-    )
+    merged = checkpoint(first.select("src", "dst", "dist_sq", "t0", out.alias("out")))
     aggs = []
     for t in forests:
         in_t = (F.col("t0") <= t) & (F.col("out") > t)
@@ -807,17 +791,12 @@ def _cell_keys(cells: int, parts: int) -> list[int]:
     return [free[c % parts][c // parts] for c in range(cells)]
 
 
-def _refine(
-    base: DataFrame,
-    g: DataFrame,
-    k: int,
-    n_blocks: int | None = None,
-    grid: tuple[int, int] | None = None,
-) -> DataFrame:
+def _refine(base: DataFrame, g: DataFrame, k: int, grid: tuple[int, int]) -> DataFrame:
     """One neighbor-of-neighbor refinement round (deterministic).
 
     Candidate pairs = distinct 2-hop pairs of ``g`` not already edges.
-    Distances run per GRID CELL: pair (a, b) lands in cell
+    Distances run per GRID CELL of ``grid`` = (Ba, Bb), which
+    ``knn_graph`` sizes with ``_refine_grid``: pair (a, b) lands in cell
     (hash(a) mod Ba, hash(b) mod Bb), and each cell task receives two
     DETERMINISTIC vector slices — the rows with hash(id) mod Ba = i
     (possible a-operands) plus the rows with hash(id) mod Bb = j
@@ -842,8 +821,7 @@ def _refine(
     Per-pair arithmetic — gather a, gather b, subtract, row-wise
     einsum per fixed-size chunk — is IDENTICAL under any grid, so
     distances are bit-identical to any other blocking (pinned by
-    test_refine_default_sizing_matches_explicit_blocks and the grid
-    invariance test).
+    test_refine_grid_invariance_bit_identical).
 
     Dataflow: the JVM ships GRAPH ROWS, not 2-hop pairs. Pair (a, b)
     from a → mid → b belongs to cell (hash(a) mod Ba, hash(b) mod Bb),
@@ -866,33 +844,6 @@ def _refine(
     n ≈ 1M at d = 64, or ≥ 729 cores). Per-cell kernel memory is
     unchanged: the cell's raw pairs were already held in the kernel."""
     vecs = base.select("id", "vec")
-    if grid is None:
-        if n_blocks is not None:
-            # legacy hint: interpret as a total-cell target
-            side = 1
-            while side * side < max(1, n_blocks):
-                side += 1
-            grid = (side, side)
-        else:
-            # Row count, dimension, and edge count come from ONE
-            # aggregate job (this sizing runs only on direct calls;
-            # ``knn_graph`` passes the grid and skips it entirely).
-            # pairs ≈ n·(2κ)² with κ = edges/n the graph's mean degree.
-            stats = (
-                vecs.agg(
-                    F.count(F.lit(1)).alias("n"),
-                    F.max(F.size("vec")).alias("dim"),
-                )
-                .crossJoin(g.agg(F.count(F.lit(1)).alias("edges")))
-                .collect()[0]
-            )
-            n_rows = max(stats["n"], 1)
-            dim = stats["dim"] or 1
-            kappa = stats["edges"] / n_rows
-            grid = _refine_grid(
-                n_rows, dim, 4.0 * kappa * kappa * n_rows,
-                base.sparkSession.sparkContext.defaultParallelism,
-            )
     ba, bb = grid
     cells = ba * bb
     # cell i·Bb + j travels under shuffle key keys[i·Bb + j], one cell

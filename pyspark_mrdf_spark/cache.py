@@ -14,8 +14,10 @@ Safety rules:
  - Entries are scoped to the SparkContext via ``applicationId``: a
    DataFrame checkpointed in a stopped session is never served to a
    new one (stale entries from dead sessions are dropped on sight).
- - Results are ``localCheckpoint(eager=True)``-materialized: bounded
-   output tables (edge lists, signatures), never raw inputs.
+ - Results are materialized by ``operators.util.checkpoint`` (eager
+   by default; executor-local, or reliable under
+   ``spark.graft.checkpoint.reliable``): bounded output tables (edge
+   lists, signatures), never raw inputs.
 """
 
 from __future__ import annotations
@@ -25,6 +27,8 @@ from collections.abc import Callable
 from threading import Lock
 
 from pyspark.sql import DataFrame, SparkSession
+
+from pyspark_mrdf_spark.operators.util import checkpoint
 
 _CACHE: dict[tuple, DataFrame] = {}
 _LOCK = Lock()
@@ -38,10 +42,11 @@ _BUILDING: dict[tuple, Lock] = {}
 
 
 def pin_stats(df: DataFrame) -> DataFrame:
-    """Materialize ``df`` (eager localCheckpoint) and rebuild it as a
-    fresh leaf WITHOUT the origin plan's statistics snapshot.
+    """Materialize ``df`` (an eager ``operators.util.checkpoint``, so
+    local or reliable by the same flag as every other cut) and rebuild
+    it as a fresh leaf WITHOUT the origin plan's statistics snapshot.
 
-    Why this exists: ``localCheckpoint`` — lazy AND eager — truncates
+    Why this exists: a checkpoint — lazy AND eager — truncates
     the *lineage* but snapshots the origin plan's ESTIMATED statistics
     onto the resulting ``LogicalRDD`` (measured on this Spark: a
     checkpointed 3-way join keeps its multiplied sizeInBytes product).
@@ -53,6 +58,10 @@ def pin_stats(df: DataFrame) -> DataFrame:
     enough to hit Toom-Cook-3 (EXPLAIN.md round-12 note), executors
     idle. Eager materialization alone does NOT fix this — the snapshot
     is taken either way.
+
+    With the reliable flag on, the rebuilt leaf wraps the checkpointed
+    RDD, whose lineage now starts at the checkpoint files, so its rows
+    survive executor loss like any other reliable cut.
 
     The rebuild goes through the JVM session's
     ``internalCreateDataFrame`` over the checkpointed rows, which
@@ -84,7 +93,7 @@ def pin_stats(df: DataFrame) -> DataFrame:
     fail loudly if an upgrade removes it, and the fallback path warns
     at runtime so chained deployments can detect the planner-cost
     regression without reading CI)."""
-    ck = df.localCheckpoint(eager=True)
+    ck = checkpoint(df, eager=True)
     try:
         spark = df.sparkSession
         jrdd = ck._jdf.queryExecution().toRdd()
@@ -97,7 +106,7 @@ def pin_stats(df: DataFrame) -> DataFrame:
         warnings.warn(
             "pin_stats: the private JVM hook "
             "SparkSession.internalCreateDataFrame is unavailable on this "
-            f"Spark ({exc!r}); falling back to a plain eager localCheckpoint. "
+            f"Spark ({exc!r}); falling back to a plain eager checkpoint. "
             "Values are unchanged, but the origin plan's statistics snapshot "
             "is kept — chained self-feeding operators (knn_graph_append "
             "materialize=True cycles) will pay the compounding planner cost "
@@ -115,7 +124,8 @@ def memoized_df(
     eager: bool = True,
 ) -> DataFrame:
     """Return the materialized DataFrame for ``key``, building it with
-    ``builder`` (then localCheckpoint-ing) on first use.
+    ``builder`` (then cutting its lineage with
+    ``operators.util.checkpoint``) on first use.
 
     ``eager=False`` defers materialization to the caller's first
     action (one fewer Spark job when the caller acts immediately —
@@ -139,7 +149,7 @@ def memoized_df(
             hit = _CACHE.get(full)
         if hit is not None:
             return hit
-        df = builder().localCheckpoint(eager=eager)
+        df = checkpoint(builder(), eager=eager)
         with _LOCK:
             # drop entries of dead sessions (their executors — and any
             # checkpoint blocks — died with the SparkContext)

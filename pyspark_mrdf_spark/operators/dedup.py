@@ -29,7 +29,7 @@ from pyspark.sql import DataFrame, Window
 from pyspark.sql import functions as F
 
 from pyspark_mrdf_spark.functions.text import fingerprint
-from pyspark_mrdf_spark.operators.util import lazy_checkpoint, spread
+from pyspark_mrdf_spark.operators.util import checkpoint, spread
 
 
 def exact_duplicates(df: DataFrame, id_col: str = "doc_id", text_col: str = "text") -> DataFrame:
@@ -167,7 +167,7 @@ def jaccard_pairs(
     unchanged). The posting table is lazily checkpointed — both
     self-join sides re-executed the kernel otherwise (their differing
     aliases defeat ReusedExchange)."""
-    post = lazy_checkpoint(_posting_key_table(df, n, id_col, text_col))
+    post = checkpoint(_posting_key_table(df, n, id_col, text_col))
     if max_df is not None:
         # stoplist hot shingles: a shingle appearing in > max_df docs
         # contributes O(df²) join rows but almost no Jaccard signal.
@@ -254,7 +254,7 @@ def jaccard_pairs_prefix(
     # lemma holds for ANY fixed total order over the vocabulary, so the
     # candidate set changes but the verified, thresholded OUTPUT does
     # not (verification recomputes exact intersections; oracle-pinned).
-    post = lazy_checkpoint(_posting_key_table(df, n, id_col, text_col))
+    post = checkpoint(_posting_key_table(df, n, id_col, text_col))
     dfreq = post.groupBy("key").agg(F.count(F.lit(1)).alias("df"))
     w = Window.partitionBy(id_col).orderBy(F.col("df"), F.col("key"))
     ranked = (
@@ -822,7 +822,7 @@ def near_dedup_against(
         .join(c_buckets, ["band", "bucket"])
         .select("b_id", "c_id")
         .distinct()
-        .transform(lazy_checkpoint)
+        .transform(checkpoint)
     )
     # exact verify on candidates only: posting lists restricted to the
     # candidate documents. When the caller ships stored postings, a
@@ -894,7 +894,7 @@ def connected_components(
     graphs are piles of small dense cliques (diameter ≤ ~3), so 3-4
     rounds settle everything; the driver sees one changed-count scalar
     per round (whose action also materializes that round's lazy
-    ``localCheckpoint`` — one job per round total), exactly the MRDF
+    ``checkpoint`` — one job per round total), exactly the MRDF
     iteration discipline. If a component's diameter exceeds
     ``max_iter`` (a legitimate long-chain graph), the partially
     propagated labels are silently WRONG — so this falls through to
@@ -913,13 +913,13 @@ def connected_components(
         pairs.select(F.col(a_col).alias("u"), F.col(b_col).alias("v"))
         .unionByName(pairs.select(F.col(b_col).alias("u"), F.col(a_col).alias("v")))
         .distinct()
-        .transform(lazy_checkpoint)
+        .transform(checkpoint)
     )
     labels = (
         edges.select(F.col("u").alias("node"))
         .distinct()
         .withColumn("label", F.col("node"))
-        .transform(lazy_checkpoint)
+        .transform(checkpoint)
     )
     for _ in range(max_iter):
         neighbor_min = (
@@ -940,7 +940,7 @@ def connected_components(
                     F.col("label"), F.coalesce(F.col("nbr_label"), F.col("label"))
                 ).alias("label"),
             )
-            .transform(lazy_checkpoint)
+            .transform(checkpoint)
         )
         changed = stepped.filter(F.col("label") != F.col("old_label")).count()
         labels = stepped.select("node", "label")
@@ -988,7 +988,7 @@ def connected_components_star(
         pairs.select(F.col(a_col).alias("u"), F.col(b_col).alias("v"))
         .filter(F.col("u") != F.col("v"))
         .distinct()
-        .transform(lazy_checkpoint)
+        .transform(checkpoint)
     )
 
     def _large_star(e: DataFrame) -> DataFrame:
@@ -1018,7 +1018,7 @@ def connected_components_star(
 
     n_old = edges.count()  # materializes the initial lazy checkpoint
     for _ in range(max_iter):
-        stepped = _small_star(_large_star(edges)).transform(lazy_checkpoint)
+        stepped = checkpoint(_small_star(_large_star(edges)))
         # fixpoint test: both sets are distinct downward edges, so
         # equality ⇔ same count AND no row of the new set outside the
         # old (the count action also materializes the checkpoint)
@@ -1405,7 +1405,7 @@ def bloom_dedup_against(
     corpus_fp = (
         corpus.select(fingerprint(text_col).alias("fp"))
         .distinct()
-        .transform(lazy_checkpoint)
+        .transform(checkpoint)
     )
     pos = corpus_fp.select(
         F.explode(

@@ -7,8 +7,8 @@ and CCNet/RefinedWeb-style pipelines consume them as a quality prior.
 The operator here is the classic of that family — PageRank (Page,
 Brin, Motwani, Winograd 1999) — expressed as the engine expresses all
 iteration (SURVEY §2A O4/W1): a driver loop over DataFrame
-transformations with a lazy ``localCheckpoint`` per round, shuffles
-keyed on node id only.
+transformations with a lazy ``checkpoint`` (``operators.util``) per
+round, shuffles keyed on node id only.
 
 Arithmetic discipline: INTEGER fixed-point throughout (``scale``
 units of rank mass, default 1e12). Every per-edge contribution is one
@@ -41,6 +41,8 @@ from __future__ import annotations
 
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
+
+from pyspark_mrdf_spark.operators.util import checkpoint
 
 
 def pagerank(
@@ -84,11 +86,11 @@ def pagerank(
         )
     else:
         node_df = nodes.select(F.col(nodes.columns[0]).alias("node"))
-    node_df = node_df.localCheckpoint(eager=False)
+    node_df = checkpoint(node_df)
     if not 0 <= damping_e2 <= 100:
         raise ValueError(f"pagerank: damping_e2={damping_e2} outside [0, 100]")
     deg = e.groupBy("src").agg(F.count(F.lit(1)).alias("outdeg"))
-    e_deg = e.join(deg, "src").localCheckpoint(eager=False)
+    e_deg = checkpoint(e.join(deg, "src"))
     if seeds is None:
         n = node_df.count()
         if n == 0:
@@ -102,7 +104,7 @@ def pagerank(
             seeds.select(F.col(seeds.columns[0]).alias("node"))
             .distinct()
             .withColumn("_seed", F.lit(True))
-            .localCheckpoint(eager=False)
+            .transform(checkpoint)
         )
         # Join BEFORE counting: a seed absent from the node universe
         # must not inflate the teleport denominator (it would silently
@@ -113,7 +115,7 @@ def pagerank(
         node_df = (
             node_df.join(seed_df, "node", "left")
             .select("node", F.coalesce("_seed", F.lit(False)).alias("_seed"))
-            .localCheckpoint(eager=False)
+            .transform(checkpoint)
         )
         # r15 (verdict item 4): one aggregate returns n AND n_seeds —
         # the former sequential count() pair cost an extra driver
@@ -137,7 +139,7 @@ def pagerank(
             .otherwise(F.lit(0))
             .cast("long")
             .alias("_base"),
-        ).localCheckpoint(eager=False)
+        ).transform(checkpoint)
         p = node_df.select(
             "node",
             F.when(F.col("_seed"), F.lit(scale // n_seeds))
@@ -163,7 +165,7 @@ def pagerank(
                     )
                 ).cast("long").alias("p"),
             )
-            .localCheckpoint(eager=False)
+            .transform(checkpoint)
         )
     return p
 
@@ -215,7 +217,7 @@ def triangle_counts(
     und = (
         e.select(F.least("a", "b").alias("a"), F.greatest("a", "b").alias("b"))
         .distinct()
-        .localCheckpoint(eager=False)
+        .transform(checkpoint)
     )
     # r15 (guide §2.3 narrower types): the successor arrays attached to
     # every oriented edge are this operator's dominant shuffle — Σ_u
@@ -263,7 +265,7 @@ def triangle_counts(
             .alias("e")
         )
         .select("e.u", "e.v")
-        .localCheckpoint(eager=False)
+        .transform(checkpoint)
     )
     # every triangle has exactly one apex (the (deg, id)-minimum): for
     # its oriented edge (u, v), the third vertex is in succ(u) ∩ succ(v)
@@ -320,7 +322,7 @@ def kcore_peel(
     Scale shape per round: one groupBy-count over edge endpoints + two
     broadcast-or-shuffle semi-joins of the edge table against the
     (shrinking) survivor set — all equi-keyed on node id."""
-    und = _undirected(edges, src_col, dst_col).localCheckpoint(eager=False)
+    und = checkpoint(_undirected(edges, src_col, dst_col))
     e = und
     for _ in range(rounds):
         deg = (
@@ -334,7 +336,7 @@ def kcore_peel(
             e.join(keep.withColumnRenamed("node", "a"), "a", "left_semi")
             .join(keep.withColumnRenamed("node", "b"), "b", "left_semi")
             .select("a", "b")
-            .localCheckpoint(eager=False)
+            .transform(checkpoint)
         )
     return (
         e.select(F.col("a").alias("node"))
@@ -367,7 +369,7 @@ def label_propagation(
     adj = (
         und.select(F.col("a").alias("node"), F.col("b").alias("nbr"))
         .unionByName(und.select(F.col("b").alias("node"), F.col("a").alias("nbr")))
-        .localCheckpoint(eager=False)
+        .transform(checkpoint)
     )
     labels = adj.select("node").distinct().withColumn("label", F.col("node"))
     from pyspark.sql import Window
@@ -384,6 +386,6 @@ def label_propagation(
             counted.withColumn("_r", F.row_number().over(w))
             .filter(F.col("_r") == 1)
             .select("node", "label")
-            .localCheckpoint(eager=False)
+            .transform(checkpoint)
         )
     return labels

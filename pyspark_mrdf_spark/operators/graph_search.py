@@ -19,7 +19,7 @@ BATCH rather than one query at a time:
  - per-query state is (candidate id, d², expanded) — the beam window
    is partitioned by query id, never global;
  - the driver sees one scalar per round (the frontier count, which
-   also materializes that round's lazy ``localCheckpoint``) — the
+   also materializes that round's lazy ``checkpoint``) — the
    MRDF/pagerank iteration discipline.
 
 At 100 TB the batch shape is the point: a single query wants point
@@ -38,6 +38,7 @@ from pyspark.sql import DataFrame, Window
 from pyspark.sql import functions as F
 
 from pyspark_mrdf_spark.functions.vector import l2_sq
+from pyspark_mrdf_spark.operators.util import checkpoint
 
 
 LOCAL_ROUTE_MAX_CORPUS = 100_000
@@ -225,7 +226,7 @@ def graph_knn_search(
         )
     q = queries.select(
         F.col(id_col).alias("qid"), F.col(vec_col).alias("_qvec")
-    ).localCheckpoint(eager=False)
+    ).transform(checkpoint)
     c_vec = corpus.select(F.col(id_col).alias("vid"), F.col(vec_col).alias("_cvec"))
     adj = graph.select(F.col("src").alias("vid"), F.col("dst").alias("_nbr"))
 
@@ -259,7 +260,7 @@ def graph_knn_search(
     state = (
         _score(q.select("qid").crossJoin(F.broadcast(entry)))
         .withColumn("expanded", F.lit(False))
-        .localCheckpoint(eager=False)
+        .transform(checkpoint)
     )
 
     w_beam = Window.partitionBy("qid").orderBy("d2", "vid")
@@ -268,7 +269,7 @@ def graph_knn_search(
         frontier = (
             ranked.filter((F.col("_rnk") <= beam) & ~F.col("expanded"))
             .select("qid", "vid")
-            .localCheckpoint(eager=False)
+            .transform(checkpoint)
         )
         # the round's ONE action: materializes the frontier checkpoint
         # and decides convergence (beam fully expanded -> done)
@@ -295,7 +296,7 @@ def graph_knn_search(
                 ),
             )
             .unionByName(_score(fresh).withColumn("expanded", F.lit(False)))
-            .localCheckpoint(eager=False)
+            .transform(checkpoint)
         )
 
     return (

@@ -33,7 +33,7 @@ import numpy as np
 import pandas as pd
 from pyspark.sql import DataFrame
 
-from pyspark_mrdf_spark.operators.util import md5_sample
+from pyspark_mrdf_spark.operators.util import checkpoint, md5_sample
 
 
 def pca_components(x: np.ndarray, d_out: int) -> tuple[np.ndarray, np.ndarray]:
@@ -362,9 +362,7 @@ def pca_sq8_search(
         )
     # checkpoint the projected corpus: train (min/max pass) and encode
     # would otherwise each re-run the projection lineage
-    cp = pca_project_vec(corpus, mean, components, id_col, vec_col).localCheckpoint(
-        eager=False
-    )
+    cp = checkpoint(pca_project_vec(corpus, mean, components, id_col, vec_col))
     qp = pca_project_vec(queries, mean, components, id_col, vec_col)
     mn, mx = sq8_train(cp, vec_col)
     codes = sq8_encode(cp, mn, mx, id_col, vec_col)

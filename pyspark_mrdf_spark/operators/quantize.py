@@ -99,7 +99,7 @@ from pyspark_mrdf_spark.io import (
     same_path,
     write_params_file,
 )
-from pyspark_mrdf_spark.operators.util import md5_sample
+from pyspark_mrdf_spark.operators.util import checkpoint, md5_sample
 
 
 def sq8_train(df: DataFrame, vec_col: str = "embedding") -> tuple[np.ndarray, np.ndarray]:
@@ -1235,13 +1235,13 @@ def search(
     # materialize it once (knn_search's guard discipline; scan-shaped
     # inputs re-read for free and skip the checkpoint copy)
     if not _scan_shaped(corpus):
-        corpus = corpus.localCheckpoint(eager=False)
+        corpus = checkpoint(corpus)
     params = dict(zip(codec.keys, codec.train(corpus, id_col, vec_col, **train_kw)))
     # the code table IS the stored index — materialize it so the scan
     # does not re-run the encode mapInPandas per action
     codes, _ = _encode_for_index(params, corpus, id_col, vec_col)
     return search_encoded(
-        queries, params, codes.localCheckpoint(eager=False), corpus, k, k_candidates,
+        queries, params, checkpoint(codes), corpus, k, k_candidates,
         id_col, vec_col, include_self, weighted, n_probe,
     )
 
@@ -1644,7 +1644,7 @@ def _train_index_rotation(
     env = (proj.min(axis=0), proj.max(axis=0))
     rotated = pca_project_vec(
         corpus, rotation[0], rotation[1], id_col, vec_col
-    ).localCheckpoint(eager=False)
+    ).transform(checkpoint)
     return rotation, rotated, env
 
 

@@ -38,7 +38,7 @@ from pyspark_mrdf_spark.functions.vector import (
     l2_topk_candidates,
     pairwise_l2_sq,
 )
-from pyspark_mrdf_spark.operators.util import md5_sample
+from pyspark_mrdf_spark.operators.util import checkpoint, md5_sample
 
 KNN_SCHEMA = StructType(
     [
@@ -117,7 +117,7 @@ def knn_exact(
     return knn_search(df, df, k, id_col=id_col, vec_col=vec_col, include_self=include_self)
 
 
-# LogicalRDD = an already-materialized lineage (localCheckpoint /
+# LogicalRDD = an already-materialized lineage (a checkpoint /
 # RDD-backed frame): re-reading it is exactly as cheap as a scan, and
 # re-checkpointing it would duplicate a full corpus copy — the very
 # cost the guard exists to avoid. Union-of-scans and Range likewise
@@ -132,7 +132,7 @@ def _scan_shaped(df: DataFrame) -> bool:
     """True when ``df``'s optimized logical plan is only scan-shaped
     nodes (relation + filter/project) — the inputs whose re-evaluation
     is as cheap as reading them once, so ``knn_search``'s guard-count
-    should NOT pay a localCheckpoint copy for them. Anything else
+    should NOT pay a checkpoint copy for them. Anything else
     (joins, aggregates, Python evals, generators) counts as computed
     lineage worth materializing before the count + scan double read."""
     try:
@@ -182,21 +182,22 @@ def knn_search(
     tie-break, distributed corpus — with BOTH grid sides sized so each
     task holds ~16k-row query and corpus slabs. The guard is one
     ``count()`` per side (it also sizes the grid); a COMPUTED input
-    lineage (joins, UDF embeds, aggregations) is lazily
-    ``localCheckpoint``-ed first, so the count materializes it once
-    and the scan reuses those partitions instead of recomputing the
-    pipeline. Scan-shaped inputs (parquet scan + filter/project —
-    detected from the optimized plan) are NOT checkpointed: their
-    count is metadata-cheap and a checkpoint would copy the whole
-    corpus to executor-local storage for nothing — at 100 TB that
-    copy, not the double evaluation, would be the scale bug. Pass
+    lineage (joins, UDF embeds, aggregations) is lazily checkpointed
+    first (``operators.util.checkpoint``: executor-local, or reliable
+    under ``spark.graft.checkpoint.reliable``), so the count
+    materializes it and the scan reuses those blocks instead of
+    recomputing the pipeline. Scan-shaped inputs (parquet scan +
+    filter/project — detected from the optimized plan) are NOT
+    checkpointed: their count is metadata-cheap and a checkpoint
+    would copy the whole corpus for nothing — at 100 TB that copy,
+    not the double evaluation, would be the scale bug. Pass
     ``broadcast_max_rows=None`` to skip the guard entirely when the
     corpus is known-small."""
     df = queries
     spark = df.sparkSession
     if broadcast_max_rows is not None:
         if not _scan_shaped(corpus):
-            ckpt = corpus.localCheckpoint(eager=False)
+            ckpt = checkpoint(corpus)
             if queries is corpus:
                 queries = df = ckpt
             corpus = ckpt
@@ -207,7 +208,7 @@ def knn_search(
             # Self-search (knn_exact) passes the same DataFrame twice —
             # don't run the identical count job again.
             if queries is not corpus and not _scan_shaped(queries):
-                queries = queries.localCheckpoint(eager=False)
+                queries = checkpoint(queries)
             n_q = n_c if queries is corpus else queries.count()
             n_blocks = max(8, -(-n_c // 16_384))
             n_query_blocks = max(4, -(-n_q // 16_384))

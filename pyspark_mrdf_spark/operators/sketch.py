@@ -50,6 +50,7 @@ from collections.abc import Iterator
 import pandas as pd
 from pyspark.sql import DataFrame, functions as F
 
+from pyspark_mrdf_spark.operators.util import checkpoint
 
 def heavy_hitter_candidates(
     items: DataFrame, key_col: str, m: int
@@ -100,7 +101,7 @@ def heavy_hitters(
         m = 4 * k
     if m < k:
         raise ValueError(f"m={m} < k={k} breaks the superset guarantee")
-    scan = heavy_hitter_candidates(items, key_col, m).localCheckpoint(eager=False)
+    scan = checkpoint(heavy_hitter_candidates(items, key_col, m))
     total = scan.filter(F.col("key_hash").isNull()).agg(
         F.sum("n").alias("total_n")
     )

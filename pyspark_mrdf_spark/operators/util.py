@@ -1,7 +1,6 @@
-"""Shared plan-shape helpers for operators (r15: promoted from
-``operators/dedup.py`` — ``spread`` had grown call sites across two
-modules, and the checkpoint escape hatch below is policy, not dedup
-logic).
+"""Shared plan-shape helpers for operators and algorithms: the input
+spread, the engine's one lineage-cut policy (``checkpoint``) and the
+deterministic training sample.
 """
 
 from __future__ import annotations
@@ -32,38 +31,33 @@ def spread(df: DataFrame) -> DataFrame:
     return df.repartition(n)
 
 
-def lazy_checkpoint(df: DataFrame) -> DataFrame:
-    """Materialize-on-first-use lineage cut for an intermediate that
-    several consumers share (posting tables, tokenized corpora): the
-    plan under the checkpoint runs ONCE instead of once per consumer
-    (kernel outputs have no Exchange for ReusedExchange to dedup).
+def checkpoint(df: DataFrame, eager: bool = False) -> DataFrame:
+    """Cut ``df``'s lineage: the engine's one checkpoint rule. Every
+    lineage cut in the package goes through here, so one conf decides
+    where every cut's blocks live.
 
-    FAILURE-DOMAIN TRADE (guide §5, r14 verdict item 8): the default
-    ``localCheckpoint`` stores blocks on executors WITHOUT replication
-    and truncates lineage — losing an executor at 100 TB then kills
-    the job instead of recomputing the lost partitions. That is the
-    right local/bench default (zero extra I/O), but a cluster
-    deployment that cannot afford job restarts should flip
+    Flag off (the default), ``df.localCheckpoint(eager=eager)``: blocks
+    stay on the executors that computed them, unreplicated, at zero
+    extra I/O. Losing an executor then fails the job, because the
+    truncated lineage cannot recompute the lost partitions. Flag on,
 
         spark.conf.set("spark.graft.checkpoint.reliable", "true")
         spark.sparkContext.setCheckpointDir("hdfs://.../ckpt")
 
-    and the intermediates that route through THIS helper take a
-    RELIABLE ``checkpoint`` instead: blocks land on fault-tolerant
-    storage, surviving executor loss, at the cost of one write+read of
-    the intermediate. Both paths are lazy (``eager=False``) — nothing
-    materializes until the first consumer runs.
+    gives ``df.checkpoint(eager=eager)``: blocks are written to the
+    checkpoint dir on fault-tolerant storage and survive executor
+    loss, at the cost of one write and one read of ``df``. The conf is
+    read on every call, so flipping it at runtime takes effect at the
+    next cut.
 
-    Scope: only the callers of this helper honour the flag — the dedup
-    operators (``operators/dedup.py``) and q120 (``queries/text.py``).
-    Every other lineage cut in the engine (graph, graph_append, mrdf,
-    similarity, graph_search, quantize, cache) calls
-    ``localCheckpoint`` directly and stays executor-local whatever the
-    flag says."""
-    spark = df.sparkSession
-    if spark.conf.get(RELIABLE_CHECKPOINT_CONF, "false") == "true":
-        return df.checkpoint(eager=False)
-    return df.localCheckpoint(eager=False)
+    ``eager=True`` materializes now, in a job of its own; ``eager=False``
+    defers it to the first action that reads the result. A lazy
+    reliable checkpoint runs ``df``'s lineage twice: once in that first
+    action, and once more in the job that writes the files, since
+    nothing persists ``df`` in between. An eager one runs it once."""
+    if df.sparkSession.conf.get(RELIABLE_CHECKPOINT_CONF, "false") == "true":
+        return df.checkpoint(eager=eager)
+    return df.localCheckpoint(eager=eager)
 
 
 def md5_sample(

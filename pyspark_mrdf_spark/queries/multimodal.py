@@ -30,6 +30,7 @@ from pyspark_mrdf_spark.operators.multimodal import (
     synth_bmp_payloads,
     synth_wav_payloads,
 )
+from pyspark_mrdf_spark.operators.util import checkpoint
 from pyspark_mrdf_spark.queries import register
 
 
@@ -253,7 +254,7 @@ def q86_payload_embed_knn(spark: SparkSession, sf_dir: str) -> DataFrame:
             attach_payloads(load_table(spark, sf_dir, "documents")), dim=32
         )
         .withColumnRenamed("doc_id", "vec_id")
-        .localCheckpoint(eager=False)
+        .transform(checkpoint)
     )
     queries = emb.filter(F.col("vec_id") < 30)
     return knn_search(queries, emb, 5, include_self=False).select(
@@ -329,7 +330,7 @@ def q121_image_dhash_near_dups(spark: SparkSession, sf_dir: str) -> DataFrame:
     # ONE decode+hash pass: the banding union and both verify joins
     # re-reference the hash table, so checkpoint the mapInPandas output
     # (the q86 discipline) instead of decoding the corpus five times
-    hashes = image_dhash(synth_pattern_bmp_payloads(docs)).localCheckpoint(eager=False)
+    hashes = checkpoint(image_dhash(synth_pattern_bmp_payloads(docs)))
     cand = simhash_band_candidates(hashes, bands=3, bits=48, sim_col="dhash")
     ha = hashes.select(F.col("doc_id").alias("doc_a"), F.col("dhash").alias("ha"))
     hb = hashes.select(F.col("doc_id").alias("doc_b"), F.col("dhash").alias("hb"))

@@ -20,6 +20,7 @@ from pyspark.sql import functions as F
 
 from pyspark_mrdf_spark.functions import text as T
 from pyspark_mrdf_spark.io import load_table
+from pyspark_mrdf_spark.operators.util import checkpoint
 from pyspark_mrdf_spark.queries import register
 
 SHARD_TOKEN_BUDGET = 512
@@ -727,7 +728,7 @@ def q104_dsir_importance(spark: SparkSession, sf_dir: str) -> DataFrame:
     # decided by doc_id in the tuple compare
     import math as _math
 
-    per = per.localCheckpoint(eager=False)
+    per = checkpoint(per)
     k = _math.ceil(DSIR_KEEP_FRAC * per.count())
     thr = (
         per.select("ratio_e6", "doc_id")

@@ -1213,7 +1213,7 @@ def q120_hybrid_rrf_retrieval(spark: SparkSession, sf_dir: str) -> DataFrame:
     # plan, the regexp being the dominant expression cost). spread
     # first: an under-partitioned scan would run the whole tokenize in
     # one task (no-op when the scan already has cluster parallelism).
-    from pyspark_mrdf_spark.operators.util import lazy_checkpoint, spread
+    from pyspark_mrdf_spark.operators.util import checkpoint, spread
 
     d = (
         spread(load_table(spark, sf_dir, "documents").select("doc_id", "text"))
@@ -1221,7 +1221,7 @@ def q120_hybrid_rrf_retrieval(spark: SparkSession, sf_dir: str) -> DataFrame:
             "doc_id",
             F.expr("regexp_extract_all(lower(text), '[a-z]+', 0)").alias("toks"),
         )
-        .transform(lazy_checkpoint)
+        .transform(checkpoint)
     )
     qterms = (
         d.filter(F.col("doc_id").isin(qids))
@@ -1241,7 +1241,7 @@ def q120_hybrid_rrf_retrieval(spark: SparkSession, sf_dir: str) -> DataFrame:
         .join(F.broadcast(terms_union), "term")
         .groupBy("doc_id", "term")
         .agg(F.count(F.lit(1)).cast("bigint").alias("tf"))
-        .transform(lazy_checkpoint)
+        .transform(checkpoint)
     )
     df_t = tf.groupBy("term").agg(F.count(F.lit(1)).cast("bigint").alias("df"))
     term_score = F.expr(

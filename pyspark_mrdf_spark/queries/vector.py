@@ -18,6 +18,7 @@ from pyspark.sql import functions as F
 from pyspark_mrdf_spark.cache import memoized_df
 from pyspark_mrdf_spark.io import load_table
 from pyspark_mrdf_spark.operators.similarity import ann_ivf
+from pyspark_mrdf_spark.operators.util import checkpoint
 from pyspark_mrdf_spark.queries import register
 
 K = 10
@@ -2070,7 +2071,7 @@ def q159_opq_pq_knn(spark: SparkSession, sf_dir: str) -> DataFrame:
         emb, _OPQ_CFG["n_subspaces"],
         sample_size=_OPQ_CFG["sample_size"], seed=_OPQ_CFG["seed"],
     )
-    emb_r = pca_project_vec(emb, mean, rot).localCheckpoint(eager=False)
+    emb_r = checkpoint(pca_project_vec(emb, mean, rot))
     q_r = emb_r.filter(F.col("vec_id") % 13 == 0)
     return search(
         q_r, emb_r, 5, "pq", k_candidates=20, include_self=False, **_OPQ_CFG

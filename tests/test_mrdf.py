@@ -245,25 +245,6 @@ def test_capped_unconverged_run_auto_escalates_hands_free(spark):
     assert r_on >= 0.9, r_on
 
 
-def test_refine_default_sizing_matches_explicit_blocks(spark, emb):
-    # _refine's n_blocks=None sizing (one aggregate job, not a
-    # first()+count() pair) must produce the same refined graph as an
-    # explicit block count — block shape never changes results
-    from pyspark.sql import functions as F
-
-    from pyspark_mrdf_spark.algorithms.mrdf import _refine
-
-    base = emb.select(
-        F.col("vec_id").cast("long").alias("id"), F.col("embedding").alias("vec")
-    ).localCheckpoint(eager=True)
-    g0 = knn_exact(emb, 3).select("src", "dst", "dist_sq").localCheckpoint(eager=True)
-    auto = sorted(map(tuple, _refine(base, g0, 5).select("src", "dst").collect()))
-    explicit = sorted(
-        map(tuple, _refine(base, g0, 5, n_blocks=3).select("src", "dst").collect())
-    )
-    assert auto == explicit and len(auto) > 0
-
-
 def test_refine_grid_invariance_bit_identical(spark, emb):
     # The r14 grid blocking: cell shape must never change the refined
     # graph — per-pair gather→subtract→einsum is identical under any
@@ -426,8 +407,7 @@ def test_prefix_pass_equals_sequential_merge_chain(spark, emb, dial):
     ).localCheckpoint(eager=True)
     edges, _ = _wave_forests(
         base, forests, n_total=base.count(), k_work=k_work, rho=dial["rho"],
-        alpha=dial["alpha"], seed=dial["seed"], nnd_sample_rate=1.0,
-        nnd_precision=0.001,
+        alpha=dial["alpha"], seed=dial["seed"],
         centroid_broadcast_max_paths=dial.get(
             "centroid_broadcast_max_paths", CENTROID_BROADCAST_MAX_PATHS
         ),

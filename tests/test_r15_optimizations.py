@@ -2,7 +2,7 @@
 
 The round changed operator INTERNALS only — hashed posting keys with
 kernel-computed set sizes behind ``jaccard_pairs``/``jaccard_pairs_prefix``,
-the reliable-checkpoint escape hatch, the guarded int32 narrowing in
+the reliable-checkpoint flag, the guarded int32 narrowing in
 ``triangle_counts``, and the auto-linkage-cap memoization — so each
 change's equivalence is pinned here explicitly (the DuckDB oracle gate
 pins them end-to-end through every consumer query).
@@ -11,7 +11,9 @@ pins them end-to-end through every consumer query).
 from __future__ import annotations
 
 import hashlib
+import uuid
 
+import pytest
 from pyspark.sql import functions as F
 
 from pyspark_mrdf_spark.functions.text import shingles
@@ -21,7 +23,7 @@ from pyspark_mrdf_spark.operators.dedup import (
     jaccard_pairs,
     jaccard_pairs_prefix,
 )
-from pyspark_mrdf_spark.operators.util import RELIABLE_CHECKPOINT_CONF, lazy_checkpoint
+from pyspark_mrdf_spark.operators.util import RELIABLE_CHECKPOINT_CONF, checkpoint
 
 from test_dedup_kernels import EDGE_TEXTS, _edge_df
 
@@ -152,30 +154,164 @@ def test_posting_key_schema_and_hash_width(spark):
     assert all(len(bytes(r["key"])) == hashlib.md5().digest_size for r in tbl.collect())
 
 
-# --- reliable-checkpoint escape hatch (operators/util.py) --------------------
+# --- reliable-checkpoint flag (operators/util.checkpoint) --------------------
+#
+# One case per module family that cuts lineage. Each builds a small input,
+# reaches at least one ``checkpoint`` inside that module, and returns the
+# result. The flag must change where the blocks live, never the rows.
+
+_CKPT_N, _CKPT_D = 120, 8
 
 
-def test_lazy_checkpoint_flag_round_trips(spark, tmp_path):
-    df = spark.range(100).withColumn("v", F.col("id") * 2)
-    want = {(r["id"], r["v"]) for r in df.collect()}
+def _ckpt_vectors(spark, lo=0, hi=_CKPT_N):
+    """Deterministic ``(vec_id, embedding)`` rows, COMPUTED (a join), so
+    the similarity and quantize guards checkpoint them."""
+    from pyspark_mrdf_spark.operators.similarity import _scan_shaped
 
-    # default: localCheckpoint path, no checkpoint dir needed
+    vec = F.array(*[F.sin(F.col("id") * (j + 1)) for j in range(_CKPT_D)])
+    ids2 = spark.range(lo, hi).withColumnRenamed("id", "id2")
+    out = spark.range(lo, hi).join(ids2, F.col("id") == F.col("id2")).select(
+        F.col("id").alias("vec_id"), vec.alias("embedding")
+    )
+    assert not _scan_shaped(out)
+    return out
+
+
+def _exact_graph(corpus, k):
+    from pyspark_mrdf_spark.operators.similarity import knn_exact
+
+    return knn_exact(corpus, k).select("src", "dst", "dist_sq")
+
+
+def _case_util(spark, sf_dir):
+    return checkpoint(spark.range(100).withColumn("v", F.col("id") * 2))
+
+
+def _case_graph(spark, sf_dir):
+    from pyspark_mrdf_spark.operators.graph import kcore_peel
+
+    # a 60-node ring plus one chord per node
+    node = F.col("id")
+    edges = spark.range(60).select(
+        node.alias("src"), F.explode(F.array((node + 1) % 60, (node * 7 + 3) % 60)).alias("dst")
+    )
+    return kcore_peel(edges, 2)
+
+
+def _case_graph_append(spark, sf_dir):
+    from pyspark_mrdf_spark.algorithms.graph_append import knn_graph_append
+
+    old = _ckpt_vectors(spark, 0, 100)
+    new = _ckpt_vectors(spark, 100, _CKPT_N)
+    return knn_graph_append(_exact_graph(old, 5), old, new, 5, materialize=True)
+
+
+def _case_mrdf(spark, sf_dir):
+    from pyspark_mrdf_spark.algorithms.mrdf import knn_graph
+
+    return knn_graph(
+        _ckpt_vectors(spark), 5, rho=3, alpha=40, seed=42, max_iter=2, auto_escalate=False
+    )
+
+
+def _case_graph_search(spark, sf_dir):
+    from pyspark_mrdf_spark.operators.graph_search import graph_knn_search
+
+    corpus = _ckpt_vectors(spark)
+    queries = corpus.filter(F.col("vec_id") % 10 == 0)
+    return graph_knn_search(queries, _exact_graph(corpus, 5), corpus, 5, beam=8)
+
+
+def _case_similarity(spark, sf_dir):
+    from pyspark_mrdf_spark.operators.similarity import knn_search
+
+    corpus = _ckpt_vectors(spark)
+    return knn_search(corpus.filter(F.col("vec_id") % 10 == 0), corpus, 5)
+
+
+def _case_quantize(spark, sf_dir):
+    from pyspark_mrdf_spark.operators.quantize import search
+
+    corpus = _ckpt_vectors(spark)
+    return search(corpus.filter(F.col("vec_id") % 10 == 0), corpus, 5, "sq8", k_candidates=20)
+
+
+def _case_project(spark, sf_dir):
+    from pyspark_mrdf_spark.operators.project import pca_sq8_search
+
+    corpus = _ckpt_vectors(spark)
+    return pca_sq8_search(
+        corpus.filter(F.col("vec_id") % 10 == 0), corpus, 5, d_out=4, k_candidates=20
+    )
+
+
+def _case_sketch(spark, sf_dir):
+    from pyspark_mrdf_spark.operators.sketch import heavy_hitters
+
+    # key 0 holds half the rows: the one heavy hitter at k = 5
+    items = spark.range(500).select(
+        F.when(F.col("id") % 2 == 0, 0).otherwise(F.col("id") % 37).alias("key")
+    )
+    return heavy_hitters(items, "key", 5)
+
+
+def _case_cache(spark, sf_dir):
+    from pyspark_mrdf_spark.cache import memoized_df
+
+    # a fresh key per call: a memo hit would skip the checkpoint
+    key = ("test_checkpoint_flag_round_trips", uuid.uuid4().hex)
+    return memoized_df(spark, key, lambda: spark.range(50).withColumn("sq", F.col("id") ** 2))
+
+
+def _case_queries(spark, sf_dir):
+    from pyspark_mrdf_spark.queries.multimodal import q86_payload_embed_knn
+
+    return q86_payload_embed_knn(spark, sf_dir)
+
+
+_CKPT_CASES = {
+    "util": _case_util,
+    "graph": _case_graph,
+    "graph_append": _case_graph_append,
+    "mrdf": _case_mrdf,
+    "graph_search": _case_graph_search,
+    "similarity": _case_similarity,
+    "quantize": _case_quantize,
+    "project": _case_project,
+    "sketch": _case_sketch,
+    "cache": _case_cache,
+    "queries": _case_queries,
+}
+
+
+@pytest.fixture
+def reliable_flag(spark):
+    """Sets the flag through the yielded function and always puts it
+    back to ``false``, so a failing case cannot leave later tests in
+    reliable mode."""
+    yield lambda on: spark.conf.set(RELIABLE_CHECKPOINT_CONF, "true" if on else "false")
+    spark.conf.set(RELIABLE_CHECKPOINT_CONF, "false")
+
+
+@pytest.mark.parametrize("family", list(_CKPT_CASES))
+def test_checkpoint_flag_round_trips(spark, sf_dir, tmp_path, reliable_flag, family):
+    case = _CKPT_CASES[family]
+    ckpt = tmp_path / "ckpt"
+    spark.sparkContext.setCheckpointDir(str(ckpt))
     assert spark.conf.get(RELIABLE_CHECKPOINT_CONF, "false") == "false"
-    local = lazy_checkpoint(df)
-    assert {(r["id"], r["v"]) for r in local.collect()} == want
+    off = sorted(map(tuple, case(spark, sf_dir).collect()))
+    assert off
+    assert not list(ckpt.rglob("*/*")), f"{family}: the flag-off call wrote checkpoint files"
 
-    # flag on: reliable checkpoint files land in the checkpoint dir
-    spark.sparkContext.setCheckpointDir(str(tmp_path / "ckpt"))
-    spark.conf.set(RELIABLE_CHECKPOINT_CONF, "true")
-    try:
-        reliable = lazy_checkpoint(df)
-        assert {(r["id"], r["v"]) for r in reliable.collect()} == want
-        ckpt_files = list((tmp_path / "ckpt").rglob("*"))
-        assert ckpt_files, "reliable path wrote nothing to the checkpoint dir"
-    finally:
-        spark.conf.set(RELIABLE_CHECKPOINT_CONF, "false")
-    # and the flag is read per call: back off means localCheckpoint again
-    assert {(r["id"], r["v"]) for r in lazy_checkpoint(df).collect()} == want
+    # flag on: same rows, and the reliable cut wrote to the checkpoint
+    # dir during this call (the flag is read per call, not cached)
+    before = len(list(ckpt.rglob("*")))
+    reliable_flag(True)
+    on = sorted(map(tuple, case(spark, sf_dir).collect()))
+    written = len(list(ckpt.rglob("*"))) - before
+    reliable_flag(False)
+    assert on == off
+    assert written >= 1, f"{family}: the flag-on call wrote nothing to the checkpoint dir"
 
 
 # --- guarded int32 narrowing (graph.py triangle_counts) -----------------------
