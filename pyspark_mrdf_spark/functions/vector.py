@@ -1,7 +1,7 @@
 """Vector math kernels.
 
 Two tiers, per SURVEY.md §4.2:
- - **Column expressions** (JVM-side, codegen): dot/cosine/L2 via
+ - **Column expressions** (JVM-side, codegen): squared L2 via
    ``zip_with`` + ``aggregate`` — for one-off pairs or small arrays.
  - **NumPy block kernels** (Arrow-batched pandas UDFs): pairwise
    distance matrices for kNN — the vectorized recovery of the
@@ -29,33 +29,12 @@ def _c(col: str | Column) -> Column:
     return F.col(col) if isinstance(col, str) else col
 
 
-def dot(a: str | Column, b: str | Column) -> Column:
-    """Dot product of two float arrays, computed in double, sequential
-    left-to-right accumulation (matches a scalar SQL loop exactly)."""
-    prods = F.zip_with(_c(a), _c(b), lambda x, y: x.cast("double") * y.cast("double"))
-    return F.aggregate(prods, F.lit(0.0), lambda acc, x: acc + x)
-
-
 def l2_sq(a: str | Column, b: str | Column) -> Column:
     """Squared Euclidean distance (double)."""
     diffs = F.zip_with(
         _c(a), _c(b), lambda x, y: (x.cast("double") - y.cast("double")) * (x.cast("double") - y.cast("double"))
     )
     return F.aggregate(diffs, F.lit(0.0), lambda acc, x: acc + x)
-
-
-def l2(a: str | Column, b: str | Column) -> Column:
-    """Euclidean distance (double) — the reference's σ (utilities.py:11-13)."""
-    return F.sqrt(l2_sq(a, b))
-
-
-def norm(a: str | Column) -> Column:
-    return F.sqrt(dot(a, a))
-
-
-def cosine(a: str | Column, b: str | Column) -> Column:
-    """Cosine similarity in double."""
-    return dot(a, b) / (norm(a) * norm(b))
 
 
 # ---------------------------------------------------------------------------

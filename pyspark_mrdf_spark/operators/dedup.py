@@ -235,15 +235,14 @@ def jaccard_pairs_prefix(
     posting list, then a candidate-bounded verify join; no pair
     outside the prefix join is ever materialized.
 
-    Measured (SCALABILITY.json synthetic-20000-prefix-filter, via
-    ``scripts/scalability.py --prefix-filter-only``): on a corpus
-    where 25% of docs share one boilerplate passage (the real-web
-    shape) the full share-one-shingle join pays its df² fan-out —
-    44.3 s vs 30.4 s here, identical thresholded pairs asserted; on a
-    uniform random-vocab corpus (df≈1 everywhere, nothing to prune)
-    the df-rank pass is pure overhead (15.2 s vs 25.9 s). Default to
-    this tier for web text; use the plain join when shingles are
-    known-unique."""
+    Measured (SCALABILITY.json row synthetic-20000-prefix-filter): on
+    a corpus where 25% of docs share one boilerplate passage (the
+    real-web shape) the full share-one-shingle join pays its df²
+    fan-out — 44.3 s vs 30.4 s here, identical thresholded pairs
+    asserted; on a uniform random-vocab corpus (df≈1 everywhere,
+    nothing to prune) the df-rank pass is pure overhead (15.2 s vs
+    25.9 s). Default to this tier for web text; use the plain join
+    when shingles are known-unique."""
     if not 1 <= threshold_e2 <= 100:
         raise ValueError(f"threshold_e2={threshold_e2} outside [1, 100]")
     # r15: hashed posting form (16-byte md5 keys + kernel-computed set
@@ -565,8 +564,8 @@ def embedding_near_dups(
       - task memory: one group holds ~2n/B vectors (8·d·2n/B bytes) —
         pick B so that fits the executor (B ≈ 16·n·d / mem_bytes);
       - flops: O(n²d) total — the honest cost of EXACT near-dup. When
-        n² is infeasible, use ``embedding_near_dups_lsh`` (approximate,
-        candidates only) or raise the threshold pipeline upstream.
+        n² is infeasible, ``semantic_dedup`` (q102) is the scale path
+        for embedding dedup, or raise the threshold pipeline upstream.
     """
     import pandas as pd
 
@@ -654,67 +653,6 @@ def embedding_near_dups_broadcast(
 
     n_parts = max(spark.sparkContext.defaultParallelism, df.rdd.getNumPartitions())
     return df.select(id_col, vec_col).repartition(n_parts).mapInPandas(_scan, NEAR_DUP_SCHEMA)
-
-
-def embedding_near_dups_lsh(
-    df: DataFrame,
-    threshold: float = 0.35,
-    n_planes: int = 4,
-    n_tables: int = 8,
-    id_col: str = "vec_id",
-    vec_col: str = "embedding",
-) -> DataFrame:
-    """Approximate tier: OR-amplified hyperplane-LSH candidate
-    generation (equi-join on (table, bucket), distinct pairs) + exact
-    fixed-point cosine verify per candidate — no all-pairs anything,
-    linear shuffle, no false POSITIVES (verify is exact). Recall is the
-    amplified 1 − (1 − p^k)^L, p = 1 − θ/π: tune ``n_tables`` up for
-    recall, down for cost — the standard dial for 100TB-scale near-dup
-    where O(n²) is off the table (``embedding_near_dups`` is the exact
-    tier while n² remains feasible)."""
-    import pandas as pd
-    from collections.abc import Iterator
-
-    from pyspark_mrdf_spark.operators.similarity import lsh_hyperplane_tables
-
-    t_e6 = int(round(threshold * 1e6))
-    bk = lsh_hyperplane_tables(
-        df, n_planes=n_planes, n_tables=n_tables, id_col=id_col, vec_col=vec_col
-    )
-    a = bk.select(F.col(id_col).alias("src"), "table", "bucket")
-    b = bk.select(F.col(id_col).alias("dst"), "table", "bucket")
-    cand_ids = (
-        a.join(b, ["table", "bucket"])
-        .filter(F.col("src") < F.col("dst"))
-        .select("src", "dst")
-        .distinct()
-    )
-    va = df.select(F.col(id_col).alias("src"), F.col(vec_col).alias("va"))
-    vb = df.select(F.col(id_col).alias("dst"), F.col(vec_col).alias("vb"))
-    cand = cand_ids.join(va, "src").join(vb, "dst").select("src", "va", "dst", "vb")
-
-    def _verify(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        import numpy as np
-
-        for pdf in batches:
-            if len(pdf) == 0:
-                continue
-            va = np.stack(pdf["va"].to_numpy()).astype(np.float64)
-            vb = np.stack(pdf["vb"].to_numpy()).astype(np.float64)
-            # row-wise cosine (each candidate pair independently)
-            dot = np.einsum("ij,ij->i", va, vb)
-            cos = dot / (np.linalg.norm(va, axis=1) * np.linalg.norm(vb, axis=1))
-            cos_e6 = np.rint(cos * 1e6).astype(np.int64)
-            keep = cos_e6 >= t_e6
-            yield pd.DataFrame(
-                {
-                    "src": pdf["src"].to_numpy(dtype=np.int64)[keep],
-                    "dst": pdf["dst"].to_numpy(dtype=np.int64)[keep],
-                    "cos_e6": cos_e6[keep],
-                }
-            )
-
-    return cand.mapInPandas(_verify, NEAR_DUP_SCHEMA)
 
 
 def simhash_band_candidates(
@@ -901,12 +839,10 @@ def connected_components(
     ``connected_components_star``, whose round count is logarithmic in
     the diameter, instead of refusing or returning them.
 
-    Tier choice measured head-to-head (SCALABILITY.json
-    synthetic-200000-cc-tiers, reproducible via ``python
-    scripts/scalability.py --cc-tiers-only``, r9): at diameter 100
-    (2k chains of length 100, n=200k) propagation needs its full 100
-    rounds — 69.8 s — where star contracts in 15.9 s (4.4×, widening
-    with diameter); both exact vs the closed-form ground truth. On
+    Tier choice measured head-to-head (SCALABILITY.json row
+    synthetic-200000-cc-tiers, r9): at diameter 100 (2k chains of
+    length 100, n=200k) propagation needs its full 100 rounds — 69.8 s
+    — where star contracts in 15.9 s (4.4×, widening with diameter); both exact vs the closed-form ground truth. On
     real near-dup pair graphs (diameter ≤ ~3) propagation's cheaper
     rounds win, which is why it stays the default tier."""
     edges = (

@@ -202,11 +202,10 @@ def triangle_counts(
     Inputs may list each undirected edge in either or both directions;
     self-loops are dropped, duplicates collapsed.
 
-    Measured (SCALABILITY.json synthetic-400000-graph-analytics, via
-    ``scripts/scalability.py --graph-analytics-only``): 3.9M edges /
-    22.8M triangles counted in 13.6 s on local[32] with every node's
-    count asserted against the clique closed form (k-core and LPA on
-    the same graph, same exactness gate). On the DENSE co-order graph
+    Measured (SCALABILITY.json row synthetic-400000-graph-analytics):
+    3.9M edges / 22.8M triangles counted in 13.6 s on local[32] with
+    every node's count asserted against the clique closed form (k-core
+    and LPA on the same graph, same exactness gate). On the DENSE co-order graph
     (q138 at sf0.1: 20k nodes, 1.2M edges, avg degree 120) the
     intersect plan beats the former wedge self-join ~10× — wedge count
     Σ C(outdeg, 2) ≈ 35M vs ~4M triangle rows."""

@@ -269,9 +269,9 @@ def blocked_levenshtein_link(
        gets no candidates — measured 0.873 agreement on the 30× feed.
        Kept for junk-key deployments where hot blocks ARE noise.
 
-    The 30× evidence row (`scripts/scalability.py --relational-only
-    --relational-factor 30`) records wall AND match-agreement for
-    both actions vs uncapped on the same corpus."""
+    The 30× evidence row (SCALABILITY.json row relational-30x-sf0.1)
+    records wall AND match-agreement for both actions vs uncapped on
+    the same corpus."""
     if hot_block_action not in ("split", "drop"):
         raise ValueError(
             f"blocked_levenshtein_link: unknown hot_block_action "

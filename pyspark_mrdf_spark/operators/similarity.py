@@ -732,111 +732,6 @@ def lsh_hyperplane_buckets(
     )
 
 
-def _gaussian_planes(n: int, d: int, seed: int) -> np.ndarray:
-    """(n, d) i.i.d. standard-normal hyperplanes from hash-portable
-    uniforms (Box-Muller) — deterministic on any engine/partitioning,
-    like every other seeded draw in this repo, but INDEPENDENT of the
-    data (data-vector planes are mutually correlated on real corpora,
-    which skews bucket occupancy).
-
-    One SHAKE-256 XOF call stretches the seed tag into all n·d·16
-    random bytes at C speed (the round-6 version looped 2·n·d Python
-    md5 calls — ~1M driver hashes for 16 tables × 8 planes × 4096-d;
-    this one builds that case in ~10ms), then a vectorized Box-Muller
-    maps uint64 pairs to normals. SHAKE-256 is as engine-portable as
-    md5 (any SHA-3 library reproduces the byte stream bit-for-bit);
-    the (n, d) in the tag keeps distinct shapes on distinct streams,
-    matching the old per-(i, j) tagging."""
-    import hashlib
-
-    raw = hashlib.shake_256(f"planes:{seed}:{n}:{d}".encode()).digest(n * d * 16)
-    u = np.frombuffer(raw, dtype="<u8").reshape(n * d, 2).astype(np.float64)
-    u1 = (u[:, 0] + 1.0) / 2.0**64  # (0, 1]: +1 keeps log() finite at the 0 corner
-    u2 = u[:, 1] / 2.0**64  # [0, 1)
-    out = np.sqrt(-2.0 * np.log(u1)) * np.cos(2.0 * np.pi * u2)
-    return out.reshape(n, d)
-
-
-def lsh_hyperplane_tables(
-    df: DataFrame,
-    n_planes: int = 4,
-    n_tables: int = 8,
-    id_col: str = "vec_id",
-    vec_col: str = "embedding",
-    plane_source: str = "gaussian",
-    seed: int = 42,
-) -> DataFrame:
-    """OR-amplified hyperplane LSH: ``n_tables`` independent bucket
-    tables of ``n_planes`` sign bits each → (id, table, bucket).
-
-    A pair is a candidate if it collides in ANY table:
-    P[candidate] = 1 − (1 − p^k)^L with p = 1 − θ/π — the recall/cost
-    dial for candidate generation when a single table's p^k is too
-    lossy (at cos 0.35, one 4-bit table keeps ~14% of threshold pairs;
-    8 tables keep ~70%, and ~99.9% of the high-cos pairs dedup cares
-    about). One matmul per Arrow batch computes ALL tables' bits.
-
-    ``plane_source`` picks the hyperplanes:
-
-     - ``"gaussian"`` (production default): seeded md5-portable
-       standard normals (Box-Muller) — the textbook SimHash draw,
-       independent of the data (data-vector planes are mutually
-       correlated on clustered corpora, which skews buckets); still
-       bit-for-bit deterministic across engines and partitionings.
-     - ``"data"``: disjoint slices of the ``n_tables·n_planes``
-       lowest-id vectors. Kept for parity with the data-derived
-       single-table ``lsh_hyperplane_buckets`` whose raw-dot form the
-       q58 SQL oracle pins; prefer ``"gaussian"`` outside oracle-
-       pinned paths.
-
-    Either way, vectors pass through the CENTROID of a bounded
-    lowest-id sample before dotting: data that lives in a narrow cone
-    (e.g. the all-non-negative ``embed_payloads`` histograms, whose
-    raw dots with ANY plane share one sign for most rows) would
-    otherwise collapse into one bucket per table and degenerate
-    candidate generation to all-pairs — centering restores balanced
-    sign bits for any sign pattern."""
-    spark = df.sparkSession
-    need = n_planes * n_tables
-    rows = df.orderBy(id_col).limit(need).select(id_col, vec_col).collect()
-    ids = np.array([r[0] for r in rows], dtype=np.int64)
-    sample = np.stack([np.asarray(r[1]) for r in rows]).astype(np.float64)
-    sample = sample[np.argsort(ids)]
-    center = sample.mean(axis=0)
-    if plane_source == "gaussian":
-        planes = _gaussian_planes(need, sample.shape[1], seed)
-    elif plane_source == "data":
-        planes = sample
-    else:
-        raise ValueError(f"plane_source must be 'gaussian' or 'data', got {plane_source!r}")
-    bp = spark.sparkContext.broadcast((planes, center))
-    weights = (2 ** np.arange(n_planes)).astype(np.int64)
-
-    def _buckets(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        p, ctr = bp.value
-        for pdf in batches:
-            if len(pdf) == 0:
-                continue
-            v = np.stack(pdf[vec_col].to_numpy()).astype(np.float64) - ctr
-            bits = (np.rint((v @ p.T) * 1e6) >= 0).astype(np.int64)  # (n, L·k)
-            ids_b = pdf[id_col].to_numpy(dtype=np.int64)
-            out = {"id": np.repeat(ids_b, n_tables)}
-            buckets = np.empty((len(v), n_tables), dtype=np.int64)
-            for t in range(n_tables):
-                buckets[:, t] = bits[:, t * n_planes : (t + 1) * n_planes] @ weights
-            out["table"] = np.tile(np.arange(n_tables, dtype=np.int64), len(v))
-            out["bucket"] = buckets.reshape(-1)
-            yield pd.DataFrame(out)
-
-    n_parts = max(spark.sparkContext.defaultParallelism, df.rdd.getNumPartitions())
-    return (
-        df.select(id_col, vec_col)
-        .repartition(n_parts)
-        .mapInPandas(_buckets, "id long, table long, bucket long")
-        .withColumnRenamed("id", id_col)
-    )
-
-
 def prefix_dim_search(
     queries: DataFrame,
     corpus: DataFrame,

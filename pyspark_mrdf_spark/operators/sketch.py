@@ -27,12 +27,11 @@ partition's total above n_p. So candidates ⊇ true heavy hitters, and
 the recount filter ``cnt·k > N`` makes the result identical to the
 full groupBy — which is exactly what the DuckDB oracle runs.
 
-Measured (SCALABILITY.json synthetic-50000000-heavy-hitters, via
-``scripts/scalability.py --heavy-hitters-only``): at 50M rows / 35M
-distinct keys the tier returns the identical hot-key set in 13.9 s on
-local[32] vs 3.7 s for the plain groupBy — locally the 0.7n-row
-shuffle is nearly free on RAM/NVMe, so the tier's value is the
-NETWORK-shuffle bound at cluster scale, and the row records the
+Measured (SCALABILITY.json row synthetic-50000000-heavy-hitters): at
+50M rows / 35M distinct keys the tier returns the identical hot-key
+set in 13.9 s on local[32] vs 3.7 s for the plain groupBy — locally
+the 0.7n-row shuffle is nearly free on RAM/NVMe, so the tier's value
+is the NETWORK-shuffle bound at cluster scale, and the row records the
 honest local cost (the int64-hash candidates pass is itself the
 measured 3.9× fix over a string-keyed pass).
 

@@ -39,24 +39,26 @@ def checkpoint(df: DataFrame, eager: bool = False) -> DataFrame:
     Flag off (the default), ``df.localCheckpoint(eager=eager)``: blocks
     stay on the executors that computed them, unreplicated, at zero
     extra I/O. Losing an executor then fails the job, because the
-    truncated lineage cannot recompute the lost partitions. Flag on,
+    truncated lineage cannot recompute the lost partitions.
+    ``eager=True`` materializes now, in a job of its own;
+    ``eager=False`` defers it to the first action that reads the
+    result. Flag on,
 
         spark.conf.set("spark.graft.checkpoint.reliable", "true")
         spark.sparkContext.setCheckpointDir("hdfs://.../ckpt")
 
-    gives ``df.checkpoint(eager=eager)``: blocks are written to the
+    gives ``df.checkpoint(eager=True)``: blocks are written to the
     checkpoint dir on fault-tolerant storage and survive executor
-    loss, at the cost of one write and one read of ``df``. The conf is
-    read on every call, so flipping it at runtime takes effect at the
-    next cut.
-
-    ``eager=True`` materializes now, in a job of its own; ``eager=False``
-    defers it to the first action that reads the result. A lazy
-    reliable checkpoint runs ``df``'s lineage twice: once in that first
-    action, and once more in the job that writes the files, since
-    nothing persists ``df`` in between. An eager one runs it once."""
+    loss, at the cost of one write and one read of ``df``. A reliable
+    cut is always eager, whatever ``eager`` says: a lazy one would run
+    ``df``'s lineage twice (in the first action, then again in the job
+    that writes the files), an eager one runs it once. The files are
+    removed once the result is unreachable when the session sets
+    ``spark.cleaner.referenceTracking.cleanCheckpoints`` (``get_spark``
+    does). The conf is read on every call, so flipping it at runtime
+    takes effect at the next cut."""
     if df.sparkSession.conf.get(RELIABLE_CHECKPOINT_CONF, "false") == "true":
-        return df.checkpoint(eager=eager)
+        return df.checkpoint(eager=True)
     return df.localCheckpoint(eager=eager)
 
 

@@ -1390,9 +1390,8 @@ def q141_part_communities(spark: SparkSession, sf_dir: str) -> DataFrame:
 # equals recompute, which is the entire correctness obligation of an
 # incremental pipeline. At 100 TB with ~3% churn the delta path reads
 # two fingerprint projections + token-counts changed docs only; the
-# recompute reads everything. Measured (SCALABILITY.json
-# synthetic-500000-incremental, via scripts/scalability.py
-# --incremental-only): folding a ~3% CDC delta into the stored
+# recompute reads everything. Measured (SCALABILITY.json row
+# synthetic-500000-incremental): folding a ~3% CDC delta into the stored
 # aggregate takes 0.82 s where the storage-resident recompute takes
 # 14.1 s at 500k docs — 17x, widening linearly with the corpus/delta
 # ratio; results asserted identical.

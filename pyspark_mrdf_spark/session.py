@@ -91,6 +91,10 @@ def get_spark(
         # (bytes-shuffled-per-2min), turning disk use from
         # O(run length) into O(working set).
         .config("spark.cleaner.periodicGC.interval", "2min")
+        # ...and reliable checkpoint dirs (spark.graft.checkpoint.
+        # reliable) go the same way: off by default, every iterative
+        # call would leave its rdd-* dirs behind for the session's life
+        .config("spark.cleaner.referenceTracking.cleanCheckpoints", "true")
         # Scheduler mode stays FIFO (the default). FAIR was tried for
         # the background-index-build overlap (q56's exact-side thread)
         # but bare spark.scheduler.mode=FAIR is a no-op — without an

@@ -1,16 +1,14 @@
-"""fvecs/ivecs as a first-class Spark data source (Spark 4 Python
-DataSource API): ``spark.read.format("fvecs").load(path)``.
+"""fvecs/ivecs as a Spark write sink (Spark 4 Python DataSource API):
+``df.write.format("fvecs").save(path)``.
 
-Upgrade over the binaryFile+mapInPandas connector in ``fvecs.py``:
-
-- **O(1) partition planning.** fvecs records are uniform-width
-  (dim from the first header word), so per-file row counts — and the
-  global id offsets that preserve the reference's "node id = file
-  position" contract (reference utilities.py:84-86) — come from file
-  SIZE + one 4-byte header read, not a decode pass over every byte.
-- **One InputPartition per shard file**, decoded executor-side; the
-  driver never touches vector data (the reference decoded everything
-  in the driver, main.py:31 — its documented scale failure).
+The distributed counterpart of ``fvecs.write_fvecs_local``: one shard
+file per input partition, packed executor-side, committed through
+staging names so a failed job never clobbers the prior shard set, and
+``mode('append')`` keeps every prior vector's id (see ``_VecsWriter``).
+Read shards back with ``fvecs.read_fvecs`` / ``read_ivecs``, the one
+reader, which also reads non-local Hadoop file systems. The sink
+writes with driver- and executor-local file I/O, so it takes a plain
+path or a ``file:`` URI and refuses any other scheme.
 
 Register once per session:  ``spark.dataSource.register(FvecsDataSource)``.
 Options: ``format`` = fvecs (default) | ivecs.
@@ -21,20 +19,13 @@ from __future__ import annotations
 import glob
 import os
 import struct
+from urllib.parse import urlparse
 
 from pyspark.sql.datasource import (
     DataSource,
-    DataSourceReader,
     DataSourceWriter,
-    InputPartition,
     WriterCommitMessage,
 )
-
-
-class _ShardPartition(InputPartition):
-    def __init__(self, path: str, base_id: int):
-        self.path = path
-        self.base_id = base_id
 
 
 def _list_shards(path: str) -> list[str]:
@@ -60,55 +51,16 @@ def _shard_rows(path: str) -> int:
 
 
 class FvecsDataSource(DataSource):
-    """``format("fvecs")``: (vec_id bigint, embedding array<float>) or,
-    with ``option("format", "ivecs")``, (vec_id bigint, components
-    array<int>)."""
+    """``write.format("fvecs")``: rows of (vec_id bigint, embedding
+    array<float>) or, with ``option("format", "ivecs")``, (vec_id
+    bigint, components array<int>); the vector is the second column."""
 
     @classmethod
     def name(cls) -> str:
         return "fvecs"
 
-    def schema(self) -> str:
-        if self.options.get("format", "fvecs") == "ivecs":
-            return "vec_id bigint, components array<int>"
-        return "vec_id bigint, embedding array<float>"
-
-    def reader(self, schema) -> DataSourceReader:
-        return _VecsReader(self.options)
-
     def writer(self, schema, overwrite: bool):
         return _VecsWriter(self.options, overwrite)
-
-
-class _VecsReader(DataSourceReader):
-    def __init__(self, options):
-        self.path = options.get("path")
-        if not self.path:
-            raise ValueError("fvecs data source requires a load path")
-        self.kind = options.get("format", "fvecs")
-
-    def partitions(self):
-        parts, acc = [], 0
-        for f in _list_shards(self.path):
-            parts.append(_ShardPartition(f, acc))
-            acc += _shard_rows(f)
-        if not parts:
-            raise FileNotFoundError(f"no fvecs shards at {self.path}")
-        return parts
-
-    def read(self, partition: _ShardPartition):
-        import numpy as np
-
-        from pyspark_mrdf_spark.sources.fvecs import _decode
-
-        dtype = np.int32 if self.kind == "ivecs" else np.float32
-        with open(partition.path, "rb") as fh:
-            content = fh.read()
-        for i, vec in enumerate(_decode(content, dtype)):
-            yield (partition.base_id + i, vec.tolist())
-
-
-# --- write path (distributed fvecs/ivecs sink) ----------------------
 
 
 class _ShardCommit(WriterCommitMessage):
@@ -125,8 +77,8 @@ class _VecsWriter(DataSourceWriter):
     driver, and N partitions write N shards in parallel (parquet has
     the same no-concurrent-appenders contract). Row order within a
     partition is preserved, so ``read → transform → write`` keeps the
-    "id = file position" convention per shard; readers reassign global
-    ids by shard offset (see _VecsReader.partitions). ``mode('append')``
+    "id = file position" convention per shard; ``read_fvecs`` reassigns
+    global ids by shard offset. ``mode('append')``
     continues the part numbering past the existing shards (see
     __init__), so prior ids never move."""
 
@@ -134,6 +86,14 @@ class _VecsWriter(DataSourceWriter):
         self.path = options.get("path")
         if not self.path:
             raise ValueError("fvecs data source requires a save path")
+        uri = urlparse(self.path)
+        if uri.scheme == "file":
+            self.path = uri.path
+        elif uri.scheme:
+            raise ValueError(
+                f"fvecs sink writes local files only, got {self.path!r}; "
+                "write a local path or a file: URI"
+            )
         self.kind = options.get("format", "fvecs")
         self.overwrite = overwrite
         # Append (r10 verdict stretch #8): ids stay stable because the

@@ -6,7 +6,9 @@ Usage: python scripts/time_queries.py [passes] q101_substring_dedup ...
 
 This is the optimization round's inner loop — the full bench.py stays
 the contract artifact; this harness exists so a one-query change can
-be re-measured in ~1 min instead of ~10.
+be re-measured in ~1 min instead of ~10. It times walls only: for
+per-layer numbers (jobs, Python-worker time, shuffle bytes) run
+``python3 perfbench/run.py --trace 1``, whose tracer attributes them.
 """
 
 from __future__ import annotations

@@ -59,3 +59,24 @@ def test_pipeline_demo_end_to_end(tmp_path):
     assert s["rows_written"] > 0 and s["shards_written"] > 0
     # the ExactSubstr scrub did real work on the planted duplicates
     assert s["scrubbed_chars_removed"] > 0
+
+
+def test_scalability_sweep_smoke():
+    # the W6 sweep at its smallest scale factor: one point, the keys of
+    # the committed SCALABILITY.json row, and MRDF recall at that row's
+    # level (1.0 committed)
+    import json
+
+    out = subprocess.run(
+        [sys.executable, "scripts/scalability.py", "sf0.001"],
+        cwd=REPO, capture_output=True, text=True, timeout=600,
+    )
+    assert out.returncode == 0, out.stderr[-2000:]
+    rec = json.loads(out.stdout.strip().splitlines()[-1])
+    assert rec["metric"] == "scalability_sweep" and len(rec["points"]) == 1
+    with open(os.path.join(REPO, "SCALABILITY.json")) as fh:
+        committed = next(p for p in json.load(fh)["points"] if p["sf"] == "sf0.001")
+    pt = rec["points"][0]
+    assert pt.keys() == committed.keys()
+    assert pt["sf"] == "sf0.001" and pt["n"] == 500
+    assert pt["mrdf_recall"] >= 0.99

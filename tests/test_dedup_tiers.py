@@ -1,12 +1,14 @@
 """Embedding near-dup tiers: the exact distributed triangle block join
-is the default; the broadcast kernel is the small-n tier; LSH+verify is
-the approximate scale tier. Laws:
+is the default; the broadcast kernel is the small-n tier and the
+reference the default is checked against. Law:
 
  * triangle ≡ broadcast (two exact algorithms, identical pair sets and
    fixed-point cosines) — for several block counts, including B larger
-   than the corpus partition count;
- * LSH tier ⊆ exact (verify is exact ⇒ no false positives), and on the
-   planted near-dup corpus it keeps high recall.
+   than the corpus partition count.
+
+At scale, embedding dedup goes through ``semantic_dedup`` (q102).
+The module also holds the connected-components, fuzzy-dedup and
+scrubbing laws of ``operators/dedup.py``.
 """
 
 from __future__ import annotations
@@ -17,7 +19,6 @@ from pyspark_mrdf_spark.io import load_table
 from pyspark_mrdf_spark.operators.dedup import (
     embedding_near_dups,
     embedding_near_dups_broadcast,
-    embedding_near_dups_lsh,
 )
 
 
@@ -41,17 +42,6 @@ def test_triangle_matches_broadcast(spark, emb):
 def test_triangle_normalizes_src_lt_dst(spark, emb):
     rows = embedding_near_dups(emb, threshold=0.35, n_blocks=4).collect()
     assert all(r["src"] < r["dst"] for r in rows)
-
-
-def test_lsh_tier_subset_of_exact_with_recall(spark, emb):
-    exact = _pairs(embedding_near_dups_broadcast(emb, threshold=0.35))
-    approx = _pairs(embedding_near_dups_lsh(emb, threshold=0.35, n_planes=4))
-    # exact verify ⇒ no false positives, and cosines agree exactly
-    assert set(approx) <= set(exact)
-    for k, v in approx.items():
-        assert exact[k] == v
-    # the cos>=0.35 planted pairs mostly collide under 4 planes
-    assert len(approx) >= 0.5 * len(exact)
 
 
 def test_connected_components_chain_and_clique(spark):
@@ -151,68 +141,6 @@ def test_near_dedup_against_drops_fuzzy_dups(spark, sf_dir):
     kept = near_dedup_against(batch, docs, threshold=0.5)
     kept_ids = {r["doc_id"] for r in kept.select("doc_id").collect()}
     assert kept_ids == {600000 + i for i in range(5)}  # copies dropped, novel kept
-
-
-def test_gaussian_planes_balance_and_recall_vs_data_planes(spark, emb):
-    """The production plane draw (seeded md5 Box-Muller normals) must
-    (a) be deterministic, (b) keep candidate recall at least on par
-    with the data-vector draw, and (c) not skew bucket occupancy worse
-    than data planes do (data planes are mutually correlated on
-    clustered corpora)."""
-    import math
-
-    from pyspark.sql import functions as F
-
-    from pyspark_mrdf_spark.operators.similarity import (
-        _gaussian_planes,
-        lsh_hyperplane_tables,
-    )
-
-    # determinism + standard-normal sanity of the draw itself
-    p1 = _gaussian_planes(4, 16, seed=7)
-    p2 = _gaussian_planes(4, 16, seed=7)
-    assert (p1 == p2).all()
-    assert abs(p1.mean()) < 0.5 and 0.5 < p1.std() < 1.5
-
-    def entropy(df):
-        # mean per-table bucket entropy (bits); higher = more balanced
-        counts = df.groupBy("table", "bucket").count()
-        per_table = counts.groupBy("table").agg(
-            F.collect_list("count").alias("cs")
-        ).collect()
-        es = []
-        for r in per_table:
-            tot = sum(r["cs"])
-            es.append(-sum(c / tot * math.log2(c / tot) for c in r["cs"]))
-        return sum(es) / len(es)
-
-    gauss = lsh_hyperplane_tables(emb, n_planes=4, n_tables=4)
-    data = lsh_hyperplane_tables(emb, n_planes=4, n_tables=4, plane_source="data")
-    assert entropy(gauss) >= entropy(data) - 0.5
-
-    exact = _pairs(embedding_near_dups_broadcast(emb, threshold=0.35))
-    n_data = len(_pairs(embedding_near_dups_lsh(emb, threshold=0.35)))
-    # candidate recall through the full LSH tier with gaussian default
-    assert n_data >= 0.5 * len(exact)
-
-
-def test_lsh_tier_works_on_nonnegative_embeddings(spark, sf_dir):
-    """embed_payloads vectors are all-nonnegative; uncentered hyperplane
-    dots would put EVERY vector in one bucket per table (candidate join
-    degenerates to all-pairs). Centered planes must spread buckets."""
-    from pyspark.sql import functions as F
-
-    from pyspark_mrdf_spark.io import load_table
-    from pyspark_mrdf_spark.operators.multimodal import attach_payloads, embed_payloads
-    from pyspark_mrdf_spark.operators.similarity import lsh_hyperplane_tables
-
-    docs = load_table(spark, sf_dir, "documents").limit(200)
-    emb = embed_payloads(attach_payloads(docs), dim=32)
-    bk = lsh_hyperplane_tables(emb, n_planes=4, n_tables=2, id_col="doc_id")
-    per_table = (
-        bk.groupBy("table").agg(F.countDistinct("bucket").alias("n_buckets")).collect()
-    )
-    assert all(r["n_buckets"] >= 4 for r in per_table), per_table
 
 
 def test_decontaminate_catches_copy_and_substring_leakage(spark, sf_dir):

@@ -3,8 +3,9 @@ repo resolves — function-local imports included — and so does every
 attribute read off a package module bound by an import
 (``from pyspark_mrdf_spark.operators import quantize as Q`` then
 ``Q.name``; ``import pyspark_mrdf_spark.x as m`` then ``m.name``).
-Scripts no test runs (``scripts/scalability.py``) would otherwise keep
-a removed name until someone next runs them."""
+Scripts no Tier-1 test runs (``scripts/scaling_probe.py``,
+``scripts/explain_dump.py``) would otherwise keep a removed name until
+someone next runs them."""
 
 from __future__ import annotations
 

@@ -127,21 +127,6 @@ def test_l2_topk_candidates_contains_true_topk(args):
             assert d2[i, pos] == exact[i, j]
 
 
-@given(n=st.integers(1, 8), d=st.integers(1, 8))
-@settings(max_examples=30, deadline=None)
-def test_gaussian_planes_shape_and_determinism(n, d):
-    # pure-NumPy law over the full small-(n, d) domain: any request is
-    # deterministic per seed, differs across seeds, and stays finite
-    from pyspark_mrdf_spark.operators.similarity import _gaussian_planes
-
-    a = _gaussian_planes(n, d, seed=3)
-    b = _gaussian_planes(n, d, seed=3)
-    c = _gaussian_planes(n, d, seed=4)
-    assert a.shape == (n, d) and (a == b).all()
-    assert (a != c).any()
-    assert np.isfinite(a).all()
-
-
 def test_containment_bounds_and_split_partition(spark, sf_dir):
     # containment_e6 ∈ [0, 1e6] always (integer fixed-point of a true
     # fraction), and every eval doc's self-containment vs its source

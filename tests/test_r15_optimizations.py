@@ -314,6 +314,49 @@ def test_checkpoint_flag_round_trips(spark, sf_dir, tmp_path, reliable_flag, fam
     assert written >= 1, f"{family}: the flag-on call wrote nothing to the checkpoint dir"
 
 
+def test_reliable_checkpoint_evaluates_lineage_once(spark, tmp_path, reliable_flag):
+    # a reliable cut is eager: its file-writing job is the one
+    # evaluation of df, and the first action reads the files back (a
+    # lazy one would evaluate df in that action and again in the write)
+    spark.sparkContext.setCheckpointDir(str(tmp_path / "ckpt"))
+    evals = spark.sparkContext.accumulator(0)
+
+    def touch(x):
+        evals.add(1)
+        return x
+
+    df = spark.range(100).select(F.udf(touch, "long")("id").alias("id"))
+    reliable_flag(True)
+    rows = checkpoint(df).collect()
+    reliable_flag(False)
+    assert sorted(r["id"] for r in rows) == list(range(100))
+    assert evals.value == 100
+
+
+def test_reliable_checkpoint_files_removed_once_unreachable(spark, tmp_path, reliable_flag):
+    # get_spark sets spark.cleaner.referenceTracking.cleanCheckpoints,
+    # so the rdd-* dirs of a dropped result go once the JVM collects it
+    import gc
+    import time
+
+    from pyspark_mrdf_spark.algorithms.mrdf import knn_graph
+
+    ckpt = tmp_path / "ckpt"
+    spark.sparkContext.setCheckpointDir(str(ckpt))
+    reliable_flag(True)
+    n = knn_graph(
+        _ckpt_vectors(spark), 5, rho=3, alpha=40, seed=42, max_iter=2, auto_escalate=False
+    ).count()
+    reliable_flag(False)
+    assert n > 0 and list(ckpt.rglob("rdd-*")), "the flag-on call wrote no checkpoint"
+    deadline = time.monotonic() + 60
+    while list(ckpt.rglob("rdd-*")) and time.monotonic() < deadline:
+        gc.collect()
+        spark.sparkContext._jvm.java.lang.System.gc()
+        time.sleep(1)
+    assert not list(ckpt.rglob("rdd-*"))
+
+
 # --- guarded int32 narrowing (graph.py triangle_counts) -----------------------
 
 

@@ -81,50 +81,6 @@ def test_adjacency_json_roundtrip(spark, tmp):
     assert back == {0: [1, 2], 1: [0]}
 
 
-def test_fvecs_datasource_matches_connector(spark, tmp):
-    import numpy as np
-    from pyspark_mrdf_spark.sources.fvecs import read_fvecs, write_fvecs_local
-    from pyspark_mrdf_spark.sources.fvecs_datasource import FvecsDataSource
-
-    rng = np.random.default_rng(11)
-    a = rng.normal(size=(40, 8)).astype(np.float32)
-    b = rng.normal(size=(25, 8)).astype(np.float32)
-    d = os.path.join(tmp, "ds_shards")
-    os.makedirs(d, exist_ok=True)
-    write_fvecs_local(os.path.join(d, "part-000.fvecs"), a)
-    write_fvecs_local(os.path.join(d, "part-001.fvecs"), b)
-
-    spark.dataSource.register(FvecsDataSource)
-    via_ds = {
-        r["vec_id"]: r["embedding"]
-        for r in spark.read.format("fvecs").load(d).collect()
-    }
-    via_conn = {
-        r["vec_id"]: r["embedding"] for r in read_fvecs(spark, d).collect()
-    }
-    assert via_ds.keys() == via_conn.keys() and len(via_ds) == 65
-    for k in via_ds:
-        assert via_ds[k] == via_conn[k]
-
-
-def test_ivecs_datasource(spark, tmp):
-    import numpy as np
-    from pyspark_mrdf_spark.sources.fvecs import write_ivecs_local
-    from pyspark_mrdf_spark.sources.fvecs_datasource import FvecsDataSource
-
-    m = np.arange(30, dtype=np.int32).reshape(6, 5)
-    p = os.path.join(tmp, "gt.ivecs")
-    write_ivecs_local(p, m)
-    spark.dataSource.register(FvecsDataSource)
-    rows = (
-        spark.read.format("fvecs").option("format", "ivecs").load(p).collect()
-    )
-    assert len(rows) == 6
-    assert rows[0]["components"] == list(range(5)) or sorted(
-        r["vec_id"] for r in rows
-    ) == list(range(6))
-
-
 def test_orc_roundtrip_events(spark, sf_dir, tmp_path):
     # ORC sink/scan with timestamp fidelity (the non-parquet columnar path)
     from pyspark_mrdf_spark.io import load_table
@@ -405,3 +361,27 @@ def test_fvecs_datasource_overwrite_is_staged(spark, tmp):
     import glob as _g
 
     assert not _g.glob(out + "/_staging-*"), "aborted staging files must be cleaned"
+
+
+def test_fvecs_sink_writes_file_uri_locally_and_refuses_other_schemes(spark, tmp):
+    # a file: URI is the same local directory as the bare path; any
+    # other scheme is refused before a task runs (the sink writes with
+    # local file I/O, so an hdfs:// path would land in a relative dir)
+    from pyspark_mrdf_spark.sources.fvecs import read_fvecs
+    from pyspark_mrdf_spark.sources.fvecs_datasource import FvecsDataSource
+
+    spark.dataSource.register(FvecsDataSource)
+    mat = np.arange(24, dtype=np.float32).reshape(6, 4)
+    df = spark.createDataFrame(
+        [(i, [float(x) for x in mat[i]]) for i in range(6)],
+        "vec_id bigint, embedding array<float>",
+    ).coalesce(1)
+    out = os.path.join(tmp, "uri_out")
+    df.write.format("fvecs").mode("overwrite").save("file://" + out)
+    assert os.path.exists(os.path.join(out, "part-00000.fvecs"))
+    got = [list(r["embedding"]) for r in read_fvecs(spark, out).orderBy("vec_id").collect()]
+    assert got == mat.tolist()
+    for cwd in (os.getcwd(), spark.sparkContext._jvm.System.getProperty("user.dir")):
+        assert not os.path.exists(os.path.join(cwd, "file:")), cwd
+    with pytest.raises(Exception, match="local files only"):
+        df.write.format("fvecs").mode("overwrite").save("hdfs://localhost:9/fvecs_out")
