@@ -702,6 +702,8 @@ def near_dedup_against(
     text_col: str = "text",
     corpus_buckets: DataFrame | None = None,
     corpus_postings: DataFrame | None = None,
+    batch_buckets: DataFrame | None = None,
+    batch_postings: DataFrame | None = None,
 ) -> DataFrame:
     """Incremental NEAR-dup dedup: rows of ``new_docs`` with no corpus
     document of n-gram Jaccard ≥ ``threshold`` — the daily-ingest shape
@@ -721,6 +723,11 @@ def near_dedup_against(
     that; omitted, both derive from ``corpus`` inside this plan.
     ``corpus`` may be None only when BOTH stored sides are supplied
     (the fully index-served path — ``operators/dedup_index.py``).
+    ``batch_buckets``/``batch_postings`` are the same two tables for
+    ``new_docs``: a caller that has already encoded the batch with the
+    same params (the streamed ingest, which also writes that encode to
+    the index) passes it here instead of having it encoded again;
+    omitted, both derive from ``new_docs``.
 
     BATCH-SIZE CONTRACT (r14 broadcasts, advisor note): every
     batch-derived frame here — the batch bucket table, both candidate
@@ -741,13 +748,15 @@ def near_dedup_against(
     if corpus_buckets is None:
         c_sig = minhash_signatures(corpus, num_hashes, n, id_col, text_col)
         corpus_buckets = lsh_band_buckets(c_sig, bands, rows_per_band, id_col)
-    b_sig = minhash_signatures(new_docs, num_hashes, n, id_col, text_col)
+    if batch_buckets is None:
+        b_sig = minhash_signatures(new_docs, num_hashes, n, id_col, text_col)
+        batch_buckets = lsh_band_buckets(b_sig, bands, rows_per_band, id_col)
+    if batch_postings is None:
+        batch_postings = shingle_table(new_docs, n, id_col, text_col)
     c_buckets = corpus_buckets.select(
         F.col(id_col).alias("c_id"), "band", "bucket"
     )
-    b_buckets = lsh_band_buckets(b_sig, bands, rows_per_band, id_col).select(
-        F.col(id_col).alias("b_id"), "band", "bucket"
-    )
+    b_buckets = batch_buckets.select(F.col(id_col).alias("b_id"), "band", "bucket")
     # the candidate pair table is referenced by three downstream
     # branches (both posting prunes + the inter semi-join); a lazy
     # checkpoint computes the bucket join once instead of per branch.
@@ -772,7 +781,7 @@ def near_dedup_against(
     # bucket match): broadcast them so the corpus-sized posting/corpus
     # prunes are broadcast semi-joins — the stored posting table must
     # never be shuffled by a serve (it is the corpus-dominant table)
-    b_post = shingle_table(new_docs, n, id_col, text_col).join(
+    b_post = batch_postings.join(
         F.broadcast(cand.select(F.col("b_id").alias(id_col)).distinct()),
         id_col,
         "left_semi",

@@ -213,12 +213,16 @@ def near_dedup_against_index(
     threshold: float = 0.5,
     id_col: str = "doc_id",
     text_col: str = "text",
+    batch_buckets: DataFrame | None = None,
+    batch_postings: DataFrame | None = None,
 ) -> DataFrame:
     """Near-dup incremental dedup served fully from the stored index:
     LSH candidates against ``buckets/``, exact Jaccard verify against
     candidate-pruned ``postings/`` — corpus TEXT is never read. Batch-
     side encoding uses the index's frozen params, so a caller cannot
-    probe with mismatched banding."""
+    probe with mismatched banding. ``batch_buckets``/``batch_postings``
+    pass an encode of ``new_docs`` the caller already made with those
+    params (``_index_state``) through to ``near_dedup_against``."""
     p = index.params
     return near_dedup_against(
         new_docs,
@@ -232,6 +236,8 @@ def near_dedup_against_index(
         text_col=text_col,
         corpus_buckets=index.buckets,
         corpus_postings=index.postings,
+        batch_buckets=batch_buckets,
+        batch_postings=batch_postings,
     )
 
 

@@ -23,7 +23,14 @@ def spread(df: DataFrame) -> DataFrame:
     locally but a FULL SHUFFLE OF THE CORPUS TEXT at 100 TB (every
     keyless repartition also pays a local sort, SPARK-23207). Only
     spread when the scan is genuinely under-partitioned — the
-    single-file test-input artifact this helper exists for."""
+    single-file test-input artifact this helper exists for.
+
+    The partition count comes from ``df.rdd.getNumPartitions()``. On a
+    scan or a cut frame (``checkpoint``) that is metadata. On a plan with
+    exchanges it executes them: adaptive execution must run the shuffle
+    stages to know the final partitioning, so each call runs those
+    stages as jobs of their own, and the kernel that follows runs them
+    again. Call it on scans or cut frames."""
     cur = df.rdd.getNumPartitions()
     n = df.sparkSession.sparkContext.defaultParallelism
     if cur >= n:

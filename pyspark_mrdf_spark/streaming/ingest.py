@@ -22,6 +22,12 @@ Scale shape: the corpus side of the dedup join reduces to DISTINCT
 micro-batch-sized, and the append touches only the new partition —
 per-batch cost is O(batch + corpus fingerprints), with the
 fingerprint scan pruned to the `fp` column by parquet column pruning.
+
+The near-dup twin, ``near_ingest_dedup_stream``, keeps the same
+exactly-once construction over a persisted dedup index. Each of its
+batches is one encode, one dedup and four partition writes (corpus,
+fps, buckets, postings), all from one materialised survivor set: no
+read-back of the written partition and no second encode.
 """
 
 from __future__ import annotations
@@ -173,40 +179,65 @@ def near_ingest_dedup_stream(
     serves base + streamed state transparently (row-identical to batch
     ``append_dedup_index`` of the same survivors; equivalence-tested).
 
-    Per-batch cost: batch-sized encode + candidate-pruned verify + one
-    partition write per table — no corpus-sized recompute at any batch."""
+    Per-batch work is one encode, one dedup and four writes, with no
+    read-back. The in-batch dedup is cut once (``operators/util.checkpoint``,
+    so the reliable flag applies) and encoded once with the index's
+    frozen params: its LSH buckets and postings probe the index inside
+    ``near_dedup_against`` and are cut too. The survivors are cut once,
+    and all four partitions are written from them: the corpus rows, their
+    fingerprints, and the rows of the one encode whose ``doc_id`` survived
+    (a broadcast semi-join). So the index holds exactly the committed
+    docs, row-identical to ``_index_state`` of the corpus partition
+    (tested), without reading it back or encoding it again. The cost is
+    batch-sized encode + candidate-pruned verify + one partition write
+    per table — no corpus-sized recompute at any batch."""
+    from pyspark_mrdf_spark.functions.text import fingerprint
     from pyspark_mrdf_spark.operators.dedup_index import (
         _index_state,
-        _read_dedup_params,
         near_dedup_against_index,
         read_dedup_index,
     )
+    # aliased: this function's ``checkpoint`` is the stream's location
+    from pyspark_mrdf_spark.operators.util import checkpoint as cut
 
     spark = docs.sparkSession
     idx_base = index_path.rstrip("/")
 
     def _apply(batch_df: DataFrame, batch_id: int) -> None:
-        batch_dedup = _in_batch_exact_dedup(batch_df)
         idx = read_dedup_index(spark, index_path, _exclude_stream_batch=batch_id)
-        survivors = near_dedup_against_index(batch_dedup, idx, threshold)
-        part = f"{corpus_path.rstrip('/')}/batch={batch_id}"
-        survivors.write.mode("overwrite").parquet(part)
-        # derive the index state from the WRITTEN partition (one dedup
-        # computation, and the three index writes see exactly the rows
-        # the corpus write committed)
-        admitted = spark.read.parquet(part).select("doc_id", "text")
-        p = _read_dedup_params(spark, index_path)
-        fps, buckets, postings = _index_state(
-            admitted, p["num_hashes"], p["bands"], p["rows_per_band"], p["n"],
+        p = idx.params
+        # one cut of the in-batch dedup: the encode below reads a
+        # materialised frame, so spread's partition count is metadata
+        # instead of a re-run of the groupBy + semi-join stages
+        batch = cut(_in_batch_exact_dedup(batch_df))
+        # the one encode, with the index's frozen params: the dedup
+        # probes with it, and the survivors' rows of it are what the
+        # index admits
+        _, buckets, postings = _index_state(
+            batch, p["num_hashes"], p["bands"], p["rows_per_band"], p["n"],
             "doc_id", "text",
         )
-        fps.write.mode("overwrite").parquet(f"{idx_base}/stream_fps/batch={batch_id}")
+        buckets, postings = cut(buckets), cut(postings)
+        survivors = cut(
+            near_dedup_against_index(
+                batch, idx, threshold, batch_buckets=buckets, batch_postings=postings
+            )
+        )
+        # all four writes come from the one cut survivor set, so the
+        # index sees exactly the rows the corpus partition commits
+        survivors.write.mode("overwrite").parquet(
+            f"{corpus_path.rstrip('/')}/batch={batch_id}"
+        )
+        kept = F.broadcast(survivors.select("doc_id"))
+        survivors.select("doc_id", fingerprint("text").alias("fp")).write.mode(
+            "overwrite"
+        ).parquet(f"{idx_base}/stream_fps/batch={batch_id}")
         # band-partitioned like the base build and batch appends, so a
         # streamed-into index keeps the same storage-level layout
-        buckets.write.mode("overwrite").partitionBy("band").parquet(
-            f"{idx_base}/stream_buckets/batch={batch_id}"
-        )
-        postings.write.mode("overwrite").parquet(
+        buckets.join(kept, "doc_id", "left_semi").write.mode("overwrite").partitionBy(
+            "band"
+        ).parquet(f"{idx_base}/stream_buckets/batch={batch_id}")
+        postings.join(kept, "doc_id", "left_semi").write.mode("overwrite").parquet(
             f"{idx_base}/stream_postings/batch={batch_id}"
         )
 

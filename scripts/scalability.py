@@ -72,6 +72,9 @@ from pyspark_mrdf_spark.queries import load_all
 from pyspark_mrdf_spark.session import get_spark
 
 K = 10
+# the synthetic point's leaf size: a corpus of fewer vectors is one
+# leaf, so no division round runs and the tier asserts must fail
+SYNTHETIC_ALPHA = 16384
 
 
 def _write_synthetic(
@@ -145,6 +148,12 @@ def main() -> None:
             "--uniform/--synthetic-n run the synthetic point, which an "
             "explicit sf list disables; drop the sf args or the flags"
         )
+    if args.synthetic_n is not None and args.synthetic_n < SYNTHETIC_ALPHA:
+        ap.error(
+            f"--synthetic-n must be at least the synthetic point's alpha = "
+            f"{SYNTHETIC_ALPHA}: a smaller corpus is one leaf, so the "
+            "division tiers this point asserts never run"
+        )
     sfs = args.sfs or ["sf0.001", "sf0.01", "sf0.1"]
     synthetic_n = args.synthetic_n or 50_000
 
@@ -208,7 +217,7 @@ def main() -> None:
                 # α=16384 → leaves in (4096, 32768] (tiled exact kernel),
                 # cbmp=0 → every division round through the centroid join
                 pt = _mrdf_point(
-                    emb, rho=4, alpha=16384, centroid_broadcast_max_paths=0
+                    emb, rho=4, alpha=SYNTHETIC_ALPHA, centroid_broadcast_max_paths=0
                 )
                 max_leaf = max(m.get("max_leaf", 0) for m in pt["metrics"])
                 join_rounds = sum(m.get("join_tier_rounds", 0) for m in pt["metrics"])
@@ -237,7 +246,7 @@ def main() -> None:
                         "escalated": bool(
                             any(m.get("escalated") for m in pt["metrics"])
                         ),
-                        "alpha": 16384,
+                        "alpha": SYNTHETIC_ALPHA,
                         "max_leaf": int(max_leaf),
                         "join_tier_rounds": int(join_rounds),
                         "tiers": ["tiled_exact_leaves", "distributed_centroid_join"],

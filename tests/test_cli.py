@@ -61,6 +61,18 @@ def test_pipeline_demo_end_to_end(tmp_path):
     assert s["scrubbed_chars_removed"] > 0
 
 
+def test_scalability_rejects_synthetic_n_below_alpha():
+    # the synthetic point needs N >= alpha for its division tiers to run;
+    # the CLI refuses a smaller N before it starts a Spark session
+    out = subprocess.run(
+        [sys.executable, "scripts/scalability.py", "--synthetic-n", "12000"],
+        cwd=REPO, capture_output=True, text=True, timeout=120,
+    )
+    assert out.returncode == 2
+    assert "--synthetic-n must be at least the synthetic point's alpha = 16384" in out.stderr
+    assert "log4j" not in out.stderr  # the JVM never started
+
+
 def test_scalability_sweep_smoke():
     # the W6 sweep at its smallest scale factor: one point, the keys of
     # the committed SCALABILITY.json row, and MRDF recall at that row's

@@ -269,6 +269,25 @@ def _case_queries(spark, sf_dir):
     return q86_payload_embed_knn(spark, sf_dir)
 
 
+def _case_streaming(spark, sf_dir):
+    import tempfile
+
+    from pyspark_mrdf_spark.streaming.ingest import near_ingest_dedup_stream
+    from test_streaming import _near_stream_inputs, _near_stream_tables
+
+    # fresh stream state per call (a reused stream checkpoint would
+    # replay nothing), kept outside the Spark checkpoint dir the
+    # flag-off assertion watches
+    with tempfile.TemporaryDirectory() as work:
+        idx_path, corpus, ckpt, stream = _near_stream_inputs(spark, work)
+        q = near_ingest_dedup_stream(stream(), idx_path, corpus, ckpt)
+        assert q.awaitTermination(120), "near-ingest stream did not drain"
+        assert q.exception() is None
+        tables = _near_stream_tables(spark, idx_path, corpus)
+    rows = [(name, "|".join(map(str, r))) for name, rs in tables.items() for r in rs]
+    return spark.createDataFrame(rows, "tbl string, committed string")
+
+
 _CKPT_CASES = {
     "util": _case_util,
     "graph": _case_graph,
@@ -281,6 +300,7 @@ _CKPT_CASES = {
     "sketch": _case_sketch,
     "cache": _case_cache,
     "queries": _case_queries,
+    "streaming": _case_streaming,
 }
 
 

@@ -771,6 +771,126 @@ def test_near_ingest_dedup_stream_grows_index_exactly_once(spark, tmp_path):
     assert idx2.fps.count() == 3  # seed + two admitted, exactly once
 
 
+def _near_stream_inputs(spark, root):
+    """A seeded dedup index plus two JSON batch files for
+    ``near_ingest_dedup_stream``: batch 0 carries a near copy of the seed
+    (dropped), a novel doc (admitted) and an exact copy of it under a
+    higher id (dropped in-batch); batch 1 carries a near copy of batch
+    0's survivor (dropped against the stream's own index partition) and
+    a second novel doc (admitted). Returns (index, corpus, checkpoint,
+    a function that opens the source stream)."""
+    import json as _json
+
+    from pyspark_mrdf_spark.operators.dedup_index import write_dedup_index
+
+    words = [f"w{i}" for i in range(24)]
+    seed_text = " ".join(words)
+    novel1 = " ".join(f"a{i}" for i in range(24))
+    novel2 = " ".join(f"b{i}" for i in range(24))
+
+    def near(text, repl):  # one word substituted -> Jaccard ~0.8
+        ws = text.split()
+        ws[12] = repl
+        return " ".join(ws)
+
+    idx_path = os.path.join(root, "dedup_idx")
+    write_dedup_index(
+        spark.createDataFrame([(1, seed_text)], "doc_id long, text string"), idx_path
+    )
+    src = os.path.join(root, "docs_json")
+    os.makedirs(src)
+    files = [
+        ("f1.json", [(100, near(seed_text, "zz")), (101, novel1), (102, novel1)]),
+        ("f2.json", [(200, near(novel1, "qq")), (201, novel2)]),
+    ]
+    for i, (name, rows) in enumerate(files):
+        path = os.path.join(src, name)
+        with open(path, "w") as f:
+            for doc_id, text in rows:
+                f.write(_json.dumps({"doc_id": doc_id, "text": text}) + "\n")
+        # the file source orders batches by modification time
+        os.utime(path, (1_000_000_000 + 100 * i, 1_000_000_000 + 100 * i))
+
+    def stream():
+        return (
+            spark.readStream.schema("doc_id long, text string")
+            .option("maxFilesPerTrigger", 1)
+            .json(src)
+        )
+
+    return idx_path, os.path.join(root, "corpus"), os.path.join(root, "ckpt"), stream
+
+
+def _near_stream_tables(spark, idx_path, corpus):
+    """Every row the near stream committed, per table, with its batch id."""
+
+    def rows(path, cols):
+        df = spark.read.option("basePath", path).parquet(path)
+        return sorted(tuple(r) for r in df.select("batch", *cols).collect())
+
+    return {
+        "corpus": rows(corpus, ["doc_id", "text"]),
+        "fps": rows(f"{idx_path}/stream_fps", ["doc_id", "fp"]),
+        "buckets": rows(f"{idx_path}/stream_buckets", ["doc_id", "band", "bucket"]),
+        "postings": rows(f"{idx_path}/stream_postings", ["doc_id", "shingle"]),
+    }
+
+
+def test_near_ingest_dedup_stream_replay_preserves_batch(spark, tmp_path):
+    """Crash-replay law of the near stream (the exact stream's law
+    above): batch 1's corpus and index partitions are on disk but its
+    checkpoint commit is not, so a restart re-executes it. The replay
+    must dedupe against everything but its own partitions and rewrite
+    all four of them to the clean run's rows — nothing emptied, nothing
+    admitted twice."""
+    from pyspark_mrdf_spark.streaming.ingest import near_ingest_dedup_stream
+
+    idx_path, corpus, ckpt, stream = _near_stream_inputs(spark, str(tmp_path))
+    q = near_ingest_dedup_stream(stream(), idx_path, corpus, ckpt, query_name="near_rp1")
+    assert q.awaitTermination(120), "near-ingest stream did not drain"
+    q.stop()  # release the checkpoint dir before the replay run opens it
+    want = _near_stream_tables(spark, idx_path, corpus)
+    assert [r[:2] for r in want["corpus"]] == [(0, 101), (1, 201)]
+    assert [r[:2] for r in want["fps"]] == [(0, 101), (1, 201)]
+    for table in ("buckets", "postings"):
+        assert {r[:2] for r in want[table]} == {(0, 101), (1, 201)}
+
+    os.remove(os.path.join(ckpt, "commits", "1"))
+    crc = os.path.join(ckpt, "commits", ".1.crc")
+    if os.path.exists(crc):  # Hadoop ChecksumFs sidecar blocks re-commit
+        os.remove(crc)
+    q2 = near_ingest_dedup_stream(stream(), idx_path, corpus, ckpt, query_name="near_rp2")
+    assert q2.awaitTermination(120), "replayed near stream did not drain"
+    assert os.path.exists(os.path.join(ckpt, "commits", "1")), "batch 1 was not replayed"
+    assert _near_stream_tables(spark, idx_path, corpus) == want
+
+
+def test_near_ingest_dedup_stream_index_rows_match_committed_corpus(spark, tmp_path):
+    """Row-identity law: each batch's stream_fps, stream_buckets and
+    stream_postings rows are exactly ``_index_state`` of the corpus
+    partition that batch committed, encoded with the index's frozen
+    params — the index holds the committed docs, no more, no fewer."""
+    from pyspark_mrdf_spark.operators.dedup_index import _index_state, read_dedup_index
+    from pyspark_mrdf_spark.streaming.ingest import near_ingest_dedup_stream
+
+    idx_path, corpus, ckpt, stream = _near_stream_inputs(spark, str(tmp_path))
+    q = near_ingest_dedup_stream(stream(), idx_path, corpus, ckpt, query_name="near_rows")
+    assert q.awaitTermination(120), "near-ingest stream did not drain"
+    p = read_dedup_index(spark, idx_path).params
+    got = _near_stream_tables(spark, idx_path, corpus)
+    # batch 1 dropped its near copy of batch 0's survivor
+    assert [r[:2] for r in got["corpus"]] == [(0, 101), (1, 201)]
+    for b in (0, 1):
+        part = spark.read.parquet(f"{corpus}/batch={b}").select("doc_id", "text")
+        want = _index_state(
+            part, p["num_hashes"], p["bands"], p["rows_per_band"], p["n"], "doc_id", "text"
+        )
+        for table, df in zip(("fps", "buckets", "postings"), want):
+            mine = sorted(r[1:] for r in got[table] if r[0] == b)
+            assert mine, f"batch {b}: no {table} rows"
+            assert mine == sorted(tuple(r) for r in df.collect()), f"batch {b}: {table}"
+
+
 def test_maintained_stats_stream_equals_batch_q142(spark, sf_dir, tmp_path_factory):
     """The streaming materialized view must land exactly on batch
     q142: the A->B CDC deltas (adds/removes/edit-diffs derived from
