@@ -65,11 +65,11 @@ graph in SQL, because equality-with-rebuild IS the contract).
 
 from __future__ import annotations
 
-from pyspark.sql import DataFrame, Window
+from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
 from pyspark_mrdf_spark.functions.vector import l2_sq
-from pyspark_mrdf_spark.operators.util import checkpoint
+from pyspark_mrdf_spark.operators.util import checkpoint, topk_merge
 
 EXACT_AUTO_MAX_CROSS = 50_000_000  # m·n pairs; ~the blocked kernel's comfort zone
 
@@ -363,10 +363,6 @@ def _topk(edges: DataFrame, k: int) -> DataFrame:
     # distances with the same fixed-order arithmetic, so duplicates tie
     # — min just makes the pick deterministic rather than
     # partition-dependent
-    w = Window.partitionBy("src").orderBy("dist_sq", "dst")
-    return (
-        edges.groupBy("src", "dst")
-        .agg(F.min("dist_sq").alias("dist_sq"))
-        .withColumn("rnk", F.row_number().over(w))
-        .filter(F.col("rnk") <= k)
+    return topk_merge(
+        edges.groupBy("src", "dst").agg(F.min("dist_sq").alias("dist_sq")), k
     )

@@ -74,7 +74,7 @@ from pyspark.sql.types import (
 
 from pyspark_mrdf_spark.algorithms.nndescent import nn_descent
 from pyspark_mrdf_spark.functions.vector import pairwise_l2_sq
-from pyspark_mrdf_spark.operators.util import checkpoint
+from pyspark_mrdf_spark.operators.util import checkpoint, topk_merge
 
 EDGE_SCHEMA = StructType(
     [
@@ -120,9 +120,10 @@ def knn_graph(
     (k, rho, alpha, tau, seed, max_iter) on DataFrame footing.
 
     Choosing α at scale: leaves up to ``nndescent.EXACT_BLOCK_MAX``
-    (4096) solve EXACTLY with one BLAS gemm (milliseconds); up to
-    ``TILED_EXACT_MAX`` (32768) the tiled exact kernel keeps the same
-    result with one 4096² tile pair in memory at a time (n=8000:
+    (4096) solve EXACTLY with one BLAS gemm (``l2_block_topk``,
+    milliseconds); up to ``TILED_EXACT_MAX`` (32768) its tiled form
+    (``l2_self_topk_tiled``) keeps the same result with one 4096² tile
+    pair in memory at a time (n=8000:
     ~4s exact vs ~52s NN-Descent, and recall 1.0 by construction).
     α ≤ 32768 is therefore the recommended operating point on a
     cluster — division rounds are cheap DataFrame ops that scale out;
@@ -420,13 +421,7 @@ def knn_graph(
         g = checkpoint(g, eager=not last)
     if refine_rounds:
         return g
-
-    wk = Window.partitionBy("src").orderBy("dist_sq", "dst")
-    return (
-        g.withColumn("rn", F.row_number().over(wk))
-        .filter(F.col("rn") <= k)
-        .drop("rn")
-    )
+    return topk_merge(g, k).drop("rnk")
 
 
 def _wave_forests(
@@ -565,8 +560,7 @@ def _wave_forests(
         ids = pdf["id"].to_numpy(dtype=np.int64)
         mat = np.stack(pdf["vec"].to_numpy()).astype(np.float64)
         rng = np.random.default_rng((seed, forest, zlib.crc32(path.encode("utf8"))))
-        edges = nn_descent(ids, mat, k_work, rng=rng)
-        out = pd.DataFrame(edges, columns=["src", "dst", "dist_sq"])
+        out = nn_descent(ids, mat, k_work, rng=rng).drop(columns="rnk")
         out.insert(0, "forest", forest)
         return out
 
@@ -956,13 +950,7 @@ def _refine(base: DataFrame, g: DataFrame, k: int, grid: tuple[int, int]) -> Dat
     # scored is unique per (src, dst) and DISJOINT from g by
     # construction (cell-local dedup + edge suppression above), so no
     # dropDuplicates is needed
-    unioned = g.unionByName(scored)
-    wk = Window.partitionBy("src").orderBy("dist_sq", "dst")
-    return (
-        unioned.withColumn("rn", F.row_number().over(wk))
-        .filter(F.col("rn") <= k)
-        .drop("rn")
-    )
+    return topk_merge(g.unionByName(scored), k).drop("rnk")
 
 
 def format_adjacency(g: DataFrame) -> DataFrame:

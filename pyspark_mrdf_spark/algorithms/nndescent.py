@@ -26,8 +26,13 @@ top-k-per-node merge (identical fixpoint, ~100× less Python overhead).
 from __future__ import annotations
 
 import numpy as np
+import pandas as pd
 
-from pyspark_mrdf_spark.functions.vector import l2_topk_candidates, pairwise_l2_sq
+from pyspark_mrdf_spark.functions.vector import (
+    l2_block_topk,
+    l2_self_topk_tiled,
+    pairwise_l2_sq,
+)
 
 # Below this block size the EXACT gemm graph beats iterating: one
 # BLAS matmul + one vectorized sort is ~milliseconds at n=500 where
@@ -53,11 +58,12 @@ def nn_descent(
     max_rounds: int = 30,
     rng: np.random.Generator | None = None,
     k_build: int | None = None,
-) -> list[tuple[int, int, float]]:
+) -> pd.DataFrame:
     """Approximate k-NN graph of one vector block.
 
-    Returns edges (src_id, dst_id, dist_sq), ≤ k per src, ascending
-    (dist_sq, dst). For small blocks computes the exact graph directly.
+    Returns edges (src, dst, dist_sq, rnk), ≤ k per src, ascending
+    (dist_sq, dst). Blocks up to ``TILED_EXACT_MAX`` get the exact
+    graph from ``l2_block_topk`` (tiled above ``EXACT_BLOCK_MAX``).
 
     ``k_build``: internal working list size. NN-Descent's convergence
     depends on candidate-pool width; for small k in high dimension the
@@ -68,13 +74,11 @@ def nn_descent(
     rng = rng or np.random.default_rng(42)
     ids = np.asarray(ids, dtype=np.int64)
     n = len(ids)
-    if n <= 1:
-        return []
     k_eff = min(k, n - 1)
-    if n <= EXACT_BLOCK_MAX:
-        return _exact_block(ids, mat, k_eff)
+    if n <= 1 or n <= EXACT_BLOCK_MAX:
+        return l2_block_topk(ids, mat, ids, mat, max(k_eff, 0), include_self=False)
     if n <= TILED_EXACT_MAX:
-        return _exact_block_tiled(ids, mat, k_eff)
+        return l2_self_topk_tiled(ids, mat, k_eff, EXACT_BLOCK_MAX)
     k_out = k_eff
     k_eff = min(k_build if k_build is not None else max(k, 20), n - 1)
 
@@ -151,16 +155,19 @@ def nn_descent(
         if updates < threshold:
             break
 
-    edges: list[tuple[int, int, float]] = []
-    for v in range(n):
-        emitted = 0
-        for j in range(k_eff):
-            if nb_idx[v, j] >= 0 and np.isfinite(nb_dist[v, j]):
-                edges.append((int(ids[v]), int(ids[nb_idx[v, j]]), float(nb_dist[v, j])))
-                emitted += 1
-                if emitted == k_out:
-                    break
-    return edges
+    # each list is sorted by (dist, dst) with unfilled slots (-1, inf)
+    # last, so a node's finite entries are its ranks 1..
+    found = (nb_idx >= 0) & np.isfinite(nb_dist)
+    rnk = np.cumsum(found, axis=1)
+    keep = found & (rnk <= k_out)
+    return pd.DataFrame(
+        {
+            "src": np.repeat(ids, k_eff).reshape(n, k_eff)[keep],
+            "dst": ids[nb_idx[keep]],
+            "dist_sq": nb_dist[keep],
+            "rnk": rnk[keep].astype(np.int32),
+        }
+    )
 
 
 def _merge_round(nb_dist, nb_idx, nb_new, src, dst, d2, k_eff: int) -> int:
@@ -212,77 +219,3 @@ def _merge_round(nb_dist, nb_idx, nb_new, src, dst, d2, k_eff: int) -> int:
         nb_idx[v, kk:], nb_dist[v, kk:], nb_new[v, kk:] = -1, np.inf, False
     return updates
 
-
-def _exact_block_tiled(
-    ids: np.ndarray, mat: np.ndarray, k: int, tile: int = EXACT_BLOCK_MAX
-) -> list[tuple[int, int, float]]:
-    """Exact graph for blocks up to ``TILED_EXACT_MAX``: same result as
-    ``_exact_block``, but only one ``tile``² distance block is ever in
-    memory. Per query tile, each corpus tile nominates its local top
-    k+1 (self absorbed); the ≤ (n/tile)·(k+1) candidates per row then
-    rank exactly like the one-shot kernel."""
-    mat = np.asarray(mat, dtype=np.float64)
-    n = len(ids)
-    kk = min(k, n - 1)
-    if kk <= 0:
-        return []
-    id_order = np.argsort(ids, kind="stable")
-    xs = mat[id_order]
-    self_pos = np.argsort(id_order, kind="stable")  # column of self per row
-    edges: list[tuple[int, int, float]] = []
-    for qs in range(0, n, tile):
-        qe = min(qs + tile, n)
-        cd_parts, cc_parts = [], []
-        for cs in range(0, n, tile):
-            ce = min(cs + tile, n)
-            cand, d2 = l2_topk_candidates(mat[qs:qe], xs[cs:ce], min(kk + 1, ce - cs))
-            cc_parts.append(cand + cs)
-            cd_parts.append(d2)
-        cc = np.concatenate(cc_parts, axis=1)
-        cd = np.concatenate(cd_parts, axis=1)
-        cd[cc == self_pos[qs:qe, None]] = np.inf
-        ord1 = np.argsort(cc, axis=1, kind="stable")
-        cc1 = np.take_along_axis(cc, ord1, axis=1)
-        cd1 = np.take_along_axis(cd, ord1, axis=1)
-        sel = np.argsort(cd1, axis=1, kind="stable")[:, :kk]
-        rows = np.repeat(np.arange(qs, qe), sel.shape[1])
-        d = np.take_along_axis(cd1, sel, axis=1).reshape(-1)
-        dstc = np.take_along_axis(cc1, sel, axis=1).reshape(-1)
-        finite = np.isfinite(d)
-        src = ids[rows[finite]]
-        dst = ids[id_order[dstc[finite]]]
-        edges.extend(zip(src.tolist(), dst.tolist(), d[finite].tolist()))
-    return edges
-
-
-def _exact_block(ids: np.ndarray, mat: np.ndarray, k: int) -> list[tuple[int, int, float]]:
-    """Exact graph for blocks up to ``EXACT_BLOCK_MAX`` — one gemm plus
-    one vectorized stable sort, no Python-per-row work.
-
-    Columns are pre-ordered by ascending id, so a stable distance
-    argsort breaks ties by id — the same (dist, id) order the previous
-    per-row ``lexsort`` produced, two orders of magnitude faster
-    (n=2000: 7.4s → ~0.2s)."""
-    mat = np.asarray(mat, dtype=np.float64)
-    n = len(ids)
-    kk = min(k, n - 1)
-    if kk <= 0:
-        return []
-    id_order = np.argsort(ids, kind="stable")
-    cand, d2 = l2_topk_candidates(mat, mat[id_order], kk + 1)
-    # self-distance: row v sits at its own position in id order
-    self_pos = np.argsort(id_order, kind="stable")
-    d2[cand == self_pos[:, None]] = np.inf
-    # order candidates by column (= ascending id), then stable-argsort by
-    # exact distance — ties break by id, matching lexsort((ids, dist))
-    ord1 = np.argsort(cand, axis=1, kind="stable")
-    cand1 = np.take_along_axis(cand, ord1, axis=1)
-    d21 = np.take_along_axis(d2, ord1, axis=1)
-    sel = np.argsort(d21, axis=1, kind="stable")[:, :kk]
-    rows = np.repeat(np.arange(n), sel.shape[1])
-    d = np.take_along_axis(d21, sel, axis=1).reshape(-1)
-    dstc = np.take_along_axis(cand1, sel, axis=1).reshape(-1)
-    finite = np.isfinite(d)
-    src = ids[rows[finite]]
-    dst = ids[id_order[dstc[finite]]]
-    return list(zip(src.tolist(), dst.tolist(), d[finite].tolist()))

@@ -1,4 +1,5 @@
-"""Session-scoped materialized-result registry.
+"""Session-scoped materialized-result registry (``memoized_df``), and
+its per-process twin for persisted query artifacts (``memoized_path``).
 
 Several registry queries share expensive sub-results: q50/q56/q57 all
 need the exact k-NN graph, q51/q57 the IVF graph, q55/q56 the seeded
@@ -22,6 +23,7 @@ Safety rules:
 
 from __future__ import annotations
 
+import tempfile
 import warnings
 from collections.abc import Callable
 from threading import Lock
@@ -39,6 +41,8 @@ _LOCK = Lock()
 # keys still build fully concurrently (q56 overlaps its exact side on
 # a background thread).
 _BUILDING: dict[tuple, Lock] = {}
+# memoized_path's directories, keyed ("path", name, sf_dir)
+_PATHS: dict[tuple, str] = {}
 
 
 def pin_stats(df: DataFrame) -> DataFrame:
@@ -117,6 +121,27 @@ def pin_stats(df: DataFrame) -> DataFrame:
         return ck
 
 
+def _once(store: dict, key: tuple, build: Callable[[], object]):
+    """``store[key]``, running ``build`` on first use. Same-key
+    concurrent callers serialize on a per-key gate: one builds, the
+    rest block until the entry exists and reuse it. A failed build
+    releases the gate with no entry, so the next caller retries."""
+    with _LOCK:
+        hit = store.get(key)
+        if hit is not None:
+            return hit
+        gate = _BUILDING.setdefault(key, Lock())
+    with gate:
+        with _LOCK:
+            hit = store.get(key)
+        if hit is not None:
+            return hit
+        value = build()
+        with _LOCK:
+            store[key] = value
+        return value
+
+
 def memoized_df(
     spark: SparkSession,
     key: tuple,
@@ -133,22 +158,10 @@ def memoized_df(
     default when the build must finish NOW, e.g. on the background
     thread whose whole point is overlapping the materialization.
 
-    Same-key concurrent callers serialize on a per-key gate: one
-    builds, the rest block until the entry exists and reuse it. A
-    failed build releases the gate with no entry, so the next caller
-    retries."""
+    Same-key concurrent callers share one build (``_once``)."""
     app = spark.sparkContext.applicationId
-    full = (app,) + key
-    with _LOCK:
-        hit = _CACHE.get(full)
-        if hit is not None:
-            return hit
-        gate = _BUILDING.setdefault(full, Lock())
-    with gate:
-        with _LOCK:
-            hit = _CACHE.get(full)
-        if hit is not None:
-            return hit
+
+    def _build() -> DataFrame:
         df = checkpoint(builder(), eager=eager)
         with _LOCK:
             # drop entries of dead sessions (their executors — and any
@@ -156,5 +169,23 @@ def memoized_df(
             for k in [k for k in _CACHE if k[0] != app]:
                 del _CACHE[k]
                 _BUILDING.pop(k, None)
-            _CACHE[full] = df
-            return df
+        return df
+
+    return _once(_CACHE, (app,) + key, _build)
+
+
+def memoized_path(key: tuple, build: Callable[[str], None]) -> str:
+    """A fresh driver-local directory that ``build(path)`` fills on
+    first use of ``key`` — (name, sf_dir) — then served read-only for
+    the rest of the process: the persisted query artifacts (dedup
+    index, quantized indexes, compacted graph state) that a deployment
+    builds once and every later query only reads. Files outlive a
+    SparkSession, so unlike ``memoized_df`` the entry is per process,
+    not per session. Same-key concurrent callers share one build."""
+
+    def _make() -> str:
+        path = tempfile.mkdtemp(prefix=f"mrdf_{key[0]}_")
+        build(path)
+        return path
+
+    return _once(_PATHS, ("path",) + key, _make)

@@ -7,7 +7,9 @@ Two tiers, per SURVEY.md §4.2:
    distance matrices for kNN — the vectorized recovery of the
    reference's per-row ``np.linalg.norm(u1-u2)``
    (reference utilities.py:11-13, called from knn.py:17,
-   nndescent.py:165, mrdf.py:139).
+   nndescent.py:165, mrdf.py:139) — and ``l2_block_topk``, the one
+   exact top-k kernel; ``operators.util.topk_merge`` is its Spark-side
+   merge.
 
 All distance math is float64 regardless of the float32 storage type so
 orderings are stable and oracle-comparable.
@@ -16,6 +18,7 @@ orderings are stable and oracle-comparable.
 from __future__ import annotations
 
 import numpy as np
+import pandas as pd
 from pyspark.sql import Column
 from pyspark.sql import functions as F
 
@@ -68,6 +71,8 @@ def l2_topk_candidates(
 ) -> tuple[np.ndarray, np.ndarray]:
     """Per-query-row top candidates by squared L2: BLAS-gemm prefilter,
     EXACT re-ranking — (cand_idx (m, c), d2_exact (m, c)) unordered.
+    The candidate stage of ``l2_block_topk`` (every exact L2 top-k in
+    the engine), ``l2_argsort_topm`` and ``lloyd_centroids``.
 
     Why two passes: the gemm expansion ||q||²+||x||²−2q·x runs at
     matmul speed (~70× the broadcast (q−x)² form at n=2000) but its
@@ -147,14 +152,74 @@ def l2_argsort_topm(q: np.ndarray, x: np.ndarray, m: int) -> np.ndarray:
     return np.take_along_axis(cand, order, axis=1)
 
 
-def topk_ids(dist_row: np.ndarray, ids: np.ndarray, k: int, exclude: int | None = None) -> list[tuple[int, float]]:
-    """Top-k (id, dist) by ascending (dist, id); optional self-exclusion."""
-    order = np.lexsort((ids, dist_row))
-    out = []
-    for j in order:
-        if exclude is not None and ids[j] == exclude:
-            continue
-        out.append((int(ids[j]), float(dist_row[j])))
-        if len(out) == k:
-            break
-    return out
+def l2_block_topk(
+    q_ids: np.ndarray,
+    q_mat: np.ndarray,
+    c_ids: np.ndarray,
+    c_mat: np.ndarray,
+    k: int,
+    include_self: bool,
+) -> pd.DataFrame:
+    """The engine's one exact L2 top-k kernel: each query row's ``k``
+    nearest corpus rows, ranked by (dist_sq, dst) — ties to the lower
+    id, the SQL oracle's ``ORDER BY dist, id`` and the reference's
+    merge rule (mrdf.py:62-72, knn.py:4-26). Returns (src, dst,
+    dist_sq, rnk), rnk 1..≤k, rows in query order. ``include_self=False``
+    drops corpus rows whose id equals the query id.
+
+    Gemm prefilter + exact re-rank (``l2_topk_candidates``), then one
+    vectorized rank, no per-row Python. Local top-k by (dist, dst) is
+    associative: a block's k best hold every row of that block that
+    makes any larger block's k best, so per-block results merged by the
+    same rule (``l2_self_topk_tiled`` here, ``operators.util.topk_merge``
+    in Spark) equal one scan of the whole corpus."""
+    return _rank(q_ids, *_candidates(q_ids, q_mat, c_ids, c_mat, k, include_self), k)
+
+
+def l2_self_topk_tiled(ids: np.ndarray, mat: np.ndarray, k: int, tile: int) -> pd.DataFrame:
+    """``l2_block_topk(ids, mat, ids, mat, k, include_self=False)`` with
+    only one ``tile``² distance block in memory: per query tile, each
+    corpus tile nominates its candidates, and the ≤ (n/tile)·(k+1+pad)
+    candidates per row are ranked once."""
+    mat = np.asarray(mat, dtype=np.float64)
+    parts = []
+    for qs in range(0, len(ids), tile):
+        q = slice(qs, qs + tile)
+        cand = [
+            _candidates(ids[q], mat[q], ids[cs : cs + tile], mat[cs : cs + tile], k, False)
+            for cs in range(0, len(ids), tile)
+        ]
+        dst, d2 = (np.concatenate(c, axis=1) for c in zip(*cand))
+        parts.append(_rank(ids[q], dst, d2, k))
+    return pd.concat(parts, ignore_index=True)
+
+
+def _candidates(q_ids, q_mat, c_ids, c_mat, k: int, include_self: bool):
+    """(dst ids, exact dist_sq), both (m, c): a superset of each query
+    row's top ``k`` (``k + 1`` when the self pair is masked to +inf).
+    Corpus columns are ordered by id first, so the stable candidate
+    selection keeps the LOWEST ids among exact-duplicate ties."""
+    c_order = np.argsort(c_ids, kind="stable")
+    cand, d2 = l2_topk_candidates(q_mat, c_mat[c_order], k if include_self else k + 1)
+    dst = c_ids[c_order][cand]
+    if not include_self:
+        d2[dst == q_ids[:, None]] = np.inf
+    return dst, d2
+
+
+def _rank(q_ids: np.ndarray, dst: np.ndarray, d2: np.ndarray, k: int) -> pd.DataFrame:
+    """The (dist, dst) rule on candidate matrices: order each row by id,
+    then stable-argsort by exact distance (ties keep the lower id), keep
+    the first ``k``; +inf entries (masked self, short blocks) sort last
+    and are dropped."""
+    ord1 = np.argsort(dst, axis=1, kind="stable")
+    dst = np.take_along_axis(dst, ord1, axis=1)
+    d2 = np.take_along_axis(d2, ord1, axis=1)
+    sel = np.argsort(d2, axis=1, kind="stable")[:, :k]
+    d = np.take_along_axis(d2, sel, axis=1)
+    dstk = np.take_along_axis(dst, sel, axis=1)
+    m = np.isfinite(d)
+    nq, kw = d.shape
+    src = np.repeat(q_ids, kw).reshape(nq, kw)
+    rnk = np.broadcast_to(np.arange(1, kw + 1, dtype=np.int32), (nq, kw))
+    return pd.DataFrame({"src": src[m], "dst": dstk[m], "dist_sq": d[m], "rnk": rnk[m]})

@@ -10,12 +10,18 @@ The reference instead decoded its entire input **in the driver** and
 ``sc.parallelize``-d it (reference main.py:31) — the anti-pattern this
 module replaces (SURVEY.md §2A S7).
 
-Persisted state — the vector indexes (``operators/quantize.py``), the
-dedup index (``operators/dedup_index.py``) and the streamed graph
-state (``streaming/ingest.py``) — shares one directory layout: a
-driver-written ``params.parquet``, base tables written by Spark, and
-per-micro-batch ``stream_<t>/batch=<id>/`` partitions. The helpers at
-the bottom of this module are that layout's only filesystem code.
+Persisted state is base tables written by Spark plus per-micro-batch
+``batch=<id>/`` partitions that streams commit next to them:
+
+ - the vector indexes (``operators/quantize.py``) and the dedup index
+   (``operators/dedup_index.py``): a driver-written ``params.parquet``,
+   base tables, and ``stream_<t>/batch=<id>/`` per base table ``<t>``;
+ - the streamed graph state (``streaming/ingest.py``): no params file,
+   and ``corpus/{base, stream/batch=<id>}`` plus
+   ``graph/{base, stream/batch=<id>}``.
+
+The helpers at the bottom of this module are those layouts' only
+filesystem code.
 Every path goes through its OWN Hadoop FileSystem (``_hadoop_fs``),
 never ``os.path``: a driver-local ``os.makedirs`` on ``file:///x``
 creates a stray relative ``./file:/x`` tree, and ``os.path.exists`` on

@@ -38,7 +38,7 @@ from pyspark.sql import DataFrame, Window
 from pyspark.sql import functions as F
 
 from pyspark_mrdf_spark.functions.vector import l2_sq
-from pyspark_mrdf_spark.operators.util import checkpoint
+from pyspark_mrdf_spark.operators.util import checkpoint, topk_merge
 
 
 LOCAL_ROUTE_MAX_CORPUS = 100_000
@@ -299,15 +299,13 @@ def graph_knn_search(
             .transform(checkpoint)
         )
 
-    return (
-        state.withColumn("rnk", F.row_number().over(w_beam))
-        .filter(F.col("rnk") <= k)
-        .select(
+    return topk_merge(
+        state.select(
             F.col("qid").alias("src"),
             F.col("vid").alias("dst"),
             F.col("d2").alias("dist_sq"),
-            "rnk",
-        )
+        ),
+        k,
     )
 
 

@@ -33,7 +33,8 @@ Three functions serve every codec:
 
 sq8, bq and pq share one flat scan (``_flat_scan``); ivfpq keeps its
 probe/salt/per-cell cogroup (``_ivfpq_scan``); both end in the same
-per-block top-k tail and per-src window merge. Five functions persist
+per-block top-k tail, and ``_scan_codes`` merges their candidates with
+``operators.util.topk_merge``. Five functions persist
 every codec (``write_index``, ``read_index``, ``build_index``,
 ``append_index``, ``merge_indexes``; see the persistence section).
 
@@ -99,7 +100,7 @@ from pyspark_mrdf_spark.io import (
     same_path,
     write_params_file,
 )
-from pyspark_mrdf_spark.operators.util import checkpoint, md5_sample
+from pyspark_mrdf_spark.operators.util import checkpoint, md5_sample, topk_merge
 
 
 def sq8_train(df: DataFrame, vec_col: str = "embedding") -> tuple[np.ndarray, np.ndarray]:
@@ -623,13 +624,7 @@ def _rerank_exact(
                     }
                 )
 
-    rr = cv.mapInPandas(_dist, "src long, dst long, dist_sq double")
-    wk = Window.partitionBy("src").orderBy("dist_sq", "dst")
-    return (
-        rr.withColumn("rnk", F.row_number().over(wk))
-        .filter(F.col("rnk") <= k)
-        .select("src", "dst", "dist_sq", F.col("rnk").cast("int").alias("rnk"))
-    )
+    return topk_merge(cv.mapInPandas(_dist, "src long, dst long, dist_sq double"), k)
 
 
 def pq_encode(
@@ -903,12 +898,11 @@ def _ivfpq_scan(
             g += tmp
         return _block_topk(g, qs, c_ids, k, include_self, _select_topk_ties)
 
-    cand = (
+    return (
         probes_df.groupby("cell", "salt")
         .cogroup(codes.groupby("cell", "salt"))
         .applyInPandas(_scan, "src long, dst long, dist double")
     )
-    return _merge_topk(cand, k)
 
 
 def _block_topk(
@@ -944,18 +938,6 @@ def _block_topk(
     return pd.DataFrame({"src": src, "dst": c_ids[sel][m], "dist": gs[m].astype(dtype)})
 
 
-def _merge_topk(cand: DataFrame, k: int) -> DataFrame:
-    """Merge per-block candidates to the k best per src by (dist, dst):
-    local top-k is associative, so the merge is exact for any
-    partitioning, and its input is output-sized, never corpus-sized."""
-    wk = Window.partitionBy("src").orderBy("dist", "dst")
-    return (
-        cand.withColumn("crnk", F.row_number().over(wk))
-        .filter(F.col("crnk") <= k)
-        .drop("crnk")
-    )
-
-
 def _flat_scan(
     prep: Callable[..., tuple],
     kernel: Callable[..., tuple],
@@ -975,8 +957,8 @@ def _flat_scan(
     partition by partition, each task building ``kernel(*payload)`` —
     (score, select, row_offset) — once, decoding each Arrow batch's
     codes, scoring them id-sorted and emitting its local top-k per
-    query through ``_block_topk``; ``_merge_topk`` merges the ≤
-    parts·k candidates per query. ``dist_type`` is the Spark type of
+    query through ``_block_topk`` — ≤ parts·k candidates per query for
+    ``_scan_codes`` to merge. ``dist_type`` is the Spark type of
     ``dist`` (long for the integer codecs)."""
     b = codes.sparkSession.sparkContext.broadcast((q_ids, prep(q_mat, params, **opts)))
     dtype = np.int64 if dist_type == "long" else np.float64
@@ -991,14 +973,14 @@ def _flat_scan(
             c_mat = np.stack([np.frombuffer(x, dtype=np.uint8) for x in pdf["code"]])
             # corpus columns ordered by id so the selection rules'
             # tie handling keeps the LOWEST dst among equal distances
-            # (same discipline as similarity._block_topk)
+            # (same discipline as functions.vector.l2_block_topk)
             c_order = np.argsort(c_ids, kind="stable")
             g = score(c_mat[c_order])
             yield _block_topk(
                 g, qi, c_ids[c_order], k, include_self, select, row_offset, dtype
             )
 
-    return _merge_topk(codes.mapInPandas(_scan, f"src long, dst long, dist {dist_type}"), k)
+    return codes.mapInPandas(_scan, f"src long, dst long, dist {dist_type}")
 
 
 def _slabs(
@@ -1139,14 +1121,18 @@ def _scan_codes(
     batch as a DataFrame. Only the candidate stage runs rotated (probe
     and ADC, where the codes live); the exact rerank stays on the
     original vectors — an isometry preserves exact neighbors, and
-    original-space dist_sq is the more useful output contract."""
+    original-space dist_sq is the more useful output contract. The
+    codec's scan yields per-block top-k candidates; local top-k is
+    associative, so one merge by (dist, dst) is exact for any
+    partitioning of the codes."""
     q_ids, q_mat = q_batch
     if "rotation" in params:
         from pyspark_mrdf_spark.operators.project import project_kernel
 
         q_mat = project_kernel(q_mat.astype(np.float64), params["rot_mean"], params["rotation"])
     scan = _CODECS[_index_kind(params)].scan
-    return scan(q_ids, q_mat, codes, k, params, include_self, **opts)
+    cand = scan(q_ids, q_mat, codes, k, params, include_self, **opts)
+    return topk_merge(cand, k, "dist").drop("rnk")
 
 
 def candidates(

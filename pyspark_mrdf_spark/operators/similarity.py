@@ -35,10 +35,10 @@ from pyspark.sql.types import (
 
 from pyspark_mrdf_spark.functions.vector import (
     l2_argsort_topm,
+    l2_block_topk,
     l2_topk_candidates,
-    pairwise_l2_sq,
 )
-from pyspark_mrdf_spark.operators.util import checkpoint, md5_sample
+from pyspark_mrdf_spark.operators.util import checkpoint, md5_sample, topk_merge
 
 KNN_SCHEMA = StructType(
     [
@@ -48,49 +48,6 @@ KNN_SCHEMA = StructType(
         StructField("rnk", IntegerType(), False),
     ]
 )
-
-
-def _block_topk(
-    q_ids: np.ndarray,
-    q_mat: np.ndarray,
-    c_ids: np.ndarray,
-    c_mat: np.ndarray,
-    k: int,
-    include_self: bool,
-) -> pd.DataFrame:
-    """Vectorized exact top-k of a query block against a corpus block:
-    (src, dst, dist_sq, rnk) with rnk 1..≤k ascending (dist, dst).
-
-    Gemm-prefilter + exact re-rank (``l2_topk_candidates``), then a
-    column-wise (id, dist) double stable sort — no per-row Python. The
-    previous per-row lexsort loop cost ~1.8 s per 500-vector group;
-    this is ~20 ms."""
-    kk = k if include_self else k + 1
-    # corpus columns ordered by id so stable candidate selection keeps
-    # the LOWEST ids among exact-duplicate ties (see l2_topk_candidates)
-    c_order = np.argsort(c_ids, kind="stable")
-    c_ids = c_ids[c_order]
-    c_mat = c_mat[c_order]
-    cand, d2 = l2_topk_candidates(q_mat, c_mat, kk)
-    dst_ids = c_ids[cand]
-    if not include_self:
-        d2[dst_ids == q_ids[:, None]] = np.inf
-    # candidates ordered by id first, then stable-argsorted by exact
-    # distance — ties break to the lower id, matching the SQL oracle's
-    # ORDER BY dist, id
-    ord1 = np.argsort(dst_ids, axis=1, kind="stable")
-    dst1 = np.take_along_axis(dst_ids, ord1, axis=1)
-    d21 = np.take_along_axis(d2, ord1, axis=1)
-    sel = np.argsort(d21, axis=1, kind="stable")[:, :k]
-    d = np.take_along_axis(d21, sel, axis=1)
-    dstk = np.take_along_axis(dst1, sel, axis=1)
-    m = np.isfinite(d)  # infs (masked self / short blocks) sort last
-    nq, kw = d.shape
-    src = np.repeat(q_ids, kw).reshape(nq, kw)
-    rnk = np.broadcast_to(np.arange(1, kw + 1, dtype=np.int32), (nq, kw))
-    return pd.DataFrame(
-        {"src": src[m], "dst": dstk[m], "dist_sq": d[m], "rnk": rnk[m]}
-    )
 
 
 def collect_matrix(df: DataFrame, id_col: str = "vec_id", vec_col: str = "embedding"):
@@ -238,7 +195,7 @@ def knn_search(
                 continue
             q_ids = pdf[id_col].to_numpy(dtype=np.int64)
             q_mat = np.stack(pdf[vec_col].to_numpy()).astype(np.float64)
-            yield _block_topk(q_ids, q_mat, c_ids, c_mat, k, include_self)
+            yield l2_block_topk(q_ids, q_mat, c_ids, c_mat, k, include_self)
 
     return df.select(id_col, vec_col).repartition(n_parts).mapInPandas(_scan, KNN_SCHEMA)
 
@@ -259,8 +216,8 @@ def knn_search_blocked(
     Grid blocking: corpus rows hash into ``n_blocks`` corpus blocks,
     queries into ``n_query_blocks`` query blocks; each (q-block,
     c-block) grid cell is one cogroup that computes a vectorized local
-    top-k; a final window merges the ≤ n_blocks·k candidates per
-    query. Local top-k by (dist, id) is associative, so blocked merge
+    top-k (``l2_block_topk``); ``topk_merge`` merges the ≤ n_blocks·k
+    candidates per query. Local top-k by (dist, id) is associative, so blocked merge
     ≡ full scan EXACTLY (same tie-break as the SQL oracle's
     ORDER BY dist, id).
 
@@ -272,9 +229,6 @@ def knn_search_blocked(
     task); the merge window input is output-sized (n_q·B·k rows), not
     n_q·n_c. O(n_q·n_c·d) flops remain — exactness' honest price;
     this tier spreads them over B·M tasks."""
-    from pyspark.sql import Window
-
-    spark = queries.sparkSession
     blk = F.pmod(F.hash(F.col(id_col)), F.lit(n_blocks)).cast("int")
     qblk = F.pmod(F.hash(F.col(id_col)), F.lit(n_query_blocks)).cast("int")
     c = corpus.select(
@@ -297,7 +251,7 @@ def knn_search_blocked(
         q_mat = np.stack(qpdf["q_vec"].to_numpy()).astype(np.float64)
         c_ids = cpdf["c_id"].to_numpy(dtype=np.int64)
         c_mat = np.stack(cpdf["c_vec"].to_numpy()).astype(np.float64)
-        return _block_topk(q_ids, q_mat, c_ids, c_mat, k, include_self).drop(
+        return l2_block_topk(q_ids, q_mat, c_ids, c_mat, k, include_self).drop(
             columns=["rnk"]
         )
 
@@ -306,12 +260,7 @@ def knn_search_blocked(
         .cogroup(c.groupby("qblk", "block"))
         .applyInPandas(_scan, "src long, dst long, dist_sq double")
     )
-    wk = Window.partitionBy("src").orderBy("dist_sq", "dst")
-    return (
-        cand.withColumn("rnk", F.row_number().over(wk))
-        .filter(F.col("rnk") <= k)
-        .select("src", "dst", "dist_sq", F.col("rnk").cast("int").alias("rnk"))
-    )
+    return topk_merge(cand, k)
 
 
 def knn_exact_blocked(
@@ -448,13 +397,12 @@ def ann_ivf(
          block scan with local top-k per query (cluster sizes
          ≈ r_assign·n/n_centroids bound memory and the quadratic term);
       4. candidates dedup'd (a pair can surface in several probed
-         cells when r_assign > 1), then the final exact top-k window
-         over ≤ n_probe·k rows per query — window input is
-         output-sized, not candidate-sized.
+         cells when r_assign > 1), then ``topk_merge`` over ≤
+         n_probe·k rows per query — window input is output-sized, not
+         candidate-sized.
 
     Returns (src, dst, dist_sq, rnk) like ``knn_exact``.
     """
-    from pyspark.sql import Window
     from pyspark.sql.types import ArrayType
 
     spark = df.sparkSession
@@ -517,36 +465,26 @@ def ann_ivf(
 
     def _search(key: tuple, qpdf: pd.DataFrame, mpdf: pd.DataFrame) -> pd.DataFrame:
         if len(qpdf) == 0 or len(mpdf) == 0:
-            return pd.DataFrame(columns=["q_id", "c_id", "dist_sq"])
+            return pd.DataFrame(columns=["src", "dst", "dist_sq"])
         q_ids = qpdf["q_id"].to_numpy(dtype=np.int64)
         q_mat = np.stack(qpdf["q_vec"].to_numpy()).astype(np.float64)
         m_ids = mpdf["c_id"].to_numpy(dtype=np.int64)
         m_mat = np.stack(mpdf["c_vec"].to_numpy()).astype(np.float64)
-        out = _block_topk(q_ids, q_mat, m_ids, m_mat, k, include_self=False)
-        return out.drop(columns=["rnk"]).rename(columns={"src": "q_id", "dst": "c_id"})
+        out = l2_block_topk(q_ids, q_mat, m_ids, m_mat, k, include_self=False)
+        return out.drop(columns=["rnk"])
 
     cand = (
         probes.groupby("cluster")
         .cogroup(members.groupby("cluster"))
-        .applyInPandas(_search, "q_id long, c_id long, dist_sq double")
+        .applyInPandas(_search, "src long, dst long, dist_sq double")
     )
     if r_assign > 1:
         # a multi-assigned pair can surface from several probed cells;
         # dedup by min distance (dup distances can differ in the last
         # ulp across gemm block shapes — min makes the survivor
-        # deterministic) so the rank window counts each pair once
-        cand = cand.groupBy("q_id", "c_id").agg(F.min("dist_sq").alias("dist_sq"))
-    wk = Window.partitionBy("q_id").orderBy("dist_sq", "c_id")
-    return (
-        cand.withColumn("rnk", F.row_number().over(wk))
-        .filter(F.col("rnk") <= k)
-        .select(
-            F.col("q_id").alias("src"),
-            F.col("c_id").alias("dst"),
-            "dist_sq",
-            F.col("rnk").cast("int").alias("rnk"),
-        )
-    )
+        # deterministic) so the merge counts each pair once
+        cand = cand.groupBy("src", "dst").agg(F.min("dist_sq").alias("dist_sq"))
+    return topk_merge(cand, k)
 
 
 def cosine_topk_by_group(

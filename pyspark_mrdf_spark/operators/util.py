@@ -1,12 +1,12 @@
 """Shared plan-shape helpers for operators and algorithms: the input
-spread, the engine's one lineage-cut policy (``checkpoint``) and the
-deterministic training sample.
+spread, the engine's one lineage-cut policy (``checkpoint``), its one
+top-k merge (``topk_merge``) and the deterministic training sample.
 """
 
 from __future__ import annotations
 
 import numpy as np
-from pyspark.sql import DataFrame
+from pyspark.sql import DataFrame, Window
 from pyspark.sql import functions as F
 
 RELIABLE_CHECKPOINT_CONF = "spark.graft.checkpoint.reliable"
@@ -67,6 +67,25 @@ def checkpoint(df: DataFrame, eager: bool = False) -> DataFrame:
     if df.sparkSession.conf.get(RELIABLE_CHECKPOINT_CONF, "false") == "true":
         return df.checkpoint(eager=True)
     return df.localCheckpoint(eager=eager)
+
+
+def topk_merge(cand: DataFrame, k: int, dist: str = "dist_sq") -> DataFrame:
+    """The ``k`` nearest per src by (``dist``, dst) — ties to the lower
+    dst — as (src, dst, ``dist``, rnk int), rnk 1..≤k: the engine's one
+    Spark merge of per-block top-k candidates (the NumPy side is
+    ``functions.vector.l2_block_topk``). Local top-k by (dist, dst) is
+    associative, so merging per-block candidates this way is exact for
+    any blocking, and the window's input is output-sized. ``dist`` names
+    the distance column: ``dist_sq`` for exact L2, ``dist`` for
+    quantize's code-domain distances. Candidates must hold each (src,
+    dst) pair at most once; callers whose blocks can repeat a pair
+    dedup it first."""
+    w = Window.partitionBy("src").orderBy(dist, "dst")
+    return (
+        cand.withColumn("rnk", F.row_number().over(w))
+        .filter(F.col("rnk") <= k)
+        .select("src", "dst", dist, F.col("rnk").cast("int").alias("rnk"))
+    )
 
 
 def md5_sample(

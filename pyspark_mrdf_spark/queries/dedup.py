@@ -912,24 +912,18 @@ def q118_bloom_incremental_dedup(spark: SparkSession, sf_dir: str) -> DataFrame:
     return D.bloom_dedup_against(batch, d)
 
 
-_DEDUP_IDX_DIR: dict[str, str] = {}
-
-
 def _dedup_index_path(spark: SparkSession, sf_dir: str) -> str:
     """The per-(process, sf) persisted dedup index of the documents
     corpus (default banding params — the q43/q78 config): built on
     first use, then served read-only, as deployed."""
-    import tempfile
-
+    from pyspark_mrdf_spark.cache import memoized_path
     from pyspark_mrdf_spark.operators.dedup_index import write_dedup_index
 
-    path = _DEDUP_IDX_DIR.get(sf_dir)
-    if path is None:
+    def _build(path: str) -> None:
         d = load_table(spark, sf_dir, "documents").select("doc_id", "text")
-        path = tempfile.mkdtemp(prefix="mrdf_dedup_idx_")
         write_dedup_index(d, path)
-        _DEDUP_IDX_DIR[sf_dir] = path
-    return path
+
+    return memoized_path(("dedup_idx", sf_dir), _build)
 
 
 @register(

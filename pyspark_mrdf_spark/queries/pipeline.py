@@ -18,6 +18,7 @@ from __future__ import annotations
 from pyspark.sql import Column, DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
 
+from pyspark_mrdf_spark.cache import memoized_path
 from pyspark_mrdf_spark.functions import text as T
 from pyspark_mrdf_spark.io import load_table
 from pyspark_mrdf_spark.operators.util import checkpoint
@@ -1665,21 +1666,13 @@ def q145_personalized_pagerank(spark: SparkSession, sf_dir: str) -> DataFrame:
 # verdict proves byte fidelity THROUGH the format change, not just
 # "the reader didn't crash".
 
-_Q147_ORC_DIR: dict[str, str] = {}
-
-
 def _q147_orc_path(spark: SparkSession, sf_dir: str) -> str:
-    import tempfile
-
     from pyspark_mrdf_spark.sources.formats import write_orc
 
-    path = _Q147_ORC_DIR.get(sf_dir)
-    if path is None:
-        d = load_table(spark, sf_dir, "documents")
-        path = tempfile.mkdtemp(prefix="mrdf_q147_orc_")
-        write_orc(d, path)
-        _Q147_ORC_DIR[sf_dir] = path
-    return path
+    return memoized_path(
+        ("q147_orc", sf_dir),
+        lambda path: write_orc(load_table(spark, sf_dir, "documents"), path),
+    )
 
 
 @register(
@@ -1728,21 +1721,13 @@ def q147_orc_roundtrip_stats(spark: SparkSession, sf_dir: str) -> DataFrame:
 # the readback. Corpus text exercises the quoting path with real
 # commas/quotes; a single mis-escaped byte anywhere flips the checksum.
 
-_Q148_CSV_DIR: dict[str, str] = {}
-
-
 def _q148_csv_path(spark: SparkSession, sf_dir: str) -> str:
-    import tempfile
-
     from pyspark_mrdf_spark.sources.formats import write_documents_csv
 
-    path = _Q148_CSV_DIR.get(sf_dir)
-    if path is None:
-        d = load_table(spark, sf_dir, "documents")
-        path = tempfile.mkdtemp(prefix="mrdf_q148_csv_")
-        write_documents_csv(d, path)
-        _Q148_CSV_DIR[sf_dir] = path
-    return path
+    return memoized_path(
+        ("q148_csv", sf_dir),
+        lambda path: write_documents_csv(load_table(spark, sf_dir, "documents"), path),
+    )
 
 
 @register(
@@ -1798,18 +1783,11 @@ def q148_csv_roundtrip_stats(spark: SparkSession, sf_dir: str) -> DataFrame:
 # the merge semantics (replace on key match, append on new key) and
 # the rewrite's byte fidelity at once.
 
-_Q154_DIRS: dict[str, str] = {}
-
-
 def _q154_out_path(spark: SparkSession, sf_dir: str) -> str:
-    import tempfile
-
     from pyspark_mrdf_spark.io import upsert_parquet
 
-    path = _Q154_DIRS.get(sf_dir)
-    if path is None:
+    def _build(root: str) -> None:
         d = load_table(spark, sf_dir, "documents")
-        root = tempfile.mkdtemp(prefix="mrdf_q154_upsert_")
         base_path = root + "/base"
         out_path = root + "/merged"
         d.write.mode("overwrite").parquet(base_path)
@@ -1829,9 +1807,8 @@ def _q154_out_path(spark: SparkSession, sf_dir: str) -> str:
             )
         )
         upsert_parquet(spark, base_path, updates, "doc_id", out_path)
-        _Q154_DIRS[sf_dir] = out_path
-        path = out_path
-    return path
+
+    return memoized_path(("q154_upsert", sf_dir), _build) + "/merged"
 
 
 @register(

@@ -12,13 +12,13 @@ sides.
 
 from __future__ import annotations
 
-from pyspark.sql import DataFrame, SparkSession, Window
+from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
-from pyspark_mrdf_spark.cache import memoized_df
+from pyspark_mrdf_spark.cache import memoized_df, memoized_path
 from pyspark_mrdf_spark.io import load_table
 from pyspark_mrdf_spark.operators.similarity import ann_ivf
-from pyspark_mrdf_spark.operators.util import checkpoint
+from pyspark_mrdf_spark.operators.util import checkpoint, topk_merge
 from pyspark_mrdf_spark.queries import register
 
 K = 10
@@ -783,7 +783,6 @@ def q95_ivfpq_knn(spark: SparkSession, sf_dir: str) -> DataFrame:
 # q97: ground-truth files written once per (process, sf) — the ivecs
 # roundtrip is int32-exact, so caching the file changes nothing but
 # skips re-collecting the GT on every builder call (bench cold/warm).
-_Q97_GT_DIR: dict[str, str] = {}
 
 
 @register(
@@ -847,12 +846,10 @@ GROUP BY e.src
 )
 def q97_recall_vs_ivecs_gt(spark: SparkSession, sf_dir: str) -> DataFrame:
     import os
-    import tempfile
 
     from pyspark_mrdf_spark.sources.fvecs import read_ivecs, write_ivecs_local
 
-    d = _Q97_GT_DIR.get(sf_dir)
-    if d is None:
+    def _build(d: str) -> None:
         import numpy as np
 
         # bounded collect: 100 queries × k edges (the GT-export
@@ -871,9 +868,9 @@ def q97_recall_vs_ivecs_gt(spark: SparkSession, sf_dir: str) -> DataFrame:
             [[byid[i][rk] for rk in sorted(byid[i])] for i in ids],
             dtype=np.int32,
         )
-        d = tempfile.mkdtemp(prefix="mrdf_q97_gt_")
         write_ivecs_local(os.path.join(d, "gt.ivecs"), mat)
-        _Q97_GT_DIR[sf_dir] = d
+
+    d = memoized_path(("q97_gt", sf_dir), _build)
     # row position in the ivecs file IS the query id (queries are the
     # first 100 vec_ids, exported in sorted order)
     gt = read_ivecs(spark, os.path.join(d, "gt.ivecs"), k=K)
@@ -904,29 +901,19 @@ def _q98_oracle(sf_dir: str) -> str:
     return _ivfpq_oracle(sf_dir, "e.vec_id >= 30 AND e.vec_id < 60")
 
 
-# index directories built once per (process, sf): the point of q98 is
-# that search does NOT retrain — the builder writes the index on first
-# call and every later call (bench warm runs) only loads + serves.
-_Q98_IDX_DIR: dict[str, str] = {}
-
-
 def _q98_index_path(spark: SparkSession, sf_dir: str) -> str:
     """The per-(process, sf) persisted IVF-PQ index of the embeddings
     corpus (q95's config): built on first use, reused by q98 serving
     and q105 monitoring — one stored artifact, many readers, as
-    deployed."""
-    import tempfile
-
+    deployed. The point of q98 is that search does NOT retrain: every
+    later call (bench warm runs) only loads + serves."""
     from pyspark_mrdf_spark.operators.quantize import build_index
 
-    path = _Q98_IDX_DIR.get(sf_dir)
-    if path is None:
-        emb = load_table(spark, sf_dir, "embeddings")
-        path = tempfile.mkdtemp(prefix="mrdf_q98_ivfpq_idx_")
+    def _build(path: str) -> None:
         train_cfg = {k: v for k, v in _IVFPQ_CFG.items() if k != "n_probe"}
-        build_index(emb, path, "ivfpq", **train_cfg)
-        _Q98_IDX_DIR[sf_dir] = path
-    return path
+        build_index(load_table(spark, sf_dir, "embeddings"), path, "ivfpq", **train_cfg)
+
+    return memoized_path(("q98_ivfpq_idx", sf_dir), _build)
 
 
 @register(
@@ -1848,10 +1835,8 @@ def q155_mrdf_pinned_replay(spark: SparkSession, sf_dir: str) -> DataFrame:
         _build,
         eager=False,
     )
-    w = Window.partitionBy("src").orderBy("dist_sq", "dst")
-    return (
-        g.withColumn("rnk", F.row_number().over(w))
-        .select("src", "dst", F.col("rnk").cast("bigint").alias("rnk"))
+    return topk_merge(g, _MRDF_REPLAY_K).select(
+        "src", "dst", F.col("rnk").cast("bigint").alias("rnk")
     )
 
 
@@ -2092,24 +2077,17 @@ def q159_opq_pq_knn(spark: SparkSession, sf_dir: str) -> DataFrame:
 # original-space rerank — so the float64-exact parquet roundtrip of
 # the frozen params is part of what the hash verdict covers.
 
-_ROT_PQ_IDX: dict[str, str] = {}
-
-
 def _rotated_pq_index_path(spark: SparkSession, sf_dir: str) -> str:
     """The per-(process, sf) persisted rotated PQ index of the
     embeddings corpus: built on first use, then served read-only, as
     deployed (the q122 persisted-dedup-index pattern)."""
-    import tempfile
-
     from pyspark_mrdf_spark.operators.quantize import build_index
 
-    path = _ROT_PQ_IDX.get(sf_dir)
-    if path is None:
+    def _build(path: str) -> None:
         emb = load_table(spark, sf_dir, "embeddings")
-        path = tempfile.mkdtemp(prefix="mrdf_rotpq_idx_")
         build_index(emb, path, "pq", rotate="opq", **_OPQ_CFG)
-        _ROT_PQ_IDX[sf_dir] = path
-    return path
+
+    return memoized_path(("rotpq_idx", sf_dir), _build)
 
 
 @register(
@@ -2346,12 +2324,8 @@ def q163_rotation_drift(spark: SparkSession, sf_dir: str) -> DataFrame:
 # covers the delta write, the latest-wins overlay, the compaction
 # fold, AND the compacted read.
 
-_COMPACT_STATE: dict[str, str] = {}
-
-
 def _compacted_state_path(spark: SparkSession, sf_dir: str) -> str:
     import os
-    import tempfile
 
     from pyspark_mrdf_spark.algorithms.graph_append import knn_graph_append
     from pyspark_mrdf_spark.operators.similarity import knn_exact_blocked
@@ -2360,8 +2334,7 @@ def _compacted_state_path(spark: SparkSession, sf_dir: str) -> str:
         write_graph_state,
     )
 
-    path = _COMPACT_STATE.get(sf_dir)
-    if path is None:
+    def _build(root: str) -> None:
         emb = load_table(spark, sf_dir, "embeddings")
         old = emb.filter(F.col("vec_id") % 20 != 0)
         new = emb.filter(F.col("vec_id") % 20 == 0)
@@ -2371,7 +2344,6 @@ def _compacted_state_path(spark: SparkSession, sf_dir: str) -> str:
             lambda: knn_exact_blocked(old, K),
             eager=False,
         )
-        root = tempfile.mkdtemp(prefix="mrdf_gstate_")
         live = os.path.join(root, "live")
         write_graph_state(old, g0, live)
         delta = knn_graph_append(
@@ -2383,10 +2355,9 @@ def _compacted_state_path(spark: SparkSession, sf_dir: str) -> str:
             f"{live}/corpus/stream/batch=0"
         )
         delta.write.mode("overwrite").parquet(f"{live}/graph/stream/batch=0")
-        path = os.path.join(root, "compacted")
-        compact_graph_state(spark, live, path)
-        _COMPACT_STATE[sf_dir] = path
-    return path
+        compact_graph_state(spark, live, os.path.join(root, "compacted"))
+
+    return os.path.join(memoized_path(("gstate", sf_dir), _build), "compacted")
 
 
 @register(

@@ -9,7 +9,7 @@ activation via the run metrics from ONE quality-configuration build
 (α = 16384, centroid_broadcast_max_paths = 0):
 
  - division leaves land in (4096, 32768], so every leaf runs the
-   TILED exact kernel (``nndescent._exact_block_tiled``) — asserted
+   TILED exact kernel (``functions.vector.l2_self_topk_tiled``) — asserted
    via max_leaf > 4096;
  - every division round extends tree paths through the DISTRIBUTED
    centroid join tier (``mrdf._extend_by_join``) instead of the

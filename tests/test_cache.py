@@ -8,7 +8,7 @@ table to another's query. These tests pin the boundary.
 
 from __future__ import annotations
 
-from pyspark_mrdf_spark.cache import memoized_df
+from pyspark_mrdf_spark.cache import memoized_df, memoized_path
 
 
 def test_same_key_serves_same_materialization(spark):
@@ -72,6 +72,43 @@ def test_failed_build_releases_gate_for_retry(spark):
     # builder and can succeed
     ok = memoized_df(spark, ("t", "retry"), lambda: spark.range(4).toDF("id"))
     assert ok.count() == 4 and boom["n"] == 1
+
+
+def test_memoized_path_builds_once_per_key_and_retries_after_failure():
+    # the persisted-artifact twin: one directory per (name, sf_dir) for
+    # the process, concurrent first callers share one build, other keys
+    # get their own directory, and a failed build leaves no entry
+    import os
+    import threading
+    from concurrent.futures import ThreadPoolExecutor
+
+    import pytest
+
+    started = threading.Barrier(4, timeout=30)
+    built = []
+
+    def build(path):
+        built.append(path)
+        with open(os.path.join(path, "part"), "w") as f:
+            f.write("x")
+
+    def request(_):
+        started.wait()
+        return memoized_path(("t_path", "sf_a"), build)
+
+    with ThreadPoolExecutor(max_workers=4) as pool:
+        paths = list(pool.map(request, range(4)))
+    assert set(paths) == set(built) and len(built) == 1
+    assert os.path.isfile(os.path.join(paths[0], "part"))
+    other = memoized_path(("t_path", "sf_b"), build)
+    assert other != paths[0] and len(built) == 2
+
+    def bad(path):
+        raise RuntimeError("builder failed")
+
+    with pytest.raises(RuntimeError):
+        memoized_path(("t_path", "sf_c"), bad)
+    assert memoized_path(("t_path", "sf_c"), build) == built[-1]
 
 
 def test_sf_dirs_never_cross_serve(spark):

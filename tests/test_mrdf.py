@@ -10,7 +10,8 @@ import pytest
 from pyspark.sql import functions as F
 
 from pyspark_mrdf_spark.algorithms.mrdf import format_adjacency, knn_graph
-from pyspark_mrdf_spark.algorithms.nndescent import nn_descent, _exact_block
+from pyspark_mrdf_spark.algorithms.nndescent import nn_descent
+from pyspark_mrdf_spark.functions.vector import l2_block_topk
 from pyspark_mrdf_spark.algorithms.recall import recall, recall_vs_groundtruth
 from pyspark_mrdf_spark.io import load_table
 from pyspark_mrdf_spark.operators.similarity import knn_exact
@@ -102,12 +103,12 @@ def test_nndescent_recall_clusters():
     mat = np.concatenate(blobs)
     ids = np.arange(len(mat), dtype=np.int64)
     approx = nn_descent(ids, mat, 5, rng=np.random.default_rng(3))
-    exact = _exact_block(ids, mat, 5)
+    exact = l2_block_topk(ids, mat, ids, mat, 5, include_self=False)
     ex: dict[int, set] = {}
-    for s, d, _ in exact:
+    for s, d in zip(exact["src"], exact["dst"]):
         ex.setdefault(s, set()).add(d)
     ap: dict[int, set] = {}
-    for s, d, _ in approx:
+    for s, d in zip(approx["src"], approx["dst"]):
         ap.setdefault(s, set()).add(d)
     hits = sum(len(ex[s] & ap.get(s, set())) for s in ex)
     total = sum(len(v) for v in ex.values())
@@ -131,12 +132,12 @@ def test_nndescent_iterative_rounds_recall(monkeypatch):
     mat = np.concatenate(blobs)
     ids = np.arange(len(mat), dtype=np.int64)
     approx = nn_descent(ids, mat, 5, rng=np.random.default_rng(3))
-    exact = _exact_block(ids, mat, 5)
+    exact = l2_block_topk(ids, mat, ids, mat, 5, include_self=False)
     ex: dict[int, set] = {}
-    for s, d, _ in exact:
+    for s, d in zip(exact["src"], exact["dst"]):
         ex.setdefault(s, set()).add(d)
     ap: dict[int, set] = {}
-    for s, d, _ in approx:
+    for s, d in zip(approx["src"], approx["dst"]):
         ap.setdefault(s, set()).add(d)
     hits = sum(len(ex[s] & ap.get(s, set())) for s in ex)
     total = sum(len(v) for v in ex.values())

@@ -10,7 +10,7 @@ from hypothesis import given, settings
 from hypothesis import strategies as st
 from hypothesis.extra.numpy import arrays
 
-from pyspark_mrdf_spark.functions.vector import pairwise_l2_sq, topk_ids
+from pyspark_mrdf_spark.functions.vector import pairwise_l2_sq
 
 finite = st.floats(min_value=-1e3, max_value=1e3, allow_nan=False, width=64)
 
@@ -41,34 +41,6 @@ def test_pairwise_l2_sq_matches_naive_and_is_nonnegative(ab):
 def test_pairwise_l2_sq_symmetry(ab):
     a, b = ab
     assert np.allclose(pairwise_l2_sq(a, b), pairwise_l2_sq(b, a).T)
-
-
-@given(
-    arrays(np.float64, st.integers(1, 30).map(lambda n: (n,)), elements=finite),
-    st.integers(1, 10),
-)
-@settings(max_examples=200, deadline=None)
-def test_topk_ids_sorted_and_bounded(dist, k):
-    ids = np.arange(len(dist), dtype=np.int64)
-    out = topk_ids(dist, ids, k)
-    assert len(out) == min(k, len(dist))
-    pairs = [(d, i) for i, d in out]
-    assert pairs == sorted(pairs)
-    # the selected distances are the k smallest
-    kept = sorted(d for d, _ in pairs)
-    best = sorted(dist.tolist())[: len(out)]
-    assert np.allclose(kept, best)
-
-
-@given(
-    arrays(np.float64, st.integers(2, 30).map(lambda n: (n,)), elements=finite),
-    st.integers(1, 10),
-)
-@settings(max_examples=100, deadline=None)
-def test_topk_ids_exclusion(dist, k):
-    ids = np.arange(len(dist), dtype=np.int64)
-    out = topk_ids(dist, ids, k, exclude=0)
-    assert all(i != 0 for i, _ in out)
 
 
 def test_topk_merge_idempotent_commutative():
