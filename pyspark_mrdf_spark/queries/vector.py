@@ -221,9 +221,11 @@ def q56_mrdf_recall(spark: SparkSession, sf_dir: str) -> DataFrame:
     # recall() compares two already-materialized graphs in one action.
     pool = ThreadPoolExecutor(max_workers=1)
     try:
-        # the wrapper carries this thread's local properties (job
-        # tags) into the pool thread, so its jobs stay attributed
-        fut = pool.submit(inheritable_thread_target(_exact_graph), spark, sf_dir)
+        # the wrapper carries this thread's local properties and the
+        # session's job tags into the pool thread, so its jobs stay
+        # attributed (given the function instead of the session, it
+        # copies only the properties and warns that tags are lost)
+        fut = pool.submit(inheritable_thread_target(spark)(_exact_graph), spark, sf_dir)
         g = _mrdf_graph(spark, sf_dir)
         g_exact = fut.result()
     finally:
